@@ -6,10 +6,10 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev-only plan snapshotter for the optimization rounds (not part of the
-  * declared surface; run via `sbt "runMain graft.PlanDump <tag> <k1,k2,...>"`).
+/** Dev-only plan snapshotter (not part of the declared surface; run via
+  * `sbt "runMain graft.PlanDump <tag> <k1,k2,...|--all> <outDir>"`).
   *
-  * Writes `plans/r15/<key>_<tag>.txt` with the `.explain("formatted")`
+  * Writes `<outDir>/<key>_<tag>.txt` with the `.explain("formatted")`
   * output of each named declared query — the judge-checkable evidence for
   * plan-shape claims (Exchange count, join strategy, PushedFilters /
   * ReadSchema). Session config mirrors Bench exactly so the captured plan
@@ -17,12 +17,12 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <tag> <key1,key2,...|--all> [outDir]")
+    require(args.length == 3, "usage: PlanDump <tag> <key1,key2,...|--all> <outDir>")
     val tag = args(0)
     val keys =
       if (args(1) == "--all") SparkEntry.queries.keys.toArray.sorted
       else args(1).split(',').map(_.trim).filter(_.nonEmpty)
-    val outDir = if (args.length > 2) args(2) else "plans/r15"
+    val outDir = args(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

@@ -20,7 +20,7 @@ object TextOps {
     * aggregation from 4 differently-projected sides: a, b, and the two
     * fetch joins). Catalyst's ReuseExchange only dedups *identical*
     * canonical exchanges, so without a persist the explode→sort→agg
-    * pipeline runs once per branch (measured 4× in r2). Keyed on the
+    * pipeline runs once per branch (measured 4×). Keyed on the
     * canonicalized-plan hash, so repeated calls with the same inputs —
     * every bench iteration — also reuse it. At cluster scale this is
     * `persist(MEMORY_AND_DISK)` of a table that is ~2% the corpus size
@@ -133,126 +133,173 @@ object TextOps {
       .drop("rn")
   }
 
-  /** Near-duplicate pairs: Jaccard >= `minJaccard` over distinct token
-    * sets — EXACT (lossless candidate generation) via prefix filtering
-    * (the PPJoin family: Bayardo et al. WWW'07, Xiao et al. WWW'08).
+  private def requireThreshold(tau: Double): Unit =
+    require(tau > 0 && tau <= 1, s"similarity threshold must satisfy 0 < tau <= 1 (got $tau)")
+
+  /** (token, ...) rows joined with each token's document frequency `tok_df`
+    * (one vocabulary-sized aggregation plus a token-keyed join).
+    */
+  private def withDocFreq(tok: DataFrame): DataFrame =
+    tok.join(tok.groupBy("token").agg(count(lit(1)).as("tok_df")), "token")
+
+  /** The global rarest-first token order over [[withDocFreq]] rows: the
+    * zero-padded frequency makes lexicographic order = ascending document
+    * frequency, and the token suffix makes ties deterministic. Every doc
+    * ranks a shared token by the same key, which the prefix filters need.
+    */
+  private def rarestFirst: Column =
+    concat(lpad(col("tok_df").cast("string"), 10, "0"), col("token"))
+
+  /** Ranked token sets: the shared build of the prefix-filter joins. One
+    * row per doc with at least one token: the id and block columns, `s`
+    * (sorted distinct tokens, the native-merge input), `n` = |s|, and
+    * `prefix`, the doc's `n - ceil(tau·n) + 1` rarest tokens as (t, pos)
+    * structs, `pos` being the token's 1-based rank in the doc's full
+    * [[rarestFirst]] order. `tokenizer` picks the shingle granularity; the
+    * outer array_distinct makes it set-valued.
     *
-    * Each doc emits its `|s| - ceil(tau*|s|) + 1` rarest tokens (global
-    * document-frequency order from one corpus-wide pass, ties broken by
-    * token) as its PREFIX; candidates are pairs whose prefixes share a
-    * token. Completeness (two-sided prefix theorem): J >= tau implies
-    * |x∩y| >= ceil(tau*|x|); if prefix(x) ∩ prefix(y) = ∅ then with bx/by
-    * the largest (in global order) prefix elements and wlog bx <= by,
-    * every common element in prefix(x) would have to sit past by in y —
-    * impossible since it is <= bx — so x∩y fits inside x's suffix of size
-    * ceil(tau*|x|) - 1: contradiction. So unlike r2's single-anchor
-    * blocking — which admitted 30% of all in-language pairs as candidates
-    * AND was lossy — this is both sharp (rare tokens have near-singleton
-    * postings under a Zipfian vocabulary) and complete: the output is
-    * exactly every in-block pair with J >= tau, which is why the DuckDB
-    * oracle can be the naive all-pairs formulation.
+    * Prefix theorem. One-sided: if |x ∩ y| >= tau·|x|, prefix(x) meets y —
+    * otherwise x ∩ y fits in the ceil(tau·|x|) - 1 tokens after the prefix.
+    * Two-sided: if the bound holds for both x and y, prefix(x) meets
+    * prefix(y). Let bx, by be the last prefix tokens, wlog bx <= by; a
+    * shared token in prefix(x) ranks <= bx <= by, so it is also in
+    * prefix(y); with no such token x ∩ y again fits after x's prefix.
+    *
+    * PPJoin positional bound (Xiao et al. 2008): the first shared token in
+    * the global order lies in both prefixes whenever any shared token
+    * does (prefixes are down-closed), and if it sits at positions (i, j)
+    * the overlap is at most 1 + min(n_x - i, n_y - j). A prune on this
+    * bound, evaluated per colliding prefix token, therefore keeps every
+    * pair whose overlap meets it.
+    *
+    * The set is built through explode -> groupBy -> collect, not as a
+    * projected expression: projection-collapse would inline a projected
+    * HOF chain into every downstream filter and join condition (measured
+    * 8 re-evaluations per row), while after the aggregation `s` is a
+    * concrete attribute. The prefix is carved from one
+    * sort_array(collect_list(struct)) in the same aggregation, so it costs
+    * no extra shuffle; the result is persisted through [[reuse]] because
+    * the candidate sides and both fetch joins read it.
+    */
+  private def rankedTokenSets(docs: DataFrame, tau: Double, idCol: String, textCol: String,
+                              blockCols: Seq[String],
+                              tokenizer: Column => Column): DataFrame = {
+    requireThreshold(tau)
+    val tok = docs.select((col(idCol) +: blockCols.map(col)) :+
+      explode(array_distinct(tokenizer(col(textCol)))).as("token"): _*)
+    reuse(withDocFreq(tok)
+      .groupBy(col(idCol) +: blockCols.map(col): _*)
+      .agg(
+        sort_array(collect_list(col("token"))).as("s"),
+        sort_array(collect_list(struct(rarestFirst.as("k"), col("token").as("t"))))
+          .as("ranked"))
+      .withColumn("n", size(col("s")))
+      .withColumn("prefix", transform(
+        slice(col("ranked"), lit(1), (col("n") - ceil(lit(tau) * col("n")) + 1).cast("int")),
+        (x, i) => struct(x.getField("t").as("t"), (i + 1).as("pos"))))
+      .drop("ranked"))
+  }
+
+  /** Bucket self-join: the candidate step of the near-dup joins. `kv` holds
+    * one row per (item, bucket key). Rows pair when they agree on every
+    * `keys` column and `a_<idCol> < b_<idCol>` (each unordered pair once,
+    * no self-pairs); `prune` runs inside the join, before anything is
+    * materialized. The output holds kv's columns twice, prefixed `a_` and
+    * `b_`, one row per shared bucket, so callers dedupe or count pairs.
+    *
+    * Completeness is pigeonhole: a pair is emitted iff it shares at least
+    * one bucket key on which it passes `prune`. A signature cut into k
+    * bucket keys that a true pair can differ in at most k - 1 of leaves
+    * one key equal; a prune must be lossless on at least one such key.
+    */
+  private[graft] def bucketSelfJoin(kv: DataFrame, keys: Seq[String], idCol: String,
+                                    prune: Seq[Column] = Nil): DataFrame = {
+    def side(p: String) = kv.select(kv.columns.toIndexedSeq.map(c => col(c).as(s"$p$c")): _*)
+    val ordered = col(s"a_$idCol") < col(s"b_$idCol")
+    side("a_").join(side("b_"),
+      (keys.map(c => col(s"a_$c") === col(s"b_$c")) ++ (ordered +: prune)).reduce(_ && _))
+  }
+
+  /** Exact check of candidate pairs (`doc_a`, `doc_b`, ...): fetches each
+    * side's `s` (and the `fetch` columns, as `a_<c>` / `b_<c>`) from `base`
+    * by id and adds `inter` = |a_s ∩ b_s| through the native O(n+m) merge
+    * [[graft.functions.SortedIntersectCount]] (`s` sorted, duplicate-free;
+    * size(array_intersect) is an interpreted CodegenFallback and measured
+    * ~10× slower). Token arrays ride only these two id-equi joins, never
+    * the candidate join; the doc side is dimension-sized and broadcasts
+    * locally.
+    */
+  private[graft] def exactInter(pairs: DataFrame, base: DataFrame, idCol: String,
+                                fetch: Seq[String] = Nil): DataFrame = {
+    def side(p: String) = base.select((col(idCol).as(s"doc_$p") +: col("s").as(s"${p}_s") +:
+      fetch.map(c => col(c).as(s"${p}_$c"))): _*)
+    pairs.join(side("a"), "doc_a").join(side("b"), "doc_b")
+      .withColumn("inter", ColumnBridge.column(graft.functions.SortedIntersectCount(
+        ColumnBridge.expression(col("a_s")), ColumnBridge.expression(col("b_s")))))
+  }
+
+  /** Jaccard of an [[exactInter]] row with sizes `a_n`, `b_n`:
+    * |A∩B| / (|A| + |B| - |A∩B|) over exact integers.
+    */
+  private[graft] def jaccardOf: Column =
+    col("inter").cast("double") / (col("a_n") + col("b_n") - col("inter"))
+
+  /** Lossless Jaccard length prune: J >= tau implies min(n)/max(n) >= tau. */
+  private def lengthRatioAtLeast(tau: Double): Column =
+    least(col("a_n"), col("b_n")).cast("double") / greatest(col("a_n"), col("b_n")) >=
+      tau - 1e-12
+
+  /** Distinct candidate pairs (`doc_a`, `doc_b`, `a_n`, `b_n`) from a
+    * [[bucketSelfJoin]], verified to exact Jaccard >= tau.
+    */
+  private def verifiedJaccardPairs(joined: DataFrame, base: DataFrame, idCol: String,
+                                   tau: Double): DataFrame = {
+    val candidates = joined
+      .select(col(s"a_$idCol").as("doc_a"), col(s"b_$idCol").as("doc_b"), col("a_n"), col("b_n"))
+      .distinct()
+    exactInter(candidates, base, idCol)
+      .withColumn("jaccard", jaccardOf)
+      .filter(col("jaccard") >= tau)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+  }
+
+  /** Near-duplicate pairs: Jaccard >= `minJaccard` over distinct token
+    * sets — exact, via prefix filtering (the PPJoin family: Bayardo et al.
+    * WWW'07, Xiao et al. WWW'08). Candidates are same-block pairs whose
+    * [[rankedTokenSets]] prefixes share a token; J >= tau implies
+    * |x∩y| >= tau·max(|x|, |y|), so the two-sided prefix theorem makes the
+    * candidates complete and the output is exactly every in-block pair
+    * with J >= tau — which is why the DuckDB oracle can be the naive
+    * all-pairs formulation. Rare tokens have near-singleton postings under
+    * a Zipfian vocabulary, so the filter is also sharp.
+    *
+    * Two lossless prunes run inside the (block, prefix-token) join, which
+    * carries ids, lengths and positions only:
+    *   - length: J >= tau implies min(n)/max(n) >= tau;
+    *   - position: J >= tau needs overlap >= tau/(1+tau)·(n_a + n_b),
+    *     checked against the PPJoin bound at the colliding token.
     *
     * Tunable-recall scale alternative: [[minHashLshPairs]].
     *
     * Shuffle budget: 1 token explode-agg + 1 vocabulary-sized frequency
     * agg + 1 token-keyed freq join + 1 (block, prefix-token) self-join +
-    * 1 pair distinct + 2 id-equi fetch joins; only ids and lengths ride
-    * the pair join, and the prefix explode is ~(1-tau)|s|+1 rows per doc
-    * off the already-cached base.
+    * 1 pair distinct + 2 id-equi fetch joins.
     */
   def nearDupPairs(docs: DataFrame, minJaccard: Double,
                    idCol: String = "doc_id", textCol: String = "text",
                    blockCols: Seq[String] = Seq("lang"),
                    tokenizer: Column => Column = tokenSet): DataFrame = {
-    // Sorted distinct tokens: the intersection is then a native O(n+m)
-    // merge (SortedIntersectCount —
-    // size(array_intersect) is an interpreted CodegenFallback and dominated
-    // this operator's runtime by ~10x). `tokenizer` picks the shingle
-    // granularity: word sets (default), n-gram sets (dedup_ngram), etc.
-    //
-    // The token set is built through explode -> groupBy -> collect, NOT as
-    // a projected expression: a projected HOF chain gets INLINED by
-    // projection-collapse into every downstream filter/join condition that
-    // references it (observed 8 re-evaluations of the interpreted bigram
-    // build per row — ~4x the operator's total cost). An aggregation is a
-    // pipeline breaker, so `s` is a concrete attribute afterwards. Docs
-    // with zero tokens drop out here; they can't pair anyway.
-    // Global order = lpad(doc_freq)||token: the zero-padded frequency
-    // prefix makes lexicographic order = rarest-first, and the token
-    // suffix makes ties deterministic. The frequency join is keyed on the
-    // token (vocabulary-sized build side — broadcasts locally,
-    // hash-shuffles at cluster scale). The per-doc prefix is carved out
-    // of one sort_array(collect_list(struct)) in the same aggregation
-    // that builds `s` — no extra shuffle; the slice/transform HOFs are
-    // interpreted but run once per row into the cached base.
-    val tok = docs.select((col(idCol) +: blockCols.map(col)) :+
-      explode(array_distinct(tokenizer(col(textCol)))).as("token"): _*)
-    val freq = tok.groupBy("token").agg(count(lit(1)).as("tok_df"))
-    val okey = concat(lpad(col("tok_df").cast("string"), 10, "0"), col("token"))
-    val base = reuse(tok.join(freq, "token")
-      .groupBy(col(idCol) +: blockCols.map(col): _*)
-      .agg(
-        sort_array(collect_list(col("token"))).as("s"),
-        sort_array(collect_list(struct(okey.as("k"), col("token").as("t"))))
-          .as("ranked"))
-      .withColumn("n", size(col("s")))
-      // prefix carries each token's 1-based position in the doc's FULL
-      // rarest-first order (the slice preserves indices), feeding the
-      // PPJoin positional filter below
-      .withColumn("prefix", transform(
-        slice(col("ranked"), lit(1),
-          (col("n") - ceil(lit(minJaccard) * col("n")) + 1).cast("int")),
-        (x, i) => struct(x.getField("t").as("t"), (i + 1).as("pos"))))
-      .drop("ranked"))
-    // Phase 1 — NARROW candidate generation: self-join ids+lengths only on
-    // (block, prefix-token) — never the token arrays: materializing pairs
-    // of ~50-string arrays costs more than every merge combined. Two
-    // lossless prunes run INSIDE the join (epsilon guards on the double
-    // forms, house style):
-    //   - length filter: J >= tau implies min(n)/max(n) >= tau;
-    //   - PPJoin positional filter (Xiao et al. 2008): a collision at
-    //     1-based rarest-first positions (i, j) caps the overlap at
-    //     1 + min(n_a - i, n_b - j), and J >= tau needs overlap >=
-    //     tau/(1+tau)·(n_a+n_b); a true pair always passes via its
-    //     FIRST shared token, so dropping failing collisions loses
-    //     nothing (pinned by the brute-force property + the naive
-    //     oracles) while cutting the exact-verify candidate volume.
-    // The distinct collapses pairs colliding on several prefix tokens.
+    val base = rankedTokenSets(docs, minJaccard, idCol, textCol, blockCols, tokenizer)
     val slim = base.select(
       (Seq(col(idCol), explode(col("prefix")).as("p"), col("n")) ++
         blockCols.map(col)): _*)
       .select((Seq(col(idCol), col("p.t").as("ptok"), col("p.pos").as("pos"),
         col("n")) ++ blockCols.map(col)): _*)
-    val a = slim.select(slim.columns.toIndexedSeq.map(c => col(c).as(s"a_$c")): _*)
-    val b = slim.select(slim.columns.toIndexedSeq.map(c => col(c).as(s"b_$c")): _*)
-    val joinCond = (blockCols :+ "ptok")
-      .map(c => col(s"a_$c") === col(s"b_$c")).reduce(_ && _) &&
-      col(s"a_$idCol") < col(s"b_$idCol") &&
-      (least(col("a_n"), col("b_n")).cast("double") / greatest(col("a_n"), col("b_n"))
-        >= minJaccard - 1e-12) &&
-      ((lit(1) + least(col("a_n") - col("a_pos"), col("b_n") - col("b_pos")))
-        .cast("double")
-        >= lit(minJaccard / (1 + minJaccard)) * (col("a_n") + col("b_n")) - 1e-9)
-    val candidates = a.join(b, joinCond)
-      .select(col(s"a_$idCol").as("doc_a"), col(s"b_$idCol").as("doc_b"),
-        col("a_n"), col("b_n"))
-      .distinct()
-    // Phase 2 — fetch the sorted token arrays only for surviving pairs
-    // (equi joins; the doc-side is dimension-sized per block and
-    // auto-broadcasts locally, hash-shuffles at cluster scale) and run the
-    // native merge.
-    val sa = base.select(col(idCol).as("doc_a"), col("s").as("a_s"))
-    val sb = base.select(col(idCol).as("doc_b"), col("s").as("b_s"))
-    candidates.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn(
-        "inter",
-        ColumnBridge.column(graft.functions.SortedIntersectCount(
-          ColumnBridge.expression(col("a_s")), ColumnBridge.expression(col("b_s")))))
-      .withColumn(
-        "jaccard",
-        col("inter").cast("double") / (col("a_n") + col("b_n") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    val joined = bucketSelfJoin(slim, blockCols :+ "ptok", idCol, Seq(
+      lengthRatioAtLeast(minJaccard),
+      (lit(1) + least(col("a_n") - col("a_pos"), col("b_n") - col("b_pos"))).cast("double")
+        >= lit(minJaccard / (1 + minJaccard)) * (col("a_n") + col("b_n")) - 1e-9))
+    verifiedJaccardPairs(joined, base, idCol, minJaccard)
   }
 
   /** Weighted-cosine all-pairs similarity join (Bayardo, Ma & Srikant 2007,
@@ -297,14 +344,12 @@ object TextOps {
       .select(col(idCol).as("doc"), explode(dims(col(textCol))).as("token"))
       .groupBy("doc", "token")
       .agg(count(lit(1)).cast("long").as("tf")))
-    val freq = tf.groupBy("token").agg(count(lit(1)).as("tok_df"))
-    val okey = concat(lpad(col("tok_df").cast("string"), 10, "0"), col("token"))
     // One doc-keyed exchange: the cumulative head norm and the full norm
     // are two frames over the same (doc)-partitioned sort.
-    val wCum = Window.partitionBy("doc").orderBy(okey)
+    val wCum = Window.partitionBy("doc").orderBy(rarestFirst)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy("doc")
-    val ranked = reuse(tf.join(freq, "token")
+    val ranked = reuse(withDocFreq(tf)
       .withColumn("headSq", sum(col("tf") * col("tf")).over(wCum))
       .withColumn("n2", sum(col("tf") * col("tf")).over(wAll)))
     // Same decimal-exact discipline as the verify gate below: den2·(headSq
@@ -349,49 +394,27 @@ object TextOps {
     * embedded in a long one has high containment but low Jaccard, since the
     * union is dominated by the long side).
     *
-    * Same rarest-first prefix-filter discipline as [[nearDupPairs]], with
-    * the containment-specific twist: the smaller side's prefix must hit the
-    * LARGER side's FULL set (the length-ratio prune is invalid here — a
-    * 10-shingle quote inside a 500-shingle doc is exactly the pair we
-    * want). Losslessness: wlog |A| <= |B| and C >= tau; if none of A's
-    * (|A| - ceil(tau·|A|) + 1) rarest shingles were in B, the intersection
-    * would fit inside A's remaining ceil(tau·|A|) - 1 shingles < tau·|A| —
-    * contradiction. Candidates are therefore prefix(X) × full-postings(Y)
-    * over the block, both directions, canonicalized; the full-postings side
-    * only materializes postings for shingles that occur in SOME prefix, and
-    * prefixes are rarest-first, so frequent shingles never key the join.
-    * Exact verify via the native sorted merge, as everywhere.
+    * Same [[rankedTokenSets]] build as [[nearDupPairs]], but only the
+    * smaller side is bounded: C >= tau means |A ∩ B| >= tau·|A| for
+    * |A| <= |B|, so by the one-sided prefix theorem the smaller side's
+    * prefix must meet the larger side's FULL set, and the length-ratio
+    * prune is invalid (a 10-shingle quote inside a 500-shingle doc is
+    * exactly the pair we want). Candidates are therefore prefix(X) ×
+    * full-postings(Y) over the block, both directions, canonicalized; the
+    * postings side only materializes shingles that occur in some prefix,
+    * and prefixes are rarest-first, so frequent shingles never key the
+    * join.
     *
     * Shuffle budget: 1 shingle agg + 1 (block, shingle) prefix×postings
-    * join + 1 pair distinct + 2 id-equi fetch joins — the [[nearDupPairs]]
-    * budget with the posting side swapped in for one prefix side.
+    * join + 1 pair distinct + 2 id-equi fetch joins.
     */
   def containmentPairs(docs: DataFrame, minContainment: Double,
                        idCol: String = "doc_id", textCol: String = "text",
                        blockCols: Seq[String] = Seq("lang"),
                        tokenizer: Column => Column = tokenSet): DataFrame = {
-    // Base build mirrors nearDupPairs (see the comments there for why the
-    // aggregation-not-projection shape and the lpad(freq)||token global
-    // order matter); prefix length n - ceil(tau·n) + 1 is the same bound
-    // because both thresholds lower-bound the intersection by tau·|A|.
-    val tok = docs.select((col(idCol) +: blockCols.map(col)) :+
-      explode(array_distinct(tokenizer(col(textCol)))).as("token"): _*)
-    val freq = tok.groupBy("token").agg(count(lit(1)).as("tok_df"))
-    val okey = concat(lpad(col("tok_df").cast("string"), 10, "0"), col("token"))
-    val base = reuse(tok.join(freq, "token")
-      .groupBy(col(idCol) +: blockCols.map(col): _*)
-      .agg(
-        sort_array(collect_list(col("token"))).as("s"),
-        sort_array(collect_list(struct(okey.as("k"), col("token").as("t"))))
-          .as("ranked"))
-      .withColumn("n", size(col("s")))
-      .withColumn("prefix", transform(
-        slice(col("ranked"), lit(1),
-          (col("n") - ceil(lit(minContainment) * col("n")) + 1).cast("int")),
-        x => x.getField("t")))
-      .drop("ranked"))
+    val base = rankedTokenSets(docs, minContainment, idCol, textCol, blockCols, tokenizer)
     val prefixSide = base.select(
-      (Seq(col(idCol).as("p_id"), explode(col("prefix")).as("token")) ++
+      (Seq(col(idCol).as("p_id"), explode(col("prefix.t")).as("token")) ++
         blockCols.map(c => col(c).as(s"p_$c"))): _*)
     val postingSide = base.select(
       (Seq(col(idCol).as("f_id"), explode(col("s")).as("token")) ++
@@ -403,13 +426,7 @@ object TextOps {
       .select(least(col("p_id"), col("f_id")).as("doc_a"),
         greatest(col("p_id"), col("f_id")).as("doc_b"))
       .distinct()
-    val sa = base.select(col(idCol).as("doc_a"), col("s").as("a_s"), col("n").as("a_n"))
-    val sb = base.select(col(idCol).as("doc_b"), col("s").as("b_s"), col("n").as("b_n"))
-    candidates.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn(
-        "inter",
-        ColumnBridge.column(graft.functions.SortedIntersectCount(
-          ColumnBridge.expression(col("a_s")), ColumnBridge.expression(col("b_s")))))
+    exactInter(candidates, base, idCol, fetch = Seq("n"))
       .withColumn(
         "containment",
         col("inter").cast("double") / least(col("a_n"), col("b_n")))
@@ -417,15 +434,74 @@ object TextOps {
       .select(col("doc_a"), col("doc_b"), col("containment"))
   }
 
-  /** MinHash-LSH near-dup pairs — the tunable-recall scale path. Each band
-    * key is a salted MinHash: `min over tokens of sha256(salt || token)`
-    * (a cryptographic hash as the permutation; lexicographic min of hex
+  /** MinHash signature per doc: the id and block columns, `s` (sorted
+    * distinct tokens), `n` = |s| and `mh0 .. mh{bands-1}`, where `mh<i>` is
+    * the min over the doc's tokens of sha256('<i>' || token) — a
+    * cryptographic hash as the permutation; the lexicographic min of hex
     * strings is a valid min-wise sketch and, unlike xxhash seeds, is
-    * reproducible in any SQL engine). Candidates = pairs sharing ANY band
-    * key within their block — ONE self-join on the exploded
-    * (block, band, mh) bucket key (recall 1-(1-J)^bands at the
-    * threshold); each candidate is then verified with the exact
-    * native-merge Jaccard. At 100 TB swap sha256 for xxhash64 and raise
+    * reproducible in any SQL engine. Docs without tokens drop out.
+    *
+    * Only the band minima aggregate, as plain `min()`s over codegen'd sha2
+    * rows (measured 2.7× faster than per-doc array HOFs; a
+    * partial-aggregating HashAggregate, so the shuffle carries `bands`
+    * partial mins per doc, not token lists); `s` and `n` are
+    * per-row functions of the token array, which moves once through the
+    * doc-grain join. Does no caching: each caller persists the signature
+    * where its consumers share it.
+    */
+  private[graft] def minHashSignature(docs: DataFrame, bands: Int,
+                                      idCol: String = "doc_id", textCol: String = "text",
+                                      blockCols: Seq[String] = Seq("lang"),
+                                      tokenizer: Column => Column = tokens): DataFrame = {
+    require(bands >= 1, s"MinHash needs bands >= 1 (got $bands)")
+    val bandAggs = (0 until bands).map(i =>
+      min(sha2(concat(lit(i.toString), col("token")), 256)).as(s"mh$i"))
+    val doc = docs.select((col(idCol) +: blockCols.map(col)) :+
+      array_distinct(tokenizer(col(textCol))).as("toks"): _*)
+    val mins = doc
+      .select((col(idCol) +: blockCols.map(col)) :+ explode(col("toks")).as("token"): _*)
+      .groupBy(col(idCol) +: blockCols.map(col): _*)
+      .agg(bandAggs.head, bandAggs.tail: _*)
+    doc
+      .select((col(idCol) +: blockCols.map(col)) ++ Seq(
+        sort_array(col("toks")).as("s"),
+        size(col("toks")).cast("long").as("n")): _*)
+      .join(mins, idCol +: blockCols)
+  }
+
+  /** Banded-LSH pairs over a [[minHashSignature]] frame: each of the first
+    * `bands` components is one band; candidates are same-block pairs
+    * sharing any (band, mh) bucket (recall 1-(1-J)^bands at the
+    * threshold), length-pruned and verified to exact Jaccard >= tau. One
+    * [[bucketSelfJoin]] on the exploded (block, band, mh) key — the band
+    * index in the key keeps buckets of different bands apart.
+    */
+  private[graft] def minHashSignaturePairs(sig: DataFrame, minJaccard: Double, bands: Int,
+                                           idCol: String = "doc_id",
+                                           blockCols: Seq[String] = Seq("lang")): DataFrame = {
+    requireThreshold(minJaccard)
+    val joined = bucketSelfJoin(signatureBands(sig, bands, idCol, blockCols),
+      blockCols ++ Seq("band", "mh"), idCol, Seq(lengthRatioAtLeast(minJaccard)))
+    verifiedJaccardPairs(joined, sig, idCol, minJaccard)
+  }
+
+  /** The bucket keys of a [[minHashSignature]] frame: one row per (doc,
+    * band) for the first `bands` components, holding the id, `n`, the
+    * block columns, `band` and its `mh`.
+    */
+  private[graft] def signatureBands(sig: DataFrame, bands: Int, idCol: String = "doc_id",
+                                    blockCols: Seq[String] = Seq("lang")): DataFrame =
+    sig.select(
+      (Seq(col(idCol), col("n")) ++ blockCols.map(col) :+
+        explode(array((0 until bands).map(i =>
+          struct(lit(i).as("band"), col(s"mh$i").as("mh"))): _*)).as("bk")): _*)
+      .select((Seq(col(idCol), col("n")) ++ blockCols.map(col) ++
+        Seq(col("bk.band").as("band"), col("bk.mh").as("mh"))): _*)
+
+  /** MinHash-LSH near-dup pairs — the tunable-recall scale path:
+    * [[minHashSignature]] with `bands` components, persisted, then
+    * [[minHashSignaturePairs]]. `tokenizer` picks the shingle granularity
+    * (word sets by default). At 100 TB swap sha256 for xxhash64 and raise
     * bands — the plan shape (one bucket join + distinct + verify) is
     * unchanged.
     *
@@ -435,93 +511,10 @@ object TextOps {
   def minHashLshPairs(docs: DataFrame, minJaccard: Double, bands: Int = 4,
                       idCol: String = "doc_id", textCol: String = "text",
                       blockCols: Seq[String] = Seq("lang"),
-                      tokenizer: Column => Column = tokens,
-                      precomputedSig: Option[DataFrame] = None): DataFrame = {
-    // One explode + one aggregation produces the sorted token set AND all
-    // band keys: each salted MinHash is a plain `min()` aggregate over
-    // codegen'd sha2 rows — no interpreted array transform, and the agg
-    // boundary stops projection-collapse from inlining anything downstream
-    // (see nearDupPairs). `tokenizer` picks the shingle granularity (word
-    // sets by default, bigram shingles for dedup_ngram); the outer
-    // array_distinct makes any tokenizer set-valued.
-    //
-    // `precomputedSig` (r12; the dedup_minhash_estimate cold-path ask): a
-    // caller-supplied signature frame — (idCol, blockCols, s sorted token
-    // array, n, mh0..mh{bands-1}) with the SAME '<i>'-salt sha2 scheme —
-    // replaces the build entirely, so the token explode + groupBy (the
-    // expensive cold half: one full-corpus shuffle) is paid ONCE when two
-    // consumers audit the same corpus (lsh pairing + estimator
-    // calibration share one artifact; at 100 TB signatures are a
-    // persisted table, which is exactly this seam).
-    val bandAggs = (0 until bands).map(i =>
-      min(sha2(concat(lit(i.toString), col("token")), 256)).as(s"mh$i"))
-    val base = precomputedSig.map { sig =>
-      val need = Seq(idCol, "s", "n") ++ blockCols ++ (0 until bands).map(i => s"mh$i")
-      val missing = need.filterNot(sig.columns.contains)
-      require(missing.isEmpty,
-        s"minHashLshPairs precomputedSig is missing columns: ${missing.mkString(", ")}")
-      sig
-    }.getOrElse {
-      // r16 optimization round (guide §5, the minhashSig rewrite): the
-      // sorted token set and its size are per-row functions of the token
-      // array (sort_array(collect_list(exploded toks)) == sort_array(toks),
-      // count == size), so only the 8 declarative mins aggregate — a
-      // partial-aggregating HashAggregate whose shuffle carries 8 partial
-      // mins per doc per map partition instead of collect_list's full
-      // token-list buffers through ObjectHashAggregate's sort-based
-      // fallback. The token arrays move once, through the doc-grain join;
-      // the inner join reproduces explode's drop of docs with no tokens.
-      val doc = docs.select((col(idCol) +: blockCols.map(col)) :+
-        array_distinct(tokenizer(col(textCol))).as("toks"): _*)
-      val mins = doc
-        .select((col(idCol) +: blockCols.map(col)) :+
-          explode(col("toks")).as("token"): _*)
-        .groupBy(col(idCol) +: blockCols.map(col): _*)
-        .agg(bandAggs.head, bandAggs.tail: _*)
-      reuse(doc
-        .select((col(idCol) +: blockCols.map(col)) ++ Seq(
-          sort_array(col("toks")).as("s"),
-          size(col("toks")).cast("long").as("n")): _*)
-        .join(mins, idCol +: blockCols))
-    }
-    // Candidate generation as ONE self-join on the exploded (band, mh)
-    // key — the standard banded-LSH bucket join. The r1–r5 form was a
-    // union of `bands` separate self-joins: same candidate set, but
-    // `bands`× the scans of the signature table and `bands` shuffle
-    // joins; the single (block, band, mh) equi-join shuffles the
-    // 6×docs key rows once and buckets never mix across bands (the band
-    // index is part of the key).
-    val kv = base.select(
-      (Seq(col(idCol), col("n")) ++ blockCols.map(col) :+
-        explode(array((0 until bands).map(i =>
-          struct(lit(i).as("band"), col(s"mh$i").as("mh"))): _*)).as("bk")): _*)
-      .select((Seq(col(idCol), col("n")) ++ blockCols.map(col) ++
-        Seq(col("bk.band").as("band"), col("bk.mh").as("mh"))): _*)
-    val a = kv.select(kv.columns.toIndexedSeq.map(c => col(c).as(s"a_$c")): _*)
-    val b = kv.select(kv.columns.toIndexedSeq.map(c => col(c).as(s"b_$c")): _*)
-    val joinCond = (blockCols.map(c => col(s"a_$c") === col(s"b_$c")) ++ Seq(
-      col("a_band") === col("b_band"),
-      col("a_mh") === col("b_mh"),
-      col(s"a_$idCol") < col(s"b_$idCol"),
-      least(col("a_n"), col("b_n")).cast("double") / greatest(col("a_n"), col("b_n"))
-        >= minJaccard - 1e-12)).reduce(_ && _)
-    val candidates = a.join(b, joinCond)
-      .select(col(s"a_$idCol").as("doc_a"), col(s"b_$idCol").as("doc_b"),
-        col("a_n"), col("b_n"))
-      .distinct()
-    val sa = base.select(col(idCol).as("doc_a"), col("s").as("a_s"))
-    val sb = base.select(col(idCol).as("doc_b"), col("s").as("b_s"))
-    candidates.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn(
-        "inter",
-        ColumnBridge.column(graft.functions.SortedIntersectCount(
-          ColumnBridge.expression(col("a_s")), ColumnBridge.expression(col("b_s")))))
-      .withColumn(
-        "jaccard",
-        col("inter").cast("double") / (col("a_n") + col("b_n") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
+                      tokenizer: Column => Column = tokens): DataFrame =
+    minHashSignaturePairs(
+      reuse(minHashSignature(docs, bands, idCol, textCol, blockCols, tokenizer)),
+      minJaccard, bands, idCol, blockCols)
 
   /** Winnowing k-gram fingerprints (the rolling-hash document
     * fingerprinting of Schleimer/Wilkerson/Aiken, SIGMOD'03): hash every
@@ -611,17 +604,15 @@ object TextOps {
   /** SimHash near-dup pairs: same-block pairs whose 48-bit fingerprints
     * are within `maxHamming`.
     *
-    * Scan shape (the 100 TB path, replacing r2's O(block²) all-pairs join):
-    * band the 48-bit fingerprint into 6 chunks of 8 bits and equi-join on
-    * any-chunk-equal. Pigeonhole: ≤ `maxHamming` differing bits spread over
-    * 6 chunks leave ≥ 1 chunk identical whenever maxHamming < 6 — so the
-    * banding is LOSSLESS for the supported thresholds (note 4×12 bits, the
-    * obvious split, is NOT lossless at maxHamming=4: 1+1+1+1 defeats it).
-    * Candidates come from ONE narrow hash equi-join on the exploded
-    * (block, chunk_idx, chunk_value) bucket key — ids + two bigints per
-    * row — and the exact xor+bit_count filter runs inside the join before
-    * the distinct. The DuckDB oracle keeps the all-pairs formulation:
-    * same result set, independently derived.
+    * The fingerprint is cut into 6 chunks of 8 bits, exploded into
+    * (chunk_idx, chunk_value) bucket keys and paired by one
+    * [[bucketSelfJoin]] on (block, chunk_idx, chunk_value), with the exact
+    * xor+bit_count filter inside the join before the distinct. Threshold
+    * bound: maxHamming < 6 differing bits touch at most 5 of the 6 chunks,
+    * so the banding is lossless for the supported thresholds (4×12 bits,
+    * the obvious split, is not lossless at maxHamming=4: 1+1+1+1 defeats
+    * it). The DuckDB oracle keeps the all-pairs formulation: same result
+    * set, independently derived.
     */
   def simHashPairs(docs: DataFrame, maxHamming: Int,
                    idCol: String = "doc_id", textCol: String = "text",
@@ -629,11 +620,6 @@ object TextOps {
     val chunks = 6
     require(maxHamming < chunks,
       s"banded scan is lossless only for maxHamming < $chunks (got $maxHamming)")
-    // Same single-bucket-join shape as minHashLshPairs: explode the 6
-    // chunk keys into (chunk_idx, chunk_value) rows and self-join ONCE on
-    // (block, chunk_idx, chunk_value) — the per-chunk union form scanned
-    // the fingerprint table and shuffled 6 times for the identical
-    // candidate set (the chunk index in the key keeps buckets separate).
     val kv = reuse(simHash(docs, idCol, textCol, blockCols))
       .select((col(idCol) +: blockCols.map(col) :+ col("simhash")) :+
         explode(array((0 until chunks).map(k =>
@@ -642,14 +628,8 @@ object TextOps {
           .as("c"): _*)
       .select((col(idCol) +: blockCols.map(col)) ++
         Seq(col("simhash"), col("c.ck").as("ck"), col("c.cv").as("cv")): _*)
-    val a = kv.select(kv.columns.toIndexedSeq.map(c => col(c).as(s"a_$c")): _*)
-    val b = kv.select(kv.columns.toIndexedSeq.map(c => col(c).as(s"b_$c")): _*)
-    val cond = (blockCols.map(c => col(s"a_$c") === col(s"b_$c")) ++ Seq(
-      col("a_ck") === col("b_ck"),
-      col("a_cv") === col("b_cv"),
-      col(s"a_$idCol") < col(s"b_$idCol"),
-      expr("bit_count(a_simhash ^ b_simhash)") <= maxHamming)).reduce(_ && _)
-    a.join(b, cond)
+    bucketSelfJoin(kv, blockCols ++ Seq("ck", "cv"), idCol,
+        Seq(expr("bit_count(a_simhash ^ b_simhash)") <= maxHamming))
       .select(col(s"a_$idCol").as("doc_a"), col(s"b_$idCol").as("doc_b"),
         expr("CAST(bit_count(a_simhash ^ b_simhash) AS BIGINT)").as("hamming"))
       .distinct()
@@ -749,14 +729,7 @@ object TextOps {
         length(col(nameCol)).as("__len") :+
         explode(ColumnBridge.column(graft.functions.DeleteVariantHashes(
           ColumnBridge.expression(col(nameCol)), k))).as("__vh"): _*))
-    def side(df: DataFrame, p: String) =
-      df.select(df.columns.toIndexedSeq.map(c => col(c).as(s"$p$c")): _*)
-    val a = side(v, "a_"); val b = side(v, "b_")
-    val joinKeys = (blockCols ++ Seq("__vh"))
-      .map(c => col(s"a_$c") === col(s"b_$c")).reduce(_ && _)
-    a.join(b, joinKeys &&
-        col(s"a_$idCol") < col(s"b_$idCol") &&
-        abs(col("a___len") - col("b___len")) <= k)
+    bucketSelfJoin(v, blockCols :+ "__vh", idCol, Seq(abs(col("a___len") - col("b___len")) <= k))
       .select(col(s"a_$idCol").as("a_id"), col(s"b_$idCol").as("b_id"))
       .distinct()
   }

@@ -87,54 +87,18 @@ object DedupVariantQueries {
         tokenizer = c => array_distinct(TextOps.trigrams(TextOps.tokens(c))))
     }
 
-  /** ONE word-token MinHash signature artifact per dir (r12; the r11
-    * cold-path ask): (doc_id, lang, s sorted token set, n, mh0..mh7) with
-    * the '<i>'-salt sha2 scheme. dedup_minhash_lsh consumes the first 4
-    * components as its bands; dedup_minhash_estimate audits all 8 — the
-    * token explode + groupBy shuffle (the dominant cold cost, measured
-    * 10.6 s cold vs 3.35 s warm at sf0.1 when each key built its own) is
-    * paid once for both. At 100 TB this is the signatures-as-persisted-
-    * table seam: pairing and calibration read the same artifact.
+  /** One word-token MinHash signature artifact per dir: (doc_id, lang, s
+    * sorted token set, n, mh0..mh7), cached through `Tables.cached`.
+    * dedup_minhash_lsh bands on the first 4 components and
+    * dedup_minhash_estimate audits all 8, so the token explode + groupBy
+    * shuffle (the dominant cold cost) is paid once for both. Columnar
+    * `Tables.cached` beats a `localCheckpoint` row store here: the
+    * checkpoint halved the cold build but tripled every warm consumer's
+    * read (2.7→7.9 s estimate, 1.0→2.4 s lsh at sf0.1).
     */
   private def minhashSig(s: org.apache.spark.sql.SparkSession, d: String) =
-    // Tables.cached (columnar), measured against a localCheckpoint row
-    // store: the checkpoint halved the cold build but its per-read row
-    // deserialization tripled every WARM consumer (2.7→7.9 s estimate,
-    // 1.0→2.4 s lsh at sf0.1) — the artifact is read many times per
-    // session, so columnar wins.
     Tables.cached(s, s"$d/minhash-sig/k=8") {
-      // explode + groupBy for the mins, NOT per-row array HOFs: measured
-      // 2.7× faster here (codegen'd sha2 over token rows beats 8
-      // interpreted ArrayTransforms per doc).
-      //
-      // r16 optimization round (guide §5 spill resistance): the sorted
-      // token set `s` and its size `n` are NOT aggregated any more — they
-      // are per-row functions of the token array the doc row already
-      // carries (sort_array(collect_list(exploded toks)) == sort_array
-      // (toks), count == size). The former single groupBy mixed
-      // collect_list (TypedImperativeAggregate) with the 8 declarative
-      // mins, forcing the WHOLE aggregation through ObjectHashAggregate —
-      // which falls back to SORT-based aggregation past 128 distinct
-      // groups per partition, i.e. both sides of the token-grain shuffle
-      // externally sorted token rows carrying full list buffers (the
-      // 10×-under-load cold spikes the r15 ledger documents). Now the
-      // mins ride a plain partial-aggregating HashAggregate (the shuffle
-      // carries 8 partial mins per doc per map partition, not token
-      // lists) and the token arrays move ONCE through the doc-grain join
-      // — narrower shuffle, no object-agg sort fallback, same rows
-      // (inner join reproduces explode's drop of docs with no tokens).
-      val mhAggs = (0 until 8).map(i =>
-        min(sha2(concat(lit(i.toString), col("token")), 256)).as(s"mh$i"))
-      val docs = Tables.cachedTable(s, d, "documents")
-        .select(col("doc_id"), col("lang"),
-          array_distinct(TextOps.tokens(col("text"))).as("toks"))
-      val mins = docs
-        .select(col("doc_id"), col("lang"), explode(col("toks")).as("token"))
-        .groupBy("doc_id", "lang")
-        .agg(mhAggs.head, mhAggs.tail: _*)
-      docs.select(col("doc_id"), col("lang"), sort_array(col("toks")).as("s"),
-          size(col("toks")).cast("long").as("n"))
-        .join(mins, Seq("doc_id", "lang"))
+      TextOps.minHashSignature(Tables.cachedTable(s, d, "documents"), bands = 8)
     }
 
   private def clusterFrame(s: org.apache.spark.sql.SparkSession, d: String) =
@@ -170,13 +134,10 @@ object DedupVariantQueries {
       (s, d) =>
         // Rides the shared 8-component signature artifact (first 4
         // components = these bands; identical salt scheme).
-        TextOps.minHashLshPairs(
-          Tables.cachedTable(s, d, "documents").select("doc_id", "lang", "text"),
-          minJaccard = 0.9, bands = 4,
-          precomputedSig = Some(minhashSig(s, d)))
+        TextOps.minHashSignaturePairs(minhashSig(s, d), minJaccard = 0.9, bands = 4)
     },
 
-    // MinHash ESTIMATOR-quality audit (r9) — before trusting banded LSH
+    // MinHash ESTIMATOR-quality audit — before trusting banded LSH
     // thresholds at 100 TB, measure the estimator itself: per candidate
     // pair, the 8-component match fraction IS the Jaccard estimate
     // (E[matches/k] = J); bucketed by match count, report the observed
@@ -219,28 +180,16 @@ object DedupVariantQueries {
         |FROM p WHERE matches >= 2 GROUP BY matches""".stripMargin) { (s, d) =>
       val k = 8
       val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-      // Shared signature artifact (r12): same frame dedup_minhash_lsh
-      // bands on — the estimator audits the components the pairer uses.
+      // the shared signature dedup_minhash_lsh bands on: the estimator
+      // audits the components the pairer uses
       val base = minhashSig(s, d)
-      // one bucket self-join on the exploded (component, mh) key — the
-      // dedup_minhash_lsh shape, with per-pair match COUNTS kept
-      val kv = base.select(col("doc_id"), col("lang"),
-        explode(array((0 until k).map(i =>
-          struct(lit(i).as("c"), col(s"mh$i").as("mh"))): _*)).as("bk"))
-        .select(col("doc_id"), col("lang"),
-          col("bk.c").as("c"), col("bk.mh").as("mh"))
-      val pairs = kv.alias("x").join(kv.alias("y"),
-          col("x.lang") === col("y.lang") && col("x.c") === col("y.c") &&
-            col("x.mh") === col("y.mh") && col("x.doc_id") < col("y.doc_id"))
-        .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      val pairs = TextOps.bucketSelfJoin(TextOps.signatureBands(base, k),
+          Seq("lang", "band", "mh"), "doc_id")
+        .groupBy(col("a_doc_id").as("doc_a"), col("b_doc_id").as("doc_b"))
         .agg(count(lit(1)).as("matches"))
         .filter(col("matches") >= 2)
-      val sa = base.select(col("doc_id").as("doc_a"), col("s").as("a_s"))
-      val sb = base.select(col("doc_id").as("doc_b"), col("s").as("b_s"))
-      pairs.join(sa, "doc_a").join(sb, "doc_b")
-        .select(col("matches"),
-          (size(array_intersect(col("a_s"), col("b_s"))).cast("double") /
-            size(array_union(col("a_s"), col("b_s")))).as("jac"))
+      TextOps.exactInter(pairs, base, "doc_id", fetch = Seq("n"))
+        .select(col("matches"), TextOps.jaccardOf.as("jac"))
         .groupBy("matches")
         .agg(count(lit(1)).as("n_pairs"),
           sum(col("jac").cast(dec)).as("sj"),

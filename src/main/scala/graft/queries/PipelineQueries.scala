@@ -1596,11 +1596,9 @@ object PipelineQueries {
             "'bv', (hash >> (t * 16)) & 65535))")).as("bk"))
           .select(col("id"), col("hash"),
             col("bk.band").as("band"), col("bk.bv").as("bv"))
-        banded.as("l").join(banded.as("r"),
-            col("l.band") === col("r.band") && col("l.bv") === col("r.bv") &&
-              col("l.id") < col("r.id"))
-          .select(col("l.id").as("a"), col("r.id").as("b"),
-            expr("bit_count(l.hash ^ r.hash)").as("hd"))
+        TextOps.bucketSelfJoin(banded, Seq("band", "bv"), "id")
+          .select(col("a_id").as("a"), col("b_id").as("b"),
+            expr("bit_count(a_hash ^ b_hash)").as("hd"))
           // hamming gate BEFORE the dedup exchange: the filter is one
           // codegen'd xor+popcount per candidate and collapses map-side,
           // so the distinct shuffles only the <=3 survivors — the

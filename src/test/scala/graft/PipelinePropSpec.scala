@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.array_distinct
 import org.scalacheck.{Gen, rng}
 import graft.operators.TextOps
 
@@ -69,21 +71,68 @@ class PipelinePropSpec extends SparkTestBase {
     }
   }
 
+  private def containment(a: String, b: String): Double = {
+    val (sa, sb) = (a.toLowerCase.split(" ").toSet, b.toLowerCase.split(" ").toSet)
+    val m = math.min(sa.size, sb.size)
+    if (m == 0) 0.0 else sa.intersect(sb).size.toDouble / m
+  }
+
   test("prefix-filter near-dup is LOSSLESS on random corpora (== brute force)") {
     // The oracle-facing claim: candidate generation misses nothing. Small
     // vocab + short docs maximizes collision-shaped edge cases (shared
-    // rarest tokens, equal-frequency ties, duplicate docs).
-    for ((corpus, i) <- samples(corpusGen, 10, 23L).zipWithIndex; tau <- Seq(0.5, 0.9)) {
+    // rarest tokens, equal-frequency ties, duplicate docs). Both prefix
+    // filters are checked: Jaccard (two-sided prefix) and containment
+    // (smaller side's prefix against the larger side's full set).
+    val ops = Seq[(String, (DataFrame, Double, Column => Column) => DataFrame,
+        (String, String) => Double)](
+      ("jaccard", (d, tau, tok) => TextOps.nearDupPairs(d, tau, tokenizer = tok), jaccard),
+      ("containment", (d, tau, tok) => TextOps.containmentPairs(d, tau, tokenizer = tok),
+        containment))
+    // dedup_containment runs TRIGRAM shingles — the proofs are
+    // tokenizer-agnostic, but pin one shingled round anyway (every
+    // generated doc has >= 3 tokens, so >= 1 trigram)
+    def tri(t: String): String =
+      t.toLowerCase.split(" ").sliding(3).map(_.mkString("_")).mkString(" ")
+    val rounds = Seq[(String, Column => Column, String => String,
+        Seq[Seq[(Long, String, String)]], Seq[Double])](
+      ("word", TextOps.tokenSet, identity, samples(corpusGen, 10, 23L), Seq(0.5, 0.9)),
+      ("trigram", c => array_distinct(TextOps.trigrams(TextOps.tokens(c))), tri,
+        samples(corpusGen, 4, 77L), Seq(0.5)))
+    for ((name, op, measure) <- ops; (unit, tok, shingle, corpora, taus) <- rounds;
+         (corpus, i) <- corpora.zipWithIndex; tau <- taus) {
       val docs = corpus.toDF("doc_id", "lang", "text")
       val brute = (for {
         a <- corpus; b <- corpus
-        if a._1 < b._1 && a._2 == b._2 && jaccard(a._3, b._3) >= tau
+        if a._1 < b._1 && a._2 == b._2 && measure(shingle(a._3), shingle(b._3)) >= tau
       } yield (a._1, b._1)).toSet
-      val got = TextOps.nearDupPairs(docs, tau)
+      val got = op(docs, tau, tok)
         .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
       assert(got == brute,
-        s"case $i tau=$tau: missing=${brute -- got} extra=${got -- brute}")
+        s"$name/$unit case $i tau=$tau: missing=${brute -- got} extra=${got -- brute}")
     }
+  }
+
+  test("prefix-filter joins reject thresholds outside (0, 1]; MinHash rejects bands < 1") {
+    // tau <= 0 would admit pairs sharing no token (J = 0 >= tau), which
+    // prefix candidates can never produce — the exactness contract needs
+    // 0 < tau. A band count below 1 has no bucket to join on.
+    val docs = Seq((1L, "en", "alpha beta"), (2L, "en", "gamma delta"))
+      .toDF("doc_id", "lang", "text")
+    for (tau <- Seq(0.0, -0.5, 1.5)) {
+      val e1 = intercept[IllegalArgumentException](TextOps.nearDupPairs(docs, tau))
+      assert(e1.getMessage.contains("0 < tau <= 1"), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](TextOps.containmentPairs(docs, tau))
+      assert(e2.getMessage.contains("0 < tau <= 1"), e2.getMessage)
+      val e3 = intercept[IllegalArgumentException](TextOps.minHashLshPairs(docs, tau))
+      assert(e3.getMessage.contains("0 < tau <= 1"), e3.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](TextOps.minHashLshPairs(docs, 0.5, bands = 0))
+    assert(e.getMessage.contains("bands >= 1"), e.getMessage)
+    // the boundary tau = 1 is valid: identical sets only
+    val same = Seq((1L, "en", "alpha beta"), (2L, "en", "beta alpha"), (3L, "en", "alpha"))
+      .toDF("doc_id", "lang", "text")
+    assert(TextOps.nearDupPairs(same, 1.0).select("doc_a", "doc_b").as[(Long, Long)]
+      .collect().toSeq == Seq((1L, 2L)))
   }
 
   test("norm-prefix cosine join is LOSSLESS on random corpora (== brute force)") {

@@ -183,7 +183,8 @@ class PlanSpec extends SparkTestBase {
   test("similarity joins never go cartesian and keep the native kernels codegen'd") {
     val pipeline = graft.queries.PipelineQueries.all ++ graft.queries.DedupVariantQueries.all
     for (name <- Seq("sim_join_threshold", "sim_knn_graph", "dedup_minhash_lsh",
-                     "dedup_simhash", "dedup_ngram")) {
+                     "dedup_simhash", "dedup_ngram", "dedup_minhash_estimate",
+                     "multimodal_phash_band")) {
       val plan = physical(pipeline, name)
       assert(!plan.contains("CartesianProduct"), s"$name went cartesian")
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name went nested-loop")
@@ -191,6 +192,10 @@ class PlanSpec extends SparkTestBase {
     // the custom expressions surface in the plan (not folded away / UDF'd)
     assert(physical(pipeline, "sim_join_threshold").contains("float_vec_dot"),
       "FloatVecDot missing from plan")
+    // the estimator audit verifies its candidates with the shared native
+    // merge, not an interpreted array_intersect/array_union pair
+    assert(physical(pipeline, "dedup_minhash_estimate").contains("sorted_intersect_count"),
+      "SortedIntersectCount missing from dedup_minhash_estimate's plan")
     // dedup_near now serves the SHARED cached pair list (its declared plan
     // is an InMemoryTableScan), so pin the underlying pair CONSTRUCTION
     // directly: still no cartesian, and the merge-verify kernel codegen'd.
