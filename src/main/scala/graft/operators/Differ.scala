@@ -4,6 +4,28 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+/** Duplicate-surplus pairing rule for [[Differ.diffDupKeyRank]]: how rows
+  * within a non-unique key group line up for the rank-matched compare.
+  */
+sealed trait DupPairing
+object DupPairing {
+  /** Rank by the canonical value FINGERPRINT (rowHash) — stable, cheap
+    * (one hash per row regardless of width), but hash order scatters
+    * near-identical rows, so one changed value can re-rank a row far from
+    * its former counterpart and cascade C rows across the group.
+    */
+  case object ByHash extends DupPairing
+  /** Rank by the full VALUE TUPLE (all orderable shared value columns,
+    * ascending nulls-first, fingerprint as the final tie-break) —
+    * datacompy's practical sort-within-group behavior: near-identical rows
+    * stay adjacent, so a single changed value re-pairs minimally instead
+    * of cascading. Costs a wide sort key instead of one hash;
+    * non-orderable (map-bearing) columns ride only the fingerprint
+    * tie-break.
+    */
+  case object ByValue extends DupPairing
+}
+
 /** Options for [[Differ]].
   *
   * @param statusCol   name of the emitted status column (N/C/I/D)
@@ -49,32 +71,11 @@ import org.apache.spark.sql.types._
   *                    blob, and the diff output carries the digests (a
   *                    reviewer fetches the two blobs BY KEY for the few C
   *                    rows that matter). Classification is exact up to
-  *                    SHA-256 collision (the [[diffViaHash]] risk class,
-  *                    already accepted). Honored by [[Differ.diff]] and
-  *                    everything built on it (summary/report/…)
+  *                    SHA-256 collision (the [[Differ.diffViaHash]] risk
+  *                    class). Honored by every keyed compare in [[Differ]]
+  *                    (diff and its reports, diffVsStatic/subsetCheck, the
+  *                    hash paths)
   */
-/** Duplicate-surplus pairing rule for [[Differ.diffDupKeyRank]]: how rows
-  * within a non-unique key group line up for the rank-matched compare.
-  */
-sealed trait DupPairing
-object DupPairing {
-  /** Rank by the canonical value FINGERPRINT (rowHash) — stable, cheap
-    * (one hash per row regardless of width), but hash order scatters
-    * near-identical rows, so one changed value can re-rank a row far from
-    * its former counterpart and cascade C rows across the group.
-    */
-  case object ByHash extends DupPairing
-  /** Rank by the full VALUE TUPLE (all orderable shared value columns,
-    * ascending nulls-first, fingerprint as the final tie-break) —
-    * datacompy's practical sort-within-group behavior: near-identical rows
-    * stay adjacent, so a single changed value re-pairs minimally instead
-    * of cascading. Costs a wide sort key instead of one hash;
-    * non-orderable (map-bearing) columns ride only the fingerprint
-    * tie-break.
-    */
-  case object ByValue extends DupPairing
-}
-
 final case class DiffOptions(
     statusCol: String = "diff_status",
     leftPrefix: String = "left_",
@@ -106,9 +107,7 @@ final case class DiffOptions(
   // A digested column is a SHA-256 hex STRING at compare time, so a numeric
   // tolerance silently degrades to exact hex equality and a bag compare
   // fails with a type error deep in the plan. Refuse the contradiction at
-  // construction, naming the columns (r13 review fix — loud-failure house
-  // style, same tier as the unknown-TVF-option and vocabulary-mismatch
-  // requires).
+  // construction, naming the columns.
   {
     val clash = digestCols.intersect(tolCols ++ bagCols)
     require(clash.isEmpty,
@@ -148,10 +147,9 @@ object Differ {
 
   /** Backtick-quoted bare column ref: `col("a.b")` splits on the dot and
     * `col("c``d")` is a parse error — both are legal column names a schema
-    * can carry (the r10 diffUnkeyed lesson, promoted to the whole surface
-    * per the r11 ADVICE). Every name-string ref in this object routes
-    * through [[bq]]/[[q]] so a dotted or backticked name works on every
-    * diff flavor, not just the one that got burned first.
+    * can carry. Every name-string ref in this object routes through
+    * [[bq]]/[[q]] so a dotted or backticked name works on every diff
+    * flavor.
     */
   private def bq(name: String): Column =
     col(s"`${name.replace("`", "``")}`")
@@ -331,14 +329,6 @@ object Differ {
     } else l <=> r
   }
 
-  /** Widened common type for a RETYPED value column (the most common
-    * parquet schema drift: int32→int64, double→decimal), or None when the
-    * pair isn't numeric-coercible. The ladder is lossless upward: integral
-    * pairs take the wider width; any float/double involvement goes to
-    * double (a decimal→double hop is how Spark itself coerces the mix);
-    * decimal/integral and decimal/decimal take a decimal covering both
-    * operands' integer digits and the max scale.
-    */
   /** Is `dt` a fixed-width integer type? (Spark's IntegralType is
     * private[spark]; the concrete alternatives are the public surface.)
     */
@@ -347,6 +337,14 @@ object Differ {
     case _                                             => false
   }
 
+  /** Widened common type for a RETYPED value column (the most common
+    * parquet schema drift: int32→int64, double→decimal), or None when the
+    * pair isn't numeric-coercible. The ladder is lossless upward: integral
+    * pairs take the wider width; any float/double involvement goes to
+    * double (a decimal→double hop is how Spark itself coerces the mix);
+    * decimal/integral and decimal/decimal take a decimal covering both
+    * operands' integer digits and the max scale.
+    */
   private def widen(a: DataType, b: DataType): Option[DataType] = (a, b) match {
     case _ if a == b => Some(a)
     case _ if integral(a) && integral(b) =>
@@ -366,7 +364,7 @@ object Differ {
     * would need more than 38 digits cannot keep it, and silently capping
     * at 38 would overflow mid-query (an ANSI cast error on a data-
     * dependent row) or silently NULL values. Refuse at ANALYSIS time with
-    * both types named instead (r12 review fix).
+    * both types named instead.
     */
   private def decimalOrDie(intDigits: Int, scale: Int,
                            a: DataType, b: DataType): DataType = {
@@ -380,11 +378,10 @@ object Differ {
   /** Decimal wide enough for the decimal side AND the ACTUAL integral type
     * on the other side — the digit budget Spark's own `DecimalType.forType`
     * assigns (byte 3, short 5, int 10, long 20). Sizing to the real type
-    * instead of a blanket long (r13 review fix) keeps int-vs-high-scale
-    * diffs losslessly representable: DECIMAL(38,28) vs INT needs
-    * max(10,10)+28 = 38 and passes, where the old long assumption demanded
-    * 48 and refused unconditionally. A genuine overflow (long vs scale>18)
-    * still refuses at analysis time via [[decimalOrDie]] — the explicit
+    * instead of a blanket long keeps int-vs-high-scale diffs losslessly
+    * representable: DECIMAL(38,28) vs INT needs max(10,10)+28 = 38 and
+    * passes, where a long would demand 48. A genuine overflow (long vs
+    * scale>18) still refuses at analysis time via [[decimalOrDie]] — the explicit
     * `cast` on one side, or DiffOptions.ignoreCols, is the escape hatch
     * named in that error.
     */
@@ -395,7 +392,7 @@ object Differ {
     decimalOrDie(math.max(d.precision - d.scale, intDigits), d.scale, d, i)
   }
 
-  /** Cast BOTH sides' retyped shared value columns to their common wider
+  /** Cast BOTH sides' retyped value columns `vcols` to their common wider
     * type (pure projection — no exchange, no extra pass), so a column that
     * drifted int32→int64 or double→decimal between snapshots still joins
     * the value compare instead of being un-diffable. Same-typed columns
@@ -404,9 +401,7 @@ object Differ {
     * the column and both types named — schema_diff is the tool for those.
     */
   private def coerceValueTypes(left: DataFrame, right: DataFrame,
-                               keys: Seq[String],
-                               opts: DiffOptions): (DataFrame, DataFrame) = {
-    val vcols = valueCols(left, right, keys, opts)
+                               vcols: Seq[String]): (DataFrame, DataFrame) = {
     val lt = left.schema.fields.map(f => f.name -> f.dataType).toMap
     val rt = right.schema.fields.map(f => f.name -> f.dataType).toMap
     val casts = vcols.flatMap { c =>
@@ -428,44 +423,12 @@ object Differ {
     }
   }
 
-  /** Full diff: one output row per key in either side, with
-    * `diff_status`, the (coalesced) key columns, and
-    * `left_<c>` / `right_<c>` for every value column.
-    *
-    * Retyped value columns (int32→int64, double→decimal — the common
-    * parquet schema drift) are widened to the common type on BOTH sides
-    * before the compare ([[coerceValueTypes]]); the output pair carries
-    * the widened type. Non-coercible retypes fail loudly.
-    */
   /** Digest-column projection (DiffOptions.digestCols): each named column
     * becomes its SHA-256 hex at the scan, so no downstream exchange ever
-    * ships the blob. Shared by [[diff]] and [[diffViaHash]]. Runs BEFORE
-    * type coercion (r12 review fix): a blob column retyped STRING↔BINARY
-    * between snapshots digests to the same hex either way, so digesting
-    * first makes the retype a non-event instead of a coercion failure.
+    * ships the blob. Runs BEFORE type coercion: a blob column retyped
+    * STRING↔BINARY between snapshots digests to the same hex either way,
+    * so the retype is a non-event instead of a coercion failure.
     */
-  /** The construction-time guard refuses EXPLICIT tolCols/bagCols overlap;
-    * the default-tolerance form (tolCols empty ⇒ tolerance applies to all
-    * floating columns) needs the schema, so TOLERANT paths call this at
-    * their entry (r13 review fix, scoped in a second pass: only [[diff]]
-    * and its delegates compare with tolerance — the exact-hash paths
-    * (diffViaHash / diffIncremental) document that tolerance options do
-    * not apply there, so the contradiction does not exist for them and the
-    * guard must not reject their calls).
-    */
-  private def requireNoDefaultTolDigestClash(df: DataFrame,
-                                             opts: DiffOptions): Unit =
-    if ((opts.absTol > 0.0 || opts.relTol > 0.0) && opts.tolCols.isEmpty) {
-      val clash = opts.digestCols.filter(c =>
-        df.schema.fields.exists(f => f.name == c && floating(f.dataType)))
-      require(clash.isEmpty,
-        s"digestCols [${clash.toSeq.sorted.mkString(", ")}] are floating " +
-          "columns under a default tolerance (tolCols empty applies " +
-          "absTol/relTol to ALL floating columns): a digested column " +
-          "compares as SHA-256 hex, so the tolerance cannot apply — name " +
-          "tolCols explicitly or drop the digest")
-    }
-
   private def digested(df: DataFrame, keys: Seq[String],
                        opts: DiffOptions): DataFrame =
     opts.digestCols.foldLeft(df) { (d0, c) =>
@@ -476,56 +439,149 @@ object Differ {
       d0.withColumn(c, sha2(bq(c).cast("binary"), 256))
     }
 
-  def diff(left0: DataFrame, right0: DataFrame, keys: Seq[String],
-           opts: DiffOptions = DiffOptions()): DataFrame = {
-    requireNoDefaultTolDigestClash(left0, opts)
-    val (left, right) = coerceValueTypes(
-      digested(left0, keys, opts), digested(right0, keys, opts), keys, opts)
-    val vcols = valueCols(left, right, keys, opts)
-    val types = left.schema.fields.map(f => f.name -> f.dataType).toMap
-    // Prune to keys + shared value columns before the join (column pruning
-    // for the wide scan) and add presence markers so null keys still get
-    // correct I/D tagging.
-    val l = left.select((keys ++ vcols).map(bq) :+ lit(true).as(LP): _*).alias("l")
-    val r = right.select((keys ++ vcols).map(bq) :+ lit(true).as(RP): _*).alias("r")
-    val joinCond = keys.map(k => opts.keyEq(q("l", k), q("r", k))).reduce(_ && _)
-    val joined = l.join(r, joinCond, "full_outer")
+  /** Both sides of a keyed compare after [[prepare]]: `left`/`right` are
+    * the digested, widened frames, `vcols` the compared value columns (in
+    * left's order) and `types` their compare types. [[l]]/[[r]] project
+    * each side to keys + `vcols` under the aliases `l`/`r`; [[joinCond]],
+    * [[colEq]] and [[allEqual]] resolve against a join of those two.
+    */
+  private final case class Keyed(left: DataFrame, right: DataFrame,
+                                 keys: Seq[String], vcols: Seq[String],
+                                 opts: DiffOptions) {
+    val types: Map[String, DataType] =
+      left.schema.fields.map(f => f.name -> f.dataType).toMap
 
-    val allEqual = vcols
-      .map(c => colEqual(q("l", c), q("r", c), types(c), opts, c))
-      .reduceOption(_ && _)
-      .getOrElse(lit(true))
-    val status = when(col(LP).isNull, lit("I"))
-      .when(col(RP).isNull, lit("D"))
-      .when(!allEqual, lit("C"))
-      .otherwise(lit("N"))
-      .as(opts.statusCol)
-
-    val keyOut = keys.map(k => coalesce(q("l", k), q("r", k)).as(k))
-    val valOut = vcols.flatMap { c =>
-      val (lc, rc) =
-        if (!opts.sparse) (q("l", c), q("r", c))
-        else {
-          // Sparse report: keep values where they inform — the surviving
-          // side of I/D rows, and only the differing columns of C rows.
-          val keep = col(LP).isNull || col(RP).isNull ||
-            !colEqual(q("l", c), q("r", c), types(c), opts, c)
-          (when(keep, q("l", c)), when(keep, q("r", c)))
-        }
-      Seq(lc.as(s"${opts.leftPrefix}$c"), rc.as(s"${opts.rightPrefix}$c"))
+    /** `present` adds an always-true marker ([[LP]]/[[RP]]) that reads NULL
+      * exactly where an outer join null-extends the side — unlike the key
+      * columns, which can be NULL themselves.
+      */
+    def l(present: Boolean = false): DataFrame = side(left, "l", LP, present)
+    def r(present: Boolean = false): DataFrame = side(right, "r", RP, present)
+    private def side(df: DataFrame, alias: String, marker: String,
+                     present: Boolean): DataFrame = {
+      val cols = (keys ++ vcols).map(bq)
+      df.select((if (present) cols :+ lit(true).as(marker) else cols): _*).alias(alias)
     }
-    joined.select(status +: (keyOut ++ valOut): _*)
+
+    /** Key join per [[DiffOptions.nullSafeKeys]]. */
+    def joinCond: Column =
+      keys.map(k => opts.keyEq(q("l", k), q("r", k))).reduce(_ && _)
+
+    /** Key-matched pairs: the inner join of [[l]] and [[r]]. */
+    def matched: DataFrame = l().join(r(), joinCond, "inner")
+
+    /** [[colEqual]] of value column `c` over the joined `l`/`r` sides, or
+      * over any other pair of columns carrying its two values.
+      */
+    def colEq(c: String): Column = colEq(c, q("l", c), q("r", c))
+    def colEq(c: String, lc: Column, rc: Column): Column =
+      colEqual(lc, rc, types(c), opts, c)
+
+    def allEqual: Column = vcols.map(colEq(_)).reduceOption(_ && _).getOrElse(lit(true))
+
+    /** `<leftPrefix>c` / `<rightPrefix>c` output pairs from the joined
+      * sides; `keep(c)`, when given, nulls both values where it is false.
+      */
+    def valuePairs(keep: Option[String => Column] = None): Seq[Column] =
+      vcols.flatMap { c =>
+        def v(side: String): Column = keep.fold(q(side, c))(k => when(k(c), q(side, c)))
+        Seq(v("l").as(s"${opts.leftPrefix}$c"), v("r").as(s"${opts.rightPrefix}$c"))
+      }
+
+    /** The frames the hash paths fingerprint: string value columns
+      * normalized like [[colEqual]]'s ignoreCase/trimWs branch (trim, then
+      * case-fold), so hash classification agrees with [[diff]]'s. No-op at
+      * default options; value fetches read `left`/`right`, never these.
+      */
+    lazy val hashSides: (DataFrame, DataFrame) = {
+      def norm(df: DataFrame): DataFrame =
+        if (!opts.ignoreCase && !opts.trimWs) df
+        else df.select(df.columns.toSeq.map { c =>
+          if (vcols.contains(c) && df.schema(c).dataType == StringType) {
+            val t = if (opts.trimWs) trim(bq(c)) else bq(c)
+            (if (opts.ignoreCase) lower(t) else t).as(c)
+          } else bq(c)
+        }: _*)
+      (norm(left), norm(right))
+    }
   }
 
-  /** Headline report: row counts per diff status. */
+  /** The one preparation of every keyed compare: digest
+    * ([[digested]]), then widen retypes ([[coerceValueTypes]]), then
+    * prune to the shared value columns ([[valueCols]]).
+    *
+    * `tolerant` compares (the default) first refuse a digested floating
+    * column under a DEFAULT tolerance (tolCols empty ⇒ absTol/relTol apply
+    * to all floating columns): a digested column compares as SHA-256 hex,
+    * so the tolerance could not apply. [[DiffOptions]]' construction guard
+    * covers explicit tolCols; this form needs the schema. Exact compares
+    * (the hash paths, [[numericStats]]) ignore tolerance, so the
+    * contradiction does not exist for them and they pass `false`.
+    */
+  private def prepare(left0: DataFrame, right0: DataFrame, keys: Seq[String],
+                      opts: DiffOptions, tolerant: Boolean = true): Keyed = {
+    if (tolerant && (opts.absTol > 0.0 || opts.relTol > 0.0) && opts.tolCols.isEmpty) {
+      val clash = opts.digestCols.filter(c =>
+        left0.schema.fields.exists(f => f.name == c && floating(f.dataType)))
+      require(clash.isEmpty,
+        s"digestCols [${clash.toSeq.sorted.mkString(", ")}] are floating " +
+          "columns under a default tolerance (tolCols empty applies " +
+          "absTol/relTol to ALL floating columns): a digested column " +
+          "compares as SHA-256 hex, so the tolerance cannot apply — name " +
+          "tolCols explicitly or drop the digest")
+    }
+    val (dl, dr) = (digested(left0, keys, opts), digested(right0, keys, opts))
+    val vcols = valueCols(dl, dr, keys, opts)
+    val (left, right) = coerceValueTypes(dl, dr, vcols)
+    Keyed(left, right, keys, vcols, opts)
+  }
+
+  /** The N/C/I/D rule of every keyed compare: a key missing on the left
+    * was inserted, one missing on the right deleted; a key on both sides
+    * is C when `changed`, else N. A side that cannot be missing passes
+    * `lit(false)`; the optimizer drops that branch.
+    */
+  private def statusOf(lMissing: Column, rMissing: Column, changed: Column): Column =
+    when(lMissing, lit("I")).when(rMissing, lit("D")).when(changed, lit("C"))
+      .otherwise(lit("N"))
+
+  /** Full diff: one output row per key in either side, with
+    * `diff_status`, the (coalesced) key columns, and
+    * `left_<c>` / `right_<c>` for every value column.
+    *
+    * Retyped value columns (int32→int64, double→decimal — the common
+    * parquet schema drift) are widened to the common type on BOTH sides
+    * before the compare ([[coerceValueTypes]]); the output pair carries
+    * the widened type. Non-coercible retypes fail loudly.
+    */
+  def diff(left: DataFrame, right: DataFrame, keys: Seq[String],
+           opts: DiffOptions = DiffOptions()): DataFrame =
+    diffOf(prepare(left, right, keys, opts))
+
+  /** [[diff]] of a prepared pair. Both sides are pruned to keys + shared
+    * value columns before the join, and the presence markers tag I/D
+    * correctly for null keys.
+    */
+  private def diffOf(p: Keyed): DataFrame = {
+    val status = statusOf(col(LP).isNull, col(RP).isNull, !p.allEqual)
+    val keyOut = p.keys.map(k => coalesce(q("l", k), q("r", k)).as(k))
+    // Sparse report: keep values where they inform — the surviving side of
+    // I/D rows, and only the differing columns of C rows.
+    val keep = Option.when(p.opts.sparse)((c: String) =>
+      col(LP).isNull || col(RP).isNull || !p.colEq(c))
+    p.l(present = true).join(p.r(present = true), p.joinCond, "full_outer")
+      .select(status.as(p.opts.statusCol) +: (keyOut ++ p.valuePairs(keep)): _*)
+  }
+
   /** The 4-status census over an already-built diff frame — ONE definition
     * of the summary shape, shared by [[summary]] and the SQL TVF so the
-    * two surfaces cannot drift (r13 review fix).
+    * two surfaces cannot drift.
     */
   def summaryOf(diffed: DataFrame,
                 opts: DiffOptions = DiffOptions()): DataFrame =
     diffed.groupBy(opts.statusCol).agg(count(lit(1)).as("n"))
 
+  /** Headline report: row counts per diff status. */
   def summary(left: DataFrame, right: DataFrame, keys: Seq[String],
               opts: DiffOptions = DiffOptions()): DataFrame =
     summaryOf(diff(left, right, keys, opts), opts)
@@ -633,44 +689,31 @@ object Differ {
     })
   }
 
-  /** Shared body of [[columnStats]] and [[catalogDiffCols]] (r15 review:
-    * two near-identical copies would drift): keys + shared value columns
-    * through [[digested]] + [[coerceValueTypes]] — the SAME preparation
-    * as [[diff]], so a retyped column widens (or refuses) identically and
-    * tolerance applies on the widened type, never via a silent implicit
-    * cast on mismatched sides — then ONE inner join + ONE aggregation
-    * pass (count(*) plus every per-column conditional sum in the same
-    * map-side-combinable agg) and a codegen'd stack unpivot. Internal
-    * aliases are positional (`__graft_d_<i>`), so user columns named
-    * anything — including the markers themselves — cannot collide.
-    * Output: (column_name, n_diff, n_matched); zero shared value columns
-    * → zero rows.
+  /** Shared body of [[columnStats]] and [[catalogDiffCols]]: the pair
+    * goes through [[prepare]], so a retyped column widens (or refuses)
+    * exactly as in [[diff]] and tolerance applies on the widened type —
+    * then ONE inner join + ONE aggregation pass (count(*) plus every
+    * per-column conditional sum in the same map-side-combinable agg) and
+    * a codegen'd stack unpivot. Internal aliases are positional
+    * (`__graft_d_<i>`), so user columns named anything — including the
+    * markers themselves — cannot collide. Output: (column_name, n_diff,
+    * n_matched); zero shared value columns → zero rows.
     */
-  private def columnDiffCounts(left0: DataFrame, right0: DataFrame,
+  private def columnDiffCounts(left: DataFrame, right: DataFrame,
                                keys: Seq[String],
                                opts: DiffOptions): DataFrame = {
-    requireNoDefaultTolDigestClash(left0, opts)
-    val (left, right) = coerceValueTypes(
-      digested(left0, keys, opts), digested(right0, keys, opts), keys, opts)
-    val vcols = valueCols(left, right, keys, opts)
-    val spark = left0.sparkSession
-    if (vcols.isEmpty)
-      return spark.range(0).select(lit("").as("column_name"),
+    val p = prepare(left, right, keys, opts)
+    if (p.vcols.isEmpty)
+      return left.sparkSession.range(0).select(lit("").as("column_name"),
         lit(0L).as("n_diff"), lit(0L).as("n_matched"))
-    val types = left.schema.fields.map(f => f.name -> f.dataType).toMap
-    val l = left.select((keys ++ vcols).map(bq): _*).alias("l")
-    val r = right.select((keys ++ vcols).map(bq): _*).alias("r")
-    val joinCond = keys.map(k => opts.keyEq(q("l", k), q("r", k))).reduce(_ && _)
-    val aggs = count(lit(1)).as("__graft_nm") +: vcols.zipWithIndex.map {
+    val aggs = count(lit(1)).as("__graft_nm") +: p.vcols.zipWithIndex.map {
       case (c, i) =>
-        coalesce(sum(when(!colEqual(q("l", c), q("r", c), types(c), opts, c),
-          1L).otherwise(0L)), lit(0L)).as(s"__graft_d_$i")
+        coalesce(sum(when(!p.colEq(c), 1L).otherwise(0L)), lit(0L)).as(s"__graft_d_$i")
     }
-    val wide = l.join(r, joinCond, "inner").agg(aggs.head, aggs.tail: _*)
-    val stackExpr = vcols.zipWithIndex
+    val stackExpr = p.vcols.zipWithIndex
       .map { case (c, i) => s"'${sqlStr(c)}', `__graft_d_$i`" }.mkString(", ")
-    wide.selectExpr(
-        s"stack(${vcols.size}, $stackExpr) as (column_name, n_diff)",
+    p.matched.agg(aggs.head, aggs.tail: _*)
+      .selectExpr(s"stack(${p.vcols.size}, $stackExpr) as (column_name, n_diff)",
         "`__graft_nm`")
       .select(col("column_name"), col("n_diff"),
         col("__graft_nm").as("n_matched"))
@@ -914,18 +957,28 @@ object Differ {
     }, opts, keysFor)
   }
 
+  /** Election result per sweep pair: the elected key (None = no unique
+    * single column or pair), whether the two relations are PROVABLY the
+    * same plan (`sameResult` — the re-publish-check case), and the left
+    * side's row count (already paid for by the stats job; the self-pair
+    * census short-circuit reads it instead of running a redundant
+    * full-outer self-join).
+    */
+  private[operators] final case class Elected(
+      keys: Option[Seq[String]], selfPair: Boolean, nRowsLeft: Long)
+
   /** Key ELECTION shared by the sweep surfaces and the single-pair
-    * `keys => 'auto'` TVF path (r15): per named pair, the diff key is the
+    * `keys => 'auto'` TVF path: per named pair, the diff key is the
     * atomic column unique + null-free on BOTH sides — and when MORE THAN
     * ONE column qualifies, the tie is broken by CROSS-SIDE DISTINCT-VALUE
-    * OVERLAP, schema position last (r14 verdict "what's wrong" #1: schema
-    * order alone could elect a unique-but-wrong identity column — a load
-    * timestamp or per-snapshot surrogate sitting EARLIER than the real
-    * key; if its values churn between snapshots, every changed row
-    * reports as a D+I pair instead of C. The real key's values persist
-    * across snapshots; a churned surrogate's do not — the same
-    * distinct-set-overlap signal [[autoMapReport]] grades value columns
-    * with, applied at candidate scope).
+    * OVERLAP, schema position last. Schema order alone could elect a
+    * unique-but-wrong identity column — a load timestamp or per-snapshot
+    * surrogate sitting EARLIER than the real key; if its values churn
+    * between snapshots, every changed row reports as a D+I pair instead
+    * of C. The real key's values persist across snapshots; a churned
+    * surrogate's do not — the same distinct-set-overlap signal
+    * [[autoMapReport]] grades value columns with, applied at candidate
+    * scope.
     *
     * Scale shape: uniqueness stats are ONE unioned job (per table-side a
     * single map-side-combinable aggregate — count + per-column count/
@@ -938,7 +991,7 @@ object Differ {
     * own scan, and is skipped entirely when every table has at most one
     * candidate.
     *
-    * PAIR tier (r15): a table with NO single candidate falls back to
+    * PAIR tier: a table with NO single candidate falls back to
     * column PAIRS drawn from its shared null-free columns — ranked by
     * the smaller side's distinct count and capped at 6 columns (≤15
     * combos) — so composite identities ((order, line), (user, day))
@@ -951,16 +1004,6 @@ object Differ {
     * is deliberately not replicated here). Returns the elected key as a
     * Seq — one element from the single tier, two from the pair tier.
     */
-  /** Election result per sweep pair: the elected key (None = no unique
-    * single column or pair), whether the two relations are PROVABLY the
-    * same plan (`sameResult` — the re-publish-check case), and the left
-    * side's row count (already paid for by the stats job; the self-pair
-    * census short-circuit reads it instead of running a redundant
-    * full-outer self-join — r15 optimization round).
-    */
-  private[operators] final case class Elected(
-      keys: Option[Seq[String]], selfPair: Boolean, nRowsLeft: Long)
-
   private def electKeys(spark: org.apache.spark.sql.SparkSession,
                         pairs: Seq[(String, (DataFrame, DataFrame))])
       : Map[String, Elected] = {
@@ -1399,32 +1442,14 @@ object Differ {
     * null-extend and then discard the I/D rows (Catalyst cannot push a
     * filter on a derived CASE column back through a full-outer join). Same
     * single shuffle, no wasted null-extension work; plan shape is asserted
-    * in PlanSpec. Inputs route through [[digested]] + [[coerceValueTypes]]
-    * (r15 review — diff()'s preparation): a retyped column widens or
-    * refuses exactly like [[diff]], instead of comparing mismatched sides
-    * through a silent implicit cast.
+    * in PlanSpec. Same [[prepare]] as [[diff]]: a retyped column widens or
+    * refuses exactly like there.
     */
-  private def innerDiff(left0: DataFrame, right0: DataFrame, keys: Seq[String],
+  private def innerDiff(left: DataFrame, right: DataFrame, keys: Seq[String],
                         opts: DiffOptions, keepEqual: Boolean): DataFrame = {
-    requireNoDefaultTolDigestClash(left0, opts)
-    val (left, right) = coerceValueTypes(
-      digested(left0, keys, opts), digested(right0, keys, opts), keys, opts)
-    val vcols = valueCols(left, right, keys, opts)
-    val types = left.schema.fields.map(f => f.name -> f.dataType).toMap
-    val l = left.select((keys ++ vcols).map(bq): _*).alias("l")
-    val r = right.select((keys ++ vcols).map(bq): _*).alias("r")
-    val joinCond = keys.map(k => opts.keyEq(q("l", k), q("r", k))).reduce(_ && _)
-    val allEqual = vcols
-      .map(c => colEqual(q("l", c), q("r", c), types(c), opts, c))
-      .reduceOption(_ && _)
-      .getOrElse(lit(true))
-    val keyOut = keys.map(k => q("l", k).as(k))
-    val valOut = vcols.flatMap { c =>
-      Seq(q("l", c).as(s"${opts.leftPrefix}$c"), q("r", c).as(s"${opts.rightPrefix}$c"))
-    }
-    l.join(r, joinCond, "inner")
-      .filter(if (keepEqual) allEqual else !allEqual)
-      .select(keyOut ++ valOut: _*)
+    val p = prepare(left, right, keys, opts)
+    p.matched.filter(if (keepEqual) p.allEqual else !p.allEqual)
+      .select(keys.map(k => q("l", k).as(k)) ++ p.valuePairs(): _*)
   }
 
   /** Key-matched rows with >=1 differing value column. */
@@ -1439,7 +1464,7 @@ object Differ {
 
   /** Per value-column count of differing key-matched rows — one aggregation
     * pass over the joined pairs (no per-column jobs), then unpivoted to
-    * (column_name, n_diff). Delegates to [[columnDiffCounts]] (r15), so
+    * (column_name, n_diff). Delegates to [[columnDiffCounts]], so
     * retyped columns widen-or-refuse exactly as in [[diff]].
     */
   def columnStats(left: DataFrame, right: DataFrame, keys: Seq[String],
@@ -1452,26 +1477,17 @@ object Differ {
     * list is a codegen'd concat_ws over per-column CASEs (concat_ws skips
     * nulls in Spark and DuckDB alike, so the oracle replays it verbatim).
     */
-  def changedCols(left0: DataFrame, right0: DataFrame, keys: Seq[String],
+  def changedCols(left: DataFrame, right: DataFrame, keys: Seq[String],
                   opts: DiffOptions = DiffOptions()): DataFrame = {
-    requireNoDefaultTolDigestClash(left0, opts)
-    val (left, right) = coerceValueTypes(
-      digested(left0, keys, opts), digested(right0, keys, opts), keys, opts)
-    val vcols = valueCols(left, right, keys, opts)
-    val types = left.schema.fields.map(f => f.name -> f.dataType).toMap
-    val l = left.select((keys ++ vcols).map(bq): _*).alias("l")
-    val r = right.select((keys ++ vcols).map(bq): _*).alias("r")
-    val joinCond = keys.map(k => opts.keyEq(q("l", k), q("r", k))).reduce(_ && _)
-    def diffCase(c: String) =
-      when(!colEqual(q("l", c), q("r", c), types(c), opts, c), lit(c))
-    val nChanged = vcols
-      .map(c => when(!colEqual(q("l", c), q("r", c), types(c), opts, c), 1L).otherwise(0L))
-      .reduceOption(_ + _).getOrElse(lit(0L))
-    l.join(r, joinCond, "inner")
+    val p = prepare(left, right, keys, opts)
+    val differs = p.vcols.map(c => c -> !p.colEq(c))
+    p.matched
       .select(
         keys.map(k => q("l", k).as(k)) ++ Seq(
-          concat_ws(",", vcols.map(diffCase): _*).as("changed_cols"),
-          nChanged.as("n_changed")): _*)
+          concat_ws(",", differs.map { case (c, d) => when(d, lit(c)) }: _*)
+            .as("changed_cols"),
+          differs.map { case (_, d) => when(d, 1L).otherwise(0L) }
+            .reduceOption(_ + _).getOrElse(lit(0L)).as("n_changed")): _*)
       .filter(col("n_changed") > 0)
   }
 
@@ -1479,19 +1495,14 @@ object Differ {
     * mean |delta| (DECIMAL-exact sum → deterministic under shuffle) and max
     * |delta|. One aggregation pass, unpivoted like [[columnStats]].
     */
-  def numericStats(left0: DataFrame, right0: DataFrame, keys: Seq[String],
+  def numericStats(left: DataFrame, right: DataFrame, keys: Seq[String],
                    opts: DiffOptions = DiffOptions()): DataFrame = {
-    // same diff() preparation as innerDiff (r15 review): a retyped numeric
-    // column widens on both sides before the delta math
-    val (left, right) = coerceValueTypes(left0, right0, keys, opts)
-    val types = left.schema.fields.map(f => f.name -> f.dataType).toMap
-    val vcols = valueCols(left, right, keys, opts).filter(c => numeric(types(c)))
-    require(vcols.nonEmpty, "numericStats requires at least one shared numeric value column")
-    val l = left.select((keys ++ vcols).map(bq): _*).alias("l")
-    val r = right.select((keys ++ vcols).map(bq): _*).alias("r")
-    val joinCond = keys.map(k => opts.keyEq(q("l", k), q("r", k))).reduce(_ && _)
+    // exact compare: the delta math never applies tolerance
+    val all = prepare(left, right, keys, opts, tolerant = false)
+    val p = all.copy(vcols = all.vcols.filter(c => numeric(all.types(c))))
+    require(p.vcols.nonEmpty, "numericStats requires at least one shared numeric value column")
     val dec = DecimalType(27, 6)
-    val aggs = vcols.flatMap { c =>
+    val aggs = p.vcols.flatMap { c =>
       val delta = abs(q("l", c).cast("double") - q("r", c).cast("double"))
       val differs = !(q("l", c) <=> q("r", c))
       Seq(
@@ -1500,24 +1511,13 @@ object Differ {
           greatest(sum(when(differs, 1L).otherwise(0L)), lit(1L))).as(s"avg_$c"),
         coalesce(max(when(differs, delta)), lit(0.0)).as(s"max_$c"))
     }
-    val wide = l.join(r, joinCond, "inner").agg(aggs.head, aggs.tail: _*)
-    val stackExpr = vcols.map(c =>
+    val stackExpr = p.vcols.map(c =>
       s"'${sqlStr(c)}', ${sqlBq(s"n_$c")}, ${sqlBq(s"avg_$c")}, ${sqlBq(s"max_$c")}")
       .mkString(", ")
-    wide.selectExpr(
-      s"stack(${vcols.size}, $stackExpr) as (column_name, n_diff, avg_abs_delta, max_abs_delta)")
+    p.matched.agg(aggs.head, aggs.tail: _*).selectExpr(
+      s"stack(${p.vcols.size}, $stackExpr) as (column_name, n_diff, avg_abs_delta, max_abs_delta)")
   }
 
-  /** Canonical whole-row fingerprint for key-less bag diff, and the building
-    * block of the two-phase 100 TB diff (compare 32-byte hashes first; join
-    * full rows only for the differing subset).
-    *
-    * Canonical string rules (must match the DuckDB oracle bit-for-bit):
-    * ints/strings as-is, doubles via DECIMAL(18,2) with NaN/+-Inf named
-    * explicitly (a DECIMAL cast nulls them, colliding with true NULLs),
-    * timestamps via epoch micros, nulls as U+2400, fields joined on
-    * U+001F.
-    */
   /** Metadata-level schema comparison: columns added / removed / retyped.
     * Driver-side only (schemas are tiny); emitted as a small DataFrame so it
     * composes with the rest of the API.
@@ -1541,8 +1541,16 @@ object Differ {
     rows.toDF("column_name", "left_type", "right_type", "status")
   }
 
-  /** Canonical per-row fingerprint expression over `cols` (string rules in
-    * the scaladoc above).
+  /** Canonical whole-row fingerprint for key-less bag diff, and the building
+    * block of the two-phase 100 TB diff (compare 32-byte hashes first; join
+    * full rows only for the differing subset): a SHA-256 hex expression
+    * over `cols` of `df`.
+    *
+    * Canonical string rules (must match the DuckDB oracle bit-for-bit):
+    * ints/strings as-is, doubles via DECIMAL(18,2) with NaN/+-Inf named
+    * explicitly (a DECIMAL cast nulls them, colliding with true NULLs),
+    * timestamps via epoch micros, nulls as U+2400, fields joined on
+    * U+001F.
     */
   def rowHashCol(df: DataFrame, cols: Seq[String]): Column = {
     val parts = cols.map { c =>
@@ -1576,22 +1584,26 @@ object Differ {
   def rowHash(df: DataFrame, cols: Seq[String]): DataFrame =
     df.select(rowHashCol(df, cols).as("row_sha"))
 
-  /** String-normalization projection for the HASH paths (diffViaHash /
-    * diffIncremental): canonicalize string value columns exactly like
-    * [[colEqual]]'s normalized-compare branch (trim, then case-fold)
-    * before fingerprinting, so the hash classification agrees with
-    * diff()'s under DiffOptions(ignoreCase/trimWs). Classification-only —
-    * value fetches read the original frames. No-op at default options.
+  /** The hash paths' key classification: each side of
+    * [[Keyed.hashSides]], narrowed by `rows`, projects to keys + one
+    * [[rowHashCol]] fingerprint of the value columns; the two full-outer
+    * join on the keys and come back as the non-N `(status, keys)` rows,
+    * one per key. The key join is always null-safe `<=>`, whatever
+    * [[DiffOptions.nullSafeKeys]] says, and the compare is exact hash
+    * equality: tolerance options do not apply.
     */
-  private def normForHash(df: DataFrame, vcols: Seq[String],
-                          opts: DiffOptions): DataFrame =
-    if (!opts.ignoreCase && !opts.trimWs) df
-    else df.select(df.columns.toSeq.map { c =>
-      if (vcols.contains(c) && df.schema(c).dataType == StringType) {
-        val t = if (opts.trimWs) trim(bq(c)) else bq(c)
-        (if (opts.ignoreCase) lower(t) else t).as(c)
-      } else bq(c)
-    }: _*)
+  private def hashClassified(p: Keyed,
+                             rows: DataFrame => DataFrame = identity): DataFrame = {
+    val VH = "__graft_vhash"
+    def hashed(df: DataFrame, alias: String): DataFrame =
+      rows(df).select(p.keys.map(bq) :+ rowHashCol(df, p.vcols).as(VH): _*).alias(alias)
+    val (lh, rh) = (hashed(p.hashSides._1, "lh"), hashed(p.hashSides._2, "rh"))
+    val (lv, rv) = (col(s"lh.$VH"), col(s"rh.$VH"))
+    lh.join(rh, p.keys.map(k => q("lh", k) <=> q("rh", k)).reduce(_ && _), "full_outer")
+      .select(statusOf(lv.isNull, rv.isNull, lv =!= rv).as(p.opts.statusCol) +:
+        p.keys.map(k => coalesce(q("lh", k), q("rh", k)).as(k)): _*)
+      .filter(col(p.opts.statusCol) =!= "N")
+  }
 
   /** Two-phase hash diff — the 100 TB execution path for [[diff]] when the
     * changed fraction is small (the common case for day-over-day snapshots).
@@ -1606,46 +1618,24 @@ object Differ {
     * N rows are intentionally not materialized (at scale they ARE the
     * data); equivalence is pinned by DifferSpec. Hash comparison is exact:
     * tolerance options do not apply (use [[diff]] for tolerant compare).
-    * The DISCRETE options DO apply (r12 review fix — they previously
-    * silently dropped here): retyped columns widen before hashing,
+    * The DISCRETE options do apply: retyped columns widen before hashing,
     * digestCols hash (and report) the digest, and ignoreCase/trimWs
     * normalize the classification hash while phase 2 still fetches the
     * ORIGINAL values (classification-only, like diff()).
     */
-  def diffViaHash(left0: DataFrame, right0: DataFrame, keys: Seq[String],
+  def diffViaHash(left: DataFrame, right: DataFrame, keys: Seq[String],
                   opts: DiffOptions = DiffOptions()): DataFrame = {
-    val (left, right) = coerceValueTypes(
-      digested(left0, keys, opts), digested(right0, keys, opts), keys, opts)
-    val vcols = valueCols(left, right, keys, opts)
-    val VH = "__graft_vhash"
-    val lh = normForHash(left, vcols, opts)
-      .select(keys.map(bq) :+ rowHashCol(left, vcols).as(VH): _*).alias("lh")
-    val rh = normForHash(right, vcols, opts)
-      .select(keys.map(bq) :+ rowHashCol(right, vcols).as(VH): _*).alias("rh")
-    val hashCond = keys.map(k => q("lh", k) <=> q("rh", k)).reduce(_ && _)
-    val status = when(col(s"lh.$VH").isNull, lit("I"))
-      .when(col(s"rh.$VH").isNull, lit("D"))
-      .when(col(s"lh.$VH") =!= col(s"rh.$VH"), lit("C"))
-      .otherwise(lit("N"))
-    // Phase-1 output: the non-N key set (small), one row per key.
-    val keyCols = keys.map(k => coalesce(q("lh", k), q("rh", k)).as(k))
-    val diffKeys = lh.join(rh, hashCond, "full_outer")
-      .select(status.as(opts.statusCol) +: keyCols: _*)
-      .filter(col(opts.statusCol) =!= "N")
-      .alias("k")
+    val p = prepare(left, right, keys, opts, tolerant = false)
+    // Phase 1: the non-N key set (small), one row per key.
+    val diffKeys = hashClassified(p).alias("k")
     // Phase 2: fetch full rows for the differing subset only. Left joins
     // null-extend exactly where diff() would (I rows have no left row, D
     // rows no right row); <=> keeps null keys addressable.
-    val l = left.select((keys ++ vcols).map(bq): _*).alias("l")
-    val r = right.select((keys ++ vcols).map(bq): _*).alias("r")
-    val lCond = keys.map(k => q("k", k) <=> q("l", k)).reduce(_ && _)
-    val rCond = keys.map(k => q("k", k) <=> q("r", k)).reduce(_ && _)
-    val out = diffKeys.join(l, lCond, "left").join(r, rCond, "left")
-    val keyOut = keys.map(k => q("k", k).as(k))
-    val valOut = vcols.flatMap { c =>
-      Seq(q("l", c).as(s"${opts.leftPrefix}$c"), q("r", c).as(s"${opts.rightPrefix}$c"))
-    }
-    out.select(col(s"k.${opts.statusCol}") +: (keyOut ++ valOut): _*)
+    def fetch(side: String): Column =
+      keys.map(k => q("k", k) <=> q(side, k)).reduce(_ && _)
+    diffKeys.join(p.l(), fetch("l"), "left").join(p.r(), fetch("r"), "left")
+      .select(col(s"k.${opts.statusCol}") +:
+        (keys.map(k => q("k", k).as(k)) ++ p.valuePairs()): _*)
   }
 
   /** Per-bucket content digest for [[diffIncremental]]: rows are hashed
@@ -1673,9 +1663,8 @@ object Differ {
 
   /** The buckets whose content digests disagree between the two sides —
     * ONE `__graft_bucket` column, ≤ `buckets` rows. The shared phase-0 of
-    * [[diffIncremental]], the `diff_estimate` census, and ScaleProbe
-    * (r12 review fix: three hand-rolled copies of this compare could
-    * drift on what "dirty" means).
+    * [[diffIncremental]], the `diff_estimate` census, and ScaleProbe, so
+    * they cannot drift on what "dirty" means.
     */
   def dirtyBuckets(left: DataFrame, right: DataFrame, keys: Seq[String],
                    vcols: Seq[String], buckets: Int): DataFrame = {
@@ -1704,40 +1693,18 @@ object Differ {
     *
     * Returns exactly `diff(left, right, keys).filter(status != 'N')`
     * projected to (status, keys) — pruning is content-lossless, so the
-    * oracle is the plain full-outer classification.
+    * oracle is the plain full-outer classification. The discrete options
+    * apply exactly as in [[diffViaHash]]; tolerance options do not.
     */
-  def diffIncremental(left0: DataFrame, right0: DataFrame, keys: Seq[String],
+  def diffIncremental(left: DataFrame, right: DataFrame, keys: Seq[String],
                       buckets: Int = 64,
                       opts: DiffOptions = DiffOptions()): DataFrame = {
-    // Same discrete-option discipline as diffViaHash (r12 review fix):
-    // widen retypes, digest blob columns, normalize strings — all BEFORE
-    // fingerprinting, so the incremental classification agrees with
-    // diff()'s. (The output is (status, keys) only, so the normalized
-    // frames never leak values.)
-    val (leftC, rightC) = coerceValueTypes(
-      digested(left0, keys, opts), digested(right0, keys, opts), keys, opts)
-    val vcols = valueCols(leftC, rightC, keys, opts)
-    val left = normForHash(leftC, vcols, opts)
-    val right = normForHash(rightC, vcols, opts)
-    val dirty = dirtyBuckets(left, right, keys, vcols, buckets)
-    def dirtyOnly(df: DataFrame): DataFrame =
-      df.withColumn(BK, pmod(xxhash64(keys.map(bq): _*), lit(buckets)))
-        .join(broadcast(dirty), Seq(BK), "left_semi")
-        .drop(BK)
-    val VH = "__graft_vhash"
-    val lh = dirtyOnly(left)
-      .select(keys.map(bq) :+ rowHashCol(left, vcols).as(VH): _*).alias("lh")
-    val rh = dirtyOnly(right)
-      .select(keys.map(bq) :+ rowHashCol(right, vcols).as(VH): _*).alias("rh")
-    val cond = keys.map(k => q("lh", k) <=> q("rh", k)).reduce(_ && _)
-    val status = when(col(s"lh.$VH").isNull, lit("I"))
-      .when(col(s"rh.$VH").isNull, lit("D"))
-      .when(col(s"lh.$VH") =!= col(s"rh.$VH"), lit("C"))
-      .otherwise(lit("N"))
-    val keyCols = keys.map(k => coalesce(q("lh", k), q("rh", k)).as(k))
-    lh.join(rh, cond, "full_outer")
-      .select(status.as(opts.statusCol) +: keyCols: _*)
-      .filter(col(opts.statusCol) =!= "N")
+    val p = prepare(left, right, keys, opts, tolerant = false)
+    val (lh, rh) = p.hashSides
+    val dirty = dirtyBuckets(lh, rh, keys, p.vcols, buckets)
+    hashClassified(p, _.withColumn(BK, pmod(xxhash64(keys.map(bq): _*), lit(buckets)))
+      .join(broadcast(dirty), Seq(BK), "left_semi")
+      .drop(BK))
   }
 
   /** Apply a keyed changeset (the [[diff]]/[[diffViaHash]] output shape:
@@ -1816,34 +1783,6 @@ object Differ {
     diff(left, renamed, keys, opts)
   }
 
-  /** AUTO-mapped diff (r13): compose column-mapping DISCOVERY (the
-    * diff_column_mapping distinct-value-overlap analysis) with
-    * [[diffMapped]] so a renamed table diffs with ZERO user input — and
-    * fail loudly where a human would have to look.
-    *
-    * Discovery contract: for every LEFT-only column name (absent from the
-    * right, not a key, not ignored) the candidates are RIGHT-only columns,
-    * scored by distinct-value overlap `|distinct(lc) ∩ distinct(rc)| /
-    * |distinct(lc)|` in ppm. A candidate at `thresholdPpm` or above is a
-    * match. Exactly one match → mapped. Two or more → AMBIGUOUS, throws
-    * naming every candidate with its ppm. None above threshold but one or
-    * more above `thresholdPpm / 2` → PARTIAL (a half-overlapping decoy —
-    * the diff_column_mapping fixture's ok_decoy case), throws likewise; a
-    * silent guess here would diff the wrong columns. No candidate at all →
-    * the column is a genuine DROP and is excluded from the compare, the
-    * same shared-vocabulary rule [[diff]] applies to any unmatched name.
-    * Two left columns claiming the same right column → throws (the map
-    * must be injective). Unclaimed right-only columns are ADDS and pass
-    * through unmatched, exactly like a new column under [[diff]].
-    *
-    * Scale shape: discovery moves per-column DISTINCT sets only (bounded
-    * by column cardinality, never row count — at 100 TB high-cardinality
-    * columns would ride an HLL or bottom-k sample, same plan); the
-    * candidate grid collect is (left-only × right-only) column-pair-sized
-    * — the bounded metadata-scale collect this repo documents (codebook
-    * precedent). The diff itself is [[diffMapped]]'s single full-outer
-    * exchange.
-    */
   /** The auto-map surfaces' shared column partition: LEFT-only /
     * RIGHT-only value-column names (name-matched, key, and ignored
     * columns excluded).
@@ -1859,10 +1798,10 @@ object Differ {
       .filterNot(left.columns.contains)
       .filterNot(opts.ignoreCols.contains))
 
-  /** NON-throwing auto-map census (r14 — the r13 verdict's #7 ask): the
-    * full candidate grid [[diffAutoMapped]] decides from, as a DataFrame a
-    * user can READ to resolve ambiguity instead of parsing an exception.
-    * One row per overlapping (left-only, right-only) column pair —
+  /** NON-throwing auto-map census: the full candidate grid
+    * [[diffAutoMapped]] decides from, as a DataFrame a user can READ to
+    * resolve ambiguity instead of parsing an exception. One row per
+    * overlapping (left-only, right-only) column pair —
     * `(lc, rc, n_shared, overlap_ppm, verdict)` — plus one `(lc, NULL,
     * NULL, NULL, 'drop')` spine row per left-only column with no value
     * overlap at all. Verdicts, exactly [[diffAutoMapped]]'s decision
@@ -1932,6 +1871,34 @@ object Differ {
       spine.join(grid.select("lc").distinct(), Seq("lc"), "left_anti"))
   }
 
+  /** AUTO-mapped diff: compose column-mapping DISCOVERY (the
+    * diff_column_mapping distinct-value-overlap analysis) with
+    * [[diffMapped]] so a renamed table diffs with ZERO user input — and
+    * fail loudly where a human would have to look.
+    *
+    * Discovery contract: for every LEFT-only column name (absent from the
+    * right, not a key, not ignored) the candidates are RIGHT-only columns,
+    * scored by distinct-value overlap `|distinct(lc) ∩ distinct(rc)| /
+    * |distinct(lc)|` in ppm. A candidate at `thresholdPpm` or above is a
+    * match. Exactly one match → mapped. Two or more → AMBIGUOUS, throws
+    * naming every candidate with its ppm. None above threshold but one or
+    * more above `thresholdPpm / 2` → PARTIAL (a half-overlapping decoy —
+    * the diff_column_mapping fixture's ok_decoy case), throws likewise; a
+    * silent guess here would diff the wrong columns. No candidate at all →
+    * the column is a genuine DROP and is excluded from the compare, the
+    * same shared-vocabulary rule [[diff]] applies to any unmatched name.
+    * Two left columns claiming the same right column → throws (the map
+    * must be injective). Unclaimed right-only columns are ADDS and pass
+    * through unmatched, exactly like a new column under [[diff]].
+    *
+    * Scale shape: discovery moves per-column DISTINCT sets only (bounded
+    * by column cardinality, never row count — at 100 TB high-cardinality
+    * columns would ride an HLL or bottom-k sample, same plan); the
+    * candidate grid collect is (left-only × right-only) column-pair-sized
+    * — the bounded metadata-scale collect this repo documents (codebook
+    * precedent). The diff itself is [[diffMapped]]'s single full-outer
+    * exchange.
+    */
   def diffAutoMapped(left: DataFrame, right: DataFrame, keys: Seq[String],
                      opts: DiffOptions = DiffOptions(),
                      thresholdPpm: Long = 900000L): DataFrame = {
@@ -2432,7 +2399,9 @@ object Differ {
     * values differ), 'N' (identical). 'D' is deliberately NOT part of this
     * surface: a deletion is the absence of a future arrival, which an
     * append-mode stream can only assert at end-of-stream — a batch
-    * [[diff]] over the compacted stream answers that question.
+    * [[diff]] over the compacted stream answers that question. Output
+    * equals `diff(snapshot, stream)` minus its D rows: same preparation
+    * (digests, widened retypes, refusals), same columns and types.
     *
     * Streaming-safe by construction: the plan is a stream-static LEFT
     * OUTER join (stateless — each micro-batch's rows probe the static
@@ -2446,26 +2415,11 @@ object Differ {
     */
   def diffVsStatic(stream: DataFrame, snapshot: DataFrame, keys: Seq[String],
                    opts: DiffOptions = DiffOptions()): DataFrame = {
-    val vcols = valueCols(snapshot, stream, keys, opts)
-    val types = snapshot.schema.fields.map(f => f.name -> f.dataType).toMap
-    val s = stream.select((keys ++ vcols).map(bq): _*).alias("r")
-    val snap = snapshot
-      .select((keys ++ vcols).map(bq) :+ lit(true).as(LP): _*).alias("l")
-    val joinCond = keys.map(k => opts.keyEq(q("l", k), q("r", k))).reduce(_ && _)
-    val allEqual = vcols
-      .map(c => colEqual(q("l", c), q("r", c), types(c), opts, c))
-      .reduceOption(_ && _)
-      .getOrElse(lit(true))
-    val status = when(col(LP).isNull, lit("I"))
-      .when(!allEqual, lit("C"))
-      .otherwise(lit("N"))
-      .as(opts.statusCol)
-    val keyOut = keys.map(k => q("r", k).as(k))
-    val valOut = vcols.flatMap(c => Seq(
-      q("l", c).as(s"${opts.leftPrefix}$c"),
-      q("r", c).as(s"${opts.rightPrefix}$c")))
-    s.join(snap, joinCond, "left_outer")
-      .select(status +: (keyOut ++ valOut): _*)
+    val p = prepare(snapshot, stream, keys, opts)
+    val status = statusOf(col(LP).isNull, lit(false), !p.allEqual)
+    p.r().join(p.l(present = true), p.joinCond, "left_outer")
+      .select(status.as(opts.statusCol) +:
+        (keys.map(k => q("r", k).as(k)) ++ p.valuePairs()): _*)
   }
 
   /** Directional containment check (datacompy's `subset()`): is every
@@ -2482,7 +2436,7 @@ object Differ {
   def subsetCheck(candidate: DataFrame, reference: DataFrame,
                   keys: Seq[String], opts: DiffOptions = DiffOptions()): DataFrame = {
     val st = opts.statusCol
-    // Unique-key PRECONDITION, enforced loudly in-query (r11 ADVICE): a
+    // Unique-key PRECONDITION, enforced loudly in-query: a
     // duplicate-keyed reference silently INFLATES the census — the left
     // join multiplies each candidate row per matching reference row, so
     // n_candidate overcounts and one equal-plus-one-differing duplicate
@@ -2539,29 +2493,21 @@ object Differ {
     * this the [[diffViaHash]] two-phase path instead of materializing N
     * rows.
     */
-  def report(left0: DataFrame, right0: DataFrame, keys: Seq[String],
+  def report(left: DataFrame, right: DataFrame, keys: Seq[String],
              exampleOn: String,
              opts: DiffOptions = DiffOptions(), k: Int = 5): DataFrame = {
-    // Column stats must re-compare the SAME values diff() compared — the
-    // widened/digested projections, not the original left schema (r12
-    // review fix: under a retype + tolerance, the original DecimalType
-    // would compare exactly here while the census compared tolerantly as
-    // double — an internally inconsistent report).
-    val (left, right) = coerceValueTypes(
-      digested(left0, keys, opts), digested(right0, keys, opts), keys, opts)
-    val vcols = valueCols(left, right, keys, opts)
-    val types = left.schema.fields.map(f => f.name -> f.dataType).toMap
+    // Column stats re-compare the SAME prepared values the diff compared.
+    val p = prepare(left, right, keys, opts)
+    val vcols = p.vcols
     val st = opts.statusCol
-    // digestCols stripped for the inner call: the frames are already
-    // digested — diff() re-digesting would double-hash the column.
-    val d = diff(left, right, keys, opts.copy(digestCols = Set.empty))
+    val d = diffOf(p)
     val matched = col(st).isin("N", "C")
     val nullD = lit(null).cast("double")
 
     // Pass 1: per-status counts + per-column changed counts in one agg.
     val aggs = count(lit(1)).as("n") +: vcols.map { c =>
-      sum(when(matched && !colEqual(bq(s"${opts.leftPrefix}$c"),
-          bq(s"${opts.rightPrefix}$c"), types(c), opts, c), 1L)
+      sum(when(matched && !p.colEq(c, bq(s"${opts.leftPrefix}$c"),
+          bq(s"${opts.rightPrefix}$c")), 1L)
         .otherwise(0L)).as(s"__d_$c")
     }
     // Materialize the aggregate as a LOCAL relation: the frame is bounded
@@ -2597,7 +2543,7 @@ object Differ {
     // Skip the section entirely when the two frames share only key
     // columns: `stack(0, )` is a parse error, whereas diff() handles the
     // empty value set fine (everything matched is N) — the report must
-    // degrade the same way (r11 ADVICE). Names are escaped into the
+    // degrade the same way. Names are escaped into the
     // generated SQL (quote inside a column name ends the literal).
     val colStats =
       if (vcols.isEmpty)

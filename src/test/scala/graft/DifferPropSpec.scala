@@ -267,6 +267,49 @@ class DifferPropSpec extends SparkTestBase {
     }
   }
 
+  test("per-column reports agree with diff: changed/unchanged, changedCols, columnStats, report") {
+    import graft.operators.DiffOptions
+    val ks = Seq("k")
+    for (opts <- Seq(DiffOptions(), DiffOptions(absTol = 0.1));
+         (((ta, tb), i)) <- samples(Gen.zip(tbl5Gen, tbl5Gen), 6, seed = 2718L).zipWithIndex) {
+      val (a, b) = (toDF5(ta), toDF5(tb))
+      val at = s"case $i, $opts"
+      val d = Differ.diff(a, b, ks, opts)
+      def diffRows(st: String, like: DataFrame) =
+        rowsOf(d.filter(col("diff_status") === st).select(like.columns.map(col): _*))
+      val ch = Differ.changed(a, b, ks, opts)
+      val un = Differ.unchanged(a, b, ks, opts)
+      assert(rowsOf(ch) == diffRows("C", ch), s"$at: changed")
+      assert(rowsOf(un) == diffRows("N", un), s"$at: unchanged")
+      val census = counts(d)
+      assert(Differ.changedCols(a, b, ks, opts).count() == census("C"), s"$at: changedCols")
+      // per-column differing C rows, from the source rows (tolerance only
+      // on the floating v/w columns)
+      val am = ta.rows.map(r => r._1 -> r).toMap
+      val bm = tb.rows.map(r => r._1 -> r).toMap
+      val cKeys = d.filter(col("diff_status") === "C").select("k").as[Long].collect()
+      val want = Seq("s", "v", "w", "n").map { c =>
+        c -> cKeys.count { k =>
+          val (ra, rb) = (am(k), bm(k))
+          c match {
+            case "v" => !tolEq(ra._3, rb._3, opts.absTol, opts.relTol)
+            case "w" => !tolEq(ra._4, rb._4, opts.absTol, opts.relTol)
+            case _   => colVal(ra, c) != colVal(rb, c)
+          }
+        }.toLong
+      }.toMap
+      val stats = Differ.columnStats(a, b, ks, opts).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(stats == want, s"$at: columnStats")
+      val rep = Differ.report(a, b, ks, exampleOn = "v", opts)
+      def section(name: String) = rowsOf(rep.filter(col("section") === name)
+        .select(col("item"), col("n")))
+      assert(section("summary") == rowsOf(Differ.summary(a, b, ks, opts)), s"$at: report summary")
+      assert(section("column_stats") == rowsOf(Differ.columnStats(a, b, ks, opts)),
+        s"$at: report column_stats")
+    }
+  }
+
   test("exceptAll/anti-join agreement on key-unique tables") {
     val cases = samples(Gen.zip(tblGen, tblGen), 6, seed = 7L)
     for ((ta, tb) <- cases) {

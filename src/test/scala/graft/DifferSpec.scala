@@ -902,6 +902,31 @@ class DifferSpec extends SparkTestBase {
     // string/binary payload column — under the same default tolerance
     assert(Differ.diffViaHash(l, l, keys,
       DiffOptions(absTol = 0.5, digestCols = Set("s"))).count() == 0L)
+    // every other TOLERANT compare refuses with the same message, before
+    // Spark's cast refusal and never silently
+    for ((what, f) <- Seq[(String, () => Any)](
+        "report" -> (() => Differ.report(l, l, keys, exampleOn = "v", sameOpts)),
+        "diffVsStatic" -> (() => Differ.diffVsStatic(l, l, keys, sameOpts)),
+        "subsetCheck" -> (() => Differ.subsetCheck(l, l, keys, sameOpts)))) {
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains("default tolerance"), s"$what: ${e.getMessage}")
+    }
+    val ei = intercept[Exception](Differ.diffIncremental(l, l, keys, opts = sameOpts).count())
+    assert(!ei.getMessage.contains("default tolerance"), ei.getMessage.take(200))
+  }
+
+  test("diffVsStatic and subsetCheck digest and widen like diff") {
+    // p is digested, n is retyped int -> bigint between the snapshots
+    val a = Seq((1L, "x", 1), (2L, "y", 2), (3L, "z", 3)).toDF("k", "p", "n")
+    val b = Seq((1L, "x", 1L), (2L, "Y", 2L), (4L, "w", 4L)).toDF("k", "p", "n")
+    val o = DiffOptions(digestCols = Set("p"))
+    val batch = Differ.diff(a, b, keys, o).filter(col("diff_status") =!= "D")
+    val streamed = Differ.diffVsStatic(b, a, keys, o)
+    def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(shape(streamed) == shape(batch), streamed.schema.treeString)
+    assert(rowsOf(streamed) == rowsOf(batch))
+    val sc = Differ.subsetCheck(b, a, keys, o).collect().head
+    assert(sc.getAs[Long]("n_candidate_only") == 1L && sc.getAs[Long]("n_changed") == 1L)
   }
 
   test("digestCols overlapping tolCols/bagCols refuses at construction (r13)") {
