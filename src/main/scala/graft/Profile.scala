@@ -13,8 +13,10 @@ import org.apache.spark.sql.SparkSession
   *     collects, codebook builds, fixture writes);
   *   - exec_s: the noop-sink run of the returned frame (Bench's timed
   *     action runs both, so build_s + exec_s ≈ the bench number);
-  * and prints every Spark job that ran, with wall ms and description — the
-  * "which job is the expensive one" view the disabled UI would give.
+  * and prints every Spark job that ran, with wall ms, description and its
+  * stages' call sites with task counts (`parquet at TxnLog.scala:648
+  * [1t]`) — the "which job is the expensive one, and which line fired it"
+  * view the disabled UI would give.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -37,7 +39,8 @@ object Profile {
         jobs.put(js.jobId, (js.time,
           Option(js.properties)
             .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("")))
+            .getOrElse("") + "  <" + js.stageInfos.sortBy(_.stageId)
+            .map(s => s"${s.name} [${s.numTasks}t]").mkString("; ") + ">"))
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         val st = jobs.remove(je.jobId)
         if (st != null) done.add((je.jobId, je.time - st._1, st._2))

@@ -742,7 +742,7 @@ object Differ {
         lit(null).cast("long").as("n_diff"),
         lit(null).cast("long").as("n_matched"),
         lit(s"$item: $detail").as("note"))
-    sweepCore(spark, catalogEntries(spark, pattern, rightFor,
+    sweepCore(catalogEntries(spark, pattern, rightFor,
         "catalogDiffTablesCols"), keysFor,
       renderPair = (n, l, r, ks) =>
         // a table whose key covers EVERY shared column has nothing to
@@ -780,12 +780,12 @@ object Differ {
       })
   }
 
-  /** Catalog-SOURCED multi-table diff sweep (r14 — the r13 verdict's #4
-    * ask; [[catalogDiff]] takes caller-constructed pairs, this one takes
-    * the production question directly: "diff every table in the catalog
-    * matching `pattern` against its counterpart"): enumerate catalog
-    * tables whose name matches the regex, pair each with `rightFor(name)`,
-    * AUTO-infer the diff key per pair ([[electKeys]]: an atomic column
+  /** Catalog-SOURCED multi-table diff sweep ([[catalogDiff]] takes
+    * caller-constructed pairs, this one takes the production question
+    * directly: "diff every table in the catalog matching `pattern`
+    * against its counterpart"): enumerate catalog tables whose name
+    * matches the regex, pair each with `rightFor(name)`, AUTO-infer the
+    * diff key per pair ([[electKeys]]: an atomic column
     * unique and null-free on BOTH sides — left-only uniqueness would let
     * a double-loaded right table fan out the join — with multi-candidate
     * ties broken by cross-side distinct-value overlap, so a churned
@@ -801,14 +801,13 @@ object Differ {
     *     `(name, 'error', 'pair_invalid', <refusal message>, NULL, 'fail')`
     *
     * Scale shape: the table listing is metadata (catalog API); key
-    * inference is ONE job — per table a single map-side-combinable
-    * aggregate (count + per-column count/countDistinct riding one
-    * expand, the diff_key_candidates plan), UNIONed across tables and
-    * collected once at (tables × columns) grain — bounded by schema
-    * width, never row count. The diffs themselves are [[catalogDiff]]'s
-    * one-exchange-per-pair union job.
+    * inference is ONE job over every table ([[electKeys]]: a long-form
+    * per-value count collected at (tables × columns) grain — bounded by
+    * schema width, never row count), plus one pair-tier job only when a
+    * table has no single-column key. The diffs themselves are
+    * [[catalogDiff]]'s one-exchange-per-pair union job.
     *
-    * Plan-size bound in TABLE COUNT (measured, ScaleProbe part 6 r15):
+    * Plan-size bound in TABLE COUNT (measured with ScaleProbe part 6):
     * with [[unionAllByName]]'s balanced assembly, 3/30/300 pairs ran
     * 3.4/7.2/64.7 s end-to-end on tiny tables — per-table cost FALLS
     * with N (0.24 s at 30 → 0.22 s at 300; fixed session cost amortizes,
@@ -821,7 +820,7 @@ object Differ {
     * results concatenate exactly) to bound single-job failure blast
     * radius, but plan cost no longer forces it.
     *
-    * Per-table KEY OVERRIDES (r15): `keysFor(name) = keys` pins a
+    * Per-table KEY OVERRIDES: `keysFor(name) = keys` pins a
     * pair's diff key explicitly — election only elects SINGLE columns, so
     * a table whose identity is COMPOSITE ((order, line), (user, day))
     * would otherwise dead-end as a `no_unique_key` error row with no
@@ -832,8 +831,8 @@ object Differ {
     * audit tool), and an override naming absent columns demotes to that
     * pair's `pair_invalid` error row like any other plan-time refusal.
     * An override naming a table the sweep never visits refuses LOUDLY at
-    * construction (r15 review: a misspelled entry would otherwise be
-    * silently ignored while its pair falls back to election).
+    * construction (a misspelled entry would otherwise be silently ignored
+    * while its pair falls back to election).
     */
   def catalogDiffTables(spark: org.apache.spark.sql.SparkSession,
                         pattern: String, rightFor: String => String,
@@ -845,19 +844,21 @@ object Differ {
       opts, keysFor)
   }
 
-  /** [[catalogDiffTables]]' lakehouse sibling (r14 — the "and/or a TxnLog
-    * directory" half of the r13 verdict's #4 ask): sweep every
+  /** [[catalogDiffTables]]' lakehouse sibling: sweep every
     * [[graft.sources.TxnLog]] table under `rootDir` (any child directory
     * carrying a `_graft_log`) and diff each table's PREVIOUS snapshot
     * against its LATEST — "did last night's commits change anything, per
     * table?" — with the same auto-inferred keys and survive-one-bad-table
     * error rows as the catalog form. A table with fewer than two versions
     * cannot be diffed and lands as a `no_previous_version` error row.
-    * Enumeration and version resolution are log metadata (KB-sized JSON);
-    * the reads are snapshot-pinned parquet scans, so the whole sweep is
-    * time-travel-consistent even while writers keep committing.
+    * Enumeration and version resolution are log metadata (KB-sized JSON),
+    * and so is each snapshot's schema (one parquet footer,
+    * [[graft.sources.TxnLog.read]]): building the sweep runs no Spark job
+    * beyond [[electKeys]]' collect. The reads are snapshot-pinned parquet
+    * scans, so the whole sweep is time-travel-consistent even while
+    * writers keep committing.
     *
-    * Version-RANGE overrides (r15 — the r14 verdict's #4 ask): the
+    * Version-RANGE overrides: the
     * default `(None, None)` diffs prev-vs-latest per table (the nightly
     * check); `fromVer`/`toVer` pin the endpoints GLOBALLY across the
     * sweep — "what changed between v0 and v2, per table" / "since Monday"
@@ -870,14 +871,14 @@ object Differ {
     * (`TxnLog.read(asOf)`), so the sweep is time-travel-consistent under
     * concurrent writers at ANY requested range.
     *
-    * TIMESTAMP endpoints (r15 — the "/asOf" half of the r14 verdict's #4
-    * ask): `fromTs`/`toTs` (epoch millis) resolve PER TABLE to the latest
-    * version committed at-or-before the instant ([[graft.sources.TxnLog
-    * .versionAsOf]] — Delta-style: a commit's timestamp is its log file's
-    * modification time), so ONE wall-clock question — "what changed since
-    * Monday 09:00?" — sweeps a catalog whose tables all sit at different
-    * version numbers. A table whose whole log postdates a requested
-    * instant survives as a `timestamp_out_of_range` error row. Version
+    * TIMESTAMP endpoints: `fromTs`/`toTs` (epoch millis) resolve PER
+    * TABLE to the latest version committed at-or-before the instant
+    * ([[graft.sources.TxnLog.versionAsOf]] — Delta-style: a commit's
+    * timestamp is its log file's modification time), so ONE wall-clock
+    * question — "what changed since Monday 09:00?" — sweeps a catalog
+    * whose tables all sit at different version numbers. A table whose
+    * whole log postdates a requested instant survives as a
+    * `timestamp_out_of_range` error row. Version
     * and timestamp pins are mutually exclusive PER ENDPOINT (mixing, e.g.
     * `fromVer` with `toTs`, is legal); resolution is log metadata, the
     * reads stay snapshot-pinned.
@@ -900,7 +901,7 @@ object Differ {
     val root = java.nio.file.Paths.get(rootDir)
     require(java.nio.file.Files.isDirectory(root),
       s"catalogDiffTxnLog: '$rootDir' is not a directory")
-    // close the listing stream — Files.list holds a dir fd open (r15 review)
+    // close the listing stream — Files.list holds a dir fd open
     val tables = locally {
       val s = java.nio.file.Files.list(root)
       try s.iterator().asScala
@@ -931,11 +932,10 @@ object Differ {
           .orElse(fromTs.map(resolve(_, "from_ts"))).getOrElse(Right(t - 1L))
       } yield (f, t)
       // Snapshot reads are materialized once per (table, version) per
-      // session (r16 optimization round, guide §2.4/§6): a sweep scans
-      // each endpoint at least twice (the election stats aggregate and
-      // the pair diff), and range/as-of sweeps over the same root resolve
-      // to the SAME pinned versions — without the memo every consumer
-      // re-reads the parquet files. A version-pinned snapshot is
+      // session: a sweep scans each endpoint at least twice (the election
+      // aggregate and the pair diff), and range/as-of sweeps over the same
+      // root resolve to the SAME pinned versions — without the memo every
+      // consumer re-reads the parquet files. A version-pinned snapshot is
       // immutable by the log contract (init refuses an existing log dir,
       // versions are append-only), so this is INPUT materialization (the
       // Tables.cachedTable discipline), never result caching; the diff
@@ -960,12 +960,64 @@ object Differ {
   /** Election result per sweep pair: the elected key (None = no unique
     * single column or pair), whether the two relations are PROVABLY the
     * same plan (`sameResult` — the re-publish-check case), and the left
-    * side's row count (already paid for by the stats job; the self-pair
-    * census short-circuit reads it instead of running a redundant
-    * full-outer self-join).
+    * side's row count (already paid for by the election's collect; the
+    * self-pair census short-circuit reads it instead of running a
+    * redundant full-outer self-join).
     */
   private[operators] final case class Elected(
       keys: Option[Seq[String]], selfPair: Boolean, nRowsLeft: Long)
+
+  /** One shared atomic column of an election pair, as the election's
+    * collect saw it: per side the distinct, non-null and row counts, and
+    * the number of distinct values present on BOTH sides. A self-pair
+    * carries its left side's numbers on both sides.
+    */
+  private final case class KeyStat(name: String, pos: Int,
+                                   dL: Long, nnL: Long, nL: Long,
+                                   dR: Long, nnR: Long, nR: Long,
+                                   shared: Long) {
+    def nullFree: Boolean = nnL == nL && nnR == nR
+    def unique: Boolean = nullFree && dL == nL && dR == nR
+    /** Share of the left side's distinct values also on the right, ppm. */
+    def overlapPpm: Long = if (dL == 0L) 0L else shared * 1000000L / dL
+  }
+
+  /** Types whose values [[groupingImage]] can keep as a BIGINT; two
+    * columns' numbers are comparable only within one family.
+    */
+  private def numberFamily(dt: DataType): Option[String] = dt match {
+    case ByteType | ShortType | IntegerType | LongType => Some("integral")
+    case DateType      => Some("date")
+    case TimestampType => Some("timestamp")
+    case _             => None
+  }
+
+  /** Injective image of a value under Spark's grouping equality, as a
+    * (BIGINT, STRING) pair of which a non-NULL value sets exactly one:
+    * two values group together iff their images are equal, and NULL maps
+    * to (NULL, NULL). `asNumber` keeps an integer, DATE (epoch day) or
+    * TIMESTAMP (epoch micros) an 8-byte number, which the caller asks for
+    * when both sides of a pair share the column's [[numberFamily]]; any
+    * other value is a string — NaN and ±0.0 normalized, BINARY as hex (a
+    * UTF-8 decode would merge invalid byte sequences), TIMESTAMP as epoch
+    * micros (a session-zone rendering repeats wall times at a DST
+    * fall-back), the rest as Spark's string cast, so a column whose type
+    * drifted between sides still meets itself.
+    */
+  private def groupingImage(c: Column, dt: DataType,
+                            asNumber: Boolean): (Column, Column) =
+    if (asNumber) (dt match {
+        case DateType      => unix_date(c).cast(LongType)
+        case TimestampType => unix_micros(c)
+        case _             => c.cast(LongType)
+      }, lit(null).cast(StringType))
+    else (lit(null).cast(LongType), dt match {
+      case FloatType | DoubleType =>
+        when(c === lit(0).cast(dt), lit(0).cast(dt)).otherwise(c).cast(StringType)
+      case BinaryType    => hex(c)
+      case TimestampType => unix_micros(c).cast(StringType)
+      case _             => c.cast(StringType)
+    })
 
   /** Key ELECTION shared by the sweep surfaces and the single-pair
     * `keys => 'auto'` TVF path: per named pair, the diff key is the
@@ -978,246 +1030,145 @@ object Differ {
     * of C. The real key's values persist across snapshots; a churned
     * surrogate's do not — the same distinct-set-overlap signal
     * [[autoMapReport]] grades value columns with, applied at candidate
-    * scope.
+    * scope. Uniqueness, null-freedom and overlap all follow Spark's
+    * grouping equality ([[groupingImage]]).
     *
-    * Scale shape: uniqueness stats are ONE unioned job (per table-side a
-    * single map-side-combinable aggregate — count + per-column count/
-    * countDistinct riding one expand — collected at (tables × columns ×
-    * 2) grain, schema-width-bounded). The overlap tie-break is a SECOND
-    * unioned job over ONLY the multi-candidate tables: per candidate
-    * column, each side's distinct string-cast values meet in one inner
-    * join counted at (tables × candidates) grain — the shuffle carries
-    * candidate-column distinct values, the same class as the stats job's
-    * own scan, and is skipped entirely when every table has at most one
-    * candidate.
+    * Scale shape: ONE job answers the single-column tier for every pair.
+    * Each side of each pair becomes long-form rows `(t, c, n, s, side)`,
+    * one per shared atomic column, with `(n, s)` the value's
+    * [[groupingImage]]; grouping by `(t, c, n, s)` counts each value per
+    * side, and grouping again by `(t, c)` yields each side's distinct,
+    * non-null and row counts plus the shared-value count, collected at
+    * (tables × columns) grain — schema-width-bounded, never row-scale. A
+    * candidate is unique and null-free on both sides by construction, so
+    * its overlap needs no separate distinct or join. Only columns present
+    * on both sides enter the job (a one-sided column can never be
+    * elected), and a self-pair aggregates one side.
     *
-    * PAIR tier: a table with NO single candidate falls back to
-    * column PAIRS drawn from its shared null-free columns — ranked by
-    * the smaller side's distinct count and capped at 6 columns (≤15
-    * combos) — so composite identities ((order, line), (user, day))
-    * elect instead of dead-ending. One more unioned job over only those
-    * tables: per combo, countDistinct over the pair struct rides a
-    * single aggregate per side; a combo qualifies when pair-distinct
-    * equals the row count on BOTH sides; ties break by schema position
-    * (the churned-surrogate decoy needs TWO churned unique-TOGETHER
-    * columns to fool this tier, so the singles-only overlap tie-break
-    * is deliberately not replicated here). Returns the elected key as a
-    * Seq — one element from the single tier, two from the pair tier.
+    * PAIR tier: a table with NO single candidate falls back to column
+    * PAIRS drawn from its shared null-free columns — ranked by the
+    * smaller side's distinct count and capped at 6 columns (≤15 combos);
+    * a combo whose distinct-count product falls short of a side's row
+    * count cannot be unique there and is pruned without a scan — so
+    * composite identities ((order, line), (user, day)) elect instead of
+    * dead-ending. A second job over only those tables runs, per combo,
+    * countDistinct over the pair struct in a single aggregate per side; a
+    * combo qualifies when pair-distinct equals the row count on BOTH
+    * sides; ties break by schema position (the churned-surrogate decoy
+    * needs TWO churned unique-TOGETHER columns to fool this tier, so the
+    * overlap tie-break is deliberately not replicated here). Returns the
+    * elected key as a Seq — one element from the single tier, two from
+    * the pair tier.
     */
-  private def electKeys(spark: org.apache.spark.sql.SparkSession,
-                        pairs: Seq[(String, (DataFrame, DataFrame))])
+  private def electKeys(pairs: Seq[(String, (DataFrame, DataFrame))])
       : Map[String, Elected] = {
     val atomic: DataType => Boolean = {
       case _: NumericType | StringType | BooleanType | DateType | BinaryType |
            _: TimestampType | _: TimestampNTZType => true
       case _ => false
     }
-    // Stats are computed ONLY for atomic columns present (by name) on BOTH
-    // sides (r16 optimization round, guide §6 scan narrowing): a one-sided
-    // column can never be elected — sharedCands and pairPool both demand
-    // cross-side presence — so count/countDistinct over it is pure waste
-    // under schema drift. No-op on identical schemas; on a drifted pair the
-    // stats aggregate (and its expand multiplier) shrinks to the shared
-    // width.
-    def atomicNames(df: DataFrame): Set[String] =
-      df.schema.fields.iterator.collect {
-        case f if atomic(f.dataType) => f.name }.toSet
-    val sharedNames: Map[String, Set[String]] = pairs.map { case (n, (l, r)) =>
-      n -> (atomicNames(l) intersect atomicNames(r))
-    }.toMap
-    def candFrame(name: String, df: DataFrame, shared: Set[String]): DataFrame = {
-      val cols = df.schema.fields.toSeq.zipWithIndex
-        .collect { case (f, i) if atomic(f.dataType) && shared(f.name) => (f.name, i) }
-      if (cols.isEmpty)
-        return spark.range(0).select(lit(name).as("tbl"),
-          lit("").as("c"), lit(0).as("pos"), lit(false).as("uniq"),
-          lit(0L).as("d"), lit(0L).as("n_rows"))
-      df.agg(count(lit(1)).as("n_rows"),
-          cols.flatMap { case (c, _) => Seq(
-            countDistinct(bq(c)).as(s"__d_$c"), count(bq(c)).as(s"__c_$c")) }: _*)
-        .select(lit(name).as("tbl"), col("n_rows"),
-          explode(array(cols.map { case (c, i) =>
-            struct(lit(c).as("c"), lit(i).as("pos"),
-              (bq(s"__d_$c") === col("n_rows") &&
-                bq(s"__c_$c") === col("n_rows")).as("uniq"),
-              bq(s"__d_$c").as("d"),
-              (bq(s"__c_$c") === col("n_rows")).as("nn"))
-          }: _*)).as("e"))
-        .filter(col("e.nn")) // null-free columns only: singles pool + pair-tier pool
-        .select(col("tbl"), col("e.c"), col("e.pos"), col("e.uniq"), col("e.d"),
-          col("n_rows"))
-    }
-    // Provably-identical relations (a table swept against itself — the
-    // re-publish-check case): computed ONCE here and reused by the stats
-    // job (the R side's aggregate would recompute the L side's numbers
-    // verbatim), the overlap filter below, and the sweep's census
-    // short-circuit. sameResult is conservative: a false negative just
-    // pays the job, never changes the election.
-    val self: Map[String, Boolean] = pairs.map { case (n, (l, r)) =>
-      n -> l.queryExecution.analyzed.sameResult(r.queryExecution.analyzed)
-    }.toMap
-    // (tbl-side) -> (column, pos, uniq, distinctCount); every collected
-    // column is null-free on its side. (tables × columns × 2)-bounded —
-    // schema-width metadata, never row-scale. Self-pairs contribute ONE
-    // aggregate; their R stats are the L rows verbatim (r15 optimization
-    // round — half the stats scan for the self-pair class).
-    val statsL =
-      if (pairs.isEmpty)
-        Map.empty[String, Array[(String, Int, Boolean, Long, Long)]]
-      else unionAllByName(pairs.flatMap { case (n, (l, r)) =>
-          if (self(n)) Seq(candFrame(s"$nL", l, sharedNames(n)))
-          else Seq(candFrame(s"$nL", l, sharedNames(n)),
-            candFrame(s"$nR", r, sharedNames(n))) })
-        .collect()
-        .map(r => (r.getString(0), (r.getString(1), r.getInt(2),
-          r.getBoolean(3), r.getLong(4), r.getLong(5))))
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val stats = statsL ++ pairs.collect {
-      case (n, _) if self(n) && statsL.contains(s"$nL") =>
-        s"$nR" -> statsL(s"$nL")
-    }
-    def sharedCands(name: String): Seq[(String, Int)] = {
-      val rUniq = stats.getOrElse(s"$nameR",
-        Array.empty[(String, Int, Boolean, Long, Long)])
-        .collect { case (c, _, true, _, _) => c }.toSet
-      stats.getOrElse(s"$nameL",
-          Array.empty[(String, Int, Boolean, Long, Long)])
-        .sortBy(_._2).collect { case (c, pos, true, _, _) if rUniq(c) => (c, pos) }
-        .toSeq
-    }
-    // PAIR-election pool for a table with NO single candidate (r15): the
-    // shared null-free columns ranked by the smaller side's distinct
-    // count (a pair is only unique if its columns' cardinality product
-    // reaches n, so high-cardinality columns first), capped at 6 (≤15
-    // combos) — the pair job stays schema-width-bounded.
-    // per-column distinct counts on both sides + each side's row count —
-    // the pruning inputs: a combo whose distinct-count PRODUCT falls
-    // short of a side's row count cannot be unique there, so it skips
-    // the pair job without a scan (closes the common low-cardinality
-    // dead end — e.g. a (custkey, status) slice — at zero cost)
-    def pairPool(name: String): Seq[(String, Int, Long, Long)] = {
-      val rSide = stats.getOrElse(s"$nameR",
-        Array.empty[(String, Int, Boolean, Long, Long)])
-        .map { case (c, _, _, d, _) => c -> d }.toMap
-      stats.getOrElse(s"$nameL",
-          Array.empty[(String, Int, Boolean, Long, Long)])
-        .collect { case (c, pos, _, dl, _) if rSide.contains(c) =>
-          (c, pos, dl, rSide(c)) }
-        .sortBy(t => (-math.min(t._3, t._4), t._2)).take(6).toSeq
-    }
-    def nRows(name: String, side: String): Long =
-      stats.getOrElse(s"$name$side",
-        Array.empty[(String, Int, Boolean, Long, Long)])
-        .headOption.map(_._5).getOrElse(0L)
-    val multi = pairs.filter { case (n, _) =>
-      // provably-identical relations tie every candidate at full overlap,
-      // so the election falls to schema position either way; skip their
-      // overlap scan (the shared `self` map above)
-      sharedCands(n).size > 1 && !self(n)
-    }
-    // Overlap tie-break frame, (tbl, c) -> cross-side distinct-value
-    // overlap ppm. NOT collected here: folded with the pair-tier frame
-    // into ONE unioned job below (r16 optimization round, guide §2.4 —
-    // the two jobs are independent once stats land, so a sweep carrying
-    // both multi-candidate and pair-tier tables pays one job, not two).
-    val overlapFrame: Option[DataFrame] =
-      if (multi.isEmpty) None
-      else {
-        // candidate columns are null-free by election, so no null filter;
-        // string cast is the cross-type value carrier (autoMapReport's
-        // long-form discipline)
-        def longForm(name: String, df: DataFrame): DataFrame = {
-          val cs = sharedCands(name).map(_._1)
-          df.select(lit(name).as("tbl"),
-              explode(array(cs.map(c => struct(lit(c).as("c"),
-                bq(c).cast("string").as("v"))): _*)).as("e"))
-            .select(col("tbl"), col("e.c").as("c"), col("e.v").as("v"))
-            .distinct()
-        }
-        val lf = unionAllByName(multi.map { case (n, (l, _)) => longForm(n, l) })
-        val rf = unionAllByName(multi.map { case (n, (_, r)) => longForm(n, r) })
-        val nLeft = lf.groupBy("tbl", "c").agg(count(lit(1)).as("n_left"))
-        Some(lf.join(rf, Seq("tbl", "c", "v"))
-          .groupBy("tbl", "c").agg(count(lit(1)).as("n_shared"))
-          .join(nLeft, Seq("tbl", "c"))
-          .select(col("tbl"), lit("overlap").as("kind"), col("c").as("c1"),
-            lit(null).cast("string").as("c2"),
-            expr("n_shared * 1000000 div n_left").as("v")))
+    // per pair index: the atomic columns present by name on both sides,
+    // as (name, left schema position, image as a number)
+    val shared: IndexedSeq[Seq[(String, Int, Boolean)]] = pairs.map { case (_, (l, r)) =>
+      val onRight = r.schema.fields.iterator
+        .collect { case f if atomic(f.dataType) => f.name -> f.dataType }.toMap
+      l.schema.fields.toSeq.zipWithIndex.collect {
+        case (f, i) if atomic(f.dataType) && onRight.contains(f.name) =>
+          (f.name, i, numberFamily(f.dataType).exists(numberFamily(onRight(f.name)).contains))
       }
-    // PAIR tier (r15): tables with NO single candidate try column PAIRS
-    // from their pairPool — the composite-identity case ((order, line),
-    // (user, day)) that previously dead-ended as no_unique_key. ONE more
-    // unioned job over only those tables: per combo, countDistinct over
-    // the column-pair struct rides a single aggregate per side; a combo
-    // qualifies when pair-distinct == row count on BOTH sides. Ties break
-    // by schema position (the combos of a composite key rarely admit a
-    // churned-surrogate decoy — that failure mode needs TWO churned
-    // unique-together columns — so the singles-only overlap tie-break is
-    // not replicated here; documented, not hidden).
-    val needPair = pairs.filter { case (n, _) => sharedCands(n).isEmpty }
-      .map { case (n, lr) =>
-        val pool = pairPool(n)
-        val (nL, nR) = (nRows(n, "L"), nRows(n, "R"))
-        (n, lr, for {
-          i <- pool.indices; j <- (i + 1) until pool.size
-          (a, b) = (pool(i), pool(j))
-          // cardinality pruning: distinct-product must reach the row
-          // count on BOTH sides or the pair cannot be unique (BigInt:
-          // two ~1e10 distinct counts would overflow a Long product)
-          if BigInt(a._3) * b._3 >= nL && BigInt(a._4) * b._4 >= nR
-        } yield ((a._1, a._2), (b._1, b._2)))
-      }.filter(_._3.nonEmpty)
-    val pairFrame: Option[DataFrame] =
-      if (needPair.isEmpty) None
+    }.toIndexedSeq
+    // Provably-identical relations (a table swept against itself): their
+    // right side is never scanned, and the sweep's census short-circuits.
+    // sameResult is conservative: a false negative just pays the scan,
+    // never changes the election.
+    val self: IndexedSeq[Boolean] = pairs.map { case (_, (l, r)) =>
+      l.queryExecution.analyzed.sameResult(r.queryExecution.analyzed)
+    }.toIndexedSeq
+    def longForm(t: Int, df: DataFrame, left: Boolean): DataFrame =
+      df.select(explode(array(shared(t).map { case (c, pos, asNumber) =>
+          val (n, s) = groupingImage(bq(c), df.schema(c).dataType, asNumber)
+          struct(lit(pos).as("c"), n.as("n"), s.as("s"))
+        }: _*)).as("e"))
+        .select(lit(t).as("t"), lit(left).as("l"), col("e.c").as("c"),
+          col("e.n").as("n"), col("e.s").as("s"))
+    val sides = pairs.indices.filter(shared(_).nonEmpty).flatMap { t =>
+      val (l, r) = pairs(t)._2
+      longForm(t, l, left = true) +:
+        (if (self(t)) Nil else Seq(longForm(t, r, left = false)))
+    }
+    val got: Map[(Int, Int), Seq[Long]] =
+      if (sides.isEmpty) Map.empty
       else {
-        def comboFrame(name: String, df: DataFrame,
-                       combos: Seq[((String, Int), (String, Int))]): DataFrame =
+        val nonNull = col("n").isNotNull || col("s").isNotNull
+        val (inL, inR) = (col("nl") > 0, col("nr") > 0)
+        unionAllByName(sides)
+          .groupBy("t", "c", "n", "s")
+          .agg(count_if(col("l")).as("nl"), count_if(!col("l")).as("nr"))
+          .groupBy("t", "c")
+          .agg(count_if(nonNull && inL), sum(when(nonNull, col("nl")).otherwise(0L)),
+            sum("nl"), count_if(nonNull && inR), sum(when(nonNull, col("nr")).otherwise(0L)),
+            sum("nr"), count_if(nonNull && inL && inR))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1)) -> (2 to 8).map(r.getLong))
+          .toMap
+      }
+    // a (t, c) with no row had no rows on either side
+    val stats: IndexedSeq[Seq[KeyStat]] = pairs.indices.map { t =>
+      shared(t).map { case (c, pos, _) =>
+        got.getOrElse((t, pos), Seq.fill(7)(0L)) match {
+          case Seq(dL, nnL, nL, _, _, _, _) if self(t) =>
+            KeyStat(c, pos, dL, nnL, nL, dL, nnL, nL, dL)
+          case Seq(dL, nnL, nL, dR, nnR, nR, sh) =>
+            KeyStat(c, pos, dL, nnL, nL, dR, nnR, nR, sh)
+        }
+      }
+    }
+    // single-column candidates in left schema order
+    val cands = stats.map(_.filter(_.unique))
+    val needPair = pairs.indices.filter(cands(_).isEmpty).map { t =>
+      val pool = stats(t).filter(_.nullFree)
+        .sortBy(s => (-math.min(s.dL, s.dR), s.pos)).take(6)
+      val (nL, nR) = stats(t).headOption.fold((0L, 0L))(s => (s.nL, s.nR))
+      // BigInt: two ~1e10 distinct counts would overflow a Long product
+      t -> (for {
+        i <- pool.indices; j <- (i + 1) until pool.size
+        (a, b) = (pool(i), pool(j))
+        if BigInt(a.dL) * b.dL >= nL && BigInt(a.dR) * b.dR >= nR
+      } yield (a, b))
+    }.filter(_._2.nonEmpty)
+    val pairElect: Map[Int, Seq[String]] =
+      if (needPair.isEmpty) Map.empty
+      else {
+        def comboFrame(t: Int, left: Boolean, df: DataFrame,
+                       combos: Seq[(KeyStat, KeyStat)]): DataFrame =
           df.agg(count(lit(1)).as("n_rows"),
-              combos.zipWithIndex.map { case (((a, _), (b, _)), i) =>
-                countDistinct(struct(bq(a), bq(b))).as(s"__p_$i") }: _*)
-            .select(lit(name).as("tbl"),
-              explode(array(combos.zipWithIndex.map { case (((a, _), (b, _)), i) =>
-                struct(lit(a).as("c1"), lit(b).as("c2"),
-                  (bq(s"__p_$i") === col("n_rows")).as("uniq"))
+              combos.zipWithIndex.map { case ((a, b), i) =>
+                countDistinct(struct(bq(a.name), bq(b.name))).as(s"__p_$i") }: _*)
+            .select(explode(array(combos.indices.map { i =>
+                struct(lit(i).as("i"), (bq(s"__p_$i") === col("n_rows")).as("uniq"))
               }: _*)).as("e"))
             .filter(col("e.uniq"))
-            .select(col("tbl"), col("e.c1"), col("e.c2"))
-        Some(unionAllByName(needPair.flatMap { case (n, (l, r), combos) =>
-            Seq(comboFrame(s"$nL", l, combos),
-              comboFrame(s"$nR", r, combos)) })
-          .select(col("tbl"), lit("pair").as("kind"), col("c1"),
-            col("c2"), lit(null).cast("long").as("v")))
+            .select(lit(t).as("t"), lit(left).as("l"), col("e.i").as("i"))
+        val ok = unionAllByName(needPair.flatMap { case (t, combos) =>
+            val (l, r) = pairs(t)._2
+            comboFrame(t, left = true, l, combos) +:
+              (if (self(t)) Nil else Seq(comboFrame(t, left = false, r, combos)))
+          })
+          .collect().map(r => (r.getInt(0), r.getBoolean(1), r.getInt(2))).toSet
+        needPair.flatMap { case (t, combos) =>
+          combos.indices
+            .filter(i => ok((t, true, i)) && (self(t) || ok((t, false, i))))
+            .map(combos).sortBy { case (a, b) => (a.pos + b.pos, a.pos) }
+            .headOption.map { case (a, b) => t -> Seq(a.name, b.name) }
+        }.toMap
       }
-    // ONE collect for both election tie-break tiers (r16): the overlap and
-    // pair-tier jobs depend only on the stats job, never on each other, so
-    // their frames union into a single (tbl, kind, c1, c2, v) job —
-    // (tables × candidates) + (tables × combos × 2) bounded.
-    val tieRows: Array[org.apache.spark.sql.Row] =
-      (overlapFrame ++ pairFrame).reduceOption((a, b) => unionAllByName(Seq(a, b)))
-        .map(_.collect()).getOrElse(Array.empty)
-    val overlapPpm: Map[(String, String), Long] = tieRows
-      .filter(_.getString(1) == "overlap")
-      .map(r => (r.getString(0), r.getString(2)) -> r.getLong(4)).toMap
-    val pairElect: Map[String, Option[Seq[String]]] = {
-      val ok = tieRows.filter(_.getString(1) == "pair")
-        .map(r => (r.getString(0), (r.getString(2), r.getString(3))))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      needPair.map { case (n, _, combos) =>
-        val both = combos.filter { case ((a, _), (b, _)) =>
-          ok.getOrElse(s"$nL", Set.empty).contains((a, b)) &&
-            ok.getOrElse(s"$nR", Set.empty).contains((a, b)) }
-        n -> both.sortBy { case ((_, pa), (_, pb)) => (pa + pb, pa) }
-          .headOption.map { case ((a, _), (b, _)) => Seq(a, b) }
-      }.toMap
-    }
-    pairs.map { case (n, _) =>
-      val cands = sharedCands(n)
-      val keys =
-        if (cands.size == 1) Some(Seq(cands.head._1))
-        else if (cands.size > 1) Some(Seq(cands.minBy { case (c, pos) =>
-          (-overlapPpm.getOrElse((n, c), 0L), pos) }._1))
-        else pairElect.getOrElse(n, None)
-      n -> Elected(keys, self(n), nRows(n, "L"))
+    pairs.indices.map { t =>
+      val keys = cands(t) match {
+        case Seq(only) => Some(Seq(only.name))
+        case Seq()     => pairElect.get(t)
+        case many      => Some(Seq(many.minBy(s => (-s.overlapPpm, s.pos)).name))
+      }
+      pairs(t)._1 -> Elected(keys, self(t), stats(t).headOption.fold(0L)(_.nL))
     }.toMap
   }
 
@@ -1225,17 +1176,17 @@ object Differ {
     * sweep pair, surfaced for the `graft_diff(..., 'auto')` TVF and direct
     * API use. Returns ONE column when a single column is unique +
     * null-free on both sides, a column PAIR when only a composite
-    * qualifies (the r15 pair tier), None when neither exists.
+    * qualifies (the pair tier), None when neither exists.
     */
   def inferDiffKey(left: DataFrame, right: DataFrame): Option[Seq[String]] =
-    electKeys(left.sparkSession, Seq(("pair", (left, right))))("pair").keys
+    electKeys(Seq(("pair", (left, right))))("pair").keys
 
   /** Shared sweep core of [[catalogDiffTables]] / [[catalogDiffTxnLog]]:
     * [[electKeys]] infers the diff key per healthy pair (unique +
-    * null-free on BOTH sides — r14 review fix: a left-only check let a
+    * null-free on BOTH sides — a left-only check would let a
     * double-loaded right table fan out the full-outer join — with
-    * multi-candidate ties broken by cross-side distinct-value overlap,
-    * r15), then [[catalogDiff]] over the keyed pairs UNIONed with one
+    * multi-candidate ties broken by cross-side distinct-value overlap),
+    * then [[catalogDiff]] over the keyed pairs UNIONed with one
     * `error`-kind fail row per unusable entry. Because the sweep's
     * contract is "one bad table cannot kill the other N−1", any per-pair
     * plan-construction failure [[catalogDiff]]/[[diff]] raises (e.g. a
@@ -1248,7 +1199,7 @@ object Differ {
                           opts: DiffOptions,
                           keysFor: Map[String, Seq[String]] = Map.empty)
       : DataFrame =
-    sweepCore(spark, entries, keysFor,
+    sweepCore(entries, keysFor,
       renderPair = (n, l, r, ks) => catalogDiff(Seq((n, l, r, ks)), opts),
       renderErr = (n, item, detail) =>
         spark.range(1).select(lit(n).as("table_name"), lit("error").as("kind"),
@@ -1256,12 +1207,11 @@ object Differ {
           lit(null).cast("long").as("n"), lit("fail").as("verdict")),
       // Elected-key self-pair (sameResult) census: every row matches
       // itself, so the 4-row census is fully determined by the row count
-      // the election stats already paid for — N = n, C/I/D = 0, no drift,
+      // the election already paid for — N = n, C/I/D = 0, no drift,
       // verdict pass. The generic pair plan is still CONSTRUCTED (first
       // statement) so every plan-time refusal demotes to pair_invalid
       // exactly like the executed path; only the redundant full-outer
-      // self-join is skipped (guide §2.4 — remove shuffles outright when
-      // the result is provable without them).
+      // self-join is skipped.
       renderSelf = Some { (n, l, r, ks, nRows) =>
         catalogDiff(Seq((n, l, r, ks)), opts) // plan-time validations only
         spark.range(1).select(
@@ -1274,7 +1224,7 @@ object Differ {
 
   /** One-line refusal message from a demoted exception — total: a
     * null/empty/whitespace message must still yield text, never a
-    * NoSuchElementException out of linesIterator on "" (r14 review #2).
+    * NoSuchElementException out of linesIterator on "".
     */
   private def refusalMsg(e: Throwable): String = {
     val m = Option(e.getMessage).getOrElse("").trim
@@ -1287,8 +1237,7 @@ object Differ {
     * the name mapping, missing counterparts become `missing_right`
     * entries. Duplicate names (a temp view shadowing a permanent table)
     * are NOT filtered here — [[sweepCore]]'s guard refuses them loudly
-    * for every sweep grain (r15 review: the column census was missing
-    * the row census's guard).
+    * for every sweep grain.
     */
   private def catalogEntries(spark: org.apache.spark.sql.SparkSession,
                              pattern: String, rightFor: String => String,
@@ -1306,18 +1255,17 @@ object Differ {
     }
   }
 
-  /** Shared sweep RESOLUTION core (r15 review — the row-census and
-    * column-census sweeps were drifting copies): duplicate-name and
-    * orphan-override guards, election over the non-overridden pairs
-    * ([[electKeys]] — overridden pairs skip the stats scan entirely),
+  /** Shared sweep RESOLUTION core of the row-census and column-census
+    * sweeps: duplicate-name and orphan-override guards, election over the
+    * non-overridden pairs ([[electKeys]] — overridden pairs skip the
+    * election scan entirely),
     * per-entry key resolution, and the survive-one-bad-table demotion of
     * plan-time refusals. The renderers supply the report grain:
     * `renderPair` builds a healthy pair's rows (a plan-time throw inside
     * it demotes to that pair's `pair_invalid` row), `renderErr` one
     * error/note row.
     */
-  private def sweepCore(spark: org.apache.spark.sql.SparkSession,
-                        entries: Seq[(String, Either[(String, String),
+  private def sweepCore(entries: Seq[(String, Either[(String, String),
                           (DataFrame, DataFrame)])],
                         keysFor: Map[String, Seq[String]],
                         renderPair: (String, DataFrame, DataFrame,
@@ -1332,26 +1280,26 @@ object Differ {
         s"sweep: duplicate table name(s) ${dups.toSeq.sorted.mkString(", ")}")
       // a keysFor entry naming a table the sweep never visits is a config
       // typo — silently ignoring it would let the pair fall back to
-      // election with no diagnostic (r15 review)
+      // election with no diagnostic
       val orphans = (keysFor.keySet -- entries.map(_._1)).toSeq.sorted
       require(orphans.isEmpty,
         s"sweep: keys_for entr${if (orphans.size == 1) "y" else "ies"} " +
           s"${orphans.mkString(", ")} match${if (orphans.size == 1) "es" else ""} " +
           "no swept table")
     }
-    // overridden pairs never enter the inference stats job — the caller
+    // overridden pairs never enter the election job — the caller
     // pinned their key, so scanning their columns for uniqueness would be
     // pure waste (and composite-key tables would fail it anyway)
     val pairs = entries.collect {
       case (n, Right(lr)) if !keysFor.contains(n) => (n, lr)
     }
-    val keyFor = electKeys(spark, pairs)
+    val keyFor = electKeys(pairs)
     unionAllByName(entries.map {
       case (n, Left((item, detail))) => renderErr(n, item, detail)
       case (n, Right((l, r))) =>
         keysFor.get(n).orElse(keyFor.get(n).flatMap(_.keys)) match {
           case Some(ks) =>
-            // Self-pair short-circuit (r15 optimization round): when the
+            // Self-pair short-circuit: when the
             // two relations are PROVABLY the same plan (sameResult) and
             // the key was ELECTED (election certified it unique +
             // null-free, so the pair join cannot fan out), the pair's

@@ -4,7 +4,15 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A minimal transactional table format over parquet — the lakehouse
   * mechanics (Delta/Iceberg-style) with zero connector dependencies:
@@ -70,6 +78,10 @@ object TxnLog {
     s"""{"op":"add","file":"$file","kmin":$kmin,"kmax":$kmax}"""
   }
 
+  /** Add action with stats when the key range is known, plain otherwise. */
+  private def addLine(file: String, keyRange: Option[(Long, Long)]): String =
+    keyRange.fold(actionLine("add", file)) { case (lo, hi) => statsActionLine(file, lo, hi) }
+
   private val ActionRe = """\{"op":"(add|remove)","file":"([^"]+)"\}""".r
   private val StatsRe =
     """\{"op":"add","file":"([^"]+)","kmin":(-?\d+),"kmax":(-?\d+)\}""".r
@@ -95,7 +107,7 @@ object TxnLog {
 
   /** One live deletion vector: tombstone file, key column, scoped files. */
   final case class DvStat(file: String, key: String, scope: Set[String])
-  // op tag is optional so pre-r8 logs (headers without it) still replay
+  // op tag is optional so logs written before it existed still replay
   private val HeaderRe =
     """\{"commit":(\d+)(?:,"op":"([a-z]+)")?,"n_add":(\d+),"n_remove":(\d+)\}""".r
 
@@ -104,9 +116,8 @@ object TxnLog {
 
   /** `Files.list` holds an open directory handle until the stream is
     * CLOSED (the JDK contract) — a long-lived driver sweeping hundreds of
-    * tables nightly would otherwise accumulate unclosed dir fds until GC
-    * (r15 review). Every directory listing in this object routes through
-    * this bracket.
+    * tables nightly would otherwise accumulate unclosed dir fds until GC.
+    * Every directory listing in this object routes through this bracket.
     */
   private def listDir[A](dir: Path)(f: Iterator[Path] => A): A = {
     val s = Files.list(dir)
@@ -229,16 +240,6 @@ object TxnLog {
     version
   }
 
-  /** [[commit]] with per-file key stats on the adds (data-skipping). */
-  def commitWithStats(table: String, adds: Seq[(String, Long, Long)],
-                      removes: Seq[String], op: String = "commit"): Long = {
-    val version = latestVersion(table) + 1
-    commitLines(table, version,
-      adds.map { case (f, lo, hi) => statsActionLine(f, lo, hi) },
-      removes, op)
-    version
-  }
-
   /** Publish one specific version (the optimistic-concurrency gate
     * commit() rides). The commit file is written to a temp name, then
     * published with an atomic HARD LINK — createLink fails if the target
@@ -296,29 +297,71 @@ object TxnLog {
     names
   }
 
-  /** [[writeDataFiles]] plus a single Spark job computing each new file's
-    * key min/max (the Delta-style stats MERGE prunes by). Integral key
-    * columns only — stats are stored as BIGINT ranges.
+  /** One data file's parquet footer, read on the driver (no Spark job). */
+  private def footer(conf: Configuration, file: Path): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), conf))
+    try r.getFooter finally r.close()
+  }
+
+  /** [[writeDataFiles]] plus each new file's key range [kmin, kmax] — the
+    * Delta-style stats MERGE prunes by — from the key column's row-group
+    * statistics in the file's parquet footer: metadata the writer already
+    * produced, so no data is re-read and no Spark job runs. Zero-row files
+    * are left out (they hold no data to see). A file whose range is
+    * unknown — every key NULL, a row group without statistics, or a key
+    * that is not a signed INT32/INT64 parquet integer — comes back with
+    * None and is committed as a plain add, which [[merge]] and
+    * [[readRange]] treat conservatively.
     */
-  private def writeDataFilesKeyed(df: DataFrame, table: String,
-                                  keyCol: String): Seq[(String, Long, Long)] = {
-    import org.apache.spark.sql.functions._
-    val names = writeDataFiles(df, table)
-    if (names.isEmpty) Nil
-    else {
-      val spark = df.sparkSession
-      val byName: Map[String, (Long, Long)] = spark.read
-        .parquet(names.map(f => Paths.get(table, f).toString): _*)
-        .select(input_file_name().as("f"), col(keyCol).cast("long").as("k"))
-        .groupBy("f").agg(min("k").as("lo"), max("k").as("hi"))
-        .collect() // file-count-sized, never row-sized
-        .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath)
-          .getFileName.toString -> (r.getLong(1), r.getLong(2)))
-        .toMap
-      // empty part files (row-less partitions) have no stats — leave them
-      // out of the commit entirely; they hold no data to see
-      names.flatMap(f => byName.get(f).map { case (lo, hi) => (f, lo, hi) })
+  private def writeDataFilesKeyed(df: DataFrame, table: String, keyCol: String)
+      : Seq[(String, Option[(Long, Long)])] = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    writeDataFiles(df, table).flatMap { f =>
+      val groups = footer(conf, Paths.get(table, f)).getBlocks.asScala.toSeq
+        .filter(_.getRowCount > 0)
+      if (groups.isEmpty) None else Some(f -> keyRange(groups, keyCol))
     }
+  }
+
+  /** Min/max of `keyCol` over row groups, None when any group's range is
+    * unknown or no group holds a non-NULL key.
+    */
+  private def keyRange(groups: Seq[BlockMetaData], keyCol: String): Option[(Long, Long)] = {
+    val ranges = groups.map { g =>
+      g.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(keyCol))) match {
+        case Some(c) if integral(c.getPrimitiveType) =>
+          c.getStatistics match {
+            case null                       => None
+            case st if st.isEmpty           => None
+            case st if !st.hasNonNullValue  => Some(None) // all-NULL group
+            case st: IntStatistics  => Some(Some((st.getMin.toLong, st.getMax.toLong)))
+            case st: LongStatistics => Some(Some((st.getMin, st.getMax)))
+            case _                          => None
+          }
+        case _ => None
+      }
+    }
+    if (ranges.contains(None)) None
+    else ranges.flatten.flatten.reduceOption((a, b) =>
+      (math.min(a._1, b._1), math.max(a._2, b._2)))
+  }
+
+  private def integral(t: org.apache.parquet.schema.PrimitiveType): Boolean =
+    (t.getPrimitiveTypeName == PrimitiveTypeName.INT32 ||
+      t.getPrimitiveTypeName == PrimitiveTypeName.INT64) &&
+      (t.getLogicalTypeAnnotation match {
+        case null                        => true
+        case i: IntLogicalTypeAnnotation => i.isSigned
+        case _                           => false
+      })
+
+  /** Publish keyed adds: stats where the range is known, plain otherwise. */
+  private def commitKeyed(table: String, adds: Seq[(String, Option[(Long, Long)])],
+                          removes: Seq[String], op: String): Long = {
+    val version = latestVersion(table) + 1
+    commitLines(table, version, adds.map { case (f, kr) => addLine(f, kr) }, removes, op)
+    version
   }
 
   /** Create the table at version 0 (fails if a log already exists). */
@@ -332,23 +375,26 @@ object TxnLog {
     */
   def initKeyed(df: DataFrame, table: String, keyCol: String): Long = {
     require(latestVersion(table) < 0, s"TxnLog: $table already initialized")
-    commitWithStats(table, writeDataFilesKeyed(df, table, keyCol), Nil, "init")
+    commitKeyed(table, writeDataFilesKeyed(df, table, keyCol), Nil, "init")
   }
 
   /** [[append]] recording per-file key stats (keeps [[merge]] prunable). */
   def appendKeyed(df: DataFrame, table: String, keyCol: String): Long =
-    commitWithStats(table, writeDataFilesKeyed(df, table, keyCol), Nil, "append")
+    commitKeyed(table, writeDataFilesKeyed(df, table, keyCol), Nil, "append")
 
   /** MERGE (upsert) `updates` into the table by `keyCol`, Delta-style:
     * rows whose key matches an existing row replace it; new keys append.
-    * File-granular copy-on-write with data skipping: only live files
-    * whose [kmin, kmax] stat range CONTAINS an update key are read and
-    * rewritten — every other file is untouched (not read, not moved),
-    * which is what makes a small daily upsert into a 100 TB table cost
-    * O(touched files), not O(table). Files without stats (plain init/
-    * append) are conservatively rewritten.
+    * A NULL key matches no row (SQL equality), so its update row is
+    * appended and existing NULL-key rows stay. File-granular copy-on-write
+    * with data skipping: only live files whose [kmin, kmax] stat range
+    * CONTAINS an update key are read and rewritten — every other file is
+    * untouched (not read, not moved), which is what makes a small daily
+    * upsert into a 100 TB table cost O(touched files), not O(table).
+    * Files without stats (plain init/append, all-NULL keys) are
+    * conservatively rewritten. The rewritten files get footer key stats
+    * like [[appendKeyed]]'s.
     *
-    * The update key set is collected to the driver (sorted array +
+    * The distinct update keys are collected to the driver (sorted array +
     * binary search per file range) — batch-sized by contract, same bound
     * as a broadcast join's build side. A huge backfill batch should use
     * [[overwrite]] instead.
@@ -360,9 +406,10 @@ object TxnLog {
     // dv-deleted rows it copies — require materialization first
     require(liveDeleteVectors(table).isEmpty,
       s"TxnLog.merge: $table has live deletion vectors — compact first")
-    val upKeys = updates.select(col(keyCol).cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    require(upKeys.nonEmpty, "TxnLog.merge: empty update batch")
+    val distinctKeys = updates.select(col(keyCol).cast("long")).distinct().collect()
+    require(distinctKeys.nonEmpty, "TxnLog.merge: empty update batch")
+    // NULL keys match nothing, so they prune nothing
+    val upKeys = distinctKeys.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted
     def overlaps(lo: Long, hi: Long): Boolean = {
       // any update key in [lo, hi]? — binary search for the first >= lo
       val i = java.util.Arrays.binarySearch(upKeys, lo)
@@ -375,12 +422,11 @@ object TxnLog {
     }
     val survivors =
       if (touched.isEmpty) updates
-      else spark.read
-        .parquet(touched.map(f => Paths.get(table, f.file).toString): _*)
+      else scan(spark, table, touched.map(_.file))
         .join(broadcast(updates.select(col(keyCol))), Seq(keyCol), "left_anti")
         .unionByName(updates)
     val adds = writeDataFilesKeyed(survivors, table, keyCol)
-    val v = commitWithStats(table, adds, touched.map(_.file), "merge")
+    val v = commitKeyed(table, adds, touched.map(_.file), "merge")
     // merge cost transparency: callers/tests can assert the skip worked
     lastMergeSkipped.set(skipped.size)
     v
@@ -474,10 +520,8 @@ object TxnLog {
     val target = targetData.keySet ++ targetDvs.keySet
     val cur = curData.keySet ++ curDvs.keySet
     val addLines =
-      targetData.filterNot { case (f, _) => cur(f) }.map {
-        case (f, Some((lo, hi))) => statsActionLine(f, lo, hi)
-        case (f, None)           => actionLine("add", f)
-      }.toSeq ++
+      targetData.filterNot { case (f, _) => cur(f) }
+        .map { case (f, kr) => addLine(f, kr) }.toSeq ++
       targetDvs.filterNot { case (f, _) => cur(f) }.map {
         case (f, (key, scope)) => dvActionLine(f, key, scope.toSeq.sorted)
       }
@@ -563,15 +607,14 @@ object TxnLog {
       s"TxnLog.readRange: $table has live deletion vectors — compact first " +
         "(stats-pruned scans cannot apply merge-on-read deletes)")
     val all = liveFileStats(table, asOf)
-    val (scan, skip) = all.partition {
+    val (hit, skip) = all.partition {
       case FileStat(_, Some((fLo, fHi))) => fLo <= hi && lo <= fHi
       case FileStat(_, None)             => true
     }
-    require(scan.nonEmpty || all.isEmpty,
+    require(hit.nonEmpty || all.isEmpty,
       s"TxnLog.readRange: no file overlaps [$lo, $hi]; empty result has no schema " +
         s"— widen the range or use read()")
-    val df = spark.read
-      .parquet(scan.map(f => Paths.get(table, f.file).toString): _*)
+    val df = scan(spark, table, hit.map(_.file))
       .filter(col(keyCol).cast("long").between(lo, hi))
     (df, skip.size)
   }
@@ -631,11 +674,14 @@ object TxnLog {
   }
 
   /** Snapshot read at `asOf` (default: latest) — scans live files only.
+    * The default schema is the FIRST live file's (in log order), read
+    * from its parquet footer on the driver, so building the read runs no
+    * Spark job and the schema does not depend on file names.
     * `mergeSchema = true` is the schema-evolution read: the snapshot's
-    * schema is the UNION of every live file's footer schema, and files
-    * written before a column existed surface NULL for it — Delta's
-    * additive column evolution, paid for only when asked (the merged-
-    * footer pass reads every footer; the default read takes the first).
+    * schema is the UNION of every live file's footer schema (Spark's
+    * merged inference, one job), and files written before a column
+    * existed surface NULL for it — Delta's additive column evolution,
+    * paid for only when asked.
     */
   def read(spark: SparkSession, table: String, asOf: Option[Long] = None,
            mergeSchema: Boolean = false): DataFrame = {
@@ -643,9 +689,7 @@ object TxnLog {
     if (files.isEmpty)
       // empty snapshot: preserve "no rows" without a schema source
       sys.error(s"TxnLog: empty snapshot at $table (asOf=$asOf) has no schema")
-    def readFiles(fs: Seq[String]) =
-      spark.read.option("mergeSchema", mergeSchema.toString)
-        .parquet(fs.map(f => Paths.get(table, f).toString): _*)
+    def readFiles(fs: Seq[String]) = scan(spark, table, fs, mergeSchema)
     val dvs = liveDeleteVectors(table, asOf)
     if (dvs.isEmpty) readFiles(files)
     else {
@@ -663,8 +707,7 @@ object TxnLog {
       val free = files.filterNot(f => dvs.exists(_.scope(f)))
       val bySignature = inScope.groupBy(f => dvs.filter(_.scope(f)).map(_.file))
       val subtracted = bySignature.toSeq.map { case (dvFiles, dataFiles) =>
-        val dead = spark.read
-          .parquet(dvFiles.map(f => Paths.get(table, f).toString): _*)
+        val dead = scan(spark, table, dvFiles)
           .select(col(key).as("__graft_dv_key")).distinct()
         val base = readFiles(dataFiles)
         base.join(broadcast(dead), base(key) === col("__graft_dv_key"), "left_anti")
@@ -694,13 +737,8 @@ object TxnLog {
     Files.createDirectories(Paths.get(dst))
     stats.foreach(f =>
       Files.createLink(Paths.get(dst, f.file), Paths.get(src, f.file)))
-    val (withStats, bare) = stats.partition(_.keyRange.isDefined)
     // one commit carrying every link; stats ride along where the source had them
-    commitLines(dst, 0,
-      withStats.map { f =>
-        val (lo, hi) = f.keyRange.get; statsActionLine(f.file, lo, hi)
-      } ++ bare.map(f => actionLine("add", f.file)),
-      Nil, "clone")
+    commitLines(dst, 0, stats.map(f => addLine(f.file, f.keyRange)), Nil, "clone")
     0L
   }
 
@@ -720,10 +758,32 @@ object TxnLog {
   }
 
   /** Read a specific file subset of `table` (as produced by
-    * [[changedFiles]]).
+    * [[changedFiles]]), with the first listed file's footer schema.
     */
   def readFiles(spark: SparkSession, table: String, files: Seq[String]): DataFrame = {
     require(files.nonEmpty, "TxnLog.readFiles: empty file list has no schema")
-    spark.read.parquet(files.map(f => Paths.get(table, f).toString): _*)
+    scan(spark, table, files)
+  }
+
+  /** Spark's own schema string, stored in every parquet footer it writes. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Parquet scan of `files` under `table`. The schema is the first
+    * file's, taken from its footer on the driver and handed to the
+    * reader, so Spark skips its one-task schema-inference job.
+    * `mergeSchema = true` keeps Spark's merged inference over every
+    * footer; so does a first file written without Spark's schema metadata
+    * (possible only through [[commit]]).
+    */
+  private def scan(spark: SparkSession, table: String, files: Seq[String],
+                   mergeSchema: Boolean = false): DataFrame = {
+    val paths = files.map(f => Paths.get(table, f))
+    val reader = spark.read.option("mergeSchema", mergeSchema.toString)
+    val schema =
+      if (mergeSchema) None
+      else Option(footer(spark.sparkContext.hadoopConfiguration, paths.head)
+          .getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+    schema.fold(reader)(reader.schema).parquet(paths.map(_.toString): _*)
   }
 }

@@ -419,4 +419,115 @@ class DifferPropSpec extends SparkTestBase {
     val direct = rowsOf(Differ.diff(a, c, keys).filter(col("diff_status") =!= "N"))
     assert(composed == direct, s"composite/null keys: $composed vs $direct")
   }
+
+  test("property: inferDiffKey equals a brute-force election over the collected rows") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val rnd = new scala.util.Random(29L)
+    // (name, left type, right type, value pool). The pools hold values
+    // Spark's grouping equality merges (NaN twice, -0.0 and 0.0), so a
+    // draw of distinct pool slots can still be non-unique to Spark.
+    val kinds: Seq[(String, DataType, DataType, IndexedSeq[Any])] = Seq(
+      ("id", IntegerType, LongType, (0 until 12).toIndexedSeq), // int-vs-bigint drift
+      ("d", DoubleType, DoubleType,
+        IndexedSeq(Double.NaN, -0.0, 0.0, 1.0, 2.5, -3.0, 1e300, Double.NaN)),
+      ("b", BinaryType, BinaryType,
+        IndexedSeq("", "a", "b", "ab", "ba", "abc", "\u00e9", "zz").map(_.getBytes("UTF-8"))),
+      ("ts", TimestampType, TimestampType, (0 until 8).map(i => java.sql.Timestamp.from(
+        java.time.Instant.ofEpochSecond(1600000000L + i / 2, (i % 2) * 1000L)))),
+      ("s", StringType, StringType, IndexedSeq("x", "y", "z", "w", "xy", "yx", "", "Z")))
+    def typed(dt: DataType, v: Any): Any = (dt, v) match {
+      case (LongType, i: Int) => i.toLong
+      case _                  => v
+    }
+    /** n values of a pool: distinct slots, with replacement, or distinct with one NULL. */
+    def draw(pool: IndexedSeq[Any], n: Int, mode: Int): Seq[Any] = mode match {
+      case 0 => rnd.shuffle(pool.indices.toList).take(n).map(pool)
+      case 1 => Seq.fill(n)(pool(rnd.nextInt(pool.size)))
+      case _ => draw(pool, n, 0).zipWithIndex.map { case (v, i) => if (i == 0) null else v }
+    }
+    def side(cols: Seq[(String, DataType, Seq[Any])]): DataFrame = {
+      val n = cols.headOption.fold(0)(_._3.size)
+      spark.createDataFrame(
+        (0 until n).map(i => Row.fromSeq(cols.map(c => typed(c._2, c._3(i))))).asJava,
+        StructType(cols.map(c => StructField(c._1, c._2))))
+    }
+    def genPair(): (DataFrame, DataFrame) = {
+      val (nL, nR) = (rnd.nextInt(9), rnd.nextInt(9))
+      val composite = rnd.nextInt(10) < 3
+      // (name, left type, right type, left values, right values)
+      val cols = Seq.newBuilder[(String, DataType, DataType, Seq[Any], Seq[Any])]
+      for ((name, tl, tr, pool) <- kinds if rnd.nextInt(10) < 6) {
+        val mode = if (composite && rnd.nextInt(10) < 7) 1 else rnd.nextInt(3)
+        cols += ((name, tl, tr, draw(pool, nL, mode), draw(pool, nR, mode)))
+      }
+      if (composite) { // (a, c) unique together, rarely alone
+        val grid = for (a <- 0L until 3L; c <- 0L until 4L) yield (a, c)
+        val (gl, gr) = (rnd.shuffle(grid).take(nL), rnd.shuffle(grid).take(nR))
+        cols += (("a", LongType, LongType, gl.map(_._1), gr.map(_._1)))
+        cols += (("c", LongType, LongType, gl.map(_._2), gr.map(_._2)))
+      }
+      if (rnd.nextInt(10) < 2) cols += (("arr", ArrayType(IntegerType), ArrayType(IntegerType),
+        Seq.fill(nL)(Seq(1)), Seq.fill(nR)(Seq(1))))
+      val shuffled = rnd.shuffle(cols.result())
+      // a churned unique load surrogate ahead of every other column
+      val all = (if (rnd.nextInt(10) < 4)
+        Seq(("sid", LongType, LongType, (0L until nL).toSeq, (1000L until 1000L + nR).toSeq))
+      else Nil) ++ shuffled
+      val lonly = if (rnd.nextInt(10) < 3) Seq(("lonly", LongType, (0L until nL).toSeq)) else Nil
+      val ronly = if (rnd.nextInt(10) < 3) Seq(("ronly", LongType, (0L until nR).toSeq)) else Nil
+      (side(all.map(c => (c._1, c._2, c._4)) ++ lonly),
+        side(rnd.shuffle(all.map(c => (c._1, c._3, c._5))) ++ ronly))
+    }
+    // the reference: Spark's grouping equality over collected values
+    def norm(x: Any): Any = x match {
+      case d: Double if d.isNaN  => "NaN"
+      case d: Double if d == 0.0 => 0.0
+      case i: Int                => i.toLong
+      case b: Array[Byte]        => b.toSeq
+      case o                     => o
+    }
+    final case class Cand(name: String, pos: Int, vl: Seq[Any], vr: Seq[Any]) {
+      val nullFree: Boolean = !vl.contains(null) && !vr.contains(null)
+      val (dl, dr) = (vl.filter(_ != null).distinct.size, vr.filter(_ != null).distinct.size)
+      val unique: Boolean = nullFree && dl == vl.size && dr == vr.size
+      val ppm: Long = if (dl == 0) 0L else vl.distinct.count(vr.toSet).toLong * 1000000L / dl
+    }
+    def brute(l: DataFrame, r: DataFrame): (String, Option[Seq[String]]) = {
+      val atomic = (dt: DataType) => !dt.isInstanceOf[ArrayType]
+      val onR = r.schema.fields.filter(f => atomic(f.dataType)).map(_.name).toSet
+      val (lr, rr) = (l.collect().toSeq, r.collect().toSeq)
+      val cs = l.schema.fields.toSeq.zipWithIndex.collect {
+        case (f, i) if atomic(f.dataType) && onR(f.name) =>
+          Cand(f.name, i, lr.map(row => norm(row.getAs[Any](f.name))),
+            rr.map(row => norm(row.getAs[Any](f.name))))
+      }
+      cs.filter(_.unique) match {
+        case Seq(one) => ("single", Some(Seq(one.name)))
+        case Seq() =>
+          val pool = cs.filter(_.nullFree).sortBy(c => (-math.min(c.dl, c.dr), c.pos)).take(6)
+          val ok = for {
+            i <- pool.indices; j <- (i + 1) until pool.size
+            (a, b) = (pool(i), pool(j))
+            if a.vl.zip(b.vl).distinct.size == a.vl.size &&
+              a.vr.zip(b.vr).distinct.size == a.vr.size
+          } yield (a, b)
+          val best = ok.sortBy { case (a, b) => (a.pos + b.pos, a.pos) }.headOption
+          (if (best.isEmpty) "none" else "pair", best.map { case (a, b) => Seq(a.name, b.name) })
+        case many => ("tie", Some(Seq(many.minBy(c => (-c.ppm, c.pos)).name)))
+      }
+    }
+    val tiers = (1 to 40).map { i =>
+      val (l, r) = genPair()
+      val (tier, want) = brute(l, r)
+      assert(Differ.inferDiffKey(l, r) == want,
+        s"case $i ($tier): ${l.schema.simpleString} vs ${r.schema.simpleString}\n" +
+          s"${l.collect().mkString(" ")}\n${r.collect().mkString(" ")}")
+      tier
+    }
+    // every election branch was exercised
+    assert(Set("single", "tie", "pair", "none").subsetOf(tiers.toSet),
+      tiers.groupBy(identity).view.mapValues(_.size).toMap)
+  }
 }

@@ -1,7 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import graft.operators.Differ
 import graft.sources.TxnLog
 
 /** Transactional commit-log table format: snapshot isolation, time
@@ -13,6 +18,35 @@ class TxnLogSpec extends SparkTestBase {
 
   private def freshTable(): String =
     Files.createTempDirectory("graft-txnlog-spec-").resolve("t").toString
+
+  /** (Spark jobs, top-level SQL executions) that `body` starts. The
+    * listener bus is asynchronous, so a sentinel job drains it: once the
+    * sentinel's start event arrives, every earlier event has.
+    */
+  private def fired(body: => Any): (Int, Int) = {
+    val sc = spark.sparkContext
+    val sentinel = s"graft-spec-sentinel-${System.nanoTime}"
+    val (jobs, sqls, drained) = (new AtomicInteger, new AtomicInteger, new CountDownLatch(1))
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
+          drained.countDown()
+        else jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.rootExecutionId.forall(_ == s.executionId) => sqls.incrementAndGet()
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    (jobs.get, sqls.get)
+  }
 
   test("init/append/time-travel: each version is the exact row multiset") {
     val t = freshTable()
@@ -301,5 +335,80 @@ class TxnLogSpec extends SparkTestBase {
     TxnLog.commit(t, Nil, TxnLog.liveFiles(t))
     val e = intercept[RuntimeException](TxnLog.read(spark, t))
     assert(e.getMessage.contains("empty snapshot"), e.getMessage)
+  }
+
+  test("keyed writes of all-NULL key files commit a plain add and read back") {
+    val t = freshTable()
+    TxnLog.initKeyed(Seq[(Option[Long], String)]((None, "a"), (None, "b"))
+      .toDF("id", "v").coalesce(1), t, "id")
+    TxnLog.appendKeyed(Seq((Option(5L), "c")).toDF("id", "v"), t, "id")
+    TxnLog.appendKeyed(Seq[(Option[Long], String)]((None, "d")).toDF("id", "v"), t, "id")
+    assert(TxnLog.liveFileStats(t).map(_.keyRange) == Seq(None, Some((5L, 5L)), None))
+    assert(rowsOf(TxnLog.read(spark, t)) == Seq("5|c", "␀|a", "␀|b", "␀|d"))
+  }
+
+  test("merge with a NULL update key appends that row and upserts the rest") {
+    val t = freshTable()
+    TxnLog.initKeyed(Seq((Option(1L), "a"), (Option(2L), "b")).toDF("id", "v"), t, "id")
+    TxnLog.merge(spark, t,
+      Seq[(Option[Long], String)]((None, "n"), (Some(2L), "B")).toDF("id", "v"), "id")
+    assert(rowsOf(TxnLog.read(spark, t)) == Seq("1|a", "2|B", "␀|n"))
+    // an all-NULL batch is not empty: its rows append
+    TxnLog.merge(spark, t, Seq[(Option[Long], String)]((None, "m")).toDF("id", "v"), "id")
+    assert(rowsOf(TxnLog.read(spark, t)) == Seq("1|a", "2|B", "␀|m", "␀|n"))
+  }
+
+  test("default read schema is the first live file's; mergeSchema unions every footer") {
+    // part names carry random UUIDs, so a name-ordered pick would vary by table
+    (1 to 8).foreach { i =>
+      val t = freshTable()
+      TxnLog.init(Seq((1L, "a")).toDF("id", "v"), t)
+      TxnLog.append(Seq((2L, "b", 7)).toDF("id", "v", "extra"), t)
+      assert(TxnLog.read(spark, t).columns.toSeq == Seq("id", "v"), s"table $i")
+      assert(TxnLog.read(spark, t, mergeSchema = true).columns.toSeq ==
+        Seq("id", "v", "extra"), s"table $i")
+    }
+  }
+
+  test("snapshot metadata costs no job: reads build job-free, initKeyed pays no stats job") {
+    val df = spark.range(0, 40).toDF("id").withColumn("v", col("id") * 2).repartition(4)
+    val (initJobs, _) = fired(TxnLog.init(df, freshTable()))
+    val t = freshTable()
+    val (keyedJobs, _) = fired(TxnLog.initKeyed(df, t, "id"))
+    assert(keyedJobs <= initJobs, s"initKeyed $keyedJobs jobs vs init $initJobs")
+    val files = TxnLog.liveFiles(t)
+    val dv = freshTable()
+    TxnLog.init(df, dv)
+    TxnLog.deleteWhere(spark, dv, Seq(3L).toDF("id"), "id")
+    val (readJobs, _) = fired {
+      TxnLog.read(spark, t)
+      TxnLog.read(spark, t, Some(0L))
+      TxnLog.read(spark, dv)
+      TxnLog.readRange(spark, t, "id", 5L, 9L)
+      TxnLog.readFiles(spark, t, files.take(2))
+    }
+    assert(readJobs == 0, s"building reads ran $readJobs jobs")
+  }
+
+  test("building a 3-table TxnLog sweep with a multi-candidate table runs one SQL execution") {
+    val root = Files.createTempDirectory("graft-txnlog-sweep-")
+    def table(name: String) = root.resolve(name).toString
+    TxnLog.init(Seq((1L, "x")).toDF("id", "v"), table("a"))
+    TxnLog.append(Seq((2L, "y")).toDF("id", "v"), table("a"))
+    TxnLog.init(Seq((1L, 10L)).toDF("k", "w"), table("b"))
+    TxnLog.append(Seq((2L, 10L)).toDF("k", "w"), table("b"))
+    // a churned load surrogate `sid` ahead of the real key `id`
+    TxnLog.init(Seq((100L, 1L, "p"), (101L, 2L, "q")).toDF("sid", "id", "v"), table("c"))
+    TxnLog.overwrite(Seq((300L, 1L, "p"), (301L, 2L, "Q"), (302L, 3L, "r"))
+      .toDF("sid", "id", "v"), table("c"))
+    var report: org.apache.spark.sql.DataFrame = null
+    val (_, sqls) = fired { report = Differ.catalogDiffTxnLog(spark, root.toString) }
+    assert(sqls == 1, s"building the sweep ran $sqls SQL executions")
+    val census = report.filter(col("kind") === "census")
+      .select("table_name", "item", "n").collect()
+      .map(r => s"${r.getString(0)}.${r.getString(1)}=${r.getLong(2)}").sorted.toSeq
+    // `id` won the tie on overlap: `sid`'s churn reads as C, not as D+I
+    assert(census == Seq("a.C=0", "a.D=0", "a.I=1", "a.N=1", "b.C=0", "b.D=0", "b.I=1",
+      "b.N=1", "c.C=2", "c.D=0", "c.I=1", "c.N=0"), census)
   }
 }
