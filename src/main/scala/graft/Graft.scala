@@ -261,7 +261,7 @@ object Graft {
     graft.streaming.StreamOps.diffStreamStream(
       leftFeed, rightFeed, tsCol, keyCol, valCol, widthUs, delay).toDF()
 
-  /** Multi-column form of [[diffStreams]] (r14): the census max rides
+  /** Multi-column form of [[diffStreams]]: the census max rides
     * `valCols.head`; the order-independent content digest covers the FULL
     * payload, so drift in ANY value column reads C.
     */
@@ -281,8 +281,8 @@ object Graft {
     graft.streaming.StreamOps.diffStreamStreamLatest(
       leftFeed, rightFeed, tsCol, keyCol, valCol, widthUs, delay).toDF()
 
-  /** Multi-column form of [[diffStreamsLatest]] (r14): the latest
-    * observation carries the full numeric payload tuple; the verdict
+  /** Multi-column form of [[diffStreamsLatest]]: the latest
+    * observation carries the full numeric payload tuple; the status
     * compares per column null-safely.
     */
   def diffStreamsLatest(leftFeed: DataFrame, rightFeed: DataFrame,
@@ -291,7 +291,7 @@ object Graft {
     graft.streaming.StreamOps.diffStreamStreamLatest(
       leftFeed, rightFeed, tsCol, keyCol, valCols, widthUs, delay).toDF()
 
-  /** HISTORICAL stream-stream census diff (r14) — [[diffStreams]]' batch
+  /** HISTORICAL stream-stream census diff — [[diffStreams]]' batch
     * twin over two already-landed feeds keyed by an epoch-micros column:
     * per (window, key), count + max + the order-independent content
     * digest, one full-outer, I/C/N/D.
@@ -302,7 +302,7 @@ object Graft {
     graft.streaming.StreamOps.diffStreamStreamBatch(
       left, right, tsUsCol, keyCol, valCols, widthUs)
 
-  /** HISTORICAL last-write-wins diff (r14) — [[diffStreamsLatest]]'s
+  /** HISTORICAL last-write-wins diff — [[diffStreamsLatest]]'s
     * batch twin: per (window, key) each side's final payload tuple,
     * compared per column null-safely.
     */
@@ -312,7 +312,7 @@ object Graft {
     graft.streaming.StreamOps.diffStreamStreamLatestBatch(
       left, right, tsUsCol, keyCol, valCols, widthUs)
 
-  /** COMPOSITE/STRING-key form of [[diffStreams]] (r15): row identity =
+  /** COMPOSITE/STRING-key form of [[diffStreams]]: row identity =
     * the key TUPLE — the batch differ's `keys: Seq[String]` contract on
     * the live family, with string keys (UUID CDC identities) admitted
     * natively. Output restores the typed key columns by name.
@@ -323,7 +323,7 @@ object Graft {
     graft.streaming.StreamOps.diffStreamStreamKeyed(
       leftFeed, rightFeed, tsCol, keys, valCols, widthUs, delay)
 
-  /** Composite/string-key form of [[diffStreamsLatest]] (r15). */
+  /** Composite/string-key form of [[diffStreamsLatest]]. */
   def diffStreamsLatestKeyed(leftFeed: DataFrame, rightFeed: DataFrame,
                              tsCol: String, keys: Seq[String],
                              valCols: Seq[String],
@@ -331,7 +331,7 @@ object Graft {
     graft.streaming.StreamOps.diffStreamStreamLatestKeyed(
       leftFeed, rightFeed, tsCol, keys, valCols, widthUs, delay)
 
-  /** ANY-TYPE payload last-write-wins diff (r15): verdict on the
+  /** ANY-TYPE payload last-write-wins diff: status on the
     * canonical payload string (DECIMAL(18,6) grain for doubles), numeric
     * columns displayed as doubles — non-numeric CDC payloads reconcile
     * too. Live form; `Batch` sibling on [[graft.streaming.StreamOps]].
@@ -343,7 +343,7 @@ object Graft {
     graft.streaming.StreamOps.diffStreamStreamLatestAny(
       leftFeed, rightFeed, tsCol, keys, valCols, widthUs, delay)
 
-  /** Composite/string-key form of [[diffStreamsBatch]] (r15). */
+  /** Composite/string-key form of [[diffStreamsBatch]]. */
   def diffStreamsBatchKeyed(left: DataFrame, right: DataFrame,
                             tsUsCol: String, keys: Seq[String],
                             valCols: Seq[String], widthUs: Long): DataFrame =

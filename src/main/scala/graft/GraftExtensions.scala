@@ -529,14 +529,14 @@ object GraftExtensions {
       .queryExecution.analyzed
   }
 
-  /** Stream-stream reconciliation from SQL (r15): the keyed BATCH twins of
+  /** Stream-stream reconciliation from SQL: the keyed BATCH twins of
     * the live stream-stream diff family, spliced at analysis time like
     * every graft TVF — `graft_diff_streams('l', 'r', 'ts_us', 'k1,k2',
     * 'v1,v2', 86400000000)` runs the per-(window, key-tuple) CENSUS diff
     * (count / max / content digest, I/C/N/D), and
     * `graft_diff_streams_latest(...)` the last-write-wins form, with
     * `payload => 'any'` selecting the canonical-payload any-type variant
-    * (string/struct CDC rows; verdict on the canonical string). The
+    * (string/struct CDC rows; status on the canonical string). The
     * timestamp column is epoch micros (the batch feeds' native clock);
     * `width_us` must be an integral literal — it IS the window
     * assignment, so it cannot be data-dependent.

@@ -33,7 +33,7 @@ object StreamingQueries {
   private def sumValue = sum(col("value").cast(DecimalType(18, 6))).cast("double")
 
   /** Shared composite-key dual-feed fixture of the `*_multi` keys and
-    * their TVF twins (r15): event_type NULLed on user%17==3 on BOTH feeds
+    * their TVF twins: event_type NULLed on user%17==3 on BOTH feeds
     * (the null-key-part side-split class); the right feed drops user%11
     * (→D), drifts value on %5 (→C), and re-keys %13 by appending '_x' to
     * the string key part (→D+I pairs).
@@ -464,32 +464,22 @@ object StreamingQueries {
             col("left_n"), col("right_n"))
     },
 
-    // Stream-STREAM keyed diff (r13; digest-strengthened + multi-column
-    // payload r14 — the r13 verdict's #1+#2 asks): two LIVE keyed feeds
-    // reconciled continuously (primary vs replica CDC), not
-    // stream-vs-static. Per daily window per user, each feed folds to
-    // (count, max value, CONTENT DIGEST) — all order-independent,
-    // deterministic under any arrival order — and the closed window
-    // certifies I (right only), D (left only: the absence verdict plain
-    // append streams cannot assert), C (count, max, OR digest drifted),
-    // N. The digest is two exact BIGINT sums of per-event 32-bit sha-256
-    // slices over the canonicalized FULL payload (value at DECIMAL(18,6)
-    // + event_type, U+001F-joined, NULL=U+2400 — StreamOps.payloadCanon;
-    // DuckDB recomputes it verbatim), so compensating sub-max drift can
-    // no longer certify N (the r13 weak). Fixture: left = events; right =
-    // events minus user%11 (→D), value+1.0 on user%5 (→C by max+digest),
-    // event_type REVERSED on user%7==3 (→C by DIGEST ONLY: count and max
-    // untouched — the planted compensating-drift case, pinned non-vacuous
-    // in StreamBatchParitySpec), re-keyed +100000 copies of user%13 (→I).
-    // The true streaming twin is StreamOps.diffStreamStream (per-feed
-    // watermarks → tagged union under the engine's MIN policy → a single
-    // flatMapGroupsWithState keyed by (window, key), event-time timeout
-    // at window end, O(1) state per group distributed across tasks —
-    // never a per-window census task); StreamBatchParitySpec pins stream
-    // == batch row-for-row INCLUDING the watermark-flushed D rows. 100 TB
-    // shape: the batch form is two map-side-combinable (window, key) aggs
-    // meeting in one full-outer exchange on the same key; the streaming
-    // form's state is bounded by (open windows × active keys) × 8 longs.
+    // Stream-STREAM keyed census diff: per daily window per user, each
+    // feed folds to (count, max value, content digest), all
+    // order-independent, and the closed window certifies I (right only),
+    // D (left only), C (count, max or digest drifted) or N. The digest is
+    // two exact BIGINT sums of per-event 32-bit sha-256 slices over the
+    // canonical FULL payload (value at DECIMAL(18,6) + event_type,
+    // U+001F-joined, NULL=U+2400 — StreamOps.payloadCanon; DuckDB
+    // recomputes it verbatim), so compensating sub-max drift cannot
+    // certify N. Fixture: left = events; right = events minus user%11
+    // (→D), value+1.0 on user%5 (→C by max+digest), event_type REVERSED on
+    // user%7==3 (→C by DIGEST ONLY: count and max untouched — pinned
+    // non-vacuous in StreamBatchParitySpec), re-keyed +100000 copies of
+    // user%13 (→I). The live twin is StreamOps.diffStreamStream, pinned
+    // row for row against this key in StreamBatchParitySpec, watermark-
+    // flushed D rows included. Plan: two map-side-combinable
+    // (window, key) aggs meeting in one full-outer exchange.
     Q("stream_diff_stream",
       s"""WITH lc AS (SELECT (epoch_us(ts) // $DayUs) * $DayUs AS ws, user_id, value,
          |  concat_ws(chr(31),
@@ -540,8 +530,7 @@ object StreamingQueries {
       (s, d) =>
         // ONE body serves this oracle-checked key, the historical-
         // reconciliation API (StreamOps.diffStreamStreamBatch), and the
-        // property-model pin (StreamCensusPropSpec) — the surfaces
-        // cannot drift.
+        // property-model pin (StreamCensusPropSpec).
         val ev = Tables.events(s, d)
         val rsrc = ev.filter(col("user_id") % 11 =!= 0)
           .withColumn("value",
@@ -556,24 +545,20 @@ object StreamingQueries {
           ev, rsrc, "ts_us", "user_id", Seq("value", "event_type"), DayUs)
     },
 
-    // Latest-VALUE stream-stream diff (r13; multi-column payload r14 —
-    // stream_diff_stream's CDC last-write-wins sibling): per (window, key)
-    // each feed reduces to its LATEST observation — greatest
-    // (ts, value, event_id), the payload tie-break making equal-timestamp
-    // races deterministic in both engines — and the verdict compares the
-    // two FINAL payloads PER COLUMN null-safely ("did both sinks END the
-    // window agreeing?" where the census form asks "did they SEE the same
-    // traffic?"). Fixture as stream_diff_stream's value leg: %11 drop →
-    // D, %5 value drift → C (the +1.0 rides every event, so the latest
-    // drifts too), %13 re-keys → I; event_id rides as the second payload
-    // column (never perturbed — it widens the compare and the tie-break
-    // without adding statuses). Streaming twin:
-    // StreamOps.diffStreamStreamLatest (state = at most two (ts, payload)
-    // tuples per (window, key) group); parity-pinned including
-    // watermark-flushed D rows. 100 TB shape: greatest-(ts, v…) is a
-    // map-side-combinable MAX over one struct — NO row_number over raw
-    // traffic anywhere (PlanSpec pins a window-free plan) — meeting in
-    // one full-outer on the same (window, key).
+    // Latest-VALUE stream-stream diff, the CDC last-write-wins sibling of
+    // stream_diff_stream: per (window, key) each feed reduces to its
+    // LATEST observation — greatest (ts, value, event_id), the payload
+    // tie-break making equal-timestamp races deterministic in both
+    // engines — and the status compares the two final payloads per
+    // column null-safely ("did both sinks END the window agreeing?" where
+    // the census asks "did they SEE the same traffic?"). Fixture as
+    // stream_diff_stream's value leg: %11 drop → D, %5 value drift → C,
+    // %13 re-keys → I; event_id rides as the second payload column (never
+    // perturbed — it widens the compare and the tie-break). Live twin:
+    // StreamOps.diffStreamStreamLatest, parity-pinned incl. D rows. Plan:
+    // greatest-(ts, v…) is a map-side-combinable struct MAX — no
+    // row_number over raw traffic (PlanSpec pins a window-free plan) —
+    // meeting in one full-outer on the same (window, key).
     Q("stream_diff_values",
       s"""WITH le AS (SELECT (epoch_us(ts) // $DayUs) * $DayUs AS ws, user_id,
          |                   epoch_us(ts) AS t, value,
@@ -629,26 +614,16 @@ object StreamingQueries {
           ev, rsrc, "ts_us", "user_id", Seq("value", "event_id"), DayUs)
     },
 
-    // COMPOSITE + STRING keys for the stream-stream census (r15; the r14
-    // verdict's #1 ask — real CDC feeds key on tuples, and the second key
-    // column here is a STRING, the UUID-identity class the old
-    // integral-only guard refused): row identity = (user_id, event_type),
-    // the batch differ's diff_composite_key contract on the live family.
-    // Fixture: event_type NULLed on user%17==3 on BOTH feeds (a key tuple
-    // with a null part never pairs under `=` — each side's null-part
-    // census surfaces as its own D/I row, the side-split class); right
-    // feed then drops user%11 (→D), drifts value on %5 (→C), and RE-KEYS
-    // %13 by appending '_x' to the string key part (→D+I pairs: the
-    // re-key moves traffic between composite identities, something a
-    // pre-concatenated key would silently blur into a value change).
-    // Streaming twin: StreamOps.diffStreamStreamKeyed — the SAME fold
-    // body as the single-key oracle key (one core, parity-pinned in
-    // StreamBatchParitySpec incl. watermark-flushed D rows and the null
-    // key parts; model pin extended to tuple keys in
-    // StreamCensusPropSpec). 100 TB shape unchanged: the composite key
+    // COMPOSITE + STRING keys for the stream-stream census: row identity
+    // = (user_id, event_type), the batch differ's diff_composite_key
+    // contract, with a STRING key column. Fixture (ssMultiPair): a key
+    // tuple with a null part never pairs under `=`, so each side's
+    // null-part census is its own D/I row; the %13 '_x' re-key moves
+    // traffic between composite identities (D+I pairs). Live twin:
+    // StreamOps.diffStreamStreamKeyed (parity in StreamBatchParitySpec,
+    // tuple-key model in StreamCensusPropSpec). Plan: the composite key
     // hashes through ONE exchange as a tuple — two map-side-combinable
-    // (window, keys) aggs into one full-outer, no extra shuffle for the
-    // extra key column.
+    // (window, keys) aggs into one full-outer.
     Q("stream_diff_stream_multi", SsMultiCensusOracle) {
       (s, d) =>
         val (ev, rsrc) = ssMultiPair(s, d)
@@ -656,16 +631,13 @@ object StreamingQueries {
           ev, rsrc, "ts_us", Seq("user_id", "event_type"), Seq("value"), DayUs)
     },
 
-    // Composite-key LATEST-value diff (r15 — the values sibling of
-    // stream_diff_stream_multi, same (user_id, event_type) identity and
-    // the same fixture classes): per closed (window, user, type) each
-    // feed reduces to its latest (ts, value, event_id) observation and
-    // the verdict compares the final payloads per column null-safely.
-    // Streaming twin: StreamOps.diffStreamStreamLatestKeyed (one fold
-    // body with the single-key oracle key; parity + tuple-key model
-    // pins). Plan: one struct-MAX per side — map-side combinable, no
-    // row_number over raw traffic — into one full-outer on
-    // (window, user_id, event_type).
+    // Composite-key LATEST-value diff: stream_diff_values on the
+    // (user_id, event_type) tuple of stream_diff_stream_multi's fixture.
+    // Per closed (window, user, type) each feed reduces to its latest
+    // (ts, value, event_id) observation and the status compares the final
+    // payloads per column null-safely. Live twin:
+    // StreamOps.diffStreamStreamLatestKeyed. Plan: one struct-MAX per side
+    // into one full-outer on (window, user_id, event_type).
     Q("stream_diff_values_multi", SsMultiLatestOracle) {
       (s, d) =>
         val (ev, rsrc) = ssMultiPair(s, d)
@@ -674,22 +646,18 @@ object StreamingQueries {
           Seq("value", "event_id"), DayUs)
     },
 
-    // ANY-TYPE payload for the latest-value diff (r15; the r14 verdict's
-    // #3 ask — last-write-wins over string/struct CDC rows, which the
-    // numeric form refuses loudly): the payload here is (value,
-    // event_type) with a STRING column, the verdict compares each side's
-    // final CANONICAL PAYLOAD STRING (the census digest discipline:
-    // doubles at DECIMAL(18,6) grain — the documented verdict
-    // granularity — NULL=U+2400, fields on U+001F), and the numeric
-    // columns still display as doubles. Fixture: %11 drop → D, %5 value
-    // drift → C, %13 re-key → I, and the LOAD-BEARING class — event_type
-    // REVERSED on user%7==3 with the value untouched: a doubles-only
-    // verdict reads N there, the canonical payload reads C (pinned
-    // non-vacuous in StreamBatchParitySpec). Latest pick = greatest
-    // (ts, payload, display) with the payload compared in UTF-8 byte
-    // order — identical in the stream fold, the batch struct-max, and
-    // DuckDB's memcmp collation, so equal-timestamp races agree across
-    // all three. Streaming twin: StreamOps.diffStreamStreamLatestAny.
+    // ANY-TYPE payload for the latest-value diff: last-write-wins over
+    // string/struct CDC rows, which the numeric form refuses. The payload
+    // is (value, event_type); the status compares each side's final
+    // CANONICAL PAYLOAD STRING (doubles at DECIMAL(18,6) grain, NULL =
+    // U+2400, fields on U+001F), and the numeric columns still display as
+    // doubles. Fixture: %11 drop → D, %5 value drift → C, %13 re-key → I,
+    // and event_type REVERSED on user%7==3 with the value untouched: a
+    // doubles-only compare reads N there, the canonical payload reads C
+    // (pinned non-vacuous in StreamBatchParitySpec). Latest pick =
+    // greatest (ts, payload, display) with the payload in UTF-8 byte
+    // order, identical in the live fold, the batch struct-max and
+    // DuckDB's memcmp. Live twin: StreamOps.diffStreamStreamLatestAny.
     Q("stream_diff_values_any",
       s"""WITH le AS (SELECT (epoch_us(ts) // $DayUs) * $DayUs AS ws, user_id,
          |  epoch_us(ts) AS t, value, event_type,
@@ -757,7 +725,7 @@ object StreamingQueries {
           ev, rsrc, "ts_us", Seq("user_id"), Seq("value", "event_type"), DayUs)
     },
 
-    // Stream-stream census from SQL (r15): `SELECT * FROM
+    // Stream-stream census from SQL: `SELECT * FROM
     // graft_diff_streams('l', 'r', 'ts_us', 'user_id,event_type',
     // 'value', <width>)` — the keyed batch twin reachable with zero
     // Scala, for the backfill-reconciliation question ("re-run last
@@ -776,7 +744,7 @@ object StreamingQueries {
           s"'gss_multi_r', 'ts_us', 'user_id,event_type', 'value', $DayUs)")
     },
 
-    // Last-write-wins stream-stream diff from SQL (r15):
+    // Last-write-wins stream-stream diff from SQL:
     // `graft_diff_streams_latest(...)`; `payload => 'any'` selects the
     // canonical-payload any-type form (pinned in ExtensionsSpec). Same
     // fixture views and oracle as stream_diff_values_multi.

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.reflect.runtime.universe.TypeTag
 
 /** Open-session accumulator for [[StreamOps.sessionizeWithState]]. */
 final case class OpenSession(startUs: Long, endUs: Long, n: Long)
@@ -77,112 +79,58 @@ final case class WinDiffState(counts: Map[Long, Long])
 final case class WinDiffOut(window_start_us: Long, key: Long,
     diff_status: String, left_n: Option[Long], right_n: Option[Long])
 
-/** Per-(window, key) dual-feed state: per side, the arrival count, the
-  * running max (None while every arrival's value was NULL — the batch
-  * `max()` NULL), and the two order-independent content-digest sums
-  * (r14: exact BIGINT sums of the per-event 32-bit sha-slices, so
-  * compensating sub-max value drift can no longer certify N) — O(1) PER
-  * GROUP with no per-key map, so unlike the window-keyed census
-  * ([[WinDiffState]]) this state distributes across tasks by
-  * (window, key).
-  */
-final case class SsDiffState(ln: Long, lmax: Option[Double], ld1: Long, ld2: Long,
-    rn: Long, rmax: Option[Double], rd1: Long, rd2: Long)
-
-/** One row of the stream-STREAM keyed diff: per closed (window, key), both
-  * feeds' per-window aggregates (count, max, content digest) and the full
-  * I/C/N/D verdict — D here is a key the LEFT feed carried in the window
-  * while the right feed stayed silent, certified by the watermark passing
-  * the window's end on BOTH feeds (per-feed watermarks under the engine's
-  * MIN policy). The digest renders as `"<sum1>:<sum2>"` — two exact BIGINT
-  * sums of per-event 32-bit sha-256 slices over the canonicalized payload.
+/** One row of the stream-STREAM keyed census diff: per closed (window, key),
+  * both feeds' per-window aggregates (count, max, content digest) and the
+  * I/C/N/D status. The digest renders as `"<sum1>:<sum2>"`: two exact
+  * BIGINT sums of per-event 32-bit sha-256 slices over the canonical
+  * payload.
   */
 final case class SsDiffOut(window_start_us: Long, key: Option[Long],
     diff_status: String, left_n: Option[Long], right_n: Option[Long],
     left_max: Option[Double], right_max: Option[Double],
     left_digest: Option[String], right_digest: Option[String])
 
-/** One side's latest observation inside the open (window, key) group. */
-final case class SsvSide(ts_us: Long, values: Seq[Option[Double]])
+/** One side's census inside an open (window, key) group: arrival count,
+  * running max of the headline column (None while every value was NULL,
+  * like the batch `max()`), and the two content-digest sums.
+  */
+private[streaming] final case class CensusSide(n: Long, max: Option[Double],
+    d1: Long, d2: Long)
 
-/** Per-(window, key) dual-feed LATEST state — one (ts, payload) per side. */
-final case class SsvState(l: Option[SsvSide], r: Option[SsvSide])
+/** One side's latest observation in the numeric last-write-wins form. */
+final case class SsvSide(ts_us: Long, values: Seq[Option[Double]])
 
 /** One row of the latest-VALUE stream-stream diff: per closed
   * (window, key), each feed's last-write-wins payload tuple (one entry per
-  * requested value column, in call order) and the I/C/N/D verdict on the
-  * VALUES (the CDC replica-reconciliation semantic — the aggregate-census
-  * sibling is [[SsDiffOut]]).
+  * requested value column, in call order) and the I/C/N/D status on the
+  * values.
   */
 final case class SsvOut(window_start_us: Long, key: Option[Long],
     diff_status: String, left_values: Option[Seq[Option[Double]]],
     right_values: Option[Seq[Option[Double]]])
 
-/** One side-tagged arrival for the KEYED (composite/string-key, r15)
-  * stream-stream census core: `kp` carries the key TUPLE as canonical
-  * strings, one entry per key column in call order (None = that part is
-  * NULL). The canonical form is a plain string cast, admitted only for
-  * types where string equality coincides with SQL `=`
-  * ([[StreamOps.requireKeyedKeys]]), so grouping on `kp` partitions rows
-  * exactly like the batch twin's multi-column equi-join — and the typed
-  * key columns are restored losslessly on output by casting back.
-  */
-final case class SsDiffKEvent(window_start_us: Long, kp: Seq[Option[String]],
-    left_side: Boolean, value: Option[Double], d1: Long, d2: Long,
-    tsm: java.sql.Timestamp)
-
-/** Keyed-census output row before the typed key columns are restored. */
-final case class SsDiffKOut(window_start_us: Long, kp: Seq[Option[String]],
-    diff_status: String, left_n: Option[Long], right_n: Option[Long],
-    left_max: Option[Double], right_max: Option[Double],
-    left_digest: Option[String], right_digest: Option[String])
-
-/** Keyed arrival for the latest-value core — carries the raw event time
-  * (fold picks the LATEST observation), the full numeric payload tuple,
-  * and the key tuple in canonical-string form.
-  */
-final case class SsvKEvent(window_start_us: Long, kp: Seq[Option[String]],
-    left_side: Boolean, ts_us: Long, values: Seq[Option[Double]],
-    tsm: java.sql.Timestamp)
-
-/** Keyed latest-value output row before key restoration. */
-final case class SsvKOut(window_start_us: Long, kp: Seq[Option[String]],
-    diff_status: String, left_values: Option[Seq[Option[Double]]],
-    right_values: Option[Seq[Option[Double]]])
-
-/** One side-tagged arrival for the ANY-TYPE latest-value form (r15):
-  * `pay` is the canonical payload string over ALL value columns (the
-  * census discipline — [[StreamOps.payloadCanon]]); `disp` carries the
-  * NUMERIC value columns as display doubles (non-numeric columns live in
-  * the payload string only). `ts_us` is optional: a NULL event time sorts
-  * smallest, exactly like the batch twin's struct-max.
-  */
-final case class SsvAEvent(window_start_us: Long, kp: Seq[Option[String]],
-    left_side: Boolean, ts_us: Option[Long], pay: String,
-    disp: Seq[Option[Double]], cvals: Seq[Option[String]],
-    tsm: java.sql.Timestamp)
-
 /** One side's latest observation in the any-type form: the pick-order
-  * fields (ts, pay, disp) plus the per-NON-NUMERIC-column canonicals
-  * (`cvals`, functionally determined by pay) that restore the typed
-  * display columns on output.
+  * fields (ts, canonical payload, numeric display doubles) plus the
+  * per-non-numeric-column canonicals (`cvals`, functionally determined by
+  * `pay`) that restore the typed display columns on output. A NULL event
+  * time sorts smallest, like the batch struct max.
   */
 final case class SsvASide(ts_us: Option[Long], pay: String,
     disp: Seq[Option[Double]], cvals: Seq[Option[String]])
 
-/** Per-(window, key-tuple) dual-feed latest state, any-type form. */
-final case class SsvAState(l: Option[SsvASide], r: Option[SsvASide])
-
-/** Any-type latest-value output row before key restoration: the verdict
-  * compares the two canonical payload strings; the display doubles render
-  * the numeric columns and the canonical slots the non-numeric ones.
+/** One side-tagged arrival of the stream-stream family: the window, the key
+  * tuple as canonical strings (None = that part is NULL), the side and the
+  * variant's observation, plus the watermark-tagged event time.
   */
-final case class SsvAOut(window_start_us: Long, kp: Seq[Option[String]],
-    diff_status: String, left_payload: Option[String],
-    right_payload: Option[String], left_disp: Option[Seq[Option[Double]]],
-    right_disp: Option[Seq[Option[Double]]],
-    left_cvals: Option[Seq[Option[String]]],
-    right_cvals: Option[Seq[Option[String]]])
+private[streaming] final case class PairEvent[X](window_start_us: Long,
+    kp: Seq[Option[String]], left_side: Boolean, obs: X,
+    tsm: java.sql.Timestamp)
+
+/** One closed (window, key) group of the stream-stream family: the status
+  * and each side's folded observation (None = the side stayed silent).
+  */
+private[streaming] final case class PairOut[X](window_start_us: Long,
+    kp: Seq[Option[String]], diff_status: String, l: Option[X], r: Option[X])
 
 /** True Structured Streaming operators over an event stream with an
   * event-time column. These are the incremental-execution twins of the
@@ -421,15 +369,14 @@ object StreamOps {
         .otherwise(c.cast(DecimalType(18, 6)).cast(StringType))
     // NTZ must cast to TimestampType BEFORE unix_micros (unix_micros
     // rejects NTZ at analysis) — deterministic under the house UTC
-    // session timezone, exactly rowHashCol's NTZ branch (r14 review fix).
+    // session timezone, exactly rowHashCol's NTZ branch.
     case TimestampNTZType => unix_micros(c.cast(TimestampType)).cast(StringType)
     case _: TimestampType => unix_micros(c).cast(StringType)
     // A map's stored entry order is a construction accident: plain string
     // cast would digest equal maps differently. Key-sorted JSON rendering
     // (Differ.mapCanon — the diff-output discipline) keeps the digest
     // order-insensitive; maps nested deeper inside arrays/structs stay
-    // stored-order in the rendering, same documented bound as rowHashCol
-    // (r14 review fix).
+    // stored-order in the rendering, same documented bound as rowHashCol.
     case _: MapType => graft.operators.Differ.mapCanon(c)
     case _ => c.cast(StringType)
   }
@@ -459,10 +406,10 @@ object StreamOps {
       conv(substring(sha, 9, 8), 16, 10).cast("long"))
   }
 
-  /** The stream-stream state encodes keys as LONG; a silent cast of a
-    * string key would NULL every key and collapse all traffic into the
-    * two unpairable null-key groups (r13 ADVICE) — refuse non-integral
-    * key columns at construction instead.
+  /** The single-key stream-stream surfaces emit a LONG `key`; a silent
+    * cast of a string key would NULL every key and collapse all traffic
+    * into the two unpairable null-key groups, so non-integral key columns
+    * are refused at construction (the keyed forms take any admitted type).
     */
   private def requireIntegralKey(df: DataFrame, keyCol: String, fn: String): Unit =
     df.schema(keyCol).dataType match {
@@ -476,7 +423,7 @@ object StreamOps {
   /** The content digest canonicalizes BY TYPE ([[canonCol]]), so the two
     * feeds must agree on every payload column's dtype — a DOUBLE-vs-
     * DECIMAL skew would canonicalize "1.500000" vs "1.50" and read every
-    * paired group C (r14 review #3) — refuse loudly at construction.
+    * paired group C — refuse loudly at construction.
     */
   private def requireMatchedPayload(left: DataFrame, right: DataFrame,
                                     valCols: Seq[String], fn: String): Unit = {
@@ -491,9 +438,7 @@ object StreamOps {
 
   /** Headline metric for the census forms: `valCols.head` as double when
     * numeric, NULL otherwise (the digest carries the compare for
-    * non-numeric payloads). One definition for batch + stream (r14
-    * review #3 — duplicated logic invites exactly the drift the shared
-    * bodies exist to prevent).
+    * non-numeric payloads).
     */
   private def headlineCol(df: DataFrame, valCols: Seq[String]): Column =
     df.schema(valCols.head).dataType match {
@@ -501,9 +446,7 @@ object StreamOps {
       case _ => lit(null).cast("double")
     }
 
-  /** Numeric-only payload contract of the latest-value forms — shared by
-    * batch + stream.
-    */
+  /** Numeric-only payload contract of the numeric latest-value forms. */
   private def requireNumericPayload(df: DataFrame, valCols: Seq[String],
                                     fn: String): Unit = {
     val bad = valCols.filterNot(c => df.schema(c).dataType.isInstanceOf[NumericType])
@@ -513,8 +456,7 @@ object StreamOps {
         "content-digest form for arbitrary types")
   }
 
-  /** Key contract of the keyed (composite/string-key) stream-stream family
-    * (r15). The state carries the key tuple as canonical STRINGS (one per
+  /** Key contract of the stream-stream family. The state carries the key tuple as canonical STRINGS (one per
     * key column), so grouping on the tuple must partition rows exactly
     * like the batch twin's multi-column `=` join, and the canonical form
     * must restore to the declared type losslessly. Both hold for
@@ -527,21 +469,14 @@ object StreamOps {
     * keys break `=` itself (NaN never pairs, -0.0 = 0.0 but renders
     * differently). Both feeds must declare the SAME dtype per key column
     * (a BIGINT vs STRING skew would canonicalize '42' on both sides and
-    * silently pair rows the batch `=` join refuses at analysis). Key
-    * names may not collide with the fixed output columns. The batch
-    * twins enforce the identical contract so the stream/batch pair stays
-    * interchangeable.
+    * silently pair rows the batch `=` join refuses at analysis). The
+    * batch twins enforce the identical contract so the stream/batch pair
+    * stays interchangeable; key names are checked by
+    * [[requireOutputNames]].
     */
   private def requireKeyedKeys(left: DataFrame, right: DataFrame,
                                keys: Seq[String], fn: String): Unit = {
     require(keys.nonEmpty, s"$fn: need at least one key column")
-    val reserved = Set("window_start_us", "diff_status", "left_n", "right_n",
-      "left_max", "right_max", "left_digest", "right_digest",
-      "left_payload", "right_payload")
-    val clash = keys.filter(reserved)
-    require(clash.isEmpty,
-      s"$fn: key column(s) ${clash.mkString(", ")} collide with the " +
-        "operator's fixed output columns — rename them upstream")
     def ok(dt: DataType): Boolean = dt match {
       case ByteType | ShortType | IntegerType | LongType | BooleanType |
            DateType | StringType | TimestampNTZType => true
@@ -563,22 +498,9 @@ object StreamOps {
     }
   }
 
-  /** The latest forms emit `left_<col>`/`right_<col>` display pairs, so a
-    * KEY named like one of them would silently duplicate an output column
-    * (r15 review) — refuse loudly like every other name collision.
-    */
-  private def requireNoDisplayClash(keys: Seq[String], valCols: Seq[String],
-                                    fn: String): Unit = {
-    val display = valCols.flatMap(c => Seq(s"left_$c", s"right_$c")).toSet
-    val clash = keys.filter(display)
-    require(clash.isEmpty,
-      s"$fn: key column(s) ${clash.mkString(", ")} collide with the " +
-        "left_<col>/right_<col> display columns — rename them upstream")
-  }
-
-  /** Loud NULL-event-time guard for the streaming preps (r15 review): a
-    * NULL timestamp makes the window assignment NULL, which previously
-    * died as an opaque encoder NPE mid-stream. The batch twins CLASSIFY
+  /** Loud NULL-event-time guard for the live preps: a NULL timestamp
+    * makes the window assignment NULL, which would otherwise die as an
+    * opaque encoder NPE mid-stream. The batch twins CLASSIFY
     * null-ts rows (a null window group in the full-outer); a stream can
     * never close a null window, so the honest behavior is a named
     * construction-visible failure on the first such row. `assert_true`
@@ -593,7 +515,7 @@ object StreamOps {
         "window group); filter or repair event times upstream")).isNull)
 
   /** Typed display restore for a NON-NUMERIC value column's canonical
-    * string (the any-payload latest form, r15): lossless for the atomic
+    * string (the any-type latest form): lossless for the atomic
     * types whose [[canonCol]] rendering is invertible — strings
     * (identity), boolean/date/decimal (plain cast), timestamps (epoch
     * micros back through timestamp_micros). Nested/binary canonicals are
@@ -641,24 +563,336 @@ object StreamOps {
       }).as(k)
     }
 
-  /** BATCH twin of [[diffStreamStream]] as a first-class operator (r14) —
-    * the same per-(window, key) census diff over two HISTORICAL feeds
-    * (backfill reconciliation, re-running yesterday's stream check over a
-    * month of data): per event-time window of `widthUs` per key, each
-    * side folds to (count, max of `valCols.head` when numeric, the
-    * two exact sha-slice digest sums over the full canonical payload),
-    * and the two censuses meet in ONE full-outer with the I/C/N/D
-    * verdict — C on count, max, OR digest drift. `tsUsCol` is an epoch-
-    * micros BIGINT column (the batch feeds' native clock; the streaming
-    * twin takes a timestamp because the watermark needs one).
+  // ---- the stream-stream diff family ---------------------------------------
+
+  /** One member of the stream-stream diff family: the parts the two
+    * skeletons ([[liveWindowDiff]], [[batchWindowDiff]]) take from it.
+    * `obs` builds one observation struct per event with `X`'s fields,
+    * given the event time in epoch micros. The live fold combines
+    * observations with `merge`, which is associative and commutative, so
+    * shuffle arrival order never changes a result, and reads N when `same`.
+    * The batch twin aggregates the observations per side with `agg` and
+    * reads C when `changed`. `fixed` names the variant's fixed value
+    * outputs; `displays` says whether it also emits a `left_<c>`/`right_<c>`
+    * pair per value column.
+    */
+  private final case class Variant[X](
+      requirePayload: (DataFrame, DataFrame, String) => Unit,
+      fixed: Seq[String], displays: Boolean,
+      obs: (DataFrame, Column) => Column,
+      merge: (X, X) => X, same: (X, X) => Boolean,
+      agg: Column => Column, changed: (Column, Column) => Column)
+
+  private val censusOut = Seq("left_n", "right_n", "left_max", "right_max",
+    "left_digest", "right_digest")
+  private val payloadOut = Seq("left_payload", "right_payload")
+
+  /** Spark's struct-field order on a nullable double: NULL smallest, NaN
+    * greatest and equal to itself, -0.0 equal to 0.0 (what `max()`, `<=>`
+    * and struct comparison apply).
+    */
+  private def cmpD(a: Option[Double], b: Option[Double]): Int = (a, b) match {
+    case (None, None)       => 0
+    case (None, Some(_))    => -1
+    case (Some(_), None)    => 1
+    case (Some(x), Some(y)) =>
+      if (x == y || (x.isNaN && y.isNaN)) 0
+      else if (y.isNaN || (!x.isNaN && x < y)) -1
+      else 1
+  }
+
+  /** [[cmpD]] extended lexicographically to equal-length tuples. */
+  private def cmpDs(a: Seq[Option[Double]], b: Seq[Option[Double]]): Int =
+    a.iterator.zip(b).map { case (x, y) => cmpD(x, y) }.find(_ != 0).getOrElse(0)
+
+  /** The batch `max()` on nullable doubles: NULLs skipped, NaN greatest. */
+  private def foldMax(a: Option[Double], b: Option[Double]): Option[Double] =
+    if (cmpD(b, a) > 0) b else a
+
+  /** Traffic census: per side the count, the max of `valCols.head` (NULL
+    * while that column is non-numeric) and the two digest sums over the
+    * full canonical payload; C when any of them drifts. The digest makes N
+    * a real certificate: {1, 5} vs {2, 5} share count and max. The live
+    * fold adds with `Math.addExact` because the batch `sum()` fails under
+    * ANSI, so both halves overflow loudly past 2^31 events per group.
+    */
+  private def census(valCols: Seq[String]): Variant[CensusSide] = Variant(
+    (l, r, fn) => requireMatchedPayload(l, r, valCols, fn),
+    censusOut, displays = false,
+    obs = (df, _) => {
+      val (d1, d2) = digestSlices(payloadCanon(df, valCols))
+      struct(lit(1L).as("n"), headlineCol(df, valCols).as("max"),
+        d1.as("d1"), d2.as("d2"))
+    },
+    merge = (a, b) => CensusSide(Math.addExact(a.n, b.n), foldMax(a.max, b.max),
+      Math.addExact(a.d1, b.d1), Math.addExact(a.d2, b.d2)),
+    same = (a, b) => a.n == b.n && cmpD(a.max, b.max) == 0 &&
+      a.d1 == b.d1 && a.d2 == b.d2,
+    agg = o => struct(count(lit(1)).as("n"), max(o("max")).as("max"),
+      sum(o("d1")).as("d1"), sum(o("d2")).as("d2")),
+    changed = (l, r) => !(l <=> r))
+
+  private def censusCols(l: Column, r: Column): Seq[Column] = {
+    def digest(s: Column) = concat(s("d1").cast("string"), lit(":"), s("d2").cast("string"))
+    Seq(l("n").as("left_n"), r("n").as("right_n"),
+      l("max").as("left_max"), r("max").as("right_max"),
+      digest(l).as("left_digest"), digest(r).as("right_digest"))
+  }
+
+  /** Numeric last-write-wins: per side the greatest (ts, v1, v2, …) in
+    * struct order, so the payload breaks equal-timestamp races the same
+    * way in both engines; C when any value column of the two picks differs
+    * under `<=>`.
+    */
+  private def latest(valCols: Seq[String]): Variant[SsvSide] = Variant(
+    (l, r, fn) => Seq(l, r).foreach(requireNumericPayload(_, valCols, fn)),
+    Nil, displays = true,
+    obs = (_, tsUs) => struct(tsUs.as("ts_us"),
+      array(valCols.map(c => col(c).cast("double")): _*).as("values")),
+    merge = (a, b) => {
+      val c = java.lang.Long.compare(b.ts_us, a.ts_us)
+      if (c > 0 || (c == 0 && cmpDs(b.values, a.values) > 0)) b else a
+    },
+    same = (a, b) => cmpDs(a.values, b.values) == 0,
+    agg = max(_),
+    changed = (l, r) => !(l("values") <=> r("values")))
+
+  private def latestCols(valCols: Seq[String])(l: Column, r: Column): Seq[Column] =
+    valCols.zipWithIndex.flatMap { case (c, i) => Seq(
+      element_at(l("values"), i + 1).as(s"left_$c"),
+      element_at(r("values"), i + 1).as(s"right_$c")) }
+
+  private def splitNumeric(schema: StructType, valCols: Seq[String]) =
+    valCols.partition(c => schema(c).dataType.isInstanceOf[NumericType])
+
+  /** Any-type last-write-wins: the status compares the two picks'
+    * canonical payload strings ([[payloadCanon]] over every value column).
+    * The pick is the greatest (ts, payload, numeric display doubles), with
+    * a NULL ts smallest and the payload in UTF-8 byte order; the per-column
+    * canonicals of the non-numeric columns ride along to restore their
+    * typed displays.
+    */
+  private def latestAny(valCols: Seq[String]): Variant[SsvASide] = {
+    def arr(cs: Seq[Column], dt: DataType) =
+      if (cs.isEmpty) array().cast(ArrayType(dt)) else array(cs: _*)
+    Variant(
+      (l, r, fn) => requireMatchedPayload(l, r, valCols, fn),
+      payloadOut, displays = true,
+      obs = (df, tsUs) => {
+        val (num, other) = splitNumeric(df.schema, valCols)
+        struct(tsUs.as("ts_us"), payloadCanon(df, valCols).as("pay"),
+          arr(num.map(c => col(c).cast("double")), DoubleType).as("disp"),
+          // NULL stays NULL here (not U+2400): the display restores it
+          arr(other.map(c => canonCol(df.schema(c).dataType, col(c))), StringType)
+            .as("cvals"))
+      },
+      merge = (a, b) => if (cmpAny(b, a) > 0) b else a,
+      same = (a, b) => a.pay == b.pay,
+      agg = max(_),
+      // payload strings are never NULL (each field coalesces to U+2400)
+      changed = (l, r) => l("pay") =!= r("pay"))
+  }
+
+  /** The any-type pick order: ts (NULL smallest), then the payload in
+    * Spark's UTF-8 byte order, then the display doubles.
+    */
+  private def cmpAny(a: SsvASide, b: SsvASide): Int = {
+    val t = (a.ts_us, b.ts_us) match {
+      case (Some(x), Some(y)) => java.lang.Long.compare(x, y)
+      case (x, y)             => java.lang.Boolean.compare(x.isDefined, y.isDefined)
+    }
+    lazy val p = UTF8String.fromString(a.pay).binaryCompare(UTF8String.fromString(b.pay))
+    if (t != 0) t else if (p != 0) p else cmpDs(a.disp, b.disp)
+  }
+
+  private def anyCols(template: StructType, valCols: Seq[String])(
+      l: Column, r: Column): Seq[Column] = {
+    val (num, other) = splitNumeric(template, valCols)
+    def show(s: Column, c: String): Column = num.indexOf(c) match {
+      case -1 => displayRestore(template(c).dataType,
+        element_at(s("cvals"), other.indexOf(c) + 1))
+      case i => element_at(s("disp"), i + 1)
+    }
+    l("pay").as("left_payload") +: r("pay").as("right_payload") +:
+      valCols.flatMap(c => Seq(show(l, c).as(s"left_$c"), show(r, c).as(s"right_$c")))
+  }
+
+  /** The one output-name check of the family. A key may not take a fixed
+    * output name of any family member (so the variants stay
+    * interchangeable), nor one of this call's display names; a value
+    * column's display pair may not take one of the variant's fixed names.
+    */
+  private def requireOutputNames(keys: Seq[String], valCols: Seq[String],
+                                 v: Variant[_], fn: String): Unit = {
+    val reserved = Set("window_start_us", "diff_status") ++ censusOut ++ payloadOut
+    val clash = keys.filter(reserved)
+    require(clash.isEmpty,
+      s"$fn: key column(s) ${clash.mkString(", ")} collide with the " +
+        "operator's fixed output columns — rename them upstream")
+    val shown = if (v.displays) valCols else Nil
+    val display = shown.flatMap(c => Seq(s"left_$c", s"right_$c")).toSet
+    val shadow = keys.filter(display)
+    require(shadow.isEmpty,
+      s"$fn: key column(s) ${shadow.mkString(", ")} collide with the " +
+        "left_<col>/right_<col> display columns — rename them upstream")
+    val hidden = shown.filter(c =>
+      v.fixed.contains(s"left_$c") || v.fixed.contains(s"right_$c"))
+    require(hidden.isEmpty,
+      s"$fn: value column(s) ${hidden.mkString(", ")} display as " +
+        "left_<col>/right_<col> columns that collide with the operator's " +
+        "fixed output columns — rename them upstream")
+  }
+
+  private def requireFamily(left: DataFrame, right: DataFrame, keys: Seq[String],
+                            valCols: Seq[String], widthUs: Long, fn: String,
+                            v: Variant[_]): Unit = {
+    require(widthUs > 0, s"$fn: width must be positive, got $widthUs")
+    require(valCols.nonEmpty, s"$fn: need at least one value column")
+    requireOutputNames(keys, valCols, v, fn)
+    requireKeyedKeys(left, right, keys, fn)
+    v.requirePayload(left, right, fn)
+  }
+
+  /** Epoch-aligned tumbling window start of an epoch-micros column: an
+    * exact integer floor, the assignment Spark's `window()` uses.
+    */
+  private def windowStart(tsUs: Column, widthUs: Long): Column =
+    tsUs - pmod(tsUs, lit(widthUs))
+
+  /** The live skeleton of the stream-stream family: two LIVE feeds
+    * (primary vs replica, dual CDC) reconciled per event-time window of
+    * `widthUs` and per key tuple. When the watermark passes a window's end,
+    * each (window, key) group emits exactly once:
+    *   I (right feed only), D (left feed only: the absence status only a
+    *   closed window can certify), N (the variant's `same`), C otherwise.
+    * Keys silent on both feeds emit nothing, like the batch full-outer.
     *
-    * This is the SAME body the oracle-checked `stream_diff_stream` key
-    * runs (one definition, two surfaces), and StreamCensusPropSpec pins
-    * it against an independent JVM model on randomized feeds (NaN/null/
-    * ±Inf values, null keys and payload strings, multi-window traffic).
-    * 100 TB shape: two map-side-combinable (window, key) aggs into one
-    * full-outer exchange on the same key — PlanSpec pins exactly 2
-    * exchanges.
+    * Contract of every member:
+    *  - MIN policy. Each feed is watermarked BEFORE the side-tagged union,
+    *    so the engine's default `multipleWatermarkPolicy = min` holds the
+    *    horizon at the lagging feed: a feed lagging more than `delay` keeps
+    *    the window open instead of having its rows dropped as late and its
+    *    keys certified D.
+    *  - O(1) state. One `flatMapGroupsWithState` keyed by (window, key
+    *    tuple) with the event-time timeout at window end; the state is at
+    *    most one folded observation per side, evicted at emission. It is
+    *    bounded by (open windows × keys active in them), and the groups
+    *    hash across tasks, so no task holds a whole window. Parity is also
+    *    pinned under `RocksDBStateStoreProvider`, which spills that state
+    *    to local disk.
+    *  - Null-part side-split. The key tuple travels as canonical strings
+    *    ([[requireKeyedKeys]]). A tuple with ANY NULL part never pairs,
+    *    because the batch twin joins every key column with plain `=`, so
+    *    such a group is split by side into its own D and I rows.
+    *  - Doubles. The numeric latest form carries values as doubles, exact
+    *    for integral values up to 2^53 on both halves; wider BIGINTs
+    *    belong to the census digest. The census digest and the any-type
+    *    status read doubles at DECIMAL(18,6) grain ([[canonCol]]).
+    *  - Tie order. The latest picks break equal-timestamp races by the
+    *    payload in Spark struct order, strings in UTF-8 byte order (Spark's
+    *    UTF8String order, DuckDB's memcmp), never Java's UTF-16 order.
+    *  - A NULL event time fails loudly ([[requireEventTime]]).
+    *
+    * Output: window start, the typed key columns restored from the
+    * canonical strings, `diff_status`, then `out(l, r)` over the two side
+    * structs (NULL for a silent side). StreamBatchParitySpec pins each
+    * member against its [[batchWindowDiff]] twin row for row, D rows
+    * included.
+    */
+  private def liveWindowDiff[X <: Product : TypeTag](
+      left: DataFrame, right: DataFrame, tsCol: String, keys: Seq[String],
+      valCols: Seq[String], widthUs: Long, delay: String, fn: String,
+      v: Variant[X])(out: (Column, Column) => Seq[Column]): DataFrame = {
+    val spark = left.sparkSession
+    import spark.implicits._
+    requireFamily(left, right, keys, valCols, widthUs, fn, v)
+    val (merge, same) = (v.merge, v.same)
+
+    def prep(df: DataFrame, isLeft: Boolean): DataFrame = {
+      val tsUs = unix_micros(col(tsCol))
+      requireEventTime(df, tsCol, fn).select(
+          windowStart(tsUs, widthUs).as("window_start_us"),
+          keyPartsCol(df.schema, keys).as("kp"),
+          lit(isLeft).as("left_side"),
+          v.obs(df, tsUs).as("obs"),
+          col(tsCol).as("tsm"))
+        .withWatermark("tsm", delay)
+    }
+
+    def step(g: (Long, Seq[Option[String]], Option[Boolean]),
+             events: Iterator[PairEvent[X]],
+             state: GroupState[(Option[X], Option[X])]): Iterator[PairOut[X]] = {
+      var (l, r) = state.getOption.getOrElse((None, None))
+      if (state.hasTimedOut) {
+        state.remove()
+        val status = (l, r) match {
+          case (Some(_), None)                  => "D"
+          case (None, Some(_))                  => "I"
+          case (Some(a), Some(b)) if same(a, b) => "N"
+          case _                                => "C"
+        }
+        Iterator.single(PairOut(g._1, g._2, status, l, r))
+      } else {
+        events.foreach { e =>
+          if (e.left_side) l = Some(l.fold(e.obs)(merge(_, e.obs)))
+          else r = Some(r.fold(e.obs)(merge(_, e.obs)))
+        }
+        state.update((l, r))
+        // setTimeoutTimestamp refuses a time at or below the watermark, so
+        // a window already behind it wakes at the earliest legal time
+        val endMs = (g._1 + widthUs) / 1000L
+        state.setTimeoutTimestamp(math.max(endMs, state.getCurrentWatermarkMs() + 1))
+        Iterator.empty
+      }
+    }
+
+    prep(left, isLeft = true).unionByName(prep(right, isLeft = false))
+      .as[PairEvent[X]]
+      .groupByKey(e => (e.window_start_us, e.kp,
+        if (e.kp.exists(_.isEmpty)) Some(e.left_side) else None))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(step)
+      .select(col("window_start_us") +: restoredKeyCols(left.schema, keys) ++:
+        col("diff_status") +: out(col("l"), col("r")): _*)
+  }
+
+  /** The batch skeleton of the stream-stream family: the same per-(window,
+    * key tuple) diff over two HISTORICAL feeds (backfill reconciliation).
+    * `tsUsCol` is an epoch-micros BIGINT (the live twin takes a timestamp
+    * because the watermark needs one). Each side aggregates its
+    * observations to one struct `__graft_m` per (window, keys), a
+    * map-side-combinable aggregate, and the two sides meet in ONE
+    * full-outer on the window plus every key column under plain `=`: two
+    * hash exchanges in all, whatever the number of key columns. A side is
+    * present when its `__graft_m` is not NULL; that struct is never NULL
+    * for a present group, even with a NULL window or key, so NULL-key and
+    * NULL-ts groups classify as their own D/I rows. The oracle-checked
+    * `stream_diff_*` keys run this body, and StreamCensusPropSpec pins
+    * every variant against an independent JVM model on random feeds.
+    */
+  private def batchWindowDiff(left: DataFrame, right: DataFrame, tsUsCol: String,
+                              keys: Seq[String], valCols: Seq[String],
+                              widthUs: Long, fn: String, v: Variant[_])(
+      out: (Column, Column) => Seq[Column]): DataFrame = {
+    requireFamily(left, right, keys, valCols, widthUs, fn, v)
+    def side(df: DataFrame): DataFrame = df
+      .withColumn("__graft_ws", windowStart(col(tsUsCol), widthUs))
+      .groupBy(col("__graft_ws") +: keys.map(col): _*)
+      .agg(v.agg(v.obs(df, col(tsUsCol))).as("__graft_m"))
+    val (l, r) = (col("l.__graft_m"), col("r.__graft_m"))
+    side(left).alias("l").join(side(right).alias("r"),
+        col("l.__graft_ws") === col("r.__graft_ws") &&
+          keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _),
+        "full_outer")
+      .select(
+        coalesce(col("l.__graft_ws"), col("r.__graft_ws")).as("window_start_us") +:
+          keys.map(k => coalesce(col(s"l.$k"), col(s"r.$k")).as(k)) ++:
+          when(l.isNull, "I").when(r.isNull, "D").when(v.changed(l, r), "C")
+            .otherwise("N").as("diff_status") +: out(l, r): _*)
+  }
+
+  /** Batch census diff over two historical feeds, single-key form of
+    * [[diffStreamStreamBatchKeyed]]. The oracle-checked
+    * `stream_diff_stream` key runs this body.
     */
   def diffStreamStreamBatch(left: DataFrame, right: DataFrame,
                             tsUsCol: String, keyCol: String,
@@ -666,67 +900,22 @@ object StreamOps {
                             widthUs: Long): DataFrame =
     diffStreamStreamBatchKeyed(left, right, tsUsCol, Seq(keyCol), valCols, widthUs)
 
-  /** COMPOSITE/STRING-key generalization of [[diffStreamStreamBatch]]
-    * (r15 — real CDC feeds key on tuples like (order, line) or
-    * (user, day), and UUID string keys are the most common CDC identity):
-    * row identity = the key TUPLE, exactly [[graft.operators.Differ.diff]]'s
-    * `keys: Seq[String]` contract. Each side's census groups by (window,
-    * k1, …, kn) — one map-side-combinable aggregate, the composite key
-    * hashing through ONE exchange as a tuple, no extra shuffle for extra
-    * key columns — and the two censuses meet in one full-outer on window +
-    * every key column under plain `=` (a row with ANY null key part never
-    * pairs; each side's null-part groups surface as their own D/I rows,
-    * like the batch diff's non-null-safe key mode). Key types per
-    * [[requireKeyedKeys]] — enforced here too, so the batch twin refuses
-    * exactly what the streaming twin refuses. This is the single fold
-    * body: the single-key form above delegates here.
+  /** Batch census diff keyed by the key TUPLE `keys` (the
+    * `keys: Seq[String]` contract of [[graft.operators.Differ.diff]]; key
+    * types per [[requireKeyedKeys]]).
+    * Per (window, keys) each side folds to (count, max of `valCols.head`
+    * when numeric, two digest sums over the full canonical payload); C on
+    * count, max or digest drift. Output: `window_start_us`, the key
+    * columns, `diff_status`, `left_n`/`right_n`, `left_max`/`right_max`,
+    * `left_digest`/`right_digest`. The live twin is
+    * [[diffStreamStreamKeyed]].
     */
   def diffStreamStreamBatchKeyed(left: DataFrame, right: DataFrame,
                                  tsUsCol: String, keys: Seq[String],
                                  valCols: Seq[String],
-                                 widthUs: Long): DataFrame = {
-    require(widthUs > 0, s"diffStreamStreamBatch: width must be positive, got $widthUs")
-    require(valCols.nonEmpty, "diffStreamStreamBatch: need at least one value column")
-    requireKeyedKeys(left, right, keys, "diffStreamStreamBatch")
-    requireMatchedPayload(left, right, valCols, "diffStreamStreamBatch")
-    def census(df: DataFrame): DataFrame = {
-      val (d1, d2) = digestSlices(payloadCanon(df, valCols))
-      val headline = headlineCol(df, valCols)
-      df.withColumn("__graft_ws",
-          col(tsUsCol) - pmod(col(tsUsCol), lit(widthUs)))
-        .withColumn("__graft_v", headline)
-        .withColumn("__graft_d1", d1).withColumn("__graft_d2", d2)
-        .groupBy(col("__graft_ws") +: keys.map(col): _*)
-        .agg(count(lit(1)).as("n"), max("__graft_v").as("mx"),
-          sum("__graft_d1").as("dg1"), sum("__graft_d2").as("dg2"))
-    }
-    val lf = census(left)
-    val rf = census(right)
-    val keyEq = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
-    lf.alias("l").join(rf.alias("r"),
-        col("l.__graft_ws") === col("r.__graft_ws") && keyEq,
-        "full_outer")
-      .select(
-        coalesce(col("l.__graft_ws"), col("r.__graft_ws")).as("window_start_us") +:
-          keys.map(k => coalesce(col(s"l.$k"), col(s"r.$k")).as(k)) ++: Seq(
-          // Side PRESENCE must test the count (non-null on every census
-          // row), never the key: a NULL-key left group would read `l.key IS
-          // NULL` and misclassify as I (r14 — caught by the
-          // StreamCensusPropSpec model; null keys never pair under `=`, so
-          // each side's null-key census is its own D/I row, exactly the
-          // streaming twin's side-split)
-          when(col("l.n").isNull, "I")
-            .when(col("r.n").isNull, "D")
-            .when(col("l.n") =!= col("r.n") || !(col("l.mx") <=> col("r.mx"))
-              || col("l.dg1") =!= col("r.dg1") || col("l.dg2") =!= col("r.dg2"), "C")
-            .otherwise("N").as("diff_status"),
-          col("l.n").as("left_n"), col("r.n").as("right_n"),
-          col("l.mx").as("left_max"), col("r.mx").as("right_max"),
-          concat(col("l.dg1").cast("string"), lit(":"),
-            col("l.dg2").cast("string")).as("left_digest"),
-          concat(col("r.dg1").cast("string"), lit(":"),
-            col("r.dg2").cast("string")).as("right_digest")): _*)
-  }
+                                 widthUs: Long): DataFrame =
+    batchWindowDiff(left, right, tsUsCol, keys, valCols, widthUs,
+      "diffStreamStreamBatch", census(valCols))(censusCols)
 
   /** Single-value-column convenience form of [[diffStreamStream]]. */
   def diffStreamStream(leftFeed: DataFrame, rightFeed: DataFrame,
@@ -734,228 +923,45 @@ object StreamOps {
                        widthUs: Long, delay: String): Dataset[SsDiffOut] =
     diffStreamStream(leftFeed, rightFeed, tsCol, keyCol, Seq(valCol), widthUs, delay)
 
-  /** Stream-STREAM keyed diff — the last member of the continuous-diff
-    * family ([[diffStream]] reconciles a stream against a STATIC snapshot;
-    * this reconciles two LIVE feeds, the primary-vs-replica / dual-CDC
-    * case). Per event-time window of `widthUs`, per key, both feeds'
-    * arrivals fold into per-side aggregates — count, max of
-    * `valCols.head` (the headline metric; NULL max while `valCols.head`
-    * is non-numeric), and an order-independent CONTENT DIGEST over the
-    * FULL payload (`valCols`, r14): the exact BIGINT sums of each event's
-    * two 32-bit sha-256 slices ([[digestSlices]] over [[payloadCanon]]).
-    * All three folds are commutative/associative, so the result is
-    * deterministic under any shuffle arrival order; NULL values skip the
-    * max exactly like the batch `max()` but still count and digest, NaN
-    * folds as the greatest double and compares equal to NaN, and NULL
-    * keys classify as unpairable D/I rows — all pinned against the batch
-    * census in StreamBatchParitySpec. When the watermark passes the
-    * window's end the (window, key) group emits exactly once:
-    *   I (right feed only), D (left feed only — the absence verdict only a
-    *   closed window can certify), C (count, max, OR digest drifted), N.
-    * The digest is what makes N a real certificate: two feeds seeing
-    * {1, 5} vs {2, 5} in a window share count and max — (count, max)
-    * alone would certify N for exactly the replica divergence a census
-    * exists to catch (r13 verdict weak, cleared here).
-    *
-    * Mechanics: tag each feed with its side, watermark EACH feed, then
-    * UNION — the engine's default `multipleWatermarkPolicy = min` advances
-    * the global watermark to the MIN across the two feeds, so a feed
-    * lagging more than `delay` behind the other holds the horizon open
-    * rather than having its rows dropped as late and its keys
-    * mis-certified D (r13 ADVICE: a post-union watermark advanced on the
-    * MAX across feeds; the lagging-feed parity test pins the fix). Then
-    * ONE `flatMapGroupsWithState` keyed by (window, key) with the
-    * event-time timeout at window end. State is O(1) per (window, key) —
-    * eight numbers — bounded by (open windows × keys active in them) and
-    * evicted at emission; the groups hash across tasks by (window, key),
-    * so no task ever concentrates a whole window (the
-    * [[diffStreamComplete]] critique does not apply here — D needs no
-    * census because absence is per-key: left-side arrivals opened the
-    * group, the right side's silence IS the verdict). Keys silent on BOTH
-    * feeds emit nothing, exactly like the batch twin's full-outer join.
-    * The oracle-checked batch key (`stream_diff_stream`) runs the same
-    * per-window aggregate compare with the digest recomputed in DuckDB;
-    * StreamBatchParitySpec pins stream == batch row-for-row INCLUDING the
-    * watermark-flushed D rows. Integral keys only ([[requireIntegralKey]]).
-    *
-    * State-store sizing (the axis a 100 TB operator tunes; r13 verdict
-    * ask #6): parity is additionally pinned under
-    * `RocksDBStateStoreProvider`. The test ASSERTS `numRowsTotal == 3`
-    * from the mid-stream progress (3 open (window, key) groups at the
-    * MemoryStream fixture) and prints the final progress — after the
-    * watermark evicts the closed groups only the sentinel group remains
-    * (`numRowsTotal=1`) at a ~16 KB resident floor (`memoryUsedBytes`
-    * ≈ 16.2 KB — block-cache/SST overhead dominates at toy scale; the
-    * marginal row is the encoded [[SsDiffState]], 8 longs + 2 optional
-    * doubles + the (window, key, side) grouping key ≈ 150 bytes). So at
-    * production grain the bound is ≈ 150 B × (open windows × active keys
-    * per window), spilled to local disk by RocksDB rather than capped at
-    * executor heap like the default HDFS-backed provider.
+  /** Stream-STREAM census diff ([[liveWindowDiff]]): per event-time window
+    * of `widthUs` and per key, both feeds fold to the count, the max of
+    * `valCols.head` (NULL while it is non-numeric) and an order-independent
+    * content digest over the full payload: the exact BIGINT sums of each
+    * event's two 32-bit sha-256 slices ([[digestSlices]] over
+    * [[payloadCanon]]). NULL values skip the max like `max()` but still
+    * count and digest; NaN folds as the greatest double and equals NaN.
+    * Status: I, D, C (count, max or digest drifted), N. This single-key
+    * surface keeps its long-typed `key` column and its integral-key
+    * contract ([[requireIntegralKey]]); the batch twin is
+    * [[diffStreamStreamBatch]].
     */
   def diffStreamStream(leftFeed: DataFrame, rightFeed: DataFrame,
                        tsCol: String, keyCol: String, valCols: Seq[String],
                        widthUs: Long, delay: String): Dataset[SsDiffOut] = {
     val spark = leftFeed.sparkSession
     import spark.implicits._
-    // The single-key surface keeps its long-typed `key` output column and
-    // its original integral-only contract; the FOLD is the shared keyed
-    // core (r15 — one fold body, every surface).
-    requireIntegralKey(leftFeed, keyCol, "diffStreamStream")
-    requireIntegralKey(rightFeed, keyCol, "diffStreamStream")
-    diffStreamStreamCore(leftFeed, rightFeed, tsCol, Seq(keyCol), valCols,
-        widthUs, delay, "diffStreamStream")
-      .select(col("window_start_us"),
-        element_at(col("kp"), 1).cast("long").as("key"),
-        col("diff_status"), col("left_n"), col("right_n"),
-        col("left_max"), col("right_max"),
-        col("left_digest"), col("right_digest"))
+    Seq(leftFeed, rightFeed).foreach(requireIntegralKey(_, keyCol, "diffStreamStream"))
+    liveWindowDiff(leftFeed, rightFeed, tsCol, Seq(keyCol), valCols, widthUs,
+        delay, "diffStreamStream", census(valCols))(censusCols)
+      .select(col("window_start_us") +: col(keyCol).cast("long").as("key") +:
+        ("diff_status" +: censusOut).map(col): _*)
       .as[SsDiffOut]
   }
 
-  /** COMPOSITE/STRING-key stream-stream census diff (r15): the live twin
-    * of [[diffStreamStreamBatchKeyed]] — row identity is the key TUPLE
-    * (`keys`, the batch differ's `Seq[String]` contract), admitted key
-    * types per [[requireKeyedKeys]] (so UUID/string CDC identities work
-    * natively — no pre-hashing, no collision class). Mechanics, state
-    * bounds, and verdicts are exactly [[diffStreamStream]]'s: per-feed
-    * watermarks before the tagged union (MIN policy), ONE
-    * flatMapGroupsWithState keyed by (window, key-tuple) with the
-    * event-time timeout at window end, O(1) state per group (the same 8
-    * numbers — the grouping key now carries the canonical key strings, so
-    * the marginal state row grows by the key tuple's rendered bytes).
-    * A group with ANY null key part side-splits into unpairable D/I rows,
-    * mirroring the batch twin's plain-`=` multi-column join. Output
-    * restores the TYPED key columns by name (lossless cast back from the
-    * canonical strings). Parity with the batch twin — including
-    * watermark-flushed D rows, a string key column, and null key parts —
-    * is pinned in StreamBatchParitySpec.
+  /** Composite/string-key stream-stream census diff: the live twin of
+    * [[diffStreamStreamBatchKeyed]], row identity = the key tuple (key
+    * types per [[requireKeyedKeys]], so UUID/string CDC identities work
+    * natively). Output restores the typed key columns by name.
     */
   def diffStreamStreamKeyed(leftFeed: DataFrame, rightFeed: DataFrame,
                             tsCol: String, keys: Seq[String],
                             valCols: Seq[String],
                             widthUs: Long, delay: String): DataFrame =
-    diffStreamStreamCore(leftFeed, rightFeed, tsCol, keys, valCols,
-        widthUs, delay, "diffStreamStreamKeyed")
-      .select(col("window_start_us") +:
-        restoredKeyCols(leftFeed.schema, keys) ++: Seq(
-        col("diff_status"), col("left_n"), col("right_n"),
-        col("left_max"), col("right_max"),
-        col("left_digest"), col("right_digest")): _*)
+    liveWindowDiff(leftFeed, rightFeed, tsCol, keys, valCols, widthUs, delay,
+      "diffStreamStreamKeyed", census(valCols))(censusCols)
 
-  /** The one census fold body behind [[diffStreamStream]] and
-    * [[diffStreamStreamKeyed]].
-    */
-  private def diffStreamStreamCore(leftFeed: DataFrame, rightFeed: DataFrame,
-                                   tsCol: String, keys: Seq[String],
-                                   valCols: Seq[String], widthUs: Long,
-                                   delay: String,
-                                   fn: String): Dataset[SsDiffKOut] = {
-    val spark = leftFeed.sparkSession
-    import spark.implicits._
-    require(widthUs > 0, s"$fn: width must be positive, got $widthUs")
-    require(valCols.nonEmpty, s"$fn: need at least one value column")
-    requireKeyedKeys(leftFeed, rightFeed, keys, fn)
-    requireMatchedPayload(leftFeed, rightFeed, valCols, fn)
-
-    def prep(df: DataFrame, isLeft: Boolean): DataFrame = {
-      val (d1, d2) = digestSlices(payloadCanon(df, valCols))
-      val headline = headlineCol(df, valCols)
-      requireEventTime(df, tsCol, fn).select(
-          (unix_micros(col(tsCol)) - pmod(unix_micros(col(tsCol)), lit(widthUs)))
-            .as("window_start_us"),
-          keyPartsCol(df.schema, keys).as("kp"),
-          lit(isLeft).as("left_side"),
-          headline.as("value"),
-          d1.as("d1"), d2.as("d2"),
-          col(tsCol).as("tsm"))
-        // watermark EACH feed BEFORE the union (r13 ADVICE fix): the
-        // engine then takes the MIN across sources, so the lagging feed
-        // holds the horizon open instead of losing rows as late.
-        .withWatermark("tsm", delay)
-    }
-
-    // Spark max-aggregate ordering for the fold: NaN is the greatest
-    // double; NULL values are skipped (None state) — bit-for-bit the
-    // semantics the batch twin's max() applies (r13 review fix).
-    def foldMax(m: Option[Double], v: Option[Double]): Option[Double] = (m, v) match {
-      case (_, None)          => m
-      case (None, s)          => s
-      case (Some(a), Some(b)) =>
-        Some(if (b.isNaN || (!a.isNaN && b > a)) b else a)
-    }
-    // Spark <=> on the folded maxes: NULL equals NULL, NaN equals NaN,
-    // -0.0 equals 0.0 — primitive != would call NaN-vs-NaN a C where the
-    // oracle-checked batch form reads N.
-    def maxEq(a: Option[Double], b: Option[Double]): Boolean = (a, b) match {
-      case (None, None)       => true
-      case (Some(x), Some(y)) => x == y || (x.isNaN && y.isNaN)
-      case _                  => false
-    }
-    val zero = SsDiffState(0L, None, 0L, 0L, 0L, None, 0L, 0L)
-
-    def step(wk: (Long, Seq[Option[String]], Option[Boolean]),
-             it: Iterator[SsDiffKEvent],
-             state: GroupState[SsDiffState]): Iterator[SsDiffKOut] = {
-      if (state.hasTimedOut) {
-        val s = state.getOption.getOrElse(zero)
-        state.remove()
-        val status =
-          if (s.ln > 0 && s.rn == 0) "D"
-          else if (s.ln == 0 && s.rn > 0) "I"
-          else if (s.ln != s.rn || !maxEq(s.lmax, s.rmax) ||
-            s.ld1 != s.rd1 || s.ld2 != s.rd2) "C"
-          else "N"
-        Iterator.single(SsDiffKOut(wk._1, wk._2, status,
-          if (s.ln > 0) Some(s.ln) else None,
-          if (s.rn > 0) Some(s.rn) else None,
-          s.lmax, s.rmax,
-          if (s.ln > 0) Some(s"${s.ld1}:${s.ld2}") else None,
-          if (s.rn > 0) Some(s"${s.rd1}:${s.rd2}") else None))
-      } else {
-        var s = state.getOption.getOrElse(zero)
-        // addExact, not +: the scaladoc's loud-overflow guarantee must
-        // hold on BOTH halves — the batch twin's sum() throws under ANSI,
-        // so a silently wrapping JVM add here would diverge from it at
-        // exactly the >2^31-events-per-group scale the bound documents
-        // (r14 review fix).
-        it.foreach { e =>
-          if (e.left_side) s = s.copy(ln = s.ln + 1, lmax = foldMax(s.lmax, e.value),
-            ld1 = Math.addExact(s.ld1, e.d1), ld2 = Math.addExact(s.ld2, e.d2))
-          else s = s.copy(rn = s.rn + 1, rmax = foldMax(s.rmax, e.value),
-            rd1 = Math.addExact(s.rd1, e.d1), rd2 = Math.addExact(s.rd2, e.d2))
-        }
-        state.update(s)
-        val endMs = (wk._1 + widthUs) / 1000L
-        state.setTimeoutTimestamp(math.max(endMs, state.getCurrentWatermarkMs() + 1))
-        Iterator.empty
-      }
-    }
-
-    prep(leftFeed, isLeft = true).unionByName(prep(rightFeed, isLeft = false))
-      .as[SsDiffKEvent]
-      // A key tuple with ANY null part can never pair — the batch twin
-      // joins every key column with plain `=` — so such a group is
-      // additionally split BY SIDE: each side's null-part census emits its
-      // own D/I row, exactly the unmatched rows the batch full-outer
-      // produces (r13 review fix; previously a null key killed the query
-      // at the encoder).
-      .groupByKey(e => (e.window_start_us, e.kp,
-        if (e.kp.exists(_.isEmpty)) Some(e.left_side) else None))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(step)
-  }
-
-  /** BATCH twin of [[diffStreamStreamLatest]] as a first-class operator
-    * (r14) — historical last-write-wins reconciliation: per (window, key)
-    * each side reduces to its LATEST observation (ONE map-side-combinable
-    * `max(struct(ts, v…))`; the payload tie-break makes equal-timestamp
-    * races deterministic) and the verdict compares the final payloads PER
-    * COLUMN null-safely. Output carries `left_<col>`/`right_<col>` pairs
-    * in `valCols` order (the diff naming convention). Same numeric-only
-    * payload contract and 2^53 double-carrier bound as the streaming
-    * twin; side presence tests the non-null window column, so null-key
-    * groups side-split into D/I exactly like the streaming form. This is
-    * the body the oracle-checked `stream_diff_values` key runs;
-    * StreamCensusPropSpec pins it against an independent JVM model.
+  /** Batch last-write-wins diff, single key ([[diffStreamStreamLatest]]'s
+    * semantics). The oracle-checked `stream_diff_values` key runs this body.
     */
   def diffStreamStreamLatestBatch(left: DataFrame, right: DataFrame,
                                   tsUsCol: String, keyCol: String,
@@ -964,56 +970,18 @@ object StreamOps {
     diffStreamStreamLatestBatchKeyed(left, right, tsUsCol, Seq(keyCol),
       valCols, widthUs)
 
-  /** COMPOSITE/STRING-key generalization of [[diffStreamStreamLatestBatch]]
-    * (r15): identical last-write-wins semantics with row identity = the
-    * key TUPLE. Same plan shape — one map-side-combinable struct-max per
-    * side (the composite key hashes through the exchange as a tuple),
-    * one full-outer on window + every key column under plain `=` (any
-    * null key part → unpairable D/I rows). Key types per
-    * [[requireKeyedKeys]]; single-key form delegates here.
+  /** Batch last-write-wins diff keyed by the key tuple: per (window, keys)
+    * each side reduces to its greatest (ts, v1, v2, …) with ONE
+    * map-side-combinable struct `max` (no row_number over raw traffic),
+    * and the status compares the two picks per column under `<=>`.
+    * Output carries `left_<col>`/`right_<col>` pairs in `valCols` order.
     */
   def diffStreamStreamLatestBatchKeyed(left: DataFrame, right: DataFrame,
                                        tsUsCol: String, keys: Seq[String],
                                        valCols: Seq[String],
-                                       widthUs: Long): DataFrame = {
-    require(widthUs > 0,
-      s"diffStreamStreamLatestBatch: width must be positive, got $widthUs")
-    require(valCols.nonEmpty,
-      "diffStreamStreamLatestBatch: need at least one value column")
-    requireKeyedKeys(left, right, keys, "diffStreamStreamLatestBatch")
-    requireNoDisplayClash(keys, valCols, "diffStreamStreamLatestBatch")
-    Seq(left, right).foreach(df =>
-      requireNumericPayload(df, valCols, "diffStreamStreamLatestBatch"))
-    def latest(df: DataFrame): DataFrame = df
-      .withColumn("__graft_ws", col(tsUsCol) - pmod(col(tsUsCol), lit(widthUs)))
-      .groupBy(col("__graft_ws") +: keys.map(col): _*)
-      .agg(max(struct(col(tsUsCol).as("__t") +:
-        valCols.zipWithIndex.map { case (c, i) =>
-          col(c).cast("double").as(s"__v$i") }: _*)).as("m"))
-    val lf = latest(left).alias("l")
-    val rf = latest(right).alias("r")
-    val keyEq = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
-    val anyDiff = valCols.indices
-      .map(i => !(col(s"l.m.__v$i") <=> col(s"r.m.__v$i")))
-      .reduce(_ || _)
-    lf.join(rf,
-        col("l.__graft_ws") === col("r.__graft_ws") && keyEq,
-        "full_outer")
-      .select(
-        coalesce(col("l.__graft_ws"), col("r.__graft_ws")).as("window_start_us") +:
-          keys.map(k => coalesce(col(s"l.$k"), col(s"r.$k")).as(k)) ++:
-          // presence via the struct MAX (never null for a present group,
-          // even when tsUsCol itself is NULL — a NULL-ts window column
-          // would misread a left-only group as I; r14 review #3, the same
-          // null-presence class the census form's l.n test closes)
-          (when(col("l.m").isNull, "I")
-            .when(col("r.m").isNull, "D")
-            .when(anyDiff, "C")
-            .otherwise("N").as("diff_status") +:
-          valCols.zipWithIndex.flatMap { case (c, i) => Seq(
-            col(s"l.m.__v$i").as(s"left_$c"),
-            col(s"r.m.__v$i").as(s"right_$c")) }): _*)
-  }
+                                       widthUs: Long): DataFrame =
+    batchWindowDiff(left, right, tsUsCol, keys, valCols, widthUs,
+      "diffStreamStreamLatestBatch", latest(valCols))(latestCols(valCols))
 
   /** Single-value-column convenience form of [[diffStreamStreamLatest]]. */
   def diffStreamStreamLatest(leftFeed: DataFrame, rightFeed: DataFrame,
@@ -1022,397 +990,74 @@ object StreamOps {
     diffStreamStreamLatest(leftFeed, rightFeed, tsCol, keyCol, Seq(valCol),
       widthUs, delay)
 
-  /** Latest-VALUE stream-stream keyed diff — [[diffStreamStream]]'s CDC
-    * last-write-wins sibling: instead of comparing per-window aggregates,
-    * each side keeps only its LATEST observation per (window, key) —
-    * greatest (ts, payload-tuple), the value tie-break making
-    * equal-timestamp races deterministic in both engines — and the closed
-    * window verdicts the two final PAYLOADS per column under Spark `<=>`
-    * (NULL equals NULL, NaN equals NaN): I/D by side presence, C when any
-    * column of the latest payloads differs, N otherwise. This is the
-    * replica-reconciliation question ("did both sinks END the window
-    * agreeing?") where the census form asks "did both sinks SEE the same
-    * traffic?". `valCols` (r14 multi-column widening) must all be numeric
-    * — the payload tuple is carried and tie-broken as doubles, exactly
-    * like the batch twin's `max(struct(ts, v1, v2, …))`; non-numeric
-    * payloads belong to the census form, whose digest covers any type.
-    * DOCUMENTED PRECISION CONTRACT: the double carrier is IEEE-exact for
-    * integral values only up to 2^53 — a BIGINT surrogate key beyond that
-    * (e.g. a snowflake id) compares at double granularity on BOTH halves
-    * (batch twin included, so stream/batch/oracle stay in lockstep);
-    * route such columns through [[diffStreamStream]]'s content digest,
-    * which is exact at any width.
-    *
-    * Same mechanics and bounds as [[diffStreamStream]]: per-feed
-    * watermarks before the union (MIN policy — a lagging feed holds the
-    * horizon open, r13 ADVICE fix), a single `flatMapGroupsWithState`
-    * keyed by (window, key) (null keys side-split into unpairable D/I
-    * groups), state = at most TWO (ts, payload) tuples per group, evicted
-    * at the event-time timeout. The fold order cannot matter:
-    * greatest-(ts, payload) under lexicographic struct order is
-    * associative/commutative, so shuffle arrival order never changes the
-    * verdict. Batch twin = per-side greatest-(ts, v…) aggregates (max
-    * over a struct — no row_number over raw traffic) meeting in one
-    * full-outer; StreamBatchParitySpec pins stream == batch row-for-row
-    * including the watermark-flushed D rows. Integral keys only
-    * ([[requireIntegralKey]]). State sizing: same RocksDB-pinned story as
-    * [[diffStreamStream]] with an even smaller row — at most TWO
-    * (ts, payload-tuple) observations per group, ≈ (32 + 8·|valCols|·2)
-    * bytes marginal.
+  /** Latest-VALUE stream-stream diff ([[liveWindowDiff]]), the CDC
+    * last-write-wins sibling of [[diffStreamStream]]: each side keeps only
+    * its latest observation per (window, key), the greatest (ts, payload
+    * tuple), and the closed window compares the two final payloads per
+    * column under `<=>` (NULL equals NULL, NaN equals NaN). It asks "did
+    * both sinks END the window agreeing?" where the census asks "did they
+    * SEE the same traffic?". `valCols` must be numeric (the payload rides
+    * as doubles; other types belong to [[diffStreamStreamLatestAny]] or
+    * the census digest). Integral keys only ([[requireIntegralKey]]); the
+    * batch twin is [[diffStreamStreamLatestBatch]].
     */
   def diffStreamStreamLatest(leftFeed: DataFrame, rightFeed: DataFrame,
                              tsCol: String, keyCol: String, valCols: Seq[String],
                              widthUs: Long, delay: String): Dataset[SsvOut] = {
     val spark = leftFeed.sparkSession
     import spark.implicits._
-    // Single-key surface: long-typed `key` output + the original
-    // integral-only contract; the fold is the shared keyed core (r15).
-    requireIntegralKey(leftFeed, keyCol, "diffStreamStreamLatest")
-    requireIntegralKey(rightFeed, keyCol, "diffStreamStreamLatest")
-    diffStreamStreamLatestCore(leftFeed, rightFeed, tsCol, Seq(keyCol),
-        valCols, widthUs, delay, "diffStreamStreamLatest")
-      .select(col("window_start_us"),
-        element_at(col("kp"), 1).cast("long").as("key"),
+    Seq(leftFeed, rightFeed).foreach(
+      requireIntegralKey(_, keyCol, "diffStreamStreamLatest"))
+    liveWindowDiff(leftFeed, rightFeed, tsCol, Seq(keyCol), valCols, widthUs,
+        delay, "diffStreamStreamLatest", latest(valCols))((l, r) =>
+        Seq(l("values").as("left_values"), r("values").as("right_values")))
+      .select(col("window_start_us"), col(keyCol).cast("long").as("key"),
         col("diff_status"), col("left_values"), col("right_values"))
       .as[SsvOut]
   }
 
-  /** COMPOSITE/STRING-key latest-value stream-stream diff (r15): the live
-    * twin of [[diffStreamStreamLatestBatchKeyed]] — same last-write-wins
-    * fold, row identity = the key tuple ([[requireKeyedKeys]] types).
-    * Output restores the typed key columns plus `left_<col>`/`right_<col>`
-    * display pairs per value column, matching the batch twin exactly
-    * (parity pinned in StreamBatchParitySpec, D rows included). Same
-    * state bound as the single-key form: at most TWO (ts, payload)
-    * tuples per (window, key-tuple) group.
+  /** Composite/string-key latest-value stream-stream diff: the live twin
+    * of [[diffStreamStreamLatestBatchKeyed]], with the typed key columns
+    * and `left_<col>`/`right_<col>` pairs on output.
     */
   def diffStreamStreamLatestKeyed(leftFeed: DataFrame, rightFeed: DataFrame,
                                   tsCol: String, keys: Seq[String],
                                   valCols: Seq[String],
                                   widthUs: Long, delay: String): DataFrame =
-    diffStreamStreamLatestCore(leftFeed, rightFeed, tsCol, keys, valCols,
-        widthUs, delay, "diffStreamStreamLatestKeyed")
-      .select(col("window_start_us") +:
-        restoredKeyCols(leftFeed.schema, keys) ++:
-        (col("diff_status") +:
-          valCols.zipWithIndex.flatMap { case (c, i) => Seq(
-            element_at(col("left_values"), i + 1).as(s"left_$c"),
-            element_at(col("right_values"), i + 1).as(s"right_$c")) }): _*)
+    liveWindowDiff(leftFeed, rightFeed, tsCol, keys, valCols, widthUs, delay,
+      "diffStreamStreamLatestKeyed", latest(valCols))(latestCols(valCols))
 
-  /** The one latest-value fold body behind [[diffStreamStreamLatest]] and
-    * [[diffStreamStreamLatestKeyed]].
-    */
-  private def diffStreamStreamLatestCore(leftFeed: DataFrame, rightFeed: DataFrame,
-                                         tsCol: String, keys: Seq[String],
-                                         valCols: Seq[String], widthUs: Long,
-                                         delay: String,
-                                         fn: String): Dataset[SsvKOut] = {
-    val spark = leftFeed.sparkSession
-    import spark.implicits._
-    require(widthUs > 0, s"$fn: width must be positive, got $widthUs")
-    require(valCols.nonEmpty, s"$fn: need at least one value column")
-    requireKeyedKeys(leftFeed, rightFeed, keys, fn)
-    requireNoDisplayClash(keys, valCols, fn)
-    Seq(leftFeed, rightFeed).foreach(df =>
-      requireNumericPayload(df, valCols, fn))
-
-    def prep(df: DataFrame, isLeft: Boolean): DataFrame =
-      requireEventTime(df, tsCol, fn).select(
-          (unix_micros(col(tsCol)) - pmod(unix_micros(col(tsCol)), lit(widthUs)))
-            .as("window_start_us"),
-          keyPartsCol(df.schema, keys).as("kp"),
-          lit(isLeft).as("left_side"),
-          unix_micros(col(tsCol)).as("ts_us"),
-          array(valCols.map(c => col(c).cast("double")): _*).as("values"),
-          col(tsCol).as("tsm"))
-        .withWatermark("tsm", delay) // per-feed, BEFORE union → MIN policy
-
-    // Spark struct-ordering for (ts, v1, v2, …): later ts wins; on a ts
-    // tie the lexicographically larger payload wins with NULL smallest
-    // and NaN greatest per field — exactly how the batch twin's
-    // max(struct(ts, v…)) breaks the same tie.
-    def cmpVals(a: Seq[Option[Double]], b: Seq[Option[Double]]): Int =
-      a.zip(b).iterator.map {
-        case (None, None)       => 0
-        case (None, Some(_))    => -1
-        case (Some(_), None)    => 1
-        case (Some(x), Some(y)) =>
-          if (x == y || (x.isNaN && y.isNaN)) 0
-          else if (y.isNaN || (!x.isNaN && x < y)) -1
-          else 1
-      }.find(_ != 0).getOrElse(0)
-    def later(a: SsvSide, b: SsvSide): SsvSide =
-      if (b.ts_us > a.ts_us) b
-      else if (b.ts_us < a.ts_us) a
-      else if (cmpVals(a.values, b.values) < 0) b
-      else a
-    def valEq(a: Seq[Option[Double]], b: Seq[Option[Double]]): Boolean =
-      a.size == b.size && a.zip(b).forall {
-        case (None, None)       => true
-        case (Some(x), Some(y)) => x == y || (x.isNaN && y.isNaN)
-        case _                  => false
-      }
-
-    def step(wk: (Long, Seq[Option[String]], Option[Boolean]),
-             it: Iterator[SsvKEvent],
-             state: GroupState[SsvState]): Iterator[SsvKOut] = {
-      if (state.hasTimedOut) {
-        val s = state.getOption.getOrElse(SsvState(None, None))
-        state.remove()
-        val status = (s.l, s.r) match {
-          case (Some(_), None) => "D"
-          case (None, Some(_)) => "I"
-          case (Some(a), Some(b)) => if (valEq(a.values, b.values)) "N" else "C"
-          case (None, None) => "N" // unreachable: a group only opens on an arrival
-        }
-        Iterator.single(SsvKOut(wk._1, wk._2, status,
-          s.l.map(_.values), s.r.map(_.values)))
-      } else {
-        var s = state.getOption.getOrElse(SsvState(None, None))
-        it.foreach { e =>
-          val obs = SsvSide(e.ts_us, e.values)
-          if (e.left_side) s = s.copy(l = Some(s.l.fold(obs)(later(_, obs))))
-          else s = s.copy(r = Some(s.r.fold(obs)(later(_, obs))))
-        }
-        state.update(s)
-        val endMs = (wk._1 + widthUs) / 1000L
-        state.setTimeoutTimestamp(math.max(endMs, state.getCurrentWatermarkMs() + 1))
-        Iterator.empty
-      }
-    }
-
-    prep(leftFeed, isLeft = true).unionByName(prep(rightFeed, isLeft = false))
-      .as[SsvKEvent]
-      .groupByKey(e => (e.window_start_us, e.kp,
-        if (e.kp.exists(_.isEmpty)) Some(e.left_side) else None))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(step)
-  }
-
-  /** ANY-TYPE latest-value stream-stream diff, batch twin (r15 — the r14
-    * verdict's #3 ask: last-write-wins over string/struct CDC rows, which
-    * the numeric form refuses): per (window, key-tuple) each side reduces
-    * to its LATEST observation and the verdict compares the two final
-    * CANONICAL PAYLOAD STRINGS ([[payloadCanon]] over ALL `valCols` — the
-    * census discipline: any column type, NULL named U+2400, NaN/±Inf
-    * named, doubles at DECIMAL(18,6) grain; that grain IS the documented
-    * verdict granularity, coarser than the numeric form's exact-double
-    * `<=>`). The latest pick is greatest (ts, payload, display-doubles) —
-    * payload compared in UTF-8 BYTE order (Spark string order, DuckDB
-    * memcmp), display doubles per Spark struct order — so equal-timestamp
-    * races resolve identically in the stream fold, this batch twin, and
-    * the DuckDB oracle. Output: the typed key columns, the verdict, both
-    * canonical payloads (`left_payload`/`right_payload`), and
-    * `left_<c>`/`right_<c>` display pairs for EVERY value column —
-    * numeric columns as exact doubles, non-numeric atomic columns
-    * restored to their declared type from the per-column canonical
-    * ([[displayRestore]]; nested/binary canonicals are not invertible and
-    * display as the canonical string). One map-side-combinable struct-max
-    * per side into one full-outer on (window, keys) — the same 2-exchange
-    * plan as every member of the family.
+  /** Any-type last-write-wins diff, batch twin of
+    * [[diffStreamStreamLatestAny]]: per (window, keys) each side's
+    * greatest (ts, canonical payload, display doubles) by one struct `max`;
+    * the status compares the two canonical payload strings, so its grain
+    * is DECIMAL(18,6) for doubles, coarser than the numeric form's `<=>`.
+    * Output: the key columns, the status, `left_payload`/`right_payload`,
+    * and a `left_<c>`/`right_<c>` display pair for EVERY value column:
+    * numeric columns as exact doubles, atomic non-numeric columns restored
+    * to their declared type ([[displayRestore]]; nested/binary canonicals
+    * display as the canonical string).
     */
   def diffStreamStreamLatestAnyBatch(left: DataFrame, right: DataFrame,
                                      tsUsCol: String, keys: Seq[String],
                                      valCols: Seq[String],
-                                     widthUs: Long): DataFrame = {
-    require(widthUs > 0,
-      s"diffStreamStreamLatestAnyBatch: width must be positive, got $widthUs")
-    require(valCols.nonEmpty,
-      "diffStreamStreamLatestAnyBatch: need at least one value column")
-    requireKeyedKeys(left, right, keys, "diffStreamStreamLatestAnyBatch")
-    requireNoDisplayClash(keys, valCols, "diffStreamStreamLatestAnyBatch")
-    requireMatchedPayload(left, right, valCols, "diffStreamStreamLatestAnyBatch")
-    val types = valCols.map(c => c -> left.schema(c).dataType).toMap
-    val numCols = valCols.filter(c => types(c).isInstanceOf[NumericType])
-    val strCols = valCols.filterNot(c => types(c).isInstanceOf[NumericType])
-    def latest(df: DataFrame): DataFrame = df
-      .withColumn("__graft_ws", col(tsUsCol) - pmod(col(tsUsCol), lit(widthUs)))
-      .withColumn("__graft_pay", payloadCanon(df, valCols))
-      .groupBy(col("__graft_ws") +: keys.map(col): _*)
-      .agg(max(struct(
-        col(tsUsCol).as("__t") +: col("__graft_pay").as("__p") +:
-          // every field after __p is functionally determined by __p, so
-          // the struct order stays (ts, payload, displays) — the
-          // documented pick order
-          (numCols.zipWithIndex.map { case (c, i) =>
-            col(c).cast("double").as(s"__v$i") } ++
-          strCols.zipWithIndex.map { case (c, i) =>
-            canonCol(types(c), col(c)).as(s"__c$i") }): _*)).as("m"))
-    val lf = latest(left).alias("l")
-    val rf = latest(right).alias("r")
-    val keyEq = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
-    val numIdx = numCols.zipWithIndex.toMap
-    val strIdx = strCols.zipWithIndex.toMap
-    def displayPair(c: String): Seq[Column] = numIdx.get(c) match {
-      case Some(i) => Seq(col(s"l.m.__v$i").as(s"left_$c"),
-        col(s"r.m.__v$i").as(s"right_$c"))
-      case None =>
-        val i = strIdx(c)
-        Seq(displayRestore(types(c), col(s"l.m.__c$i")).as(s"left_$c"),
-          displayRestore(types(c), col(s"r.m.__c$i")).as(s"right_$c"))
-    }
-    lf.join(rf,
-        col("l.__graft_ws") === col("r.__graft_ws") && keyEq,
-        "full_outer")
-      .select(
-        coalesce(col("l.__graft_ws"), col("r.__graft_ws")).as("window_start_us") +:
-          keys.map(k => coalesce(col(s"l.$k"), col(s"r.$k")).as(k)) ++:
-          (when(col("l.m").isNull, "I")
-            .when(col("r.m").isNull, "D")
-            // payload strings are non-null by construction (every field
-            // coalesces to U+2400), so plain != is total here
-            .when(col("l.m.__p") =!= col("r.m.__p"), "C")
-            .otherwise("N").as("diff_status") +:
-          col("l.m.__p").as("left_payload") +:
-          col("r.m.__p").as("right_payload") +:
-          valCols.flatMap(displayPair)): _*)
-  }
+                                     widthUs: Long): DataFrame =
+    batchWindowDiff(left, right, tsUsCol, keys, valCols, widthUs,
+      "diffStreamStreamLatestAnyBatch", latestAny(valCols))(
+      anyCols(left.schema, valCols))
 
-  /** ANY-TYPE latest-value stream-stream diff, LIVE form (r15): the
-    * streaming twin of [[diffStreamStreamLatestAnyBatch]] — same
-    * mechanics as the numeric keyed form (per-feed watermarks → tagged
-    * union under MIN policy → one flatMapGroupsWithState keyed by
-    * (window, key-tuple), event-time timeout at window end, null key
-    * parts side-split), but state carries at most TWO (ts, canonical
-    * payload, display doubles, per-non-numeric-column canonicals)
-    * observations per group and the verdict is on the canonical payload
-    * strings; output restores TYPED left_<c>/right_<c> displays for every
-    * value column ([[displayRestore]]). The fold's tie order — ts, then
-    * payload in UTF-8 byte order, then display doubles — is exactly the
-    * batch twin's struct max, so stream == batch row-for-row
-    * (StreamBatchParitySpec, D rows and a string value column included).
+  /** Any-type last-write-wins stream-stream diff ([[liveWindowDiff]]):
+    * last-write-wins over string/struct CDC rows, which the numeric form
+    * refuses; same pick, status and output as
+    * [[diffStreamStreamLatestAnyBatch]].
     */
   def diffStreamStreamLatestAny(leftFeed: DataFrame, rightFeed: DataFrame,
                                 tsCol: String, keys: Seq[String],
                                 valCols: Seq[String],
-                                widthUs: Long, delay: String): DataFrame = {
-    val spark = leftFeed.sparkSession
-    import spark.implicits._
-    require(widthUs > 0,
-      s"diffStreamStreamLatestAny: width must be positive, got $widthUs")
-    require(valCols.nonEmpty,
-      "diffStreamStreamLatestAny: need at least one value column")
-    requireKeyedKeys(leftFeed, rightFeed, keys, "diffStreamStreamLatestAny")
-    requireNoDisplayClash(keys, valCols, "diffStreamStreamLatestAny")
-    requireMatchedPayload(leftFeed, rightFeed, valCols, "diffStreamStreamLatestAny")
-    val types = valCols.map(c => c -> leftFeed.schema(c).dataType).toMap
-    val numCols = valCols.filter(c => types(c).isInstanceOf[NumericType])
-    val strCols = valCols.filterNot(c => types(c).isInstanceOf[NumericType])
-
-    def prep(df: DataFrame, isLeft: Boolean): DataFrame =
-      requireEventTime(df, tsCol, "diffStreamStreamLatestAny").select(
-          (unix_micros(col(tsCol)) - pmod(unix_micros(col(tsCol)), lit(widthUs)))
-            .as("window_start_us"),
-          keyPartsCol(df.schema, keys).as("kp"),
-          lit(isLeft).as("left_side"),
-          unix_micros(col(tsCol)).as("ts_us"),
-          payloadCanon(df, valCols).as("pay"),
-          (if (numCols.isEmpty) array().cast("array<double>")
-           else array(numCols.map(c => col(c).cast("double")): _*)).as("disp"),
-          // per-NON-NUMERIC-column canonicals (NULL kept, not '\u2400' —
-          // the display restores real NULLs); determined by pay, so the
-          // pick order is untouched
-          (if (strCols.isEmpty) array().cast("array<string>")
-           else array(strCols.map(c => canonCol(types(c), col(c))): _*)).as("cvals"),
-          col(tsCol).as("tsm"))
-        .withWatermark("tsm", delay) // per-feed, BEFORE union → MIN policy
-
-    // UTF-8 BYTE order, not String.compareTo (UTF-16 code-unit order):
-    // Spark compares strings as UTF8String bytes and DuckDB as memcmp —
-    // the two differ from Java's order for supplementary-plane text, and
-    // the fold's tie-break must match BOTH.
-    def utf8Lt(a: String, b: String): Boolean = {
-      val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val n = math.min(x.length, y.length)
-      var i = 0
-      while (i < n) {
-        val c = (x(i) & 0xff) - (y(i) & 0xff)
-        if (c != 0) return c < 0
-        i += 1
-      }
-      x.length < y.length
-    }
-    // display-double comparison — Spark struct-field order (null smallest,
-    // NaN greatest), the same cmpVals contract as the numeric form
-    def cmpD(a: Seq[Option[Double]], b: Seq[Option[Double]]): Int =
-      a.zip(b).iterator.map {
-        case (None, None)       => 0
-        case (None, Some(_))    => -1
-        case (Some(_), None)    => 1
-        case (Some(x), Some(y)) =>
-          if (x == y || (x.isNaN && y.isNaN)) 0
-          else if (y.isNaN || (!x.isNaN && x < y)) -1
-          else 1
-      }.find(_ != 0).getOrElse(0)
-    // greatest (ts, pay, disp); NULL ts smallest, like the struct max
-    def later(a: SsvASide, b: SsvASide): SsvASide = {
-      val byTs = (a.ts_us, b.ts_us) match {
-        case (None, None)       => 0
-        case (None, Some(_))    => -1
-        case (Some(_), None)    => 1
-        case (Some(x), Some(y)) => java.lang.Long.compare(x, y)
-      }
-      if (byTs < 0) b else if (byTs > 0) a
-      else if (utf8Lt(a.pay, b.pay)) b
-      else if (utf8Lt(b.pay, a.pay)) a
-      else if (cmpD(a.disp, b.disp) < 0) b
-      else a
-    }
-
-    def step(wk: (Long, Seq[Option[String]], Option[Boolean]),
-             it: Iterator[SsvAEvent],
-             state: GroupState[SsvAState]): Iterator[SsvAOut] = {
-      if (state.hasTimedOut) {
-        val s = state.getOption.getOrElse(SsvAState(None, None))
-        state.remove()
-        val status = (s.l, s.r) match {
-          case (Some(_), None) => "D"
-          case (None, Some(_)) => "I"
-          case (Some(a), Some(b)) => if (a.pay == b.pay) "N" else "C"
-          case (None, None) => "N" // unreachable: a group only opens on an arrival
-        }
-        Iterator.single(SsvAOut(wk._1, wk._2, status,
-          s.l.map(_.pay), s.r.map(_.pay),
-          s.l.map(_.disp), s.r.map(_.disp),
-          s.l.map(_.cvals), s.r.map(_.cvals)))
-      } else {
-        var s = state.getOption.getOrElse(SsvAState(None, None))
-        it.foreach { e =>
-          val obs = SsvASide(e.ts_us, e.pay, e.disp, e.cvals)
-          if (e.left_side) s = s.copy(l = Some(s.l.fold(obs)(later(_, obs))))
-          else s = s.copy(r = Some(s.r.fold(obs)(later(_, obs))))
-        }
-        state.update(s)
-        val endMs = (wk._1 + widthUs) / 1000L
-        state.setTimeoutTimestamp(math.max(endMs, state.getCurrentWatermarkMs() + 1))
-        Iterator.empty
-      }
-    }
-
-    val out = prep(leftFeed, isLeft = true)
-      .unionByName(prep(rightFeed, isLeft = false))
-      .as[SsvAEvent]
-      .groupByKey(e => (e.window_start_us, e.kp,
-        if (e.kp.exists(_.isEmpty)) Some(e.left_side) else None))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(step)
-    val numIdx = numCols.zipWithIndex.toMap
-    val strIdx = strCols.zipWithIndex.toMap
-    def displayPair(c: String): Seq[Column] = numIdx.get(c) match {
-      case Some(i) => Seq(
-        element_at(col("left_disp"), i + 1).as(s"left_$c"),
-        element_at(col("right_disp"), i + 1).as(s"right_$c"))
-      case None =>
-        val i = strIdx(c)
-        Seq(
-          displayRestore(types(c), element_at(col("left_cvals"), i + 1)).as(s"left_$c"),
-          displayRestore(types(c), element_at(col("right_cvals"), i + 1)).as(s"right_$c"))
-    }
-    out.select(col("window_start_us") +:
-      restoredKeyCols(leftFeed.schema, keys) ++:
-      (col("diff_status") +:
-        col("left_payload") +: col("right_payload") +:
-        valCols.flatMap(displayPair)): _*)
-  }
+                                widthUs: Long, delay: String): DataFrame =
+    liveWindowDiff(leftFeed, rightFeed, tsCol, keys, valCols, widthUs, delay,
+      "diffStreamStreamLatestAny", latestAny(valCols))(
+      anyCols(leftFeed.schema, valCols))
 
   /** Continuous-ingest CONTENT dedup against a persisted corpus — the
     * streaming half of dedup_delta: each arriving document hashes to its

@@ -1165,6 +1165,49 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("stream-stream live forms: ONE FlatMapGroupsWithState over a union of per-feed watermarks") {
+    // The MIN-policy contract in plan form: every live surface watermarks
+    // each feed BEFORE the side-tagged union (a single post-union
+    // watermark would advance on the faster feed) and folds both sides in
+    // one stateful operator.
+    import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark,
+      FlatMapGroupsWithState, Union}
+    import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
+    import graft.streaming.StreamOps
+    val dir = java.nio.file.Files.createTempDirectory("graft-planspec-ss-").toString
+    spark.range(1).select(timestamp_micros(lit(0L)).as("ts"), col("id").as("k"),
+        lit(1.0).as("v"), lit("a").as("s"))
+      .write.mode("overwrite").parquet(dir)
+    val schema = spark.read.parquet(dir).schema
+    def feed = spark.readStream.schema(schema).parquet(dir)
+    val (w, d) = (1000000L, "0 seconds")
+    val surfaces = Seq(
+      "diffStreamStream" ->
+        StreamOps.diffStreamStream(feed, feed, "ts", "k", Seq("v", "s"), w, d).toDF(),
+      "diffStreamStreamKeyed" ->
+        StreamOps.diffStreamStreamKeyed(feed, feed, "ts", Seq("k", "s"), Seq("v"), w, d),
+      "diffStreamStreamLatest" ->
+        StreamOps.diffStreamStreamLatest(feed, feed, "ts", "k", Seq("v"), w, d).toDF(),
+      "diffStreamStreamLatestKeyed" ->
+        StreamOps.diffStreamStreamLatestKeyed(feed, feed, "ts", Seq("k", "s"), Seq("v"), w, d),
+      "diffStreamStreamLatestAny" ->
+        StreamOps.diffStreamStreamLatestAny(feed, feed, "ts", Seq("k"), Seq("v", "s"), w, d))
+    for ((name, df) <- surfaces) {
+      val plan = df.queryExecution.analyzed
+      assert(plan.isStreaming, name)
+      val folds = plan.collect { case f: FlatMapGroupsWithState => f }
+      assert(folds.size == 1, s"$name: expected one FlatMapGroupsWithState\n$plan")
+      val unions = plan.collect { case u: Union => u }
+      assert(unions.size == 1 && unions.head.children.size == 2,
+        s"$name: expected one two-feed union\n$plan")
+      unions.head.children.foreach(c =>
+        assert(c.collect { case e: EventTimeWatermark => e }.size == 1,
+          s"$name: each feed must carry its own watermark below the union\n$plan"))
+      assert(plan.collect { case e: EventTimeWatermark => e }.size == 2,
+        s"$name: no watermark may sit above the union\n$plan")
+    }
+  }
+
   test("txn_delete_mor read: the dv subtraction is a broadcast left-anti, not a shuffle join") {
     import graft.sources.TxnLog
     val t = java.nio.file.Files.createTempDirectory("graft-planspec-dv-")

@@ -1221,5 +1221,20 @@ class StreamBatchParitySpec extends SparkTestBase {
       StreamOps.diffStreamStreamLatestKeyed(j, j, "ts", Seq("left_v"), Seq("v"),
         1000000L, "0 seconds"))
     assert(e4.getMessage.contains("display"), e4.getMessage)
+    // a value column named `payload` would display as left_payload /
+    // right_payload, the any-type forms' fixed output columns: both forms
+    // refuse it instead of emitting the names twice
+    val p = g.withColumn("payload", lit(2.0))
+    val e5 = intercept[IllegalArgumentException](
+      StreamOps.diffStreamStreamLatestAny(p, p, "ts", Seq("k"), Seq("v", "payload"),
+        1000000L, "0 seconds"))
+    assert(e5.getMessage.contains("collide") &&
+      e5.getMessage.contains("diffStreamStreamLatestAny"), e5.getMessage)
+    val pb = p.withColumn("ts_us", lit(0L))
+    val e6 = intercept[IllegalArgumentException](
+      StreamOps.diffStreamStreamLatestAnyBatch(pb, pb, "ts_us", Seq("k"),
+        Seq("v", "payload"), 1000000L))
+    assert(e6.getMessage.contains("collide") &&
+      e6.getMessage.contains("diffStreamStreamLatestAnyBatch"), e6.getMessage)
   }
 }

@@ -50,6 +50,46 @@ class StreamCensusPropSpec extends SparkTestBase {
   private def toDF(rows: Seq[Ev]): DataFrame =
     rows.toDF("ts_us", "k", "v", "et")
 
+  /** Equal-timestamp rivals for the latest forms: each of the first four
+    * events gets two more at the same ts and key, with another value and
+    * the strings U+FF5A and U+1D11E. Those two order one way in UTF-8
+    * (Spark, DuckDB) and the other way in Java's UTF-16 `compareTo`, so
+    * the (ts, payload) tie-break decides which event is the latest.
+    */
+  private def withTies(rows: List[Ev]): List[Ev] =
+    rows ++ rows.take(4).zipWithIndex.flatMap { case ((t, k, _, _), i) =>
+      val v = Seq(Some(2.5), None, Some(Double.NaN), Some(-3.75))(i)
+      Seq((t, k, v, Some("\uFF5A")), (t, k, v, Some("\uD834\uDD1E")))
+    }
+
+  /** Rows of a LIVE form over two MemoryStream feeds carrying `l` and `r`
+    * (event time as TIMESTAMP column `ts`), flushed by a far-future
+    * sentinel on both feeds whose own group never closes.
+    */
+  private def liveRows(l: Seq[Ev], r: Seq[Ev], name: String)(
+      diff: (DataFrame, DataFrame) => DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions.{col, timestamp_micros}
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val (lIn, rIn) = (MemoryStream[Ev], MemoryStream[Ev])
+    def feed(in: MemoryStream[Ev]) = in.toDF().toDF("ts_us", "k", "v", "et")
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+    val q = diff(feed(lIn), feed(rIn)).writeStream.format("memory")
+      .queryName(name).outputMode("append").start()
+    try {
+      lIn.addData(l: _*)
+      rIn.addData(r: _*)
+      val sentinel: Ev = (100L * W, Some(-999L), None, None)
+      lIn.addData(sentinel)
+      rIn.addData(sentinel)
+      q.processAllAvailable()
+      rowsOf(spark.table(name))
+    } finally q.stop()
+  }
+
+  /** How many generated pairs per property also run the live form. */
+  private val LiveCases = 3
+
   // ---- the independent model --------------------------------------------
 
   private def canonDouble(v: Option[Double]): String = v match {
@@ -141,6 +181,16 @@ class StreamCensusPropSpec extends SparkTestBase {
       assert(got == want,
         s"case $i diverged from the model\nspark=$got\nmodel=$want\n" +
           s"l=$lRows\nr=$rRows")
+      if (i < LiveCases) {
+        // a key named like a per-side aggregate must not clash with it
+        val n = rowsOf(StreamOps.diffStreamStreamBatchKeyed(
+          toDF(lRows).withColumnRenamed("k", "n"),
+          toDF(rRows).withColumnRenamed("k", "n"), "ts_us", Seq("n"), Seq("v", "et"), W))
+        assert(n == want, s"case $i keyed `n` diverged\nspark=$n\nmodel=$want")
+        val live = liveRows(lRows, rRows, s"census_live_$i")((l, r) =>
+          StreamOps.diffStreamStream(l, r, "ts", "k", Seq("v", "et"), W, "0 seconds").toDF())
+        assert(live == want, s"case $i live diverged\nlive=$live\nmodel=$want")
+      }
     }
   }
 
@@ -207,8 +257,9 @@ class StreamCensusPropSpec extends SparkTestBase {
   }
 
   test("diffStreamStreamLatestBatch == independent JVM model on randomized dual feeds") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.{col, element_at, lit}
     val cases = samples(Gen.zip(feedGen, feedGen), 10, seed = 2828L)
+      .map { case (l, r) => (withTies(l), withTies(r)) }
     for (((lRows, rRows), i) <- cases.zipWithIndex) {
       // second payload column derived deterministically (v*3 - 1), so the
       // tie-break and per-column compare both exercise two fields
@@ -219,6 +270,21 @@ class StreamCensusPropSpec extends SparkTestBase {
       assert(got == want,
         s"case $i diverged from the latest-form model\nspark=$got\nmodel=$want\n" +
           s"l=$lRows\nr=$rRows")
+      if (i < LiveCases) {
+        // a key named like the per-side aggregate struct must not clash
+        val m = rowsOf(StreamOps.diffStreamStreamLatestBatchKeyed(
+          withV2(toDF(lRows)).withColumnRenamed("k", "m"),
+          withV2(toDF(rRows)).withColumnRenamed("k", "m"), "ts_us", Seq("m"),
+          Seq("v", "v2"), W))
+        assert(m == want, s"case $i keyed `m` diverged\nspark=$m\nmodel=$want")
+        val live = liveRows(lRows, rRows, s"latest_live_$i")((l, r) =>
+          StreamOps.diffStreamStreamLatest(withV2(l), withV2(r), "ts", "k",
+              Seq("v", "v2"), W, "0 seconds")
+            .select(col("window_start_us"), col("key"), col("diff_status"),
+              element_at(col("left_values"), 1), element_at(col("right_values"), 1),
+              element_at(col("left_values"), 2), element_at(col("right_values"), 2)))
+        assert(live == want, s"case $i live diverged\nlive=$live\nmodel=$want")
+      }
     }
   }
 
@@ -328,6 +394,12 @@ class StreamCensusPropSpec extends SparkTestBase {
       assert(got == want,
         s"case $i diverged from the tuple-key model\nspark=$got\nmodel=$want\n" +
           s"l=$lRows\nr=$rRows")
+      if (i < LiveCases) {
+        val live = liveRows(lRows, rRows, s"census_keyed_live_$i")((l, r) =>
+          StreamOps.diffStreamStreamKeyed(l, r, "ts", Seq("k", "et"), Seq("v"),
+            W, "0 seconds"))
+        assert(live == want, s"case $i live diverged\nlive=$live\nmodel=$want")
+      }
     }
   }
 
@@ -400,6 +472,7 @@ class StreamCensusPropSpec extends SparkTestBase {
     // the (ts, payload-utf8, display) pick order, the canonical string,
     // and the typed et display from the documented contract alone.
     val cases = samples(Gen.zip(feedGen, feedGen), 12, seed = 5656L)
+      .map { case (l, r) => (withTies(l), withTies(r)) }
     for (((lRows, rRows), i) <- cases.zipWithIndex) {
       val got = rowsOf(StreamOps.diffStreamStreamLatestAnyBatch(
         toDF(lRows), toDF(rRows), "ts_us", Seq("k"), Seq("v", "et"), W))
@@ -407,6 +480,12 @@ class StreamCensusPropSpec extends SparkTestBase {
       assert(got == want,
         s"case $i diverged from the any-latest model\nspark=$got\nmodel=$want\n" +
           s"l=$lRows\nr=$rRows")
+      if (i < LiveCases) {
+        val live = liveRows(lRows, rRows, s"any_live_$i")((l, r) =>
+          StreamOps.diffStreamStreamLatestAny(l, r, "ts", Seq("k"), Seq("v", "et"),
+            W, "0 seconds"))
+        assert(live == want, s"case $i live diverged\nlive=$live\nmodel=$want")
+      }
     }
   }
 }
