@@ -50,7 +50,8 @@ object Graft {
 
   /** The composed human-readable report (counts / status census /
     * per-column stats / example rows) as one long-format typed frame.
-    * Eager for the tiny stats aggregate; see [[operators.Differ.report]].
+    * Lazy: building it runs no job, and running it reads the diff join
+    * once; see [[operators.Differ.report]].
     */
   def diffReport(left: DataFrame, right: DataFrame, keys: Seq[String],
                  exampleOn: String, opts: DiffOptions = DiffOptions(),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, NamedArgumentExpression}
 import graft.functions.{BoundedLevenshtein, ByteVecDot, FloatVecDot, SortedIntersectCount, SortedLongIntersectCount}
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -37,7 +38,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  private lazy val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (
       FunctionIdentifier("float_vec_dot"),
       new ExpressionInfo(classOf[FloatVecDot].getName, "float_vec_dot"),
@@ -96,7 +97,7 @@ object GraftExtensions {
     * the key CSV must be STRING literals — they choose the plan shape, so
     * they cannot be data-dependent by construction.
     */
-  private def tableDescriptors: Seq[(FunctionIdentifier, ExpressionInfo,
+  private lazy val tableDescriptors: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => LogicalPlan)] = Seq(
     (
       FunctionIdentifier("graft_diff"),
@@ -359,11 +360,8 @@ object GraftExtensions {
     * defaults to the first shared non-key column (the report degrades
     * the value pair to NULL when it isn't a compared column, never
     * fails); `k` bounds the example rows per status. Every other named
-    * option folds onto [[DiffOptions]] exactly like `graft_diff`. NOTE:
-    * report construction collects its ≤4-row status census eagerly (the
-    * documented bounded collect in Differ.report), so THIS TVF runs that
-    * 4-row job at analysis time — the splice is still one plan and the
-    * examples/aggregates stay distributed.
+    * option folds onto [[DiffOptions]] exactly like `graft_diff`. The
+    * report is one lazy plan, so analysing this TVF runs no Spark job.
     */
   private def reportTvf(args: Seq[Expression]): LogicalPlan = {
     val (named0, positional) = args.partition(_.isInstanceOf[NamedArgumentExpression])
@@ -640,17 +638,22 @@ object GraftExtensions {
 
   /** Runtime registration into an existing session (idempotent): the
     * kernel functions, the diff table functions, plus the
-    * bounded-Levenshtein optimizer rewrite.
+    * bounded-Levenshtein optimizer rewrite. A name already bound to this
+    * object's own builder is left alone, so repeated calls neither
+    * replace an entry nor log Spark's replacement warning.
     */
   def register(spark: SparkSession): Unit = {
-    descriptors.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-    tableDescriptors.foreach { case (ident, info, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
-    }
+    registerNew(spark.sessionState.functionRegistry, descriptors)
+    registerNew(spark.sessionState.tableFunctionRegistry, tableDescriptors)
     if (!spark.experimental.extraOptimizations.contains(graft.plans.BoundedLevenshteinRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.BoundedLevenshteinRewrite
   }
+
+  private def registerNew[T](registry: FunctionRegistryBase[T],
+      entries: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => T)]): Unit =
+    entries.foreach { case (ident, info, builder) =>
+      if (!registry.lookupFunctionBuilder(ident).contains(builder))
+        registry.registerFunction(ident, info, builder)
+    }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 /** Dev-only per-key cost profiler for the optimization rounds (not part of
   * the declared surface; run via `sbt "runMain graft.Profile <k1,k2,...>"`).
   *
-  * For each named declared query, after one untimed warm pass, splits the
-  * warm cost into:
+  * For each named declared query, runs a warm pass (iter 0) and then
+  * `iters` more, and splits each one's cost into:
   *   - build_s: the `fn(spark, sfDir)` call — plan construction INCLUDING
   *     any eager jobs the operator runs at construction time (key-election
   *     collects, codebook builds, fixture writes);
@@ -16,7 +16,11 @@ import org.apache.spark.sql.SparkSession
   * and prints every Spark job that ran, with wall ms, description and its
   * stages' call sites with task counts (`parquet at TxnLog.scala:648
   * [1t]`) — the "which job is the expensive one, and which line fired it"
-  * view the disabled UI would give.
+  * view the disabled UI would give. Each of build and exec also reports
+  * the generated classes Spark compiled during it (the JVM-wide
+  * `CodegenMetrics` compile count, so a class already in Spark's codegen
+  * cache counts 0) and the JIT compiler's milliseconds
+  * (`CompilationMXBean`).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -53,18 +57,20 @@ object Profile {
     for (key <- keys) {
       val fn = SparkEntry.queries.getOrElse(key,
         sys.error(s"Profile: unknown query '$key'"))
-      force(fn(spark, sfDir)) // warm
-      for (i <- 1 to iters) {
+      // iter 0 is the warm pass, which pays the key's first compiles.
+      for (i <- 0 to iters) {
         done.clear()
         spark.sparkContext.setJobDescription(s"$key build")
-        val t0 = System.nanoTime()
+        val (t0, c0) = (System.nanoTime(), compileCounters())
         val df = fn(spark, sfDir)
-        val t1 = System.nanoTime()
+        val (t1, c1) = (System.nanoTime(), compileCounters())
         spark.sparkContext.setJobDescription(s"$key exec")
         force(df)
-        val t2 = System.nanoTime()
+        val (t2, c2) = (System.nanoTime(), compileCounters())
         println(f"[profile] $key iter $i: build ${(t1 - t0) / 1e9}%.3fs  " +
           f"exec ${(t2 - t1) / 1e9}%.3fs  total ${(t2 - t0) / 1e9}%.3fs")
+        println(s"[profile]   codegen: build ${c1._1 - c0._1} classes, " +
+          s"jit ${c1._2 - c0._2} ms; exec ${c2._1 - c1._1} classes, jit ${c2._2 - c1._2} ms")
         // drain listener events (job end can lag the action return slightly)
         Thread.sleep(200)
         val evs = done.toArray(Array.empty[(Int, Long, String)]).sortBy(_._1)
@@ -84,4 +90,11 @@ object Profile {
     }
     spark.stop()
   }
+
+  private val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+
+  /** (generated classes compiled, JIT milliseconds) so far in this JVM. */
+  private def compileCounters(): (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      if (jit.isCompilationTimeMonitoringSupported) jit.getTotalCompilationTime else 0L)
 }

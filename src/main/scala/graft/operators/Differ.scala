@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1489,10 +1490,10 @@ object Differ {
     rows.toDF("column_name", "left_type", "right_type", "status")
   }
 
-  /** Canonical whole-row fingerprint for key-less bag diff, and the building
-    * block of the two-phase 100 TB diff (compare 32-byte hashes first; join
-    * full rows only for the differing subset): a SHA-256 hex expression
-    * over `cols` of `df`.
+  /** Canonical whole-row fingerprint for the key-less bag diff
+    * ([[diffUnkeyed]]) and duplicate-key pairing: a SHA-256 hex expression
+    * over `cols` of `df`. The keyed hash paths use [[exactHashCol]]
+    * instead: this rendering rounds doubles to cents.
     *
     * Canonical string rules (must match the DuckDB oracle bit-for-bit):
     * ints/strings as-is, doubles via DECIMAL(18,2) with NaN/+-Inf named
@@ -1500,18 +1501,34 @@ object Differ {
     * timestamps via epoch micros, nulls as U+2400, fields joined on
     * U+001F.
     */
-  def rowHashCol(df: DataFrame, cols: Seq[String]): Column = {
+  def rowHashCol(df: DataFrame, cols: Seq[String]): Column =
+    fingerprint(df, cols, c =>
+      // NaN / +-Inf cast to DECIMAL as NULL, which would collide with
+      // genuine NULLs (caught by DifferPropSpec: NaN-vs-null must hash
+      // apart, as <=> tells them apart) — name them explicitly.
+      when(isnan(c), lit("NaN"))
+        .when(c === Double.PositiveInfinity, lit("Inf"))
+        .when(c === Double.NegativeInfinity, lit("-Inf"))
+        .otherwise(c.cast(DecimalType(18, 2)).cast(StringType)))
+
+  /** The hash paths' fingerprint: [[rowHashCol]]'s rules, except that a
+    * floating value renders EXACTLY (Java's round-trip form, so distinct
+    * values hash apart and no magnitude overflows), with -0.0 folded onto
+    * 0.0 and every NaN rendered alike: two floating values render alike
+    * exactly when `<=>` calls them equal. Not mirrored by any oracle,
+    * unlike rowHashCol.
+    */
+  private def exactHashCol(df: DataFrame, cols: Seq[String]): Column =
+    fingerprint(df, cols, c => when(c === 0, lit(0)).otherwise(c).cast(StringType))
+
+  /** SHA-256 hex over `cols` of `df`, each rendered as a string (floating
+    * columns by `floating`), NULL as U+2400, joined on U+001F.
+    */
+  private def fingerprint(df: DataFrame, cols: Seq[String],
+                          floating: Column => Column): Column = {
     val parts = cols.map { c =>
-      val dt = df.schema(c).dataType
-      val s = dt match {
-        case DoubleType | FloatType =>
-          // NaN / +-Inf cast to DECIMAL as NULL, which would collide with
-          // genuine NULLs (caught by DifferPropSpec: diffViaHash must call
-          // NaN-vs-null C exactly like <=> does) — name them explicitly.
-          when(isnan(bq(c)), lit("NaN"))
-            .when(bq(c) === Double.PositiveInfinity, lit("Inf"))
-            .when(bq(c) === Double.NegativeInfinity, lit("-Inf"))
-            .otherwise(bq(c).cast(DecimalType(18, 2)).cast(StringType))
+      val s = df.schema(c).dataType match {
+        case DoubleType | FloatType => floating(bq(c))
         case TimestampNTZType       => unix_micros(bq(c).cast(TimestampType)).cast(StringType)
         case TimestampType          => unix_micros(bq(c)).cast(StringType)
         case _: MapType             =>
@@ -1534,17 +1551,17 @@ object Differ {
 
   /** The hash paths' key classification: each side of
     * [[Keyed.hashSides]], narrowed by `rows`, projects to keys + one
-    * [[rowHashCol]] fingerprint of the value columns; the two full-outer
+    * [[exactHashCol]] fingerprint of the value columns; the two full-outer
     * join on the keys and come back as the non-N `(status, keys)` rows,
     * one per key. The key join is always null-safe `<=>`, whatever
-    * [[DiffOptions.nullSafeKeys]] says, and the compare is exact hash
-    * equality: tolerance options do not apply.
+    * [[DiffOptions.nullSafeKeys]] says, and the compare is fingerprint
+    * equality, i.e. exact `<=>` equality: tolerance options do not apply.
     */
   private def hashClassified(p: Keyed,
                              rows: DataFrame => DataFrame = identity): DataFrame = {
     val VH = "__graft_vhash"
     def hashed(df: DataFrame, alias: String): DataFrame =
-      rows(df).select(p.keys.map(bq) :+ rowHashCol(df, p.vcols).as(VH): _*).alias(alias)
+      rows(df).select(p.keys.map(bq) :+ exactHashCol(df, p.vcols).as(VH): _*).alias(alias)
     val (lh, rh) = (hashed(p.hashSides._1, "lh"), hashed(p.hashSides._2, "rh"))
     val (lv, rv) = (col(s"lh.$VH"), col(s"rh.$VH"))
     lh.join(rh, p.keys.map(k => q("lh", k) <=> q("rh", k)).reduce(_ && _), "full_outer")
@@ -1564,8 +1581,10 @@ object Differ {
     *
     * Returns exactly `diff(left, right, keys).filter(status != 'N')` —
     * N rows are intentionally not materialized (at scale they ARE the
-    * data); equivalence is pinned by DifferSpec. Hash comparison is exact:
-    * tolerance options do not apply (use [[diff]] for tolerant compare).
+    * data); equivalence is pinned by DifferSpec. Hash comparison is exact
+    * ([[exactHashCol]]: floating values render exactly, -0.0 equals 0.0,
+    * NaN equals NaN, as `<=>` has them): tolerance options do not apply
+    * (use [[diff]] for tolerant compare).
     * The DISCRETE options do apply: retyped columns widen before hashing,
     * digestCols hash (and report) the digest, and ignoreCase/trimWs
     * normalize the classification hash while phase 2 still fetches the
@@ -1587,11 +1606,12 @@ object Differ {
   }
 
   /** Per-bucket content digest for [[diffIncremental]]: rows are hashed
-    * (key + value columns, same [[rowHashCol]] canonicalization as
-    * [[diffViaHash]]), bucketed by key hash, and each bucket reduced to an
+    * (key + value columns, the same exact [[exactHashCol]] fingerprint
+    * as [[diffViaHash]]), bucketed by key hash, and each bucket reduced to an
     * order-free exact digest — the DECIMAL(38,0) sum of the top 60 bits of
-    * each row's sha plus the row count. Equal bucket contents ⇒ equal
-    * digests always; unequal contents collide with probability ~2⁻⁶⁰ per
+    * each row's sha plus the row count. Bucket contents equal under `<=>`
+    * (so -0.0 = 0.0 and NaN = NaN, while 1.001 ≠ 1.002) ⇒ equal digests
+    * always; unequal contents collide with probability ~2⁻⁶⁰ per
     * bucket (sum of independent 60-bit values), the same class of risk
     * [[diffViaHash]] already accepts on its 256-bit equality.
     *
@@ -1604,7 +1624,7 @@ object Differ {
                     buckets: Int): DataFrame =
     df.select(
         pmod(xxhash64(keys.map(bq): _*), lit(buckets)).as(BK),
-        conv(substring(rowHashCol(df, keys ++ vcols), 1, 15), 16, 10)
+        conv(substring(exactHashCol(df, keys ++ vcols), 1, 15), 16, 10)
           .cast(DecimalType(38, 0)).as("h"))
       .groupBy(BK)
       .agg(sum(col("h")).as("digest"), count(lit(1)).as("n"))
@@ -1642,7 +1662,8 @@ object Differ {
     * Returns exactly `diff(left, right, keys).filter(status != 'N')`
     * projected to (status, keys) — pruning is content-lossless, so the
     * oracle is the plain full-outer classification. The discrete options
-    * apply exactly as in [[diffViaHash]]; tolerance options do not.
+    * apply exactly as in [[diffViaHash]], and so does its exact compare;
+    * tolerance options do not.
     */
   def diffIncremental(left: DataFrame, right: DataFrame, keys: Seq[String],
                       buckets: Int = 64,
@@ -2419,7 +2440,7 @@ object Differ {
   /** The headline human-readable artifact (datacompy's `report()`): ONE
     * long-format frame `(section, item, n, left_val, right_val)` composing
     *   - `counts`:       left_rows / right_rows,
-    *   - `summary`:      rows per diff status,
+    *   - `summary`:      rows per diff status (statuses with n > 0 only),
     *   - `column_stats`: per value column, matched rows where it differs,
     *   - `examples:<S>`: first `k` non-N rows per status (ordered by key),
     *                     with the `exampleOn` value pair.
@@ -2427,19 +2448,24 @@ object Differ {
     * stringly-rendered report would re-open every cross-engine float
     * formatting divergence.
     *
-    * 100 TB shape: exactly TWO passes over the single-shuffle full-outer
-    * [[diff]] frame, never one per section — counts, summary AND all
-    * column stats come out of ONE map-side-combinable aggregate (≤4 status
-    * rows × (1 + n_cols) accumulators; left_rows = N+C+D and right_rows =
-    * N+C+I are arithmetic over those 4 rows, not extra scans), and the
-    * example rows ride the bucketed two-phase [[TextOps.topKPerGroup]]
-    * (statuses × k output, no per-status single-task window). The
-    * aggregate runs EAGERLY at call time and lands in a status-alphabet-
-    * bounded local relation (≤4 rows — the codebook-collect precedent):
-    * without it each stat section is a Union branch and Spark re-executes
-    * the diff join per branch. When the changed fraction is small, feed
-    * this the [[diffViaHash]] two-phase path instead of materializing N
-    * rows.
+    * Lazy, one shuffle: building the report runs no Spark job, and the
+    * plan reads the single-shuffle full-outer [[diff]] frame ONCE, so
+    * executing it writes each side's key-hash shuffle once. Every section
+    * comes out of ONE global aggregate over that frame: four status
+    * counts, one changed count per value column, and per non-N status the
+    * k smallest (keys…, example pair) structs, a heap of at most k per
+    * partial buffer (at most statuses × k rows per partition reach the
+    * final merge, at any scale). One generator then emits all rows;
+    * left_rows = N+C+D and right_rows = N+C+I are arithmetic over the
+    * counts. A union of a stat
+    * branch and a separate examples branch would read the diff twice:
+    * adaptive execution reuses an exchange only when its subtree matches,
+    * and a cached input becomes a distinct table-cache stage per branch,
+    * so over cached inputs the join would run twice. Empty summary rows
+    * are dropped inside the generator's input array: a plan-level filter
+    * over a stacked report has run the optimizer's constraint propagation
+    * out of heap. When the changed fraction is small, feed this the
+    * [[diffViaHash]] two-phase path instead of materializing N rows.
     */
   def report(left: DataFrame, right: DataFrame, keys: Seq[String],
              exampleOn: String,
@@ -2449,82 +2475,54 @@ object Differ {
     val vcols = p.vcols
     val st = opts.statusCol
     val d = diffOf(p)
-    val matched = col(st).isin("N", "C")
     val nullD = lit(null).cast("double")
 
-    // Pass 1: per-status counts + per-column changed counts in one agg.
-    val aggs = count(lit(1)).as("n") +: vcols.map { c =>
-      sum(when(matched && !p.colEq(c, bq(s"${opts.leftPrefix}$c"),
-          bq(s"${opts.rightPrefix}$c")), 1L)
-        .otherwise(0L)).as(s"__d_$c")
-    }
-    // Materialize the aggregate as a LOCAL relation: the frame is bounded
-    // by the status alphabet (≤4 rows × (1 + n_cols) longs), never by
-    // data — the codebook-sized-collect precedent. Without this, each of
-    // the three stat sections below is its own Union branch and Spark
-    // re-executes the full-outer join PER BRANCH (observed: 4 joins in
-    // the physical plan); off the local relation the join runs exactly
-    // once for all stats. Cost: report construction is eager for this
-    // 4-row job — documented in the scaladoc.
-    val perStatusAgg = d.groupBy(col(st)).agg(aggs.head, aggs.tail: _*)
-    val perStatus = left.sparkSession.createDataFrame(
-      java.util.Arrays.asList(perStatusAgg.collect(): _*), perStatusAgg.schema)
+    // The example pair: try_cast, not cast — under ANSI a plain cast
+    // THROWS on a non-numeric exampleOn column (the totality house rule),
+    // so a string example column degrades to NULL values, never a crash.
+    // An exampleOn that isn't a shared value column (incl. the
+    // zero-value-column degenerate case) degrades the same way: the
+    // example ROWS still matter, only the value pair is absent.
+    def exampleVal(prefix: String): Column =
+      if (vcols.contains(exampleOn)) expr(s"try_cast(${sqlBq(s"$prefix$exampleOn")} AS DOUBLE)")
+      else nullD
+    // A struct orders field by field, so the k smallest of (keys…, values)
+    // are the first k rows in key order.
+    val example = struct((keys.zipWithIndex.map { case (kc, i) => bq(kc).as(s"k$i") } :+
+      exampleVal(opts.leftPrefix).as("lv") :+ exampleVal(opts.rightPrefix).as("rv")): _*)
+    val exampleStatuses = if (k > 0) Seq("C", "I", "D") else Nil
 
-    val summary = perStatus.select(lit("summary").as("section"),
-      col(st).as("item"), col("n").cast("long").as("n"),
-      nullD.as("left_val"), nullD.as("right_val"))
-
-    // counts + column totals: arithmetic over the ≤4-row local frame.
-    // coalesce-to-0: on two EMPTY inputs the diff has no rows, the local
-    // aggregate is empty, and bare sums over it are NULL — the report must
-    // still read "0 rows on both sides", not nulls.
-    val totals = perStatus.agg(
-      coalesce(sum(when(col(st).isin("N", "C", "D"), col("n")).otherwise(0L)), lit(0L))
-        .as("left_rows"),
-      (coalesce(sum(when(col(st).isin("N", "C", "I"), col("n")).otherwise(0L)), lit(0L))
-        .as("right_rows") +:
-        vcols.map(c => coalesce(sum(col(s"__d_$c")), lit(0L)).as(s"__t_$c"))): _*)
-    val counts = totals.selectExpr(
-      "stack(2, 'left_rows', left_rows, 'right_rows', right_rows) as (item, n)")
-      .select(lit("counts").as("section"), col("item"), col("n").cast("long").as("n"),
+    // count(when(…)), not sum: 0, not NULL, over two empty inputs.
+    val statuses = Seq("N", "C", "I", "D")
+    def n(status: String): Column = col(s"__graft_n$status")
+    val aggs = statuses.map(s => count(when(col(st) === s, 1)).as(s"__graft_n$s")) ++
+      vcols.zipWithIndex.map { case (c, i) =>
+        count(when(col(st).isin("N", "C") && !p.colEq(c, bq(s"${opts.leftPrefix}$c"),
+          bq(s"${opts.rightPrefix}$c")), 1)).as(s"__graft_c$i")
+      } ++ exampleStatuses.map { s =>
+        ColumnBridge.smallestK(when(col(st) === s, example), k).as(s"__graft_e$s")
+      }
+    val totals = d.agg(aggs.head, aggs.tail: _*)
+    def row(section: String, item: String, cnt: Column): Column =
+      struct(lit(section).as("section"), lit(item).as("item"), cnt.as("n"),
         nullD.as("left_val"), nullD.as("right_val"))
-    // Skip the section entirely when the two frames share only key
-    // columns: `stack(0, )` is a parse error, whereas diff() handles the
-    // empty value set fine (everything matched is N) — the report must
-    // degrade the same way. Names are escaped into the
-    // generated SQL (quote inside a column name ends the literal).
-    val colStats =
-      if (vcols.isEmpty)
-        summary.filter(lit(false))
-          .select(lit("column_stats").as("section"), col("item"), col("n"),
-            col("left_val"), col("right_val"))
-      else totals.selectExpr(
-        s"stack(${vcols.size}, " +
-          s"${vcols.map(c => s"'${sqlStr(c)}', ${sqlBq(s"__t_$c")}").mkString(", ")}) " +
-          "as (item, n)")
-        .select(lit("column_stats").as("section"), col("item"),
-          col("n").cast("long").as("n"), nullD.as("left_val"), nullD.as("right_val"))
-
-    // Pass 2: k example rows per non-N status, deterministic key order.
-    val examples = TextOps.topKPerGroup(
-      d.filter(col(st) =!= "N"), Seq(st), keys.map(bq), k = k,
-      bucketOn = bq(keys.head))
-      .select(concat(lit("examples:"), col(st)).as("section"),
-        concat_ws("|", keys.map(kc => bq(kc).cast("string")): _*).as("item"),
-        col("rank").cast("long").as("n"),
-        // try_cast, not cast: under ANSI a plain cast THROWS on a
-        // non-numeric exampleOn column (the totality house rule) — a
-        // string example column degrades to NULL values, never a crash.
-        // An exampleOn that isn't a shared value column (incl. the
-        // zero-value-column degenerate case) degrades the same way: the
-        // example ROWS still matter, only the value pair is absent.
-        (if (vcols.contains(exampleOn))
-          expr(s"try_cast(${sqlBq(s"${opts.leftPrefix}$exampleOn")} AS DOUBLE)")
-        else nullD).as("left_val"),
-        (if (vcols.contains(exampleOn))
-          expr(s"try_cast(${sqlBq(s"${opts.rightPrefix}$exampleOn")} AS DOUBLE)")
-        else nullD).as("right_val"))
-
-    summary.unionByName(counts).unionByName(colStats).unionByName(examples)
+    val stats = statuses.map(s => row("summary", s, n(s))) ++
+      Seq(row("counts", "left_rows", n("N") + n("C") + n("D")),
+        row("counts", "right_rows", n("N") + n("C") + n("I"))) ++
+      vcols.zipWithIndex.map { case (c, i) => row("column_stats", c, col(s"__graft_c$i")) }
+    val examples = exampleStatuses.map { s =>
+      transform(col(s"__graft_e$s"), (x, i) => struct(lit(s"examples:$s").as("section"),
+        concat_ws("|", keys.indices.map(j => x.getField(s"k$j").cast("string")): _*).as("item"),
+        (i + 1).cast("long").as("n"), x.getField("lv").as("left_val"),
+        x.getField("rv").as("right_val")))
+    }
+    // The cast only widens nullability: `item` and `n` stay nullable, as
+    // the report's schema has always declared them.
+    val rowType = StructType(Seq(StructField("section", StringType, nullable = false),
+      StructField("item", StringType), StructField("n", LongType),
+      StructField("left_val", DoubleType), StructField("right_val", DoubleType)))
+    totals.select(inline(filter(concat(array(stats: _*) +: examples: _*),
+      r => r.getField("section") =!= "summary" || r.getField("n") > 0)
+      .cast(ArrayType(rowType, containsNull = false))))
   }
 }

@@ -839,10 +839,10 @@ object DiffQueries {
     // columns — a pretty-printed string report would re-open every
     // cross-engine float-formatting divergence; rendering to text is a
     // presentation concern on 2+S+C+E rows, not a distributed one.
-    // 100 TB shape (see Differ.report): TWO passes over the one-shuffle
-    // full-outer diff — counts + summary + ALL column stats from one
-    // map-side-combinable aggregate, examples via the bucketed two-phase
-    // topKPerGroup — never a pass per section.
+    // 100 TB shape (see Differ.report): ONE lazy pass over the
+    // one-shuffle full-outer diff — counts, summary, column stats and the
+    // k-bounded example heaps all from one map-side-combinable aggregate
+    // — never a pass per section, and no job before the report runs.
     Q("diff_report",
       s"""$Prelude,
          |d AS (SELECT

@@ -17,14 +17,22 @@ class DifferPropSpec extends SparkTestBase {
 
   private case class Tbl(rows: Seq[(Long, Option[String], Option[Double])])
 
-  private val rowGen: Gen[(Long, Option[String], Option[Double])] = for {
-    k <- Gen.choose(0L, 30L)
-    s <- Gen.option(Gen.oneOf("a", "b", "c"))
-    v <- Gen.option(Gen.oneOf(1.0, 2.5, Double.NaN, -0.0))
-  } yield (k, s, v)
-
-  private val tblGen: Gen[Tbl] =
+  private def tblOf(values: Seq[Double]): Gen[Tbl] = {
+    val rowGen = for {
+      k <- Gen.choose(0L, 30L)
+      s <- Gen.option(Gen.oneOf("a", "b", "c"))
+      v <- Gen.option(Gen.oneOf(values))
+    } yield (k, s, v)
     Gen.listOf(rowGen).map(rs => Tbl(rs.distinctBy(_._1))) // key-unique
+  }
+
+  private val tblGen: Gen[Tbl] = tblOf(Seq(1.0, 2.5, Double.NaN, -0.0))
+
+  /** [[tblGen]] plus values a rounded or overflowing hash rendering would
+    * merge or reject: 1.001 vs 1.002, 0.0 vs -0.0, and 1e17.
+    */
+  private val hashTblGen: Gen[Tbl] =
+    tblOf(Seq(1.0, 2.5, Double.NaN, -0.0, 1.001, 1.002, 0.0, 1e17))
 
   /** Deterministic sampler: walks the generator with a fixed seed. */
   private def samples[T](g: Gen[T], n: Int, seed: Long): Seq[T] = {
@@ -86,9 +94,9 @@ class DifferPropSpec extends SparkTestBase {
   }
 
   test("diffViaHash equals diff.filter(status != N) on generated tables") {
-    // NaN / -0.0 / null values are in the generator domain: the hash
-    // canonicalization must agree with <=> on all of them.
-    for ((ta, tb) <- samples(Gen.zip(tblGen, tblGen), 8, seed = 99L)) {
+    // NaN / -0.0 / null and near-equal / huge values are in the generator
+    // domain: the hash canonicalization must agree with <=> on all of them.
+    for ((ta, tb) <- samples(Gen.zip(hashTblGen, hashTblGen), 8, seed = 99L)) {
       val (a, b) = (toDF(ta), toDF(tb))
       val viaHash = rowsOf(Differ.diffViaHash(a, b, Seq("k")))
       val direct = rowsOf(Differ.diff(a, b, Seq("k")).filter(col("diff_status") =!= "N"))
@@ -98,8 +106,10 @@ class DifferPropSpec extends SparkTestBase {
 
   test("diffIncremental equals diff.filter(status != N) keys on generated tables") {
     // Small bucket counts force dirty and clean keys to share buckets;
-    // pruning must stay content-lossless over NaN / -0.0 / null values.
-    for (((ta, tb), i) <- samples(Gen.zip(tblGen, tblGen), 8, seed = 1234L).zipWithIndex) {
+    // pruning must stay content-lossless over NaN / -0.0 / null and
+    // near-equal / huge values.
+    for (((ta, tb), i) <- samples(Gen.zip(hashTblGen, hashTblGen), 8, seed = 1234L)
+        .zipWithIndex) {
       val (a, b) = (toDF(ta), toDF(tb))
       val inc = rowsOf(Differ.diffIncremental(a, b, Seq("k"), buckets = 1 + i % 4))
       val direct = rowsOf(Differ.diff(a, b, Seq("k"))

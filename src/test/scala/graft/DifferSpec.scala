@@ -186,6 +186,19 @@ class DifferSpec extends SparkTestBase {
     assert(statusCounts(inc) == Map("C" -> 3L, "D" -> 1L, "I" -> 1L))
   }
 
+  test("hash paths classify floating values exactly: 1.001 vs 1.002, -0.0, NaN, 1e17") {
+    val l = Seq((1L, 1.001), (2L, -0.0), (3L, Double.NaN), (4L, 1e17), (5L, 2e17))
+      .toDF("k", "v")
+    val r = Seq((1L, 1.002), (2L, 0.0), (3L, Double.NaN), (4L, 1e17), (5L, 3e17))
+      .toDF("k", "v")
+    val direct = Differ.diff(l, r, keys).filter(col("diff_status") =!= "N")
+    assert(rowsOf(direct.select("diff_status", "k")) == Seq("C|1", "C|5"))
+    assert(rowsOf(Differ.diffViaHash(l, r, keys)) == rowsOf(direct))
+    for (b <- Seq(1, 4))
+      assert(rowsOf(Differ.diffIncremental(l, r, keys, buckets = b)) ==
+        rowsOf(direct.select("diff_status", "k")), s"buckets = $b")
+  }
+
   test("applyChangeset(left, diff(left, right)) reconstructs right exactly (null keys included)") {
     val l = Seq(
       (Some(1L), Some("a"), Some(1.5)), (Some(2L), Some("b"), Some(2.5)),
@@ -485,6 +498,32 @@ class DifferSpec extends SparkTestBase {
     val repS = Differ.report(l, r, Seq("k"), exampleOn = "s").collect()
     val exS = repS.filter(_.getString(0) == "examples:C")
     assert(exS.length == 1 && exS.head.isNullAt(3) && exS.head.isNullAt(4))
+  }
+
+  test("report examples: the first k keys per non-N status in key order (composite, null keys)") {
+    // 40 keys over (a, b) with a NULL `a`; every status well above k rows.
+    val l = (0 until 40).filter(_ % 10 != 3).map { i =>
+      (Option.when(i % 7 != 0)(i % 5), i, i.toDouble) }.toDF("a", "b", "p")
+    val r = (0 until 40).filter(_ % 10 != 7).map { i =>
+      (Option.when(i % 7 != 0)(i % 5), i, if (i % 3 == 0) i + 0.5 else i.toDouble)
+    }.toDF("a", "b", "p")
+    val ks = Seq("a", "b")
+    val d = Differ.diff(l, r, ks).filter(col("diff_status") =!= "N").collect()
+    for (k <- Seq(0, 2, 5, 50)) {
+      val rep = Differ.report(l, r, ks, exampleOn = "p", k = k)
+      assert(rep.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)) == Seq(
+        ("section", "string", false), ("item", "string", true), ("n", "bigint", true),
+        ("left_val", "double", true), ("right_val", "double", true)))
+      val got = rep.filter(col("section").startsWith("examples:")).collect()
+        .map(x => (x.getString(0), x.getString(1), x.getLong(2))).sortBy(x => (x._1, x._3)).toSeq
+      val want = d.groupBy(_.getAs[String]("diff_status")).toSeq.flatMap { case (s, rows) =>
+        rows.map(x => (Option(x.getAs[Integer]("a")).map(_.toInt), x.getAs[Int]("b")))
+          .sorted.take(k).zipWithIndex.map { case ((a, b), i) =>
+            // concat_ws skips a NULL key part
+            (s"examples:$s", (a.toSeq :+ b).mkString("|"), i + 1L) }
+      }.sortBy(x => (x._1, x._3))
+      assert(got == want, s"k = $k")
+    }
   }
 
   test("subsetCheck: true subset verdicts 1; each violation arm trips it independently") {

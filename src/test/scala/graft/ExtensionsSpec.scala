@@ -39,6 +39,28 @@ class ExtensionsSpec extends SparkTestBase {
     assert(n == 1L)
   }
 
+  test("register twice keeps every registered entry (no replacement)") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    GraftExtensions.register(spark)
+    val (fns, tvfs) = (spark.sessionState.functionRegistry,
+      spark.sessionState.tableFunctionRegistry)
+    val names = Seq("float_vec_dot", "bounded_levenshtein", "graft_diff", "graft_diff_report")
+      .map(FunctionIdentifier(_))
+    // A replacement stores a new (info, builder) pair; the same pair means
+    // the second call left the entry alone.
+    def entries: Seq[(ExpressionInfo, AnyRef)] = names.map { n =>
+      fns.lookupFunction(n).zip(fns.lookupFunctionBuilder(n))
+        .orElse(tvfs.lookupFunction(n).zip(tvfs.lookupFunctionBuilder(n)))
+        .getOrElse(fail(s"$n is not registered"))
+    }
+    val before = entries
+    GraftExtensions.register(spark)
+    entries.zip(before).foreach { case ((info, builder), (info0, builder0)) =>
+      assert((info eq info0) && (builder eq builder0), s"${info.getName} was replaced")
+    }
+  }
+
   test("optimizer rule rewrites levenshtein(a,b) <= k onto the banded kernel, semantics intact") {
     import spark.implicits._
     val rows = Seq(

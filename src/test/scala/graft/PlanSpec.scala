@@ -1470,19 +1470,38 @@ class PlanSpec extends SparkTestBase {
       "stitch window runs over raw rows, not the bands-sized per-band aggregate")
   }
 
-  test("diff_report: stat sections ride the local 4-row aggregate — exactly ONE lazy join") {
-    // r11: the lazy composition re-executed the full-outer diff once per
-    // Union branch (4 joins observed). The fix collects the ≤4-row
-    // per-status aggregate into a LocalRelation, leaving the examples
-    // top-k as the single lazy join. Pin both properties.
-    val df = queryNamed(graft.queries.DiffQueries.all, "diff_report")
-    val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }
-    assert(joins.size == 1 && joins.head.joinType == FullOuter,
-      s"expected exactly one lazy FullOuter (examples), got ${joins.map(_.joinType)}")
-    val locals = df.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l }
-    assert(locals.nonEmpty,
-      "stat sections must project from the collected local aggregate")
+  test("diff_report builds lazily: Differ.report and graft_diff_report analysis fire no job") {
+    import graft.operators.Differ
+    GraftExtensions.register(spark)
+    val (l, r) = (DiffQueries.left(spark, sf), DiffQueries.right(spark, sf))
+    l.createOrReplaceTempView("plan_rep_l")
+    r.createOrReplaceTempView("plan_rep_r")
+    assert(fired(Differ.report(l, r, Seq("o_orderkey"), exampleOn = "o_totalprice"))._1 == 0,
+      "building Differ.report ran a Spark job")
+    assert(fired(spark.sql(
+      "SELECT * FROM graft_diff_report('plan_rep_l', 'plan_rep_r', 'o_orderkey')"))._1 == 0,
+      "analysing graft_diff_report ran a Spark job")
+  }
+
+  test("diff_report runs one join: each side's key-hash shuffle is written once") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val df = queryNamed(DiffQueries.all, "diff_report")
+    val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j.joinType }
+    assert(joins == Seq(FullOuter), s"expected the one full-outer diff join, got $joins")
+    df.collect()
+    // The final adaptive plan, query stages included.
+    val plan = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val keyShuffles = helper.collect(plan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case h: HashPartitioning
+      if h.expressions.flatMap(_.references.map(_.name)).toSet == Set("o_orderkey") => h }
+    assert(keyShuffles.size == 2,
+      s"expected one key-hash shuffle per side, got ${keyShuffles.size}:\n$plan")
+    assert(helper.collect(plan) { case r: ReusedExchangeExec => r }.isEmpty,
+      s"the report reads the diff once; nothing should need reuse:\n$plan")
   }
 
   test("Q.requireBand genuinely fires: a violated band fails the query at runtime") {
