@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev-only plan snapshotter (not part of the declared surface; run via
@@ -12,8 +11,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * Writes `<outDir>/<key>_<tag>.txt` with the `.explain("formatted")`
   * output of each named declared query — the judge-checkable evidence for
   * plan-shape claims (Exchange count, join strategy, PushedFilters /
-  * ReadSchema). Session config mirrors Bench exactly so the captured plan
-  * is the one the bench times.
+  * ReadSchema). The session is Bench's ([[LocalSession]]), so the captured
+  * plan is the one the bench times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -24,13 +23,7 @@ object PlanDump {
       else args(1).split(',').map(_.trim).filter(_.nonEmpty)
     val outDir = args(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     Files.createDirectories(Paths.get(outDir))
     for (key <- keys) {
       val fn = SparkEntry.queries.getOrElse(key,

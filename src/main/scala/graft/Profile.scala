@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-key cost profiler for the optimization rounds (not part of
   * the declared surface; run via `sbt "runMain graft.Profile <k1,k2,...>"`).
@@ -28,13 +27,7 @@ object Profile {
     val keys = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val iters = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()

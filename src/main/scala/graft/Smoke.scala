@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirror of the driver's t1 smoke: run SparkEntry.entry and print its rows.
   * Usage: sbt "runMain graft.Smoke"
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"[smoke] entry rows=${rows.length}")

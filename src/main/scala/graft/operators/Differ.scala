@@ -1502,49 +1502,65 @@ object Differ {
     * U+001F.
     */
   def rowHashCol(df: DataFrame, cols: Seq[String]): Column =
-    fingerprint(df, cols, c =>
-      // NaN / +-Inf cast to DECIMAL as NULL, which would collide with
-      // genuine NULLs (caught by DifferPropSpec: NaN-vs-null must hash
-      // apart, as <=> tells them apart) — name them explicitly.
-      when(isnan(c), lit("NaN"))
-        .when(c === Double.PositiveInfinity, lit("Inf"))
-        .when(c === Double.NegativeInfinity, lit("-Inf"))
-        .otherwise(c.cast(DecimalType(18, 2)).cast(StringType)))
+    sha2(concat_ws("\u001f",
+      cols.map(c => coalesce(rendered(df, c, exact = false), lit("␀"))): _*), 256)
 
-  /** The hash paths' fingerprint: [[rowHashCol]]'s rules, except that a
-    * floating value renders EXACTLY (Java's round-trip form, so distinct
-    * values hash apart and no magnitude overflows), with -0.0 folded onto
-    * 0.0 and every NaN rendered alike: two floating values render alike
-    * exactly when `<=>` calls them equal. Not mirrored by any oracle,
-    * unlike rowHashCol.
+  /** The hash paths' fingerprint ([[hashClassified]], [[bucketDigests]]):
+    * two rows get one fingerprint exactly when `<=>` calls every column
+    * equal, with the exceptions below. Not mirrored by any oracle, unlike
+    * [[rowHashCol]]. Each rendered part is length-prefixed
+    * (`<bytes>:<text>`, so no content can imitate a separator) and NULL is
+    * the bare marker `N`, which no prefixed part can be. A floating value
+    * renders EXACTLY (Java's round-trip form: distinct values render apart
+    * and no magnitude overflows), with -0.0 folded onto 0.0 and every NaN
+    * rendered alike. Arrays and structs render as JSON (strings quoted and
+    * escaped, NULL elements as `null`), maps as key-sorted JSON entries,
+    * timestamps inside them with 6 fraction digits. Exceptions: a floating
+    * value NESTED in an array, struct or map renders by JSON, exact but
+    * without the -0.0 fold, so a nested -0.0 vs 0.0 fingerprints apart
+    * although `<=>` calls them equal (NaN still renders alike); a map
+    * nested inside an array or struct renders in stored order, so two
+    * equal nested maps built in different orders fingerprint apart. Both
+    * can only turn an N into a C, never hide a change.
     */
   private def exactHashCol(df: DataFrame, cols: Seq[String]): Column =
-    fingerprint(df, cols, c => when(c === 0, lit(0)).otherwise(c).cast(StringType))
+    sha2(concat_ws("\u001f", cols.map { c =>
+      val s = rendered(df, c, exact = true)
+      coalesce(concat(octet_length(s).cast(StringType), lit(":"), s), lit("N"))
+    }: _*), 256)
 
-  /** SHA-256 hex over `cols` of `df`, each rendered as a string (floating
-    * columns by `floating`), NULL as U+2400, joined on U+001F.
+  /** Timestamps with microseconds in JSON renderings (Spark's default JSON
+    * format keeps milliseconds).
     */
-  private def fingerprint(df: DataFrame, cols: Seq[String],
-                          floating: Column => Column): Column = {
-    val parts = cols.map { c =>
-      val s = df.schema(c).dataType match {
-        case DoubleType | FloatType => floating(bq(c))
-        case TimestampNTZType       => unix_micros(bq(c).cast(TimestampType)).cast(StringType)
-        case TimestampType          => unix_micros(bq(c)).cast(StringType)
-        case _: MapType             =>
-          // Key-sorted entries: a map's stored order is an accident of its
-          // construction, and the hash must agree with colEqual's
-          // order-insensitive compare (same fingerprint ⇔ equal value).
-          // Nested maps deeper inside arrays/structs stay stored-order in
-          // the STRING rendering only — diff() handles those via
-          // mapAwareEq; the hash path documents exact-compare semantics.
-          to_json(sortedEntries(bq(c))).cast(StringType)
-        case _                      => bq(c).cast(StringType)
-      }
-      coalesce(s, lit("␀"))
+  private val microsJson = Map(
+    "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+
+  /** Column `c` of `df` as a string (NULL stays NULL): timestamps as epoch
+    * micros, maps as key-sorted JSON entries (a map's stored order is an
+    * accident of its construction; colEqual compares maps order-free),
+    * everything else by Spark's string cast. `exact` selects
+    * [[exactHashCol]]'s floating and nested renderings; otherwise floating
+    * values render as DECIMAL(18,2) with NaN/Inf/-Inf named (a DECIMAL cast
+    * nulls them, which would collide with true NULLs).
+    */
+  private def rendered(df: DataFrame, c: String, exact: Boolean): Column =
+    df.schema(c).dataType match {
+      case DoubleType | FloatType if exact =>
+        when(bq(c) === 0, lit(0)).otherwise(bq(c)).cast(StringType)
+      case DoubleType | FloatType =>
+        when(isnan(bq(c)), lit("NaN"))
+          .when(bq(c) === Double.PositiveInfinity, lit("Inf"))
+          .when(bq(c) === Double.NegativeInfinity, lit("-Inf"))
+          .otherwise(bq(c).cast(DecimalType(18, 2)).cast(StringType))
+      case TimestampNTZType => unix_micros(bq(c).cast(TimestampType)).cast(StringType)
+      case TimestampType => unix_micros(bq(c)).cast(StringType)
+      case _: MapType =>
+        to_json(sortedEntries(bq(c)), if (exact) microsJson else Map.empty[String, String])
+          .cast(StringType)
+      case _: ArrayType | _: StructType if exact => to_json(bq(c), microsJson)
+      case _ => bq(c).cast(StringType)
     }
-    sha2(concat_ws("\u001f", parts: _*), 256)
-  }
 
   def rowHash(df: DataFrame, cols: Seq[String]): DataFrame =
     df.select(rowHashCol(df, cols).as("row_sha"))

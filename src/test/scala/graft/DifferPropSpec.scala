@@ -17,10 +17,11 @@ class DifferPropSpec extends SparkTestBase {
 
   private case class Tbl(rows: Seq[(Long, Option[String], Option[Double])])
 
-  private def tblOf(values: Seq[Double]): Gen[Tbl] = {
+  private def tblOf(values: Seq[Double],
+                    strings: Seq[String] = Seq("a", "b", "c")): Gen[Tbl] = {
     val rowGen = for {
       k <- Gen.choose(0L, 30L)
-      s <- Gen.option(Gen.oneOf("a", "b", "c"))
+      s <- Gen.option(Gen.oneOf(strings))
       v <- Gen.option(Gen.oneOf(values))
     } yield (k, s, v)
     Gen.listOf(rowGen).map(rs => Tbl(rs.distinctBy(_._1))) // key-unique
@@ -28,11 +29,12 @@ class DifferPropSpec extends SparkTestBase {
 
   private val tblGen: Gen[Tbl] = tblOf(Seq(1.0, 2.5, Double.NaN, -0.0))
 
-  /** [[tblGen]] plus values a rounded or overflowing hash rendering would
-    * merge or reject: 1.001 vs 1.002, 0.0 vs -0.0, and 1e17.
+  /** [[tblGen]] plus values a rounded, overflowing or unframed hash
+    * rendering would merge or reject: 1.001 vs 1.002, 0.0 vs -0.0, 1e17,
+    * and the string "␀" beside NULL.
     */
   private val hashTblGen: Gen[Tbl] =
-    tblOf(Seq(1.0, 2.5, Double.NaN, -0.0, 1.001, 1.002, 0.0, 1e17))
+    tblOf(Seq(1.0, 2.5, Double.NaN, -0.0, 1.001, 1.002, 0.0, 1e17), Seq("a", "b", "c", "␀"))
 
   /** Deterministic sampler: walks the generator with a fixed seed. */
   private def samples[T](g: Gen[T], n: Int, seed: Long): Seq[T] = {

@@ -199,6 +199,32 @@ class DifferSpec extends SparkTestBase {
         rowsOf(direct.select("diff_status", "k")), s"buckets = $b")
   }
 
+  test("hash paths fingerprint injectively: NULL vs '␀', U+001F in strings, nested values") {
+    import java.sql.Timestamp
+    val (t1, t2) = (Timestamp.valueOf("2026-01-05 12:00:00.000001"),
+      Timestamp.valueOf("2026-01-05 12:00:00.000002"))
+    def row(k: Long, s: String = "s", a: String = "x", b: String = "y",
+            arr: Seq[String] = Seq("p"), st: (String, String) = ("u", "w"),
+            ts: Seq[Timestamp] = Seq(t1)) = (k, s, a, b, arr, st, ts)
+    val cols = Seq("k", "s", "a", "b", "arr", "st", "ts")
+    // keys 1-4 differ in one column each in a way an unframed string
+    // rendering cannot see; 6 differs by a microsecond inside an array,
+    // which a millisecond JSON rendering cannot see; 5 and 7 are unchanged
+    val l = Seq(row(1, s = null), row(2, a = "a\u001f", b = "b"),
+      row(3, arr = Seq("a, b")), row(4, st = ("a, b", "c")), row(5, s = "1:x"),
+      row(6), row(7)).toDF(cols: _*)
+    val r = Seq(row(1, s = "␀"), row(2, a = "a", b = "\u001fb"),
+      row(3, arr = Seq("a", "b")), row(4, st = ("a", "b, c")), row(5, s = "1:x"),
+      row(6, ts = Seq(t2)), row(7)).toDF(cols: _*)
+    val direct = Differ.diff(l, r, keys).filter(col("diff_status") =!= "N")
+    assert(rowsOf(direct.select("diff_status", "k")) ==
+      Seq("C|1", "C|2", "C|3", "C|4", "C|6"))
+    assert(rowsOf(Graft.diffLarge(l, r, keys)) == rowsOf(direct))
+    for (b <- Seq(1, 4))
+      assert(rowsOf(Graft.diffIncremental(l, r, keys, buckets = b)) ==
+        rowsOf(direct.select("diff_status", "k")), s"buckets = $b")
+  }
+
   test("applyChangeset(left, diff(left, right)) reconstructs right exactly (null keys included)") {
     val l = Seq(
       (Some(1L), Some("a"), Some(1.5)), (Some(2L), Some("b"), Some(2.5)),

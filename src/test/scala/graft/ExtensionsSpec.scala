@@ -283,6 +283,10 @@ class ExtensionsSpec extends SparkTestBase {
       "SELECT * FROM graft_diff_dup('ext_dup_l', 'ext_dup_r', 'k', dup_pairing => 'by_value')")) ==
       rowsOf(Differ.diffDupKeyRank(l, r, Seq("k"),
         DiffOptions(dupPairing = DupPairing.ByValue))))
+    // a backticked key names the column, as in graft_diff
+    assert(rowsOf(spark.sql(
+      "SELECT * FROM graft_diff_dup('ext_dup_l', 'ext_dup_r', '`k`')")) ==
+      rowsOf(Differ.diffDupKeyRank(l, r, Seq("k"))))
     // an unknown pairing value fails loudly naming the legal ones
     val e = intercept[Exception] {
       spark.sql(
@@ -450,6 +454,11 @@ class ExtensionsSpec extends SparkTestBase {
       s"'gds_r', 'ts_us', 'k,et', 'v', $W)")
     assert(rowsOf(vT) == rowsOf(
       StreamOps.diffStreamStreamLatestBatchKeyed(l, r, "ts_us", Seq("k", "et"), Seq("v"), W)))
+    // backticked keys and value columns name the columns, as in graft_diff
+    assert(rowsOf(spark.sql(s"SELECT * FROM graft_diff_streams('gds_l', 'gds_r', " +
+      s"'ts_us', '`k`,et', '`v`', $W)")) == rowsOf(cT))
+    assert(rowsOf(spark.sql(s"SELECT * FROM graft_diff_streams_latest('gds_l', " +
+      s"'gds_r', 'ts_us', '`k`,et', '`v`', $W)")) == rowsOf(vT))
     // payload => 'any' switches to the canonical-payload form
     val aT = spark.sql(s"SELECT * FROM graft_diff_streams_latest('gds_l', " +
       s"'gds_r', 'ts_us', 'k', 'v,et', $W, payload => 'any')")
@@ -723,5 +732,69 @@ class ExtensionsSpec extends SparkTestBase {
     val explicit = spark.sql(
       "SELECT * FROM graft_diff_report('grk_l', 'grk_r', 'k')")
     assert(rowsOf(auto) == rowsOf(explicit))
+  }
+
+  /** Every message on `e`'s cause chain, joined. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("every TVF's binder names the TVF on a wrong-typed literal and lists exactly its options") {
+    GraftExtensions.register(spark)
+    import spark.implicits._
+    Seq((100L, 1L, "a", 1.5)).toDF("ts_us", "k", "et", "v").createOrReplaceTempView("bind_l")
+    Seq((110L, 1L, "a", 2.5)).toDF("ts_us", "k", "et", "v").createOrReplaceTempView("bind_r")
+    val diffOpts = Seq("abs_tol", "rel_tol", "tol_cols", "ignore_cols", "bag_cols",
+      "digest_cols", "ignore_case", "trim_ws", "null_safe_keys")
+    val pair = "'bind_l', 'bind_r'"
+    val streams = s"$pair, 'ts_us', 'k', 'v', 1000"
+    // (TVF, positional arguments, a call with one wrong-typed literal, the
+    // named options it accepts)
+    val cases = Seq(
+      ("graft_diff", s"$pair, 'k'", s"$pair, 1", diffOpts :+ "auto_map"),
+      ("graft_diff_summary", s"$pair, 'k'", s"$pair, 'k', abs_tol => 'x'", diffOpts :+ "auto_map"),
+      ("graft_diff_dup", s"$pair, 'k'", s"$pair, 'k', dup_pairing => 1", diffOpts :+ "dup_pairing"),
+      ("graft_diff_report", s"$pair, 'k'", s"$pair, 'k', k => 'five'",
+        diffOpts ++ Seq("example_on", "k")),
+      ("graft_schema_diff", pair, "1, 'bind_r'", Nil),
+      ("graft_diff_catalog", "'bind_l', '_l', '_r'", "'bind_l', 1, '_r'", diffOpts :+ "keys_for"),
+      ("graft_diff_cols", s"$pair, 'k'", s"$pair, 'k', ignore_case => 1", diffOpts),
+      ("graft_diff_unkeyed", pair, "'bind_l', 2", Nil),
+      ("graft_diff_catalog_cols", "'bind_l', '_l', '_r'", "'bind_l', '_l', '_r', keys_for => 1",
+        diffOpts :+ "keys_for"),
+      ("graft_diff_txnlog", "'/d'", "'/d', from_version => 'x'",
+        diffOpts ++ Seq("from_version", "to_version", "from_ts", "to_ts", "keys_for")),
+      ("graft_diff_streams", streams, s"$pair, 'ts_us', 'k', 'v', 1.5", Seq("payload")),
+      ("graft_diff_streams_latest", streams, s"$streams, payload => true", Seq("payload")))
+    assert(cases.map(_._1).distinct.size == 12)
+    for ((tvf, positional, wrongTyped, options) <- cases) {
+      val typed = messages(intercept[Exception](spark.sql(s"SELECT * FROM $tvf($wrongTyped)")))
+      assert(typed.contains(s"$tvf: "), s"$tvf: $typed")
+      val unknown = messages(intercept[Exception](
+        spark.sql(s"SELECT * FROM $tvf($positional, bogus => 1)")))
+      val listed = s"$tvf: unknown option 'bogus' \\(supported: ([^)]*)\\)".r
+        .findFirstMatchIn(unknown).map(_.group(1))
+        .getOrElse(fail(s"$tvf: no supported list in: $unknown"))
+      if (options.isEmpty) assert(listed.startsWith("none"), s"$tvf: $listed")
+      else assert(listed.split(", ").toSeq.sorted == options.sorted, s"$tvf: $listed")
+    }
+  }
+
+  test("analysing the pairwise TVFs with explicit keys over catalog views fires no Spark job") {
+    GraftExtensions.register(spark)
+    import spark.implicits._
+    val sfDir = "/root/testdata/sf0.001"
+    graft.queries.DiffQueries.left(spark, sfDir).createOrReplaceTempView("an_l")
+    graft.queries.DiffQueries.right(spark, sfDir).createOrReplaceTempView("an_r")
+    Seq((100L, 1L, "a", 1.5)).toDF("ts_us", "k", "et", "v").createOrReplaceTempView("an_sl")
+    Seq((110L, 1L, "a", 2.5)).toDF("ts_us", "k", "et", "v").createOrReplaceTempView("an_sr")
+    val keyed = "'an_l', 'an_r', 'o_orderkey'"
+    val calls = Seq(s"graft_diff($keyed)", s"graft_diff_summary($keyed)",
+      s"graft_diff_cols($keyed)", "graft_diff_unkeyed('an_l', 'an_r')",
+      s"graft_diff_dup($keyed)", s"graft_diff_report($keyed)",
+      "graft_schema_diff('an_l', 'an_r')",
+      "graft_diff_streams('an_sl', 'an_sr', 'ts_us', 'k', 'v', 1000)",
+      "graft_diff_streams_latest('an_sl', 'an_sr', 'ts_us', 'k', 'v', 1000)")
+    for (call <- calls)
+      assert(fired(spark.sql(s"SELECT * FROM $call"))._1 == 0, s"analysing $call ran a Spark job")
   }
 }
