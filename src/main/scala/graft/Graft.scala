@@ -632,8 +632,11 @@ object Graft {
     graft.sources.TxnLog.read(spark, table, asOf, mergeSchema = true)
 
   /** File-level change scope between two versions (from the log alone):
-    * (files live only at v0, files live only at v1) — the O(changed
-    * files) input to an incremental version diff.
+    * (files of v0, files of v1) whose visible rows may differ, a file whose
+    * deletion-vector scope changed on both sides — the O(changed files)
+    * input to an incremental version diff. Read each side with
+    * `TxnLog.readFiles(spark, table, files, Some(v))`, which applies that
+    * version's deletion vectors.
     */
   def txnChangedFiles(table: String, v0: Long, v1: Long): (Seq[String], Seq[String]) =
     graft.sources.TxnLog.changedFiles(table, v0, v1)

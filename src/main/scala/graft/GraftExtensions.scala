@@ -152,17 +152,19 @@ object GraftExtensions {
       case other => fail(s"$what must be a numeric literal, got $other")
     }
 
-    private def tokens(what: String, e: Expression): Seq[String] =
-      string(what, e).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-
-    def csv(what: String, e: Expression): Set[String] = tokens(what, e).toSet
-
-    /** A key list `'k1,k2'`: each token strips ONE outer backtick pair, so
-      * '`auto`' always names a column called auto.
+    /** A column list `'c1,c2'`: each token strips ONE outer backtick pair,
+      * so '`auto`' always names a column called auto. Every column list of
+      * every table function reads through here: keys, the `keys_for`
+      * entries and the column-set options.
       */
-    def keys(what: String, e: Expression): Seq[String] =
-      tokens(what, e).map(t => if (t.length > 1 && t.startsWith("`") && t.endsWith("`"))
-        t.substring(1, t.length - 1) else t)
+    private def columnList(list: String): Seq[String] =
+      list.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map(t =>
+        if (t.length > 1 && t.startsWith("`") && t.endsWith("`")) t.substring(1, t.length - 1)
+        else t)
+
+    def keys(what: String, e: Expression): Seq[String] = columnList(string(what, e))
+
+    def csv(what: String, e: Expression): Set[String] = keys(what, e).toSet
 
     /** A table side: a catalog table name first (the common case), else an
       * existing parquet PATH, so `graft_diff('path/a.parquet',
@@ -214,8 +216,7 @@ object GraftExtensions {
         val i = part.indexOf(':')
         if (i <= 0 || i >= part.length - 1)
           fail(s"keys_for entry '$part' must be 'table:col1,col2' (';'-separated entries)")
-        part.substring(0, i).trim ->
-          part.substring(i + 1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        part.substring(0, i).trim -> columnList(part.substring(i + 1))
       }
       val dups = entries.map(_._1).groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted
       if (dups.nonEmpty) fail(s"keys_for names table(s) ${dups.mkString(", ")} more than once")

@@ -1,6 +1,8 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,7 +46,27 @@ object Tables {
   }
 
   // -- shared-input cache -------------------------------------------------
-  private val cache = new ConcurrentHashMap[(Int, String), DataFrame]()
+  /** One registry per session, keyed on the session object itself (a
+    * weak key: no identity hash, which two live sessions can share). Every
+    * cached DataFrame holds its session, so a weak key alone would never
+    * clear; the registries of a context's sessions are therefore dropped
+    * when that context stops, and a stopped session's entries become
+    * collectable.
+    */
+  private val registries =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, DataFrame]]()
+  private val watched = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
+
+  private def registry(spark: SparkSession): ConcurrentHashMap[String, DataFrame] =
+    registries.synchronized {
+      val sc = spark.sparkContext
+      if (watched.add(sc)) sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+          registries.synchronized(registries.keySet.removeIf(_.sparkContext eq sc))
+      })
+      registries.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, DataFrame]())
+    }
 
   /** Cache an arbitrary derived DataFrame under a per-session key.
     *
@@ -58,12 +80,11 @@ object Tables {
     * plan equality, and putIfAbsent keeps one winner.
     */
   def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val k = (System.identityHashCode(spark), key)
-    val existing = cache.get(k)
+    val existing = registry(spark).get(key)
     if (existing != null) existing
     else {
       val built = build.cache()
-      val prev = cache.putIfAbsent(k, built)
+      val prev = registry(spark).putIfAbsent(key, built)
       if (prev != null) prev else built
     }
   }
@@ -122,14 +143,10 @@ object Tables {
     * cross-suite InMemoryRelation substitution hazards.
     */
   def unpersistAll(spark: SparkSession): Unit = {
-    val sid = System.identityHashCode(spark)
-    val it = cache.entrySet().iterator()
+    val it = registry(spark).values().iterator()
     while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == sid) {
-        e.getValue.unpersist(blocking = false)
-        it.remove()
-      }
+      it.next().unpersist(blocking = false)
+      it.remove()
     }
   }
 

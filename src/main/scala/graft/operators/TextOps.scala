@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 
 /** Text-analysis kernels for large-scale training-data pipelines: tokenize,
   * fingerprint, exact + near dedup, n-grams. Capability surface per
@@ -85,13 +86,12 @@ object TextOps {
         sequence(lit(1), size(toks) - 1),
         i => concat(element_at(toks, i), lit(" "), element_at(toks, i + 1))))
 
-  /** Adjacent 3-token shingles (same guard discipline as [[bigrams]]). */
+  /** Adjacent 3-token shingles, none below 3 tokens: the native
+    * [[graft.functions.Shingles]] kernel, so an explode of them stays in
+    * whole-stage code.
+    */
   def trigrams(toks: Column): Column =
-    when(size(toks) < 3, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(1), size(toks) - 2),
-        i => concat_ws(" ",
-          element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2))))
+    ColumnBridge.column(graft.functions.Shingles(ColumnBridge.expression(toks), 3))
 
   /** Exact top-k rows per group, computed scale-safely in two phases:
     * a bucketed local top-k (parallelism = groups x buckets) followed by a
@@ -152,11 +152,12 @@ object TextOps {
 
   /** Ranked token sets: the shared build of the prefix-filter joins. One
     * row per doc with at least one token: the id and block columns, `s`
-    * (sorted distinct tokens, the native-merge input), `n` = |s|, and
-    * `prefix`, the doc's `n - ceil(tau·n) + 1` rarest tokens as (t, pos)
-    * structs, `pos` being the token's 1-based rank in the doc's full
-    * [[rarestFirst]] order. `tokenizer` picks the shingle granularity; the
-    * outer array_distinct makes it set-valued.
+    * (sorted distinct tokens, the native-merge input), `n` = |s| and
+    * `ranked`, the same tokens in the global [[rarestFirst]] order.
+    * `tokenizer` picks the shingle granularity; the outer array_distinct
+    * makes it set-valued. The build takes no threshold: each join cuts its
+    * prefix from `ranked` with [[prefixOf]], so the build's generated
+    * classes are the same for every threshold.
     *
     * Prefix theorem. One-sided: if |x ∩ y| >= tau·|x|, prefix(x) meets y —
     * otherwise x ∩ y fits in the ceil(tau·|x|) - 1 tokens after the prefix.
@@ -167,8 +168,8 @@ object TextOps {
     *
     * PPJoin positional bound (Xiao et al. 2008): the first shared token in
     * the global order lies in both prefixes whenever any shared token
-    * does (prefixes are down-closed), and if it sits at positions (i, j)
-    * the overlap is at most 1 + min(n_x - i, n_y - j). A prune on this
+    * does (prefixes are down-closed), and if it sits at 0-based positions
+    * (i, j) the overlap is at most min(n_x - i, n_y - j). A prune on this
     * bound, evaluated per colliding prefix token, therefore keeps every
     * pair whose overlap meets it.
     *
@@ -176,29 +177,40 @@ object TextOps {
     * projected expression: projection-collapse would inline a projected
     * HOF chain into every downstream filter and join condition (measured
     * 8 re-evaluations per row), while after the aggregation `s` is a
-    * concrete attribute. The prefix is carved from one
+    * concrete attribute. `ranked` comes from one
     * sort_array(collect_list(struct)) in the same aggregation, so it costs
     * no extra shuffle; the result is persisted through [[reuse]] because
-    * the candidate sides and both fetch joins read it.
+    * the candidate sides and the verify fetch read it.
     */
-  private def rankedTokenSets(docs: DataFrame, tau: Double, idCol: String, textCol: String,
+  private def rankedTokenSets(docs: DataFrame, idCol: String, textCol: String,
                               blockCols: Seq[String],
                               tokenizer: Column => Column): DataFrame = {
-    requireThreshold(tau)
     val tok = docs.select((col(idCol) +: blockCols.map(col)) :+
       explode(array_distinct(tokenizer(col(textCol)))).as("token"): _*)
-    reuse(withDocFreq(tok)
+    reuse(withNonNullIds(withDocFreq(tok)
       .groupBy(col(idCol) +: blockCols.map(col): _*)
       .agg(
         sort_array(collect_list(col("token"))).as("s"),
-        sort_array(collect_list(struct(rarestFirst.as("k"), col("token").as("t"))))
-          .as("ranked"))
-      .withColumn("n", size(col("s")))
-      .withColumn("prefix", transform(
-        slice(col("ranked"), lit(1), (col("n") - ceil(lit(tau) * col("n")) + 1).cast("int")),
-        (x, i) => struct(x.getField("t").as("t"), (i + 1).as("pos"))))
-      .drop("ranked"))
+        transform(sort_array(collect_list(struct(rarestFirst.as("k"), col("token").as("t")))),
+          _.getField("t")).as("ranked"))
+      .withColumn("n", size(col("s"))), idCol))
   }
+
+  /** `sets` without its null-id row, the id column declared non-null. A
+    * doc with a null id can never pair (`a_id < b_id` is never true), so
+    * the set builds drop it; with the id declared non-null, the verify
+    * fetch ([[exactInter]]) broadcasts the cached sets as they are, with
+    * no inferred null filter that would be a generated stage of its own.
+    */
+  private def withNonNullIds(sets: DataFrame, idCol: String): DataFrame =
+    sets.where(col(idCol).isNotNull).withColumn(idCol,
+      ColumnBridge.column(KnownNotNull(ColumnBridge.expression(col(idCol)))))
+
+  /** A [[rankedTokenSets]] row's prefix for threshold tau: its
+    * `n - ceil(tau·n) + 1` rarest tokens.
+    */
+  private def prefixOf(tau: Double): Column =
+    slice(col("ranked"), lit(1), (col("n") - ceil(lit(tau) * col("n")) + 1).cast("int"))
 
   /** Bucket self-join: the candidate step of the near-dup joins. `kv` holds
     * one row per (item, bucket key). Rows pair when they agree on every
@@ -221,21 +233,28 @@ object TextOps {
   }
 
   /** Exact check of candidate pairs (`doc_a`, `doc_b`, ...): fetches each
-    * side's `s` (and the `fetch` columns, as `a_<c>` / `b_<c>`) from `base`
-    * by id and adds `inter` = |a_s ∩ b_s| through the native O(n+m) merge
+    * side's `s` and `n` from `base` by id, keeps `n` as `a_n` / `b_n` and
+    * adds `inter` = |a_s ∩ b_s| through the native O(n+m) merge
     * [[graft.functions.SortedIntersectCount]] (`s` sorted, duplicate-free;
     * size(array_intersect) is an interpreted CodegenFallback and measured
     * ~10× slower). Token arrays ride only these two id-equi joins, never
     * the candidate join; the doc side is dimension-sized and broadcasts
     * locally.
+    *
+    * This is the verify tail of every similarity join here. Both sides read
+    * one (id, s, n) projection of `base`, so every join's tail compiles to
+    * the same classes whatever else `base` holds, as long as `n` is an INT
+    * (`size`) and the id is non-null ([[withNonNullIds]]) everywhere.
     */
-  private[graft] def exactInter(pairs: DataFrame, base: DataFrame, idCol: String,
-                                fetch: Seq[String] = Nil): DataFrame = {
-    def side(p: String) = base.select((col(idCol).as(s"doc_$p") +: col("s").as(s"${p}_s") +:
-      fetch.map(c => col(c).as(s"${p}_$c"))): _*)
-    pairs.join(side("a"), "doc_a").join(side("b"), "doc_b")
-      .withColumn("inter", ColumnBridge.column(graft.functions.SortedIntersectCount(
-        ColumnBridge.expression(col("a_s")), ColumnBridge.expression(col("b_s")))))
+  private[graft] def exactInter(pairs: DataFrame, base: DataFrame, idCol: String): DataFrame = {
+    val sets = base.select(col(idCol), col("s"), col("n"))
+    val (a, b) = (sets.as("a"), sets.as("b"))
+    pairs.join(a, col("doc_a") === col(s"a.$idCol")).join(b, col("doc_b") === col(s"b.$idCol"))
+      .select(pairs.columns.toIndexedSeq.map(c => pairs(c)) ++ Seq(
+        col("a.n").as("a_n"), col("b.n").as("b_n"),
+        ColumnBridge.column(graft.functions.SortedIntersectCount(
+          ColumnBridge.expression(col("a.s")), ColumnBridge.expression(col("b.s"))))
+          .as("inter")): _*)
   }
 
   /** Jaccard of an [[exactInter]] row with sizes `a_n`, `b_n`:
@@ -249,13 +268,13 @@ object TextOps {
     least(col("a_n"), col("b_n")).cast("double") / greatest(col("a_n"), col("b_n")) >=
       tau - 1e-12
 
-  /** Distinct candidate pairs (`doc_a`, `doc_b`, `a_n`, `b_n`) from a
+  /** Distinct candidate pairs (`doc_a`, `doc_b`) from a
     * [[bucketSelfJoin]], verified to exact Jaccard >= tau.
     */
   private def verifiedJaccardPairs(joined: DataFrame, base: DataFrame, idCol: String,
                                    tau: Double): DataFrame = {
     val candidates = joined
-      .select(col(s"a_$idCol").as("doc_a"), col(s"b_$idCol").as("doc_b"), col("a_n"), col("b_n"))
+      .select(col(s"a_$idCol").as("doc_a"), col(s"b_$idCol").as("doc_b"))
       .distinct()
     exactInter(candidates, base, idCol)
       .withColumn("jaccard", jaccardOf)
@@ -289,15 +308,13 @@ object TextOps {
                    idCol: String = "doc_id", textCol: String = "text",
                    blockCols: Seq[String] = Seq("lang"),
                    tokenizer: Column => Column = tokenSet): DataFrame = {
-    val base = rankedTokenSets(docs, minJaccard, idCol, textCol, blockCols, tokenizer)
-    val slim = base.select(
-      (Seq(col(idCol), explode(col("prefix")).as("p"), col("n")) ++
-        blockCols.map(col)): _*)
-      .select((Seq(col(idCol), col("p.t").as("ptok"), col("p.pos").as("pos"),
-        col("n")) ++ blockCols.map(col)): _*)
+    requireThreshold(minJaccard)
+    val base = rankedTokenSets(docs, idCol, textCol, blockCols, tokenizer)
+    val slim = base.select((Seq(col(idCol), col("n")) ++ blockCols.map(col) :+
+      posexplode(prefixOf(minJaccard)).as(Seq("pos", "ptok"))): _*)
     val joined = bucketSelfJoin(slim, blockCols :+ "ptok", idCol, Seq(
       lengthRatioAtLeast(minJaccard),
-      (lit(1) + least(col("a_n") - col("a_pos"), col("b_n") - col("b_pos"))).cast("double")
+      least(col("a_n") - col("a_pos"), col("b_n") - col("b_pos")).cast("double")
         >= lit(minJaccard / (1 + minJaccard)) * (col("a_n") + col("b_n")) - 1e-9))
     verifiedJaccardPairs(joined, base, idCol, minJaccard)
   }
@@ -412,9 +429,10 @@ object TextOps {
                        idCol: String = "doc_id", textCol: String = "text",
                        blockCols: Seq[String] = Seq("lang"),
                        tokenizer: Column => Column = tokenSet): DataFrame = {
-    val base = rankedTokenSets(docs, minContainment, idCol, textCol, blockCols, tokenizer)
+    requireThreshold(minContainment)
+    val base = rankedTokenSets(docs, idCol, textCol, blockCols, tokenizer)
     val prefixSide = base.select(
-      (Seq(col(idCol).as("p_id"), explode(col("prefix.t")).as("token")) ++
+      (Seq(col(idCol).as("p_id"), explode(prefixOf(minContainment)).as("token")) ++
         blockCols.map(c => col(c).as(s"p_$c"))): _*)
     val postingSide = base.select(
       (Seq(col(idCol).as("f_id"), explode(col("s")).as("token")) ++
@@ -426,7 +444,7 @@ object TextOps {
       .select(least(col("p_id"), col("f_id")).as("doc_a"),
         greatest(col("p_id"), col("f_id")).as("doc_b"))
       .distinct()
-    exactInter(candidates, base, idCol, fetch = Seq("n"))
+    exactInter(candidates, base, idCol)
       .withColumn(
         "containment",
         col("inter").cast("double") / least(col("a_n"), col("b_n")))
@@ -441,32 +459,26 @@ object TextOps {
     * strings is a valid min-wise sketch and, unlike xxhash seeds, is
     * reproducible in any SQL engine. Docs without tokens drop out.
     *
-    * Only the band minima aggregate, as plain `min()`s over codegen'd sha2
-    * rows (measured 2.7× faster than per-doc array HOFs; a
-    * partial-aggregating HashAggregate, so the shuffle carries `bands`
-    * partial mins per doc, not token lists); `s` and `n` are
-    * per-row functions of the token array, which moves once through the
-    * doc-grain join. Does no caching: each caller persists the signature
-    * where its consumers share it.
+    * One explode and one doc-grain aggregation: the band minima are plain
+    * `min()`s over codegen'd sha2 rows (measured 2.7× faster than per-doc
+    * array HOFs), and `s` is collected in the same aggregation, so the
+    * token list moves once through its shuffle and `s` and `n` have the
+    * types of [[rankedTokenSets]]' (the verify tail compiles to one set of
+    * classes for both). Does no caching: each caller persists the
+    * signature where its consumers share it.
     */
   private[graft] def minHashSignature(docs: DataFrame, bands: Int,
                                       idCol: String = "doc_id", textCol: String = "text",
                                       blockCols: Seq[String] = Seq("lang"),
                                       tokenizer: Column => Column = tokens): DataFrame = {
     require(bands >= 1, s"MinHash needs bands >= 1 (got $bands)")
-    val bandAggs = (0 until bands).map(i =>
-      min(sha2(concat(lit(i.toString), col("token")), 256)).as(s"mh$i"))
-    val doc = docs.select((col(idCol) +: blockCols.map(col)) :+
-      array_distinct(tokenizer(col(textCol))).as("toks"): _*)
-    val mins = doc
-      .select((col(idCol) +: blockCols.map(col)) :+ explode(col("toks")).as("token"): _*)
-      .groupBy(col(idCol) +: blockCols.map(col): _*)
-      .agg(bandAggs.head, bandAggs.tail: _*)
-    doc
-      .select((col(idCol) +: blockCols.map(col)) ++ Seq(
-        sort_array(col("toks")).as("s"),
-        size(col("toks")).cast("long").as("n")): _*)
-      .join(mins, idCol +: blockCols)
+    val keys = col(idCol) +: blockCols.map(col)
+    val sig = docs.select(keys :+ explode(array_distinct(tokenizer(col(textCol)))).as("token"): _*)
+      .groupBy(keys: _*)
+      .agg(sort_array(collect_list(col("token"))).as("s"), (0 until bands).map(i =>
+        min(sha2(concat(lit(i.toString), col("token")), 256)).as(s"mh$i")): _*)
+    withNonNullIds(sig, idCol).select(keys ++ Seq(col("s"), size(col("s")).as("n")) ++
+        (0 until bands).map(i => col(s"mh$i")): _*)
   }
 
   /** Banded-LSH pairs over a [[minHashSignature]] frame: each of the first

@@ -188,7 +188,7 @@ object DedupVariantQueries {
         .groupBy(col("a_doc_id").as("doc_a"), col("b_doc_id").as("doc_b"))
         .agg(count(lit(1)).as("matches"))
         .filter(col("matches") >= 2)
-      TextOps.exactInter(pairs, base, "doc_id", fetch = Seq("n"))
+      TextOps.exactInter(pairs, base, "doc_id")
         .select(col("matches"), TextOps.jaccardOf.as("jac"))
         .groupBy("matches")
         .agg(count(lit(1)).as("n_pairs"),
@@ -303,8 +303,8 @@ object DedupVariantQueries {
         // representative (min doc_id) per cluster. Edges come from the
         // provably-lossless prefix-filter nearDupPairs, so the oracle can
         // build the same edge set naively and close it with a recursive
-        // CTE; the Spark side is iterative min-label propagation
-        // (O(diameter) narrow joins — see GraphOps.connectedComponents).
+        // CTE; the Spark side is iterative min-label propagation with
+        // hooking and pointer jumping (see GraphOps.connectedComponents).
         // The edge set is the SHARED cached pair list dedup_near reports
         // on (PipelineQueries.sharedNearDupPairs), and the resulting
         // cluster frame is itself the SHARED cached [[clusterFrame]] that

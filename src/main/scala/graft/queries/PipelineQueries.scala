@@ -2010,10 +2010,10 @@ object PipelineQueries {
     // declares; the oracle embeds KnnOracleSql and closes it with a
     // recursive min-label reachability CTE — graph and labels can never
     // drift. Scale shape is GraphOps.connectedComponents' contract:
-    // pointer-jumping halves label depth per round (log₂ diameter
-    // rounds), the edge set is partitioned ONCE on the join key, each
-    // round ships only (id, label) pairs, and lazy localCheckpoint keeps
-    // the plan flat — the dedup_clusters discipline on a different graph.
+    // hooking plus pointer jumping converge in a few rounds, the edge set
+    // is partitioned ONCE on the join key, each round ships only (id,
+    // label) pairs, and local checkpoints keep the lineage flat — the
+    // dedup_clusters discipline on a different graph.
     // The oracle's quadratic transitive closure is exactly the naive form
     // the operator exists to avoid; at 500 vertices it is the cheap
     // losslessness witness.

@@ -819,11 +819,13 @@ object RelationalQueries {
         val (onlyOld, onlyNew) = TxnLog.changedFiles(table, 0, 1)
         // an empty side is a legitimate change scope (pure append shows up
         // as onlyOld = ∅, pure delete as onlyNew = ∅) — diff against an
-        // empty frame of the table's schema, yielding all-I / all-D
-        def side(files: Seq[String]) =
+        // empty frame of the table's schema, yielding all-I / all-D. Each
+        // side reads at its own version, with that version's deletion
+        // vectors applied.
+        def side(files: Seq[String], v: Long) =
           if (files.isEmpty) TxnLog.read(s, table).limit(0)
-          else TxnLog.readFiles(s, table, files)
-        Differ.diff(side(onlyOld), side(onlyNew), Seq("o_orderkey"))
+          else TxnLog.readFiles(s, table, files, Some(v))
+        Differ.diff(side(onlyOld, 0), side(onlyNew, 1), Seq("o_orderkey"))
           .filter(col("diff_status") =!= "N")
     },
 

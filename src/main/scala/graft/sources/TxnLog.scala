@@ -176,7 +176,13 @@ object TxnLog {
   }
 
   /** Live data files with stats at `asOf` (default: latest), by replay. */
-  def liveFileStats(table: String, asOf: Option[Long] = None): Seq[FileStat] = {
+  def liveFileStats(table: String, asOf: Option[Long] = None): Seq[FileStat] =
+    replayAt(table, asOf)._1.iterator.map { case (f, st) => FileStat(f, st) }.toSeq
+
+  /** [[replayLive]] at `asOf` (default: latest), which must be a readable
+    * version: committed and not vacuumed away.
+    */
+  private def replayAt(table: String, asOf: Option[Long]) = {
     val last = latestVersion(table)
     require(last >= 0, s"TxnLog: no log at $table/$LogDir")
     val v = asOf.getOrElse(last)
@@ -185,7 +191,7 @@ object TxnLog {
     val floor = minVersion(table)
     require(v >= floor,
       s"TxnLog: version $v was vacuumed away (time-travel floor is $floor) at $table")
-    replayLive(table, v)._1.iterator.map { case (f, st) => FileStat(f, st) }.toSeq
+    replayLive(table, v)
   }
 
   /** Replay commits 0..v → (live data files with stats, live deletion
@@ -216,13 +222,8 @@ object TxnLog {
   }
 
   /** Live deletion vectors at `asOf` (default: latest). */
-  def liveDeleteVectors(table: String, asOf: Option[Long] = None): Seq[DvStat] = {
-    val last = latestVersion(table)
-    require(last >= 0, s"TxnLog: no log at $table/$LogDir")
-    val v = asOf.getOrElse(last)
-    replayLive(table, v)._2.toSeq
-      .map { case (f, (key, scope)) => DvStat(f, key, scope) }
-  }
+  def liveDeleteVectors(table: String, asOf: Option[Long] = None): Seq[DvStat] =
+    replayAt(table, asOf)._2.toSeq.map { case (f, (key, scope)) => DvStat(f, key, scope) }
 
   /** Live data files at `asOf` (default: latest), by commit replay. */
   def liveFiles(table: String, asOf: Option[Long] = None): Seq[String] =
@@ -689,8 +690,13 @@ object TxnLog {
     if (files.isEmpty)
       // empty snapshot: preserve "no rows" without a schema source
       sys.error(s"TxnLog: empty snapshot at $table (asOf=$asOf) has no schema")
+    withDeletes(spark, table, files, liveDeleteVectors(table, asOf), mergeSchema)
+  }
+
+  /** `files` of `table` with the deletion vectors `dvs` applied. */
+  private def withDeletes(spark: SparkSession, table: String, files: Seq[String],
+                          dvs: Seq[DvStat], mergeSchema: Boolean): DataFrame = {
     def readFiles(fs: Seq[String]) = scan(spark, table, fs, mergeSchema)
-    val dvs = liveDeleteVectors(table, asOf)
     if (dvs.isEmpty) readFiles(files)
     else {
       val keyCols = dvs.map(_.key).distinct
@@ -743,26 +749,45 @@ object TxnLog {
   }
 
   /** File-level change scope between two versions, from the log alone:
-    * (files live only at `v0`, files live only at `v1`). Every row that
-    * differs between the snapshots lives in one of these files — files in
-    * neither list are byte-identical in both versions and need never be
-    * read. This is the input to the incremental version diff: cost
-    * O(changed files), not O(table).
+    * (the data files of `v0` whose visible rows may differ at `v1`, and
+    * the data files of `v1` whose visible rows may differ at `v0`). A file
+    * live at one version only is on that side. A file live at both whose
+    * set of scoping deletion vectors differs (a delete, a compaction that
+    * retires a tombstone, a restore) is on BOTH sides: its bytes are the
+    * same, its visible rows are not. Every other file shows the same rows
+    * at both versions and need never be read. Read each side with
+    * [[readFiles]] at its own version, which applies that version's
+    * deletion vectors; every row that differs between the snapshots is
+    * then in one of the two reads. This is the input to the incremental
+    * version diff: cost O(changed files), not O(table).
     */
   def changedFiles(table: String, v0: Long, v1: Long): (Seq[String], Seq[String]) = {
-    val f0 = liveFiles(table, Some(v0))
-    val f1 = liveFiles(table, Some(v1))
-    val s0 = f0.toSet
-    val s1 = f1.toSet
-    (f0.filterNot(s1), f1.filterNot(s0))
+    val (s0, s1) = (scopedFiles(table, v0), scopedFiles(table, v1))
+    val (m0, m1) = (s0.toMap, s1.toMap)
+    (s0.collect { case (f, dvs) if !m1.get(f).contains(dvs) => f },
+      s1.collect { case (f, dvs) if !m0.get(f).contains(dvs) => f })
   }
 
-  /** Read a specific file subset of `table` (as produced by
-    * [[changedFiles]]), with the first listed file's footer schema.
+  /** The data files live at `v`, each with the live deletion vectors whose
+    * scope holds it.
     */
-  def readFiles(spark: SparkSession, table: String, files: Seq[String]): DataFrame = {
+  private def scopedFiles(table: String, v: Long): Seq[(String, Set[String])] = {
+    val (live, dvs) = replayAt(table, Some(v))
+    live.keys.toSeq.map(f => f -> dvs.collect { case (dv, (_, scope)) if scope(f) => dv }.toSet)
+  }
+
+  /** Read a subset of `table`'s data files live at `asOf` (default: the
+    * latest version) as that version shows them: the deletion vectors live
+    * at `asOf` apply to the files they scope. The schema is the first
+    * listed file's footer schema. Reads a side of [[changedFiles]].
+    */
+  def readFiles(spark: SparkSession, table: String, files: Seq[String],
+                asOf: Option[Long] = None): DataFrame = {
     require(files.nonEmpty, "TxnLog.readFiles: empty file list has no schema")
-    scan(spark, table, files)
+    val dead = files.filterNot(liveFiles(table, asOf).toSet)
+    require(dead.isEmpty, s"TxnLog.readFiles: ${dead.mkString(", ")} not live at " +
+      s"version ${asOf.getOrElse(latestVersion(table))} of $table")
+    withDeletes(spark, table, files, liveDeleteVectors(table, asOf), mergeSchema = false)
   }
 
   /** Spark's own schema string, stored in every parquet footer it writes. */

@@ -644,6 +644,30 @@ class ExtensionsSpec extends SparkTestBase {
       rowsOf(txnTvf).mkString(";"))
   }
 
+  test("column-set options and keys_for entries take the backtick key convention") {
+    GraftExtensions.register(spark)
+    import spark.implicits._
+    import graft.operators.{DiffOptions, Differ}
+    val l = (1L to 30L).map(k => (k, k % 2, k * 10, s"n$k")).toDF("k", "part", "v", "w")
+    val r = l.withColumn("v", when(col("k") % 3 === 0, col("v") + 1).otherwise(col("v")))
+      .withColumn("w", when(col("k") % 4 === 0, lit("x")).otherwise(col("w")))
+    l.createOrReplaceTempView("gbt_l"); r.createOrReplaceTempView("gbt_r")
+    // '`w`' names column w in every column-set option, as it does in keys
+    def viaSql(opts: String) = rowsOf(spark.sql(
+      s"SELECT * FROM graft_diff('gbt_l', 'gbt_r', '`k`', $opts)"))
+    assert(viaSql("ignore_cols => '`w`'") ==
+      rowsOf(Differ.diff(l, r, Seq("k"), DiffOptions(ignoreCols = Set("w")))))
+    assert(viaSql("tol_cols => '`v`', abs_tol => 1.0, digest_cols => ' `w` '") ==
+      rowsOf(Differ.diff(l, r, Seq("k"),
+        DiffOptions(tolCols = Set("v"), absTol = 1.0, digestCols = Set("w")))))
+    // and in each keys_for column list
+    val tvf = spark.sql("SELECT * FROM graft_diff_catalog('gbt_l', '_l', '_r', " +
+      "keys_for => 'gbt_l:`k`, `part`')")
+    val api = Differ.catalogDiffTables(spark, "gbt_l", _ => "gbt_r",
+      keysFor = Map("gbt_l" -> Seq("k", "part")))
+    assert(rowsOf(tvf) == rowsOf(api))
+  }
+
   test("graft_diff_cols honors options + the auto sentinel; graft_diff_unkeyed refuses options (r15)") {
     GraftExtensions.register(spark)
     import spark.implicits._

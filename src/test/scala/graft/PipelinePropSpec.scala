@@ -112,6 +112,51 @@ class PipelinePropSpec extends SparkTestBase {
     }
   }
 
+  /** Min-id component labels of (vertices ∪ endpoints) by union-find. */
+  private def unionFindLabels(vertices: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    vertices.foreach(find)
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  test("connectedComponents == union-find on random graphs") {
+    import graft.operators.GraphOps
+    val rnd = new scala.util.Random(17L)
+    // Ids are random longs, so labels are not the vertex order; some sit
+    // near Long.MaxValue, so the label sum overflows a long.
+    def ids(n: Int): Seq[Long] = Seq.fill(n)(
+      if (rnd.nextInt(4) == 0) Long.MaxValue - rnd.nextInt(1000) else rnd.nextInt(1 << 20).toLong
+    ).distinct
+    def chain(vs: Seq[Long]) = vs.zip(vs.drop(1))
+    def star(vs: Seq[Long]) = vs.drop(1).map(vs.head -> _)
+    def clique(vs: Seq[Long]) = for (a <- vs; b <- vs if a < b) yield (a, b)
+    for (graph <- 0 until 6) {
+      val (vertices, edges) = graph match {
+        case 0 => (ids(20), Nil)                                   // no edges at all
+        case 1 => val c = ids(70); (c, chain(c))                   // a chain longer than 2^6
+        case _ =>
+          val Seq(c, s, k, iso) = Seq(40, 12, 6, 5).map(ids)
+          val es = chain(c) ++ star(s) ++ clique(k)
+          // duplicate and reversed edges, self-loops, and an edge whose
+          // endpoint is not among the vertices
+          val extra = es.take(5) ++ es.take(5).map(_.swap) ++ c.take(3).map(v => v -> v) :+
+            (s.head -> (1L << 40))
+          (c ++ s ++ k ++ iso, rnd.shuffle(es ++ extra))
+      }
+      val got = GraphOps.connectedComponents(vertices.toDF("id"), edges.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      assert(got == unionFindLabels(vertices, edges), s"graph $graph")
+    }
+  }
+
   test("prefix-filter joins reject thresholds outside (0, 1]; MinHash rejects bands < 1") {
     // tau <= 0 would admit pairs sharing no token (J = 0 >= tau), which
     // prefix candidates can never produce — the exactness contract needs

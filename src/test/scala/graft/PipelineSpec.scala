@@ -154,8 +154,12 @@ class PipelineSpec extends SparkTestBase {
     val chain = (10L until 19L).map(i => (i, i + 1))
     val tri = Seq((1L, 2L), (2L, 3L), (3L, 1L))
     val edges = (chain ++ tri).toDF("src", "dst")
-    val cc = GraphOps.connectedComponents(vertices, edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    var labels: org.apache.spark.sql.DataFrame = null
+    val (jobs, _) = fired { labels = GraphOps.connectedComponents(vertices, edges) }
+    // rounds 1-2 in the first job, then one job per round: round 3 settles
+    // the chain's tail, round 4 finds no change
+    assert(jobs == 3, s"connectedComponents fired $jobs jobs")
+    val cc = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((10L to 19L).forall(cc(_) == 10L), "chain must collapse to min id 10")
     assert(Seq(1L, 2L, 3L).forall(cc(_) == 1L))
     assert(cc(0L) == 0L && cc(25L) == 25L, "isolated vertices keep their own label")

@@ -18,6 +18,21 @@ class TablesSpec extends SparkTestBase {
     assert(Tables.cached(spark, "tables-spec/outer")(fail("must not rebuild")) eq df)
   }
 
+  test("two live sessions never see each other's entries") {
+    val other = spark.newSession()
+    val key = "tablesspec-two-sessions"
+    val mine = Tables.cached(spark, key)(spark.range(2).toDF("id"))
+    val theirs = Tables.cached(other, key)(other.range(5).toDF("id"))
+    assert(mine.count() == 2 && theirs.count() == 5)
+    assert(Tables.cached(spark, key)(fail("must not rebuild")) eq mine)
+    assert(Tables.cached(other, key)(fail("must not rebuild")) eq theirs)
+    // releasing one session's registry leaves the other's cached and served
+    Tables.unpersistAll(other)
+    assert(!theirs.storageLevel.useMemory && mine.storageLevel.useMemory)
+    assert(Tables.cached(spark, key)(fail("must not rebuild")) eq mine)
+    mine.unpersist()
+  }
+
   test("tsUsExpr bridges every ts flavor to the same epoch micros") {
     // The fixture generator has shipped events.ts as bigint nanos
     // (timestamp[ns] + nanosAsLong), timestamp_ntz (timestamp[us]), and

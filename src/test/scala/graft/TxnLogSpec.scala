@@ -224,6 +224,39 @@ class TxnLogSpec extends SparkTestBase {
     assert(TxnLog.read(spark, src).count() == 100)
   }
 
+  test("changedFiles sees deletion vectors: the incremental diff equals the snapshot diff") {
+    val t = freshTable()
+    TxnLog.initKeyed(spark.range(100).toDF("id").withColumn("v", $"id" * 3)
+      .repartitionByRange(4, $"id"), t, "id")                             // v0: 100 rows
+    TxnLog.deleteWhere(spark, t, Seq(1L, 30L, 31L, 60L, 99L).toDF("id"), "id") // v1: 95 rows
+    // the delete rewrote no file, yet the files it scopes changed rows
+    val (old01, new01) = TxnLog.changedFiles(t, 0, 1)
+    assert(old01.nonEmpty && old01.toSet == new01.toSet, s"$old01 / $new01")
+    TxnLog.compact(spark, t, 2)                                           // v2: dv retired
+    TxnLog.restore(t, 1L)                                                 // v3 == v1
+    // v1 and v3 share files and dv scopes: nothing to read
+    assert(TxnLog.changedFiles(t, 1, 3) == ((Nil, Nil)))
+    def changes(df: org.apache.spark.sql.DataFrame, other: org.apache.spark.sql.DataFrame) =
+      rowsOf(Differ.diff(df, other, Seq("id")).filter($"diff_status" =!= "N"))
+    def incremental(v0: Long, v1: Long) = {
+      val (a, b) = TxnLog.changedFiles(t, v0, v1)
+      def side(files: Seq[String], v: Long) =
+        if (files.isEmpty) TxnLog.read(spark, t).limit(0)
+        else TxnLog.readFiles(spark, t, files, Some(v))
+      changes(side(a, v0), side(b, v1))
+    }
+    def snapshots(v0: Long, v1: Long) =
+      changes(TxnLog.read(spark, t, Some(v0)), TxnLog.read(spark, t, Some(v1)))
+    for ((v0, v1) <- Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L), (0L, 3L), (1L, 3L))) {
+      assert(incremental(v0, v1) == snapshots(v0, v1), s"versions $v0 -> $v1")
+    }
+    assert(snapshots(0, 1).size == 5 && snapshots(1, 2).isEmpty)
+    // a file not live at the asked version is refused, not read raw
+    val e = intercept[IllegalArgumentException](
+      TxnLog.readFiles(spark, t, TxnLog.liveFiles(t, Some(2L)), Some(1L)))
+    assert(e.getMessage.contains("not live"), e.getMessage)
+  }
+
   test("merge-on-read delete: anti-joined reads, range-scan guard, vacuum reclaims tombstones") {
     val t = freshTable()
     TxnLog.init((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v").repartition(2), t)
