@@ -94,15 +94,19 @@ object GraftExtensions {
     * named argument the function accepts. Binding checks the positional
     * count (failing with `usage`) and refuses a named argument outside
     * `options`, listing exactly them: a typo must never silently mean the
-    * default. Every accessor's error names `fn`, the function called.
+    * default. `refused` maps an option a sibling function takes to the
+    * refusal that says so. Every accessor's error names `fn`, the function
+    * called.
     */
   private final class Args(fn: String, usage: String, params: Seq[String],
-                           options: Seq[String], args: Seq[Expression]) {
+                           options: Seq[String], refused: Map[String, String],
+                           args: Seq[Expression]) {
     private val (named, positional) =
       args.partition(_.isInstanceOf[NamedArgumentExpression]) match {
         case (n, p) => (n.collect { case na: NamedArgumentExpression => na }, p)
       }
     if (positional.length != params.length) fail(s"usage: $usage")
+    named.find(na => refused.contains(na.key)).foreach(na => fail(refused(na.key)))
     named.find(na => !options.contains(na.key)).foreach { na =>
       fail(s"unknown option '${na.key}' (supported: " +
         (if (options.isEmpty) s"none — $fn takes no options" else options.mkString(", ")) + ")")
@@ -244,9 +248,10 @@ object GraftExtensions {
   /** The (name, builder) of one table function: binds the call's arguments
     * to its contract, runs `body`, and splices the analyzed plan.
     */
-  private def tvf(fn: String, usage: String, params: Seq[String], options: Seq[String])(
+  private def tvf(fn: String, usage: String, params: Seq[String], options: Seq[String],
+                  refused: Map[String, String] = Map.empty)(
       body: Args => DataFrame): (String, Seq[Expression] => LogicalPlan) =
-    fn -> (args => body(new Args(fn, usage, params, options, args)).queryExecution.analyzed)
+    fn -> (args => body(new Args(fn, usage, params, options, refused, args)).queryExecution.analyzed)
 
   private val pair = Seq("left_table", "right_table")
   private val keyedPair = pair :+ "keys"
@@ -430,10 +435,11 @@ object GraftExtensions {
     val fn = if (latest) "graft_diff_streams_latest" else "graft_diff_streams"
     tvf(fn, s"$fn('left_table', 'right_table', 'ts_us_col', 'k1,k2', 'v1,v2', width_us" +
       (if (latest) " [, payload => 'any']" else "") + ")",
-      pair ++ Seq("ts_us_col", "keys", "value_cols", "width_us"), Seq("payload")) { a =>
+      pair ++ Seq("ts_us_col", "keys", "value_cols", "width_us"),
+      if (latest) Seq("payload") else Nil,
+      if (latest) Map.empty
+      else Map("payload" -> "option 'payload' applies to graft_diff_streams_latest only")) { a =>
       val payloadAny = a.opt("payload")(a.string) match {
-        case Some(_) if !latest =>
-          a.fail("option 'payload' applies to graft_diff_streams_latest only")
         case Some("any") => true
         case Some("numeric") | None => false
         case Some(p) => a.fail(s"payload must be 'any' or 'numeric', got '$p'")

@@ -10,7 +10,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *     its own: a warm pass (iter 0), then `iters` more (default 2) on warm
   *     caches, and lists every Spark job that ran, with wall ms,
   *     description and its stages' call sites with task counts
-  *     (`parquet at TxnLog.scala:648 [1t]`).
+  *     (`parquet at TxnLog.scala:648 [1t]`). A last line lists every key
+  *     whose warm iterations (iter ≥ 1) still compile generated classes,
+  *     with the count per iteration: a deterministic plan compiles none.
   *   - `sbt "runMain graft.Profile --cycle <k1,k2,...> [passes]"` runs the
   *     keys in the listed order as one first pass plus `passes` cleared
   *     passes (default 3). Each cleared pass starts after
@@ -136,7 +138,16 @@ object Profile {
         println(s"[profile] cleared passes compiled ${perPass.drop(1).mkString(", ")} " +
           s"classes (median $median)")
       }
-    } else for (key <- keys; i <- 0 to n) run(key, s"iter $i", listJobs = true)
+    } else {
+      // a deterministic plan compiles nothing once warm; a key that still
+      // does generates sources that differ from run to run
+      val unstable = keys.flatMap { key =>
+        val warm = (0 to n).map(i => run(key, s"iter $i", listJobs = true)).drop(1)
+        Option.when(warm.exists(_ > 0))(s"$key (${warm.mkString(", ")})")
+      }
+      println("[profile] warm iterations (iter >= 1) compiling classes: " +
+        (if (unstable.isEmpty) "none" else unstable.mkString("; ")))
+    }
     spark.stop()
   }
 

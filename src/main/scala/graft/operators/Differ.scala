@@ -587,74 +587,78 @@ object Differ {
               opts: DiffOptions = DiffOptions()): DataFrame =
     summaryOf(diff(left, right, keys, opts), opts)
 
-  /** Catalog-level multi-table diff sweep (r13) — "did last night's load
+  /** Catalog-level multi-table diff sweep — "did last night's load
     * change ANY of the N tables?" as ONE long-format report: per table
     * pair, [[summary]]'s 4-status census (every status always present,
-    * zero-filled via a broadcast spine — a fixed 4 rows per table so the
-    * report is scannable) plus [[schemaDiff]]'s non-`same` rows, each row
-    * carrying a per-table `pass`/`fail` verdict (`pass` ⇔ zero C/I/D AND
-    * zero schema drift).
+    * zero-filled — a fixed 4 rows per table so the report is scannable)
+    * plus [[schemaDiff]]'s non-`same` rows, each row carrying a per-table
+    * `pass`/`fail` verdict (`pass` ⇔ zero C/I/D AND zero schema drift).
     *
     * Output: `(table_name, kind['census'|'schema'], item[status letter |
     * column name], detail[NULL | schema status], n[count | NULL],
     * verdict)` — `tables × (4 + drift)` rows.
     *
-    * Scale shape: one full-outer diff exchange per table pair (each
-    * [[diff]]'s documented single exchange), census aggs map-side
-    * combinable, the 4-row spines and the report-sized verdict window
-    * cost nothing; the per-pair plans UNION into one job — no driver-side
-    * loop over collected results, no action until the caller runs the
-    * report. Retyped columns follow [[diff]]'s coercion contract (a
+    * Scale shape: per table pair, [[diff]]'s full-outer join (one
+    * exchange per side) feeds ONE global aggregate of the four status
+    * counts (map-side partial counts, one single-partition exchange of a
+    * row per partition), and one `inline` emits the pair's rows. Schema
+    * drift is known at plan time, so its rows and its share of the
+    * verdict are literals; the verdict is an expression over the counts.
+    * No spine join, broadcast or window: 3 exchanges per pair. The
+    * per-pair plans UNION into one job — no driver-side loop over
+    * collected results, no action until the caller runs the report.
+    * Retyped columns follow [[diff]]'s coercion contract (a
     * non-coercible retype fails loudly — schemaDiff alone is the tool for
     * those pairs).
     */
   def catalogDiff(pairs: Seq[(String, DataFrame, DataFrame, Seq[String])],
                   opts: DiffOptions = DiffOptions()): DataFrame = {
     require(pairs.nonEmpty, "catalogDiff: need at least one table pair")
-    // Two pairs sharing a table_name would silently merge their census
-    // rows under one verdict window partition — 8 census rows and a
-    // cross-contaminated pass/fail instead of a loud failure (r13 ADVICE).
+    // Two pairs sharing a table_name would report 8 census rows and two
+    // verdicts under one name — refuse loudly instead.
     locally {
       val dups = pairs.groupBy(_._1).filter(_._2.size > 1).keys.toSeq.sorted
       require(dups.isEmpty,
         s"catalogDiff: duplicate table_name(s) ${dups.mkString(", ")} — each " +
           "pair must carry a unique report name or their censuses would merge")
     }
-    val spark = pairs.head._2.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val spine = spark.range(1).select(
-      explode(array(lit("N"), lit("C"), lit("I"), lit("D"))).as("item"))
-    val perTable = pairs.map { case (name, l, r, keys) =>
-      // broadcast the SUMMARY side, not the spine: a broadcast hint on the
-      // LEFT side of a left-outer join is unusable (the build side of a
-      // LeftOuter BHJ must be the right side), so the old broadcast(spine)
-      // silently compiled to a SortMergeJoin — two extra sorts + an
-      // exchange of the 4-row summary per pair (r15 optimization round;
-      // guide §3.1 "check which join you got"). The summary aggregate is
-      // ≤4 rows at any data scale, the always-safe broadcast side.
-      val census = spine
-        .join(broadcast(summary(l, r, keys, opts)
-            .withColumnRenamed(opts.statusCol, "item")),
-          Seq("item"), "left_outer")
-        .select(lit(name).as("table_name"), lit("census").as("kind"),
-          col("item"), lit(null).cast("string").as("detail"),
-          coalesce(col("n"), lit(0L)).as("n"))
-      val drift = schemaDiff(spark, l, r)
-        .filter(col("status") =!= "same")
-        .select(lit(name).as("table_name"), lit("schema").as("kind"),
-          col("column_name").as("item"), col("status").as("detail"),
-          lit(null).cast("long").as("n"))
-      census.unionByName(drift)
-    }
-    val folded = unionAllByName(perTable)
-    val bad = when(
-      (col("kind") === "schema") ||
-        (col("kind") === "census" && col("item") =!= "N" && col("n") > 0L),
-      1).otherwise(0)
-    folded
-      .withColumn("verdict",
-        when(max(bad).over(Window.partitionBy("table_name")) > 0, lit("fail"))
-          .otherwise(lit("pass")))
+    // count(when(…)), not sum: 0, not NULL, over two empty inputs.
+    val counts = Statuses.map(s => count(when(col(opts.statusCol) === s, 1)).as(s"__graft_n$s"))
+    unionAllByName(pairs.map { case (name, l, r, keys) =>
+      val drift = schemaChanges(l, r).collect {
+        case (c, _, _, status) if status != "same" => (c, status)
+      }
+      diff(l, r, keys, opts).agg(counts.head, counts.tail: _*)
+        .select(inline(catalogRows(name, s => col(s"__graft_n$s"), drift)
+          .cast(ArrayType(CatalogRow, containsNull = false))))
+    })
+  }
+
+  private val Statuses = Seq("N", "C", "I", "D")
+
+  /** A [[catalogDiff]] report row. A pair's rows are cast to it so `item`
+    * and `n` stay nullable whether or not the pair drifted, as the
+    * report has always declared them.
+    */
+  private val CatalogRow = StructType(Seq(
+    StructField("table_name", StringType, nullable = false),
+    StructField("kind", StringType, nullable = false),
+    StructField("item", StringType), StructField("detail", StringType),
+    StructField("n", LongType), StructField("verdict", StringType, nullable = false)))
+
+  /** One pair's [[catalogDiff]] rows as an array of structs: the census
+    * from the status counts `n`, then one row per drifted (column,
+    * status), every row with the pair's verdict.
+    */
+  private def catalogRows(name: String, n: String => Column,
+                          drift: Seq[(String, String)]): Column = {
+    val changed = Statuses.tail.map(n).reduce(_ + _) > 0L
+    val verdict = when(lit(drift.nonEmpty) || changed, lit("fail")).otherwise(lit("pass"))
+    def row(kind: String, item: String, detail: Column, cnt: Column): Column =
+      struct(lit(name).as("table_name"), lit(kind).as("kind"), lit(item).as("item"),
+        detail.as("detail"), cnt.as("n"), verdict.as("verdict"))
+    array(Statuses.map(s => row("census", s, lit(null).cast(StringType), n(s))) ++
+      drift.map { case (c, status) => row("schema", c, lit(status), lit(null).cast(LongType)) }: _*)
   }
 
   /** Catalog-wide COLUMN drift census (r15) — the column-grain sibling of
@@ -806,7 +810,7 @@ object Differ {
     * per-value count collected at (tables × columns) grain — bounded by
     * schema width, never row count), plus one pair-tier job only when a
     * table has no single-column key. The diffs themselves are
-    * [[catalogDiff]]'s one-exchange-per-pair union job.
+    * [[catalogDiff]]'s union job: three exchanges per pair.
     *
     * Plan-size bound in TABLE COUNT (measured with ScaleProbe part 6):
     * with [[unionAllByName]]'s balanced assembly, 3/30/300 pairs ran
@@ -857,7 +861,10 @@ object Differ {
     * [[graft.sources.TxnLog.read]]): building the sweep runs no Spark job
     * beyond [[electKeys]]' collect. The reads are snapshot-pinned parquet
     * scans, so the whole sweep is time-travel-consistent even while
-    * writers keep committing.
+    * writers keep committing. No snapshot is cached: the election and the
+    * pair diff each scan an endpoint's files once, where an in-memory copy
+    * would add a build job and its own generated classes per schema to
+    * every run and hold two full table copies per table at scale.
     *
     * Version-RANGE overrides: the
     * default `(None, None)` diffs prev-vs-latest per table (the nightly
@@ -932,18 +939,7 @@ object Differ {
         f <- fromVer.map(v => Right(v): Either[(String, String), Long])
           .orElse(fromTs.map(resolve(_, "from_ts"))).getOrElse(Right(t - 1L))
       } yield (f, t)
-      // Snapshot reads are materialized once per (table, version) per
-      // session: a sweep scans each endpoint at least twice (the election
-      // aggregate and the pair diff), and range/as-of sweeps over the same
-      // root resolve to the SAME pinned versions — without the memo every
-      // consumer re-reads the parquet files. A version-pinned snapshot is
-      // immutable by the log contract (init refuses an existing log dir,
-      // versions are append-only), so this is INPUT materialization (the
-      // Tables.cachedTable discipline), never result caching; the diff
-      // itself still computes per call.
-      def snap(v: Long): DataFrame =
-        graft.Tables.cached(spark, s"txnsnap:$p@v$v")(
-          TxnLog.read(spark, p.toString, Some(v)))
+      def snap(v: Long): DataFrame = TxnLog.read(spark, p.toString, Some(v))
       endpoints match {
         case Left(err) => (name, Left(err))
         case Right((f, t)) =>
@@ -1187,8 +1183,10 @@ object Differ {
     * null-free on BOTH sides — a left-only check would let a
     * double-loaded right table fan out the full-outer join — with
     * multi-candidate ties broken by cross-side distinct-value overlap),
-    * then [[catalogDiff]] over the keyed pairs UNIONed with one
-    * `error`-kind fail row per unusable entry. Because the sweep's
+    * then one [[catalogDiff]] plan per keyed pair (its census from one
+    * global aggregate over the pair's diff, its verdict an expression
+    * over the counts) UNIONed with one `error`-kind fail row per
+    * unusable entry. Because the sweep's
     * contract is "one bad table cannot kill the other N−1", any per-pair
     * plan-construction failure [[catalogDiff]]/[[diff]] raises (e.g. a
     * non-coercible retype) becomes a `pair_invalid` error row carrying
@@ -1215,12 +1213,8 @@ object Differ {
       // self-join is skipped.
       renderSelf = Some { (n, l, r, ks, nRows) =>
         catalogDiff(Seq((n, l, r, ks)), opts) // plan-time validations only
-        spark.range(1).select(
-            explode(array(lit("N"), lit("C"), lit("I"), lit("D"))).as("item"))
-          .select(lit(n).as("table_name"), lit("census").as("kind"),
-            col("item"), lit(null).cast("string").as("detail"),
-            when(col("item") === "N", lit(nRows)).otherwise(lit(0L)).as("n"),
-            lit("pass").as("verdict"))
+        spark.range(1).select(inline(
+          catalogRows(n, s => lit(if (s == "N") nRows else 0L), drift = Nil)))
       })
 
   /** One-line refusal message from a demoted exception — total: a
@@ -1473,10 +1467,19 @@ object Differ {
     */
   def schemaDiff(spark: org.apache.spark.sql.SparkSession,
                  left: DataFrame, right: DataFrame): DataFrame = {
+    import spark.implicits._
+    schemaChanges(left, right).toDF("column_name", "left_type", "right_type", "status")
+  }
+
+  /** [[schemaDiff]]'s rows on the driver: (column, left type, right type,
+    * status), left's columns first, then right-only ones.
+    */
+  private def schemaChanges(left: DataFrame, right: DataFrame)
+      : Seq[(String, String, String, String)] = {
     val lt = left.schema.fields.map(f => f.name -> f.dataType.sql).toMap
     val rt = right.schema.fields.map(f => f.name -> f.dataType.sql).toMap
     val names = (left.schema.fieldNames ++ right.schema.fieldNames).distinct.toSeq
-    val rows = names.map { n =>
+    names.map { n =>
       val status = (lt.get(n), rt.get(n)) match {
         case (Some(a), Some(b)) if a == b => "same"
         case (Some(_), Some(_))           => "type_changed"
@@ -1486,8 +1489,6 @@ object Differ {
       }
       (n, lt.getOrElse(n, null), rt.getOrElse(n, null), status)
     }
-    import spark.implicits._
-    rows.toDF("column_name", "left_type", "right_type", "status")
   }
 
   /** Canonical whole-row fingerprint for the key-less bag diff
@@ -2509,9 +2510,8 @@ object Differ {
     val exampleStatuses = if (k > 0) Seq("C", "I", "D") else Nil
 
     // count(when(…)), not sum: 0, not NULL, over two empty inputs.
-    val statuses = Seq("N", "C", "I", "D")
     def n(status: String): Column = col(s"__graft_n$status")
-    val aggs = statuses.map(s => count(when(col(st) === s, 1)).as(s"__graft_n$s")) ++
+    val aggs = Statuses.map(s => count(when(col(st) === s, 1)).as(s"__graft_n$s")) ++
       vcols.zipWithIndex.map { case (c, i) =>
         count(when(col(st).isin("N", "C") && !p.colEq(c, bq(s"${opts.leftPrefix}$c"),
           bq(s"${opts.rightPrefix}$c")), 1)).as(s"__graft_c$i")
@@ -2522,7 +2522,7 @@ object Differ {
     def row(section: String, item: String, cnt: Column): Column =
       struct(lit(section).as("section"), lit(item).as("item"), cnt.as("n"),
         nullD.as("left_val"), nullD.as("right_val"))
-    val stats = statuses.map(s => row("summary", s, n(s))) ++
+    val stats = Statuses.map(s => row("summary", s, n(s))) ++
       Seq(row("counts", "left_rows", n("N") + n("C") + n("D")),
         row("counts", "right_rows", n("N") + n("C") + n("I"))) ++
       vcols.zipWithIndex.map { case (c, i) => row("column_stats", c, col(s"__graft_c$i")) }

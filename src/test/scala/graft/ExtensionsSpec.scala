@@ -787,7 +787,7 @@ class ExtensionsSpec extends SparkTestBase {
         diffOpts :+ "keys_for"),
       ("graft_diff_txnlog", "'/d'", "'/d', from_version => 'x'",
         diffOpts ++ Seq("from_version", "to_version", "from_ts", "to_ts", "keys_for")),
-      ("graft_diff_streams", streams, s"$pair, 'ts_us', 'k', 'v', 1.5", Seq("payload")),
+      ("graft_diff_streams", streams, s"$pair, 'ts_us', 'k', 'v', 1.5", Nil),
       ("graft_diff_streams_latest", streams, s"$streams, payload => true", Seq("payload")))
     assert(cases.map(_._1).distinct.size == 12)
     for ((tvf, positional, wrongTyped, options) <- cases) {

@@ -1105,6 +1105,39 @@ class PlanSpec extends SparkTestBase {
       s"expected exactly one full-outer per table pair (3 pairs), got $fullOuters")
   }
 
+  test("TxnLog sweep: per healthy pair one full-outer diff and one global census aggregate, 3 exchanges") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    def strip(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    for (name <- Seq("sql_diff_txnlog_tvf", "diff_catalog_txnlog")) {
+      val df = queryNamed(DiffQueries.all, name)
+      val plan = strip(df.queryExecution.executedPlan)
+      // the fixture sweeps two healthy pairs (orders_t, cust_t) and one
+      // single-version table, which is an error row and reads nothing
+      val healthy = plan.collect { case j: SortMergeJoinExec if j.joinType == FullOuter => j }.size
+      assert(healthy == 2, s"$name: $healthy full-outer diffs\n$plan")
+      // per pair: one exchange per join side, one into the census aggregate
+      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size == 3 * healthy, s"$name: ${shuffles.size} exchanges\n$plan")
+      assert(shuffles.count(_.outputPartitioning == SinglePartition) == healthy,
+        s"$name: one global census aggregate per pair\n$plan")
+      assert(plan.collect { case w: WindowExec => w }.isEmpty, s"$name: verdict window\n$plan")
+      assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+        s"$name: broadcast spine join\n$plan")
+      // snapshots are read as pinned parquet, never as cached copies
+      val text = df.queryExecution.toString
+      assert(!text.contains("InMemoryRelation"), s"$name: cached snapshot\n$text")
+      assert(!text.contains("No Partition Defined"), s"$name\n$text")
+    }
+  }
+
   test("stream_diff_stream batch twin: two (window,key) aggs meet in ONE full-outer, no cartesian") {
     val plan = physical(graft.queries.StreamingQueries.all, "stream_diff_stream")
     assert(!plan.contains("CartesianProduct"))

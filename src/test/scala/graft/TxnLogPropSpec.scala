@@ -7,11 +7,14 @@ import org.scalacheck.{Gen, rng}
 import graft.sources.TxnLog
 
 /** Model-based property test of the transactional table: random op
-  * sequences (append / overwrite / merge / compact) run against both the
-  * real log and an in-memory model (the full version history as plain
-  * maps). After every op, EVERY historical version must still read back
-  * exactly the model's snapshot — i.e. commits are append-only facts and
-  * no later operation can corrupt an earlier snapshot.
+  * sequences (append / overwrite / merge / compact / delete / restore) run
+  * against both the real log and an in-memory model (the full version
+  * history as plain maps). After every op, EVERY historical version must
+  * still read back exactly the model's snapshot — i.e. commits are
+  * append-only facts and no later operation can corrupt an earlier
+  * snapshot. For every version pair, the change scope
+  * (`TxnLog.changedFiles`, each side read at its own version) must differ
+  * by exactly the rows the two snapshots differ by.
   */
 class TxnLogPropSpec extends SparkTestBase {
   import spark.implicits._
@@ -107,6 +110,29 @@ class TxnLogPropSpec extends SparkTestBase {
         assert(got == expect,
           s"case $caseIdx version $v: got ${got.take(8)}... want ${expect.take(8)}...")
       }
+      // the change scope of every version pair, each side read at its own
+      // version, differs by exactly the rows the full snapshots differ by
+      for (v0 <- history.indices; v1 <- history.indices if v0 < v1) {
+        val (a, b) = TxnLog.changedFiles(t, v0.toLong, v1.toLong)
+        def side(files: Seq[String], v: Int) =
+          if (files.isEmpty) Nil else snapshotRows(TxnLog.readFiles(spark, t, files, Some(v.toLong)))
+        val (scope0, scope1) = (side(a, v0), side(b, v1))
+        assert(changes(scope0, scope1) == changes(history(v0), history(v1)),
+          s"case $caseIdx versions $v0 -> $v1: scope ${a.size}/${b.size} files")
+      }
     }
+  }
+
+  /** The rows two multisets differ by: (left minus right, right minus
+    * left), each sorted.
+    */
+  private def changes(l: Seq[(Long, String)], r: Seq[(Long, String)])
+      : (Seq[(Long, String)], Seq[(Long, String)]) = {
+    def minus(x: Seq[(Long, String)], y: Seq[(Long, String)]) = {
+      val inY = y.groupBy(identity).view.mapValues(_.size).toMap
+      x.groupBy(identity).toSeq
+        .flatMap { case (row, rs) => Seq.fill(rs.size - inY.getOrElse(row, 0))(row) }.sorted
+    }
+    (minus(l, r), minus(r, l))
   }
 }
