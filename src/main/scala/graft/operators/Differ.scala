@@ -159,8 +159,8 @@ object Differ {
   private def q(alias: String, name: String): Column =
     col(s"$alias.`${name.replace("`", "``")}`")
 
-  /** N-ary union as a BALANCED pairwise tree, not a left fold (r15, the
-    * ScaleProbe part-6 finding): every Dataset is eagerly ANALYZED at
+  /** N-ary union as a BALANCED pairwise tree, not a left fold (PLANS.md,
+    * "Scale-up probe part 6"): every Dataset is eagerly ANALYZED at
     * creation, so `reduce(_ unionByName _)` re-analyzes the cumulative
     * k-child union at each of its N steps — O(N²) analyzer node visits
     * just to assemble the sweep, the measured superlinear factor at 300
@@ -614,14 +614,7 @@ object Differ {
   def catalogDiff(pairs: Seq[(String, DataFrame, DataFrame, Seq[String])],
                   opts: DiffOptions = DiffOptions()): DataFrame = {
     require(pairs.nonEmpty, "catalogDiff: need at least one table pair")
-    // Two pairs sharing a table_name would report 8 census rows and two
-    // verdicts under one name — refuse loudly instead.
-    locally {
-      val dups = pairs.groupBy(_._1).filter(_._2.size > 1).keys.toSeq.sorted
-      require(dups.isEmpty,
-        s"catalogDiff: duplicate table_name(s) ${dups.mkString(", ")} — each " +
-          "pair must carry a unique report name or their censuses would merge")
-    }
+    requireUniqueNames("catalogDiff", pairs.map(_._1))
     // count(when(…)), not sum: 0, not NULL, over two empty inputs.
     val counts = Statuses.map(s => count(when(col(opts.statusCol) === s, 1)).as(s"__graft_n$s"))
     unionAllByName(pairs.map { case (name, l, r, keys) =>
@@ -635,6 +628,16 @@ object Differ {
   }
 
   private val Statuses = Seq("N", "C", "I", "D")
+
+  /** Refuses two report entries under one table name: a row census would
+    * show 8 census rows and two verdicts under it, a column census two
+    * rows per column.
+    */
+  private def requireUniqueNames(what: String, names: Seq[String]): Unit = {
+    val dups = names.groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted
+    require(dups.isEmpty, s"$what: duplicate table name(s) ${dups.mkString(", ")} — " +
+      "each pair must carry a unique report name or their rows would merge")
+  }
 
   /** A [[catalogDiff]] report row. A pair's rows are cast to it so `item`
     * and `n` stay nullable whether or not the pair drifted, as the
@@ -661,7 +664,7 @@ object Differ {
       drift.map { case (c, status) => row("schema", c, lit(status), lit(null).cast(LongType)) }: _*)
   }
 
-  /** Catalog-wide COLUMN drift census (r15) — the column-grain sibling of
+  /** Catalog-wide COLUMN drift census — the column-grain sibling of
     * [[catalogDiff]]'s row-grain census: per (table, column), how many
     * key-matched rows differ in THAT column, with the pair's matched-row
     * count as the shared denominator — "which column drifted,
@@ -682,11 +685,7 @@ object Differ {
   def catalogDiffCols(pairs: Seq[(String, DataFrame, DataFrame, Seq[String])],
                       opts: DiffOptions = DiffOptions()): DataFrame = {
     require(pairs.nonEmpty, "catalogDiffCols: need at least one table pair")
-    locally {
-      val dups = pairs.groupBy(_._1).filter(_._2.size > 1).keys.toSeq.sorted
-      require(dups.isEmpty,
-        s"catalogDiffCols: duplicate table_name(s) ${dups.mkString(", ")}")
-    }
+    requireUniqueNames("catalogDiffCols", pairs.map(_._1))
     unionAllByName(pairs.map { case (name, left, right, keys) =>
       columnDiffCounts(left, right, keys, opts)
         .select(lit(name).as("table_name"), col("column_name"),
@@ -724,7 +723,7 @@ object Differ {
         col("__graft_nm").as("n_matched"))
   }
 
-  /** Catalog-SOURCED column drift census (r15): [[catalogDiffCols]] takes
+  /** Catalog-SOURCED column drift census: [[catalogDiffCols]] takes
     * caller-constructed pairs; this one takes the production question
     * directly — "which column drifted, across every table matching
     * `pattern`?" — with [[catalogDiffTables]]' exact enumeration, key
@@ -751,8 +750,8 @@ object Differ {
         "catalogDiffTablesCols"), keysFor,
       renderPair = (n, l, r, ks) =>
         // a table whose key covers EVERY shared column has nothing to
-        // census — still a row, not silence (r15 review: a dropped table
-        // reads as "never swept")
+        // census — still a row, not silence (a dropped table would read
+        // as "never swept")
         if (valueCols(l, r, ks, opts).isEmpty)
           noteRow(n, "no_value_columns",
             s"every shared column is part of the key (${ks.mkString(", ")}) " +
@@ -761,28 +760,7 @@ object Differ {
           .select(lit(n).as("table_name"), col("column_name"),
             col("n_diff"), col("n_matched"),
             lit(null).cast("string").as("note")),
-      renderErr = noteRow,
-      // Elected-key self-pair short-circuit, column grain (see
-      // sweepReport): n_diff = 0 for every shared value column, n_matched
-      // = the election's row count; the generic plan is still constructed
-      // so plan-time refusals demote identically. digested/coerce
-      // preserve column names and order, so the raw-frame valueCols list
-      // is exactly the set the executed census would emit.
-      renderSelf = Some { (n, l, r, ks, nRows) =>
-        val vcols = valueCols(l, r, ks, opts)
-        if (vcols.isEmpty)
-          noteRow(n, "no_value_columns",
-            s"every shared column is part of the key (${ks.mkString(", ")}) " +
-              "— nothing to census")
-        else {
-          columnDiffCounts(l, r, ks, opts) // plan-time validations only
-          spark.range(1)
-            .select(explode(array(vcols.map(lit): _*)).as("column_name"))
-            .select(lit(n).as("table_name"), col("column_name"),
-              lit(0L).as("n_diff"), lit(nRows).as("n_matched"),
-              lit(null).cast("string").as("note"))
-        }
-      })
+      renderErr = noteRow)
   }
 
   /** Catalog-SOURCED multi-table diff sweep ([[catalogDiff]] takes
@@ -812,7 +790,7 @@ object Differ {
     * table has no single-column key. The diffs themselves are
     * [[catalogDiff]]'s union job: three exchanges per pair.
     *
-    * Plan-size bound in TABLE COUNT (measured with ScaleProbe part 6):
+    * Plan-size bound in TABLE COUNT (PLANS.md, "Scale-up probe part 6"):
     * with [[unionAllByName]]'s balanced assembly, 3/30/300 pairs ran
     * 3.4/7.2/64.7 s end-to-end on tiny tables — per-table cost FALLS
     * with N (0.24 s at 30 → 0.22 s at 300; fixed session cost amortizes,
@@ -954,20 +932,9 @@ object Differ {
     }, opts, keysFor)
   }
 
-  /** Election result per sweep pair: the elected key (None = no unique
-    * single column or pair), whether the two relations are PROVABLY the
-    * same plan (`sameResult` — the re-publish-check case), and the left
-    * side's row count (already paid for by the election's collect; the
-    * self-pair census short-circuit reads it instead of running a
-    * redundant full-outer self-join).
-    */
-  private[operators] final case class Elected(
-      keys: Option[Seq[String]], selfPair: Boolean, nRowsLeft: Long)
-
   /** One shared atomic column of an election pair, as the election's
     * collect saw it: per side the distinct, non-null and row counts, and
-    * the number of distinct values present on BOTH sides. A self-pair
-    * carries its left side's numbers on both sides.
+    * the number of distinct values present on BOTH sides.
     */
   private final case class KeyStat(name: String, pos: Int,
                                    dL: Long, nnL: Long, nL: Long,
@@ -1040,7 +1007,7 @@ object Differ {
     * candidate is unique and null-free on both sides by construction, so
     * its overlap needs no separate distinct or join. Only columns present
     * on both sides enter the job (a one-sided column can never be
-    * elected), and a self-pair aggregates one side.
+    * elected).
     *
     * PAIR tier: a table with NO single candidate falls back to column
     * PAIRS drawn from its shared null-free columns — ranked by the
@@ -1053,12 +1020,12 @@ object Differ {
     * combo qualifies when pair-distinct equals the row count on BOTH
     * sides; ties break by schema position (the churned-surrogate decoy
     * needs TWO churned unique-TOGETHER columns to fool this tier, so the
-    * overlap tie-break is deliberately not replicated here). Returns the
-    * elected key as a Seq — one element from the single tier, two from
-    * the pair tier.
+    * overlap tie-break is deliberately not replicated here). Returns per
+    * pair the elected key as a Seq — one element from the single tier,
+    * two from the pair tier — or None when neither tier has one.
     */
   private def electKeys(pairs: Seq[(String, (DataFrame, DataFrame))])
-      : Map[String, Elected] = {
+      : Map[String, Option[Seq[String]]] = {
     val atomic: DataType => Boolean = {
       case _: NumericType | StringType | BooleanType | DateType | BinaryType |
            _: TimestampType | _: TimestampNTZType => true
@@ -1074,13 +1041,6 @@ object Differ {
           (f.name, i, numberFamily(f.dataType).exists(numberFamily(onRight(f.name)).contains))
       }
     }.toIndexedSeq
-    // Provably-identical relations (a table swept against itself): their
-    // right side is never scanned, and the sweep's census short-circuits.
-    // sameResult is conservative: a false negative just pays the scan,
-    // never changes the election.
-    val self: IndexedSeq[Boolean] = pairs.map { case (_, (l, r)) =>
-      l.queryExecution.analyzed.sameResult(r.queryExecution.analyzed)
-    }.toIndexedSeq
     def longForm(t: Int, df: DataFrame, left: Boolean): DataFrame =
       df.select(explode(array(shared(t).map { case (c, pos, asNumber) =>
           val (n, s) = groupingImage(bq(c), df.schema(c).dataType, asNumber)
@@ -1090,8 +1050,7 @@ object Differ {
           col("e.n").as("n"), col("e.s").as("s"))
     val sides = pairs.indices.filter(shared(_).nonEmpty).flatMap { t =>
       val (l, r) = pairs(t)._2
-      longForm(t, l, left = true) +:
-        (if (self(t)) Nil else Seq(longForm(t, r, left = false)))
+      Seq(longForm(t, l, left = true), longForm(t, r, left = false))
     }
     val got: Map[(Int, Int), Seq[Long]] =
       if (sides.isEmpty) Map.empty
@@ -1112,12 +1071,8 @@ object Differ {
     // a (t, c) with no row had no rows on either side
     val stats: IndexedSeq[Seq[KeyStat]] = pairs.indices.map { t =>
       shared(t).map { case (c, pos, _) =>
-        got.getOrElse((t, pos), Seq.fill(7)(0L)) match {
-          case Seq(dL, nnL, nL, _, _, _, _) if self(t) =>
-            KeyStat(c, pos, dL, nnL, nL, dL, nnL, nL, dL)
-          case Seq(dL, nnL, nL, dR, nnR, nR, sh) =>
-            KeyStat(c, pos, dL, nnL, nL, dR, nnR, nR, sh)
-        }
+        val Seq(dL, nnL, nL, dR, nnR, nR, sh) = got.getOrElse((t, pos), Seq.fill(7)(0L))
+        KeyStat(c, pos, dL, nnL, nL, dR, nnR, nR, sh)
       }
     }
     // single-column candidates in left schema order
@@ -1148,13 +1103,12 @@ object Differ {
             .select(lit(t).as("t"), lit(left).as("l"), col("e.i").as("i"))
         val ok = unionAllByName(needPair.flatMap { case (t, combos) =>
             val (l, r) = pairs(t)._2
-            comboFrame(t, left = true, l, combos) +:
-              (if (self(t)) Nil else Seq(comboFrame(t, left = false, r, combos)))
+            Seq(comboFrame(t, left = true, l, combos), comboFrame(t, left = false, r, combos))
           })
           .collect().map(r => (r.getInt(0), r.getBoolean(1), r.getInt(2))).toSet
         needPair.flatMap { case (t, combos) =>
           combos.indices
-            .filter(i => ok((t, true, i)) && (self(t) || ok((t, false, i))))
+            .filter(i => ok((t, true, i)) && ok((t, false, i)))
             .map(combos).sortBy { case (a, b) => (a.pos + b.pos, a.pos) }
             .headOption.map { case (a, b) => t -> Seq(a.name, b.name) }
         }.toMap
@@ -1165,7 +1119,7 @@ object Differ {
         case Seq()     => pairElect.get(t)
         case many      => Some(Seq(many.minBy(s => (-s.overlapPpm, s.pos)).name))
       }
-      pairs(t)._1 -> Elected(keys, self(t), stats(t).headOption.fold(0L)(_.nL))
+      pairs(t)._1 -> keys
     }.toMap
   }
 
@@ -1176,7 +1130,7 @@ object Differ {
     * qualifies (the pair tier), None when neither exists.
     */
   def inferDiffKey(left: DataFrame, right: DataFrame): Option[Seq[String]] =
-    electKeys(Seq(("pair", (left, right))))("pair").keys
+    electKeys(Seq(("pair", (left, right))))("pair")
 
   /** Shared sweep core of [[catalogDiffTables]] / [[catalogDiffTxnLog]]:
     * [[electKeys]] infers the diff key per healthy pair (unique +
@@ -1203,19 +1157,7 @@ object Differ {
       renderErr = (n, item, detail) =>
         spark.range(1).select(lit(n).as("table_name"), lit("error").as("kind"),
           lit(item).as("item"), lit(detail).as("detail"),
-          lit(null).cast("long").as("n"), lit("fail").as("verdict")),
-      // Elected-key self-pair (sameResult) census: every row matches
-      // itself, so the 4-row census is fully determined by the row count
-      // the election already paid for — N = n, C/I/D = 0, no drift,
-      // verdict pass. The generic pair plan is still CONSTRUCTED (first
-      // statement) so every plan-time refusal demotes to pair_invalid
-      // exactly like the executed path; only the redundant full-outer
-      // self-join is skipped.
-      renderSelf = Some { (n, l, r, ks, nRows) =>
-        catalogDiff(Seq((n, l, r, ks)), opts) // plan-time validations only
-        spark.range(1).select(inline(
-          catalogRows(n, s => lit(if (s == "N") nRows else 0L), drift = Nil)))
-      })
+          lit(null).cast("long").as("n"), lit("fail").as("verdict")))
 
   /** One-line refusal message from a demoted exception — total: a
     * null/empty/whitespace message must still yield text, never a
@@ -1265,23 +1207,17 @@ object Differ {
                         keysFor: Map[String, Seq[String]],
                         renderPair: (String, DataFrame, DataFrame,
                           Seq[String]) => DataFrame,
-                        renderErr: (String, String, String) => DataFrame,
-                        renderSelf: Option[(String, DataFrame, DataFrame,
-                          Seq[String], Long) => DataFrame] = None)
+                        renderErr: (String, String, String) => DataFrame)
       : DataFrame = {
-    locally {
-      val dups = entries.map(_._1).groupBy(identity).filter(_._2.size > 1).keys
-      require(dups.isEmpty,
-        s"sweep: duplicate table name(s) ${dups.toSeq.sorted.mkString(", ")}")
-      // a keysFor entry naming a table the sweep never visits is a config
-      // typo — silently ignoring it would let the pair fall back to
-      // election with no diagnostic
-      val orphans = (keysFor.keySet -- entries.map(_._1)).toSeq.sorted
-      require(orphans.isEmpty,
-        s"sweep: keys_for entr${if (orphans.size == 1) "y" else "ies"} " +
-          s"${orphans.mkString(", ")} match${if (orphans.size == 1) "es" else ""} " +
-          "no swept table")
-    }
+    requireUniqueNames("sweep", entries.map(_._1))
+    // a keysFor entry naming a table the sweep never visits is a config
+    // typo — silently ignoring it would let the pair fall back to
+    // election with no diagnostic
+    val orphans = (keysFor.keySet -- entries.map(_._1)).toSeq.sorted
+    require(orphans.isEmpty,
+      s"sweep: keys_for entr${if (orphans.size == 1) "y" else "ies"} " +
+        s"${orphans.mkString(", ")} match${if (orphans.size == 1) "es" else ""} " +
+        "no swept table")
     // overridden pairs never enter the election job — the caller
     // pinned their key, so scanning their columns for uniqueness would be
     // pure waste (and composite-key tables would fail it anyway)
@@ -1292,28 +1228,9 @@ object Differ {
     unionAllByName(entries.map {
       case (n, Left((item, detail))) => renderErr(n, item, detail)
       case (n, Right((l, r))) =>
-        keysFor.get(n).orElse(keyFor.get(n).flatMap(_.keys)) match {
+        keysFor.get(n).orElse(keyFor.get(n).flatten) match {
           case Some(ks) =>
-            // Self-pair short-circuit: when the
-            // two relations are PROVABLY the same plan (sameResult) and
-            // the key was ELECTED (election certified it unique +
-            // null-free, so the pair join cannot fan out), the pair's
-            // report rows are fully determined — every row matches itself
-            // — and the election already paid for the row count. The
-            // renderer still constructs the generic pair plan first, so
-            // every plan-time refusal class (digest/tolerance clashes,
-            // non-coercible retypes) demotes to the SAME pair_invalid row
-            // as the generic path; only the execution is skipped.
-            // Overridden pairs never short-circuit: their uniqueness is
-            // the caller's unverified assertion (a duplicated key would
-            // legitimately fan out the join and the census must show it).
-            val render: () => DataFrame = renderSelf match {
-              case Some(rs) if !keysFor.contains(n) &&
-                  keyFor.get(n).exists(_.selfPair) =>
-                () => rs(n, l, r, ks, keyFor(n).nRowsLeft)
-              case _ => () => renderPair(n, l, r, ks)
-            }
-            scala.util.Try(render()) match {
+            scala.util.Try(renderPair(n, l, r, ks)) match {
               case scala.util.Success(df) => df
               case scala.util.Failure(e) =>
                 renderErr(n, "pair_invalid", refusalMsg(e))
@@ -1648,8 +1565,9 @@ object Differ {
 
   /** The buckets whose content digests disagree between the two sides —
     * ONE `__graft_bucket` column, ≤ `buckets` rows. The shared phase-0 of
-    * [[diffIncremental]], the `diff_estimate` census, and ScaleProbe, so
-    * they cannot drift on what "dirty" means.
+    * [[diffIncremental]] and the `diff_estimate` census (and of the
+    * PLANS.md "Scale-up probe" measurements), so they cannot drift on what
+    * "dirty" means.
     */
   def dirtyBuckets(left: DataFrame, right: DataFrame, keys: Seq[String],
                    vcols: Seq[String], buckets: Int): DataFrame = {
@@ -1715,7 +1633,7 @@ object Differ {
     * downgrade it to a broadcast at runtime if the actual size turns out
     * small — the estimate only decides whether we *force* the collect.
     *
-    * PRECONDITION (r12, shared with [[composeChangesets]]): `changes`
+    * PRECONDITION (shared with [[composeChangesets]]): `changes`
     * must be a FULL-PAYLOAD changeset (DiffOptions.sparse = false) — a
     * sparse changeset nulls the equal columns of C rows, so the upsert
     * would overwrite them with NULLs; not detectable from the shape.
@@ -1823,8 +1741,8 @@ object Differ {
       .toDF("lc", "rc", "n_shared", "overlap_ppm", "verdict")
     if (rOnly.isEmpty) return spine
 
-    // ONE scan per side (r13 review fix — the per-column select+union form
-    // re-read the input once per candidate column): explode a (name, value)
+    // ONE scan per side (a per-column select+union would re-read the
+    // input once per candidate column): explode a (name, value)
     // struct array so every candidate column rides the same pass, then
     // distinct on the exploded long form.
     def longForm(df: DataFrame, cols: Seq[String], side: String): DataFrame =
@@ -1983,7 +1901,7 @@ object Differ {
           // types have no total order in Spark), fingerprint as the final
           // deterministic tie-break so identical-prefix rows never flap.
           // The sort key is the NORMALIZED value, exactly as colEqual will
-          // compare it (r13 review fix): under ignoreCase/trimWs/bagCols,
+          // compare it: under ignoreCase/trimWs/bagCols,
           // raw-ordering normalization-equal rows could rank differently
           // per side ("B","a" vs "B","A") and manufacture the C cascade
           // this mode exists to prevent. Numeric tolerance is a
@@ -2195,7 +2113,7 @@ object Differ {
     * row per entrant): duplicate keys would fan the k-vs-k full outer out
     * into contradictory cross-pair drift rows. Enforced in-plan with the
     * [[Q.requireBand]] assert_true tripwire over a per-key count window on
-    * the k-bounded frame (r13 review fix) — zero extra jobs, fails loudly
+    * the k-bounded frame — zero extra jobs, fails loudly
     * naming the operator; dup-keyed VALUE diffing is [[diffDupKeyRank]]'s
     * job, not this report's.
     */

@@ -1369,7 +1369,8 @@ class DifferSpec extends SparkTestBase {
   }
 
   test("unionAllByName: balanced tree == left fold at every arity; same flat optimized Union (r15)") {
-    // The sweep-assembly fix for ScaleProbe part 6's superlinear factor.
+    // The sweep-assembly fix for the superlinear factor PLANS.md's
+    // "Scale-up probe part 6" measured.
     // The win is CONSTRUCTION cost, not final shape: every Dataset is
     // eagerly analyzed at creation, so a left fold re-analyzes the
     // cumulative k-child union at each of N steps (O(N²) analyzer node
@@ -1394,15 +1395,15 @@ class DifferSpec extends SparkTestBase {
     assert(unionArity(foldOpt) == Seq(33), s"fold: ${unionArity(foldOpt)}")
   }
 
-  test("sweep self-pair short-circuit == the executed full-outer path, both grains; refusals still demote (r15 opt)") {
+  test("sweep of a table against itself == catalogDiff, both grains; refusals demote") {
     import spark.implicits._
     val t = (1L to 50L).map(k => (k, s"s$k", k * 1.5)).toDF("k", "s", "v")
-    // both views resolve to the SAME analyzed plan -> sameResult -> the
-    // sweep's self-pair short-circuit fires (no full-outer self-join)
+    // both views resolve to the SAME analyzed plan: a table swept against
+    // itself, which elects its key and diffs like any other pair
     t.createOrReplaceTempView("gsp_t_l"); t.createOrReplaceTempView("gsp_t_r")
     val out = Differ.catalogDiffTables(spark, "gsp_t_l", _ => "gsp_t_r")
-    // the reference is catalogDiff on caller pairs (always executed): the
-    // short-circuit must be row-for-row invisible in the report
+    // the reference is catalogDiff on caller pairs: the sweep's report
+    // must match it row for row
     val ref = Differ.catalogDiff(Seq(("gsp_t_l",
       spark.table("gsp_t_l"), spark.table("gsp_t_r"), Seq("k"))))
     assert(rowsOf(out) == rowsOf(ref), s"out=${rowsOf(out)} ref=${rowsOf(ref)}")
@@ -1413,20 +1414,40 @@ class DifferSpec extends SparkTestBase {
       spark.table("gsp_t_l"), spark.table("gsp_t_r"), Seq("k"))))
     assert(rowsOf(outC) == rowsOf(refC),
       s"cols out=${rowsOf(outC)} ref=${rowsOf(refC)}")
-    // plan-time refusals must demote to pair_invalid EXACTLY like the
-    // executed path (the short-circuit still constructs the generic plan)
+    // a plan-time refusal demotes to the pair's pair_invalid row
     val bad = Differ.catalogDiffTables(spark, "gsp_t_l", _ => "gsp_t_r",
       opts = DiffOptions(digestCols = Set("nope")))
     val err = bad.filter(col("kind") === "error").collect()
     assert(err.length == 1 && err.head.getString(2) == "pair_invalid",
       err.mkString(";"))
-    // distinct-but-equal plans (sameResult false) still execute: a planted
-    // change must surface as C, never be short-circuited away
+    // distinct-but-equal plans: the same census as the self-pair
     t.withColumn("v", col("v") * 1.0).createOrReplaceTempView("gsp_u_r")
     t.createOrReplaceTempView("gsp_u_l")
     val ex = Differ.catalogDiffTables(spark, "gsp_u_l", _ => "gsp_u_r")
     def n(df: org.apache.spark.sql.DataFrame, item: String) =
       df.filter(col("item") === item).select("n").collect().head.getLong(0)
     assert(n(ex, "N") == 50L && n(ex, "C") == 0L)
+  }
+
+  test("inferDiffKey(t, t) == inferDiffKey(t, copy): tie-break and pair tier") {
+    import spark.implicits._
+    // an equal frame whose plan is not the same plan, so no shortcut
+    // could tell the two calls apart
+    def copyOf(df: DataFrame) = df.filter(lit(true))
+    def same(a: DataFrame, b: DataFrame) =
+      a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
+    // decoy shape: two unique null-free columns, load_ts ahead of k; both
+    // overlap fully against themselves, so position breaks the tie
+    val decoy = (1L to 40L).map(k => (k * 2 + 1, k, k % 3)).toDF("load_ts", "k", "v")
+    // composite shape: no single column is unique, the (a, b) pair is
+    val composite = (for (a <- 1 to 6; b <- 1 to 5) yield (a, b, s"v${a % 2}"))
+      .toDF("a", "b", "v")
+    for ((df, want) <- Seq(decoy -> Seq("load_ts"), composite -> Seq("a", "b"))) {
+      val copy = copyOf(df)
+      assert(same(df, df) && !same(df, copy) && rowsOf(df) == rowsOf(copy))
+      val self = Differ.inferDiffKey(df, df)
+      assert(self == Differ.inferDiffKey(df, copy), s"self=$self")
+      assert(self.contains(want), s"self=$self")
+    }
   }
 }

@@ -1105,6 +1105,21 @@ class PlanSpec extends SparkTestBase {
       s"expected exactly one full-outer per table pair (3 pairs), got $fullOuters")
   }
 
+  test("catalog sweep: one full-outer diff per keyed pair, a table swept against itself included") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    for (name <- Seq("diff_catalog_tables", "sql_diff_catalog_tvf")) {
+      val plan = queryNamed(DiffQueries.all, name).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      // keyed pairs: orders churn, customer vs itself, the decoy; the
+      // keyless slice and the counterpart-less table are error rows
+      val diffs = plan.collect { case j: SortMergeJoinExec if j.joinType == FullOuter => j }.size
+      assert(diffs == 3, s"$name: $diffs full-outer diffs\n$plan")
+    }
+  }
+
   test("TxnLog sweep: per healthy pair one full-outer diff and one global census aggregate, 3 exchanges") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
