@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The session of every `main` here (Bench, Verify, Smoke, Profile,
-  * PlanDump): `local[N]` with N = `SPARK_GRAFT_CPUS` (default 4), one
-  * shuffle partition per core, UI off, UTC session time zone, WARN logs.
+/** The session of every `main` here (Bench, Verify, Smoke, Profile):
+  * `local[N]` with N = `SPARK_GRAFT_CPUS` (default 4), one shuffle
+  * partition per core, UI off, UTC session time zone, WARN logs.
   */
 object LocalSession {
   def apply(): SparkSession = {

@@ -1,11 +1,16 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev-only per-key cost profiler (not part of the declared surface).
+/** Dev-only per-key cost profiler and plan snapshotter (not part of the
+  * declared surface).
   *
-  * Two modes:
+  * Three modes:
   *   - `sbt "runMain graft.Profile <k1,k2,...> [iters]"` runs each key on
   *     its own: a warm pass (iter 0), then `iters` more (default 2) on warm
   *     caches, and lists every Spark job that ran, with wall ms,
@@ -20,8 +25,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *     job pays its cache builds. A last line gives the median generated
   *     classes compiled per cleared pass: the number that shows whether
   *     the keys' working set fits Spark's codegen cache.
+  *   - `sbt "runMain graft.Profile --plans <tag> <k1,k2,...|--all> <outDir>"`
+  *     runs nothing: it writes `<outDir>/<key>_<tag>.txt`, the
+  *     `.explain("formatted")` output of each key's plan — the evidence for
+  *     plan-shape claims (exchange count, join strategy, PushedFilters /
+  *     ReadSchema) in the session the bench times.
   *
-  * Either way, each run of a key is split into:
+  * The first two modes split each run of a key into:
   *   - build: the `fn(spark, sfDir)` call — plan construction INCLUDING
   *     any eager jobs the operator runs at construction time (key-election
   *     collects, codebook builds, fixture writes);
@@ -37,11 +47,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 object Profile {
   def main(args: Array[String]): Unit = {
     val cycle = args.headOption.contains("--cycle")
-    val rest = if (cycle) args.drop(1) else args
-    require(rest.nonEmpty,
-      "usage: Profile <key1,key2,...> [iters] | Profile --cycle <key1,key2,...> [passes]")
-    val keys = rest(0).split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val n = if (rest.length > 1) rest(1).toInt else if (cycle) 3 else 2
+    val plans = args.headOption.contains("--plans")
+    val rest = if (cycle || plans) args.drop(1) else args
+    require(if (plans) rest.length == 3 else rest.nonEmpty,
+      "usage: Profile <key1,key2,...> [iters] | Profile --cycle <key1,key2,...> [passes]" +
+        " | Profile --plans <tag> <key1,key2,...|--all> <outDir>")
+    val keyArg = if (plans) rest(1) else rest(0)
+    val keys =
+      if (keyArg == "--all") SparkEntry.queries.keys.toSeq.sorted
+      else keyArg.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val n = if (plans) 0 else if (rest.length > 1) rest(1).toInt else if (cycle) 3 else 2
     val fns = keys.map(k => k -> SparkEntry.queries.getOrElse(k,
       sys.error(s"Profile: unknown query '$k'"))).toMap
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -119,7 +134,8 @@ object Profile {
       c2._1 - c0._1
     }
 
-    if (cycle) {
+    if (plans) writePlans(spark, keys.map(k => k -> fns(k)), sfDir, tag = rest(0), outDir = rest(2))
+    else if (cycle) {
       // pass 0 is the first pass; passes 1..n start cleared
       val perPass = (0 to n).map { pass =>
         if (pass > 0) {
@@ -149,6 +165,19 @@ object Profile {
         (if (unstable.isEmpty) "none" else unstable.mkString("; ")))
     }
     spark.stop()
+  }
+
+  /** `--plans`: each key's formatted plan into `<outDir>/<key>_<tag>.txt`. */
+  private def writePlans(spark: SparkSession,
+                         fns: Seq[(String, (SparkSession, String) => DataFrame)],
+                         sfDir: String, tag: String, outDir: String): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    for ((key, fn) <- fns) {
+      spark.sparkContext.setJobDescription(s"plans: $key")
+      val txt = fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
+      Files.write(Paths.get(outDir, s"${key}_$tag.txt"), txt.getBytes(StandardCharsets.UTF_8))
+      println(s"[profile] wrote $outDir/${key}_$tag.txt (${txt.length} chars)")
+    }
   }
 
   private val jit = java.lang.management.ManagementFactory.getCompilationMXBean

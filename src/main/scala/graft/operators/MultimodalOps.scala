@@ -171,9 +171,7 @@ object MultimodalOps {
                 java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
               g.drawImage(img, 0, 0, tw, th, null)
             } finally g.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            MediaRecord(m.id, "image/png", bos.toByteArray)
+            MediaRecord(m.id, "image/png", pngBytes(out))
           case _ => m
         }
       }
@@ -408,6 +406,25 @@ object MultimodalOps {
     putCC(36, "data"); put32(40, data.length)
     System.arraycopy(data, 0, out, 44, data.length)
     out
+  }
+
+  /** Real PNG encode through the JDK's ImageIO — the inverse of
+    * [[decodeImage]].
+    */
+  def pngBytes(img: java.awt.image.RenderedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    bos.toByteArray
+  }
+
+  /** PNG of a `w`×`h` RGB image whose pixel (x, y) is `rgb(x, y)` — how
+    * the multimodal fixtures synthesize genuine container-level images
+    * ([[wavBytes]]'s sibling).
+    */
+  def pngBytes(w: Int, h: Int)(rgb: (Int, Int) => Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb(x, y))
+    pngBytes(img)
   }
 
   /** Container-genuine audio features: RIFF walk via [[parseWav]], then the

@@ -378,11 +378,9 @@ object TextOps {
           (col("headSq").cast(d38p) - col("tf").cast(d38p) * col("tf").cast(d38p))
         <= lit(den2 - num2).cast(d38p) * col("n2").cast(d38p))
       .select(col("doc"), col("token"), col("n2"))
-    val a = prefix.select(col("doc").as("doc_a"), col("token"), col("n2").as("na2"))
-    val b = prefix.select(col("doc").as("doc_b"), col("token"), col("n2").as("nb2"))
-    val candidates = a.join(b, Seq("token"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b", "na2", "nb2")
+    val candidates = bucketSelfJoin(prefix, Seq("token"), "doc")
+      .select(col("a_doc").as("doc_a"), col("b_doc").as("doc_b"),
+        col("a_n2").as("na2"), col("b_n2").as("nb2"))
       .distinct()
     // Exact verify: re-join the tf postings for surviving pairs only.
     val ta = tf.select(col("doc").as("doc_a"), col("token"), col("tf").as("tfa"))

@@ -138,21 +138,21 @@ object VectorOps {
     // dot/(sqrt(na)*sqrt(nb)) is preserved operation-for-operation, so
     // results stay bit-identical to DuckDB's list_cosine_similarity. Raw
     // float arrays stay on the wire; the native kernel widens per element.
-    val e = emb.select(col(idCol), col(blockCol), col(vecCol).as("v"))
+    val e = emb.select(col(idCol).as("id"), col(blockCol).as("block"), col(vecCol).as("v"))
       .withColumn("nrm", sqrt(normSqF(col("v"))))
-    val a = e.select(
-      col(idCol).as("vec_a"), col(blockCol).as("block_a"),
-      col("v").as("va"), col("nrm").as("nrm_a"))
-    val b = e.select(
-      col(idCol).as("vec_b"), col(blockCol).as("block_b"),
-      col("v").as("vb"), col("nrm").as("nrm_b"))
-    a.join(b, col("block_a") === col("block_b") && col("vec_a") < col("vec_b"))
-      .withColumn("cos_raw", dotF(col("va"), col("vb")) / (col("nrm_a") * col("nrm_b")))
+    TextOps.bucketSelfJoin(e, Seq("block"), "id")
+      .withColumn("cos_raw", pairCosine)
       .filter(col("cos_raw") >= tau)
       .select(
-        col("vec_a"), col("vec_b"), col("block_a").as("label"),
+        col("a_id").as("vec_a"), col("b_id").as("vec_b"), col("a_block").as("label"),
         round(col("cos_raw"), 5).as("cos_sim"))
   }
+
+  /** Cosine of a [[TextOps.bucketSelfJoin]] row over vectors `v` with
+    * precomputed norms `nrm`.
+    */
+  private def pairCosine: Column =
+    dotF(col("a_v"), col("b_v")) / (col("a_nrm") * col("b_nrm"))
 
   /** The parity-sensitive quantizer scaffolding shared VERBATIM by
     * [[kmeansCodebook]] and [[pqCodebook]] (one Scala site — the two
@@ -377,18 +377,13 @@ object VectorOps {
     */
   def pairsByAssignment(emb: DataFrame, assign: DataFrame, tau: Double,
                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val e = emb.select(col(idCol), col(vecCol).as("v"))
+    val e = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("nrm", sqrt(normSqF(col("v"))))
-    val av = assign.select(col(idCol), col("cell")).join(e, idCol)
-    val a = av.select(col(idCol).as("vec_a"), col("cell"),
-      col("v").as("va"), col("nrm").as("nrm_a"))
-    val b = av.select(col(idCol).as("vec_b"), col("cell"),
-      col("v").as("vb"), col("nrm").as("nrm_b"))
-    a.join(b, Seq("cell"))
-      .filter(col("vec_a") < col("vec_b"))
-      .withColumn("cos_raw", dotF(col("va"), col("vb")) / (col("nrm_a") * col("nrm_b")))
+    val av = assign.select(col(idCol).as("id"), col("cell")).join(e, "id")
+    TextOps.bucketSelfJoin(av, Seq("cell"), "id")
+      .withColumn("cos_raw", pairCosine)
       .filter(col("cos_raw") >= tau)
-      .select(col("vec_a"), col("vec_b"), round(col("cos_raw"), 5).as("cos_sim"))
+      .select(col("a_id").as("vec_a"), col("b_id").as("vec_b"), round(col("cos_raw"), 5).as("cos_sim"))
       .distinct()
   }
 

@@ -63,11 +63,6 @@ object DedupVariantQueries {
       |       CAST(CASE WHEN src = min(dst) THEN 1 ELSE 0 END AS BIGINT) AS is_rep
       |FROM reach GROUP BY src""".stripMargin
 
-  /** The shared cluster frame (doc_id, cluster): CC over the cached
-    * lossless near-dup pair list — dedup_clusters declares it,
-    * dedup_keep_best selects survivors over it. Cached per (session, dir)
-    * so the iterative CC runs once.
-    */
   /** Blocked exact-cosine pair list at the sweep floor τ=0.4, cached per
     * dir — one build shared by dedup_embed_cosine + dedup_threshold_sweep.
     */
@@ -101,6 +96,43 @@ object DedupVariantQueries {
       TextOps.minHashSignature(Tables.cachedTable(s, d, "documents"), bands = 8)
     }
 
+  /** The df-capped winnowing index (fp, doc_id) — TextOps.winnowFingerprints
+    * at k = 3, w = 4 with every fingerprint in more than 128 docs dropped —
+    * cached per dir: dedup_winnow, dedup_delta and dedup_delta_bloom read
+    * it, the same index WinnowIndexCtes spells out for their oracles.
+    *
+    * The cap makes the 1M-doc-boilerplate failure mode (one fingerprint
+    * shared by 1M docs => 1M^2/2 pairs) structurally impossible: a
+    * fingerprint in more than 128 docs is a stopword-fingerprint and is
+    * dropped BEFORE any self-join, so per-fp fan-out is bounded by
+    * 128^2/2. It sits far above the fixture max df (6 at sf0.01, 22 at
+    * sf0.1), so the oracle results are unchanged. It is applied ONCE, at
+    * index-build time (at 100 TB the index is written bucketed by fp with
+    * the cap applied; nobody re-caps per query), as a broadcast ANTI-join
+    * against the OVERFLOW set (df > 128). Anti against overflow, never semi
+    * against survivors: survivors are nearly ALL fingerprints
+    * (unbroadcastable at scale, and as a shuffle join it re-shuffles the
+    * whole index per self-join branch — measured 0.19 s -> 1.1 s at
+    * sf0.1), while the overflow set is tiny BY CONSTRUCTION: each member
+    * needs > 128 distinct docs, so |overflow| <= fp occurrences / 128.
+    */
+  private[graft] def winnowCapped(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.cached(s, s"$d/winnow-capped/k=3/w=4/cap=128") {
+      val fps = TextOps.winnowFingerprints(
+        Tables.cachedTable(s, d, "documents").select("doc_id", "text"),
+        k = 3, w = 4)
+      val overflow = fps.groupBy("fp")
+        .agg(count(lit(1)).as("df"))
+        .filter(col("df") > 128)
+        .select("fp")
+      fps.join(broadcast(overflow), Seq("fp"), "left_anti")
+    }
+
+  /** The shared cluster frame (doc_id, cluster): CC over the cached
+    * lossless near-dup pair list — dedup_clusters declares it,
+    * dedup_keep_best selects survivors over it. Cached per (session, dir)
+    * so the iterative CC runs once.
+    */
   private def clusterFrame(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.cached(s, s"$d/neardup-clusters") {
       val docs = Tables.cachedTable(s, d, "documents").select("doc_id", "lang", "text")
@@ -379,44 +411,13 @@ object DedupVariantQueries {
       (s, d) =>
         // Containment/plagiarism detection over the winnowing index:
         // pairs sharing >= 2 fingerprints. The join key is the 16-hex
-        // fingerprint — narrow equi-join + pair count, no text and no
-        // token arrays on the wire; any shared token run of >= w+k-1
-        // tokens is guaranteed to surface (winnowing's coverage bound).
-        // The df-cap makes the 1M-doc-boilerplate failure mode (one
-        // fingerprint shared by 1M docs => 1M^2/2 pairs) structurally
-        // impossible: a fingerprint in more than `dfCap` docs is a
-        // stopword-fingerprint and is dropped BEFORE the self-join, so
-        // per-fp fan-out is bounded by dfCap^2/2. The cap (128) sits far
-        // above the fixture max df (6 at sf0.01, 22 at sf0.1), so the
-        // oracle result is unchanged; the SQL mirrors it in `keep`.
-        // The cap is applied ONCE, at index-build time (mirroring
-        // KMeansSql.index: at 100 TB the fingerprint index is written
-        // bucketed by fp with the df-cap already applied — every
-        // downstream consumer reads the capped index, nobody re-caps
-        // per query), as a broadcast ANTI-join against the OVERFLOW set
-        // (fingerprints with df > dfCap). Anti against overflow, never
-        // semi against survivors: survivors are nearly ALL fingerprints
-        // (unbroadcastable at scale, and as a shuffle join it
-        // re-shuffles the whole index per self-join branch — measured
-        // 0.19s -> 1.1s at sf0.1), while the overflow set is tiny BY
-        // CONSTRUCTION: each member needs > dfCap distinct docs, so
-        // |overflow| <= total_fp_occurrences / dfCap.
-        val dfCap = 128
-        val capped = Tables.cached(s, s"$d/winnow-capped/k=3/w=4/cap=$dfCap") {
-          val fps = TextOps.winnowFingerprints(
-            Tables.cachedTable(s, d, "documents").select("doc_id", "text"),
-            k = 3, w = 4)
-          val overflow = fps.groupBy("fp")
-            .agg(count(lit(1)).as("df"))
-            .filter(col("df") > dfCap)
-            .select("fp")
-          fps.join(broadcast(overflow), Seq("fp"), "left_anti")
-        }
-        val a = capped.select(col("doc_id").as("doc_a"), col("fp"))
-        val b = capped.select(col("doc_id").as("doc_b"), col("fp"))
-        a.join(b, Seq("fp"))
-          .filter(col("doc_a") < col("doc_b"))
-          .groupBy("doc_a", "doc_b")
+        // fingerprint — a fingerprint-bucketed self-join + pair count, no
+        // text and no token arrays on the wire; any shared token run of
+        // >= w+k-1 tokens is guaranteed to surface (winnowing's coverage
+        // bound). The df-capped index bounds per-fp fan-out (see
+        // [[winnowCapped]]).
+        TextOps.bucketSelfJoin(winnowCapped(s, d), Seq("fp"), "doc_id")
+          .groupBy(col("a_doc_id").as("doc_a"), col("b_doc_id").as("doc_b"))
           .agg(count(lit(1)).as("n_shared"))
           .filter(col("n_shared") >= 2)
     },
@@ -439,17 +440,7 @@ object DedupVariantQueries {
         // table a daily job appends to, and the delta join probes it
         // with batch-sized fan-in (here the 10% fixture shard) instead
         // of corpus × corpus.
-        val dfCap = 128
-        val capped = Tables.cached(s, s"$d/winnow-capped/k=3/w=4/cap=$dfCap") {
-          val fps = TextOps.winnowFingerprints(
-            Tables.cachedTable(s, d, "documents").select("doc_id", "text"),
-            k = 3, w = 4)
-          val overflow = fps.groupBy("fp")
-            .agg(count(lit(1)).as("df"))
-            .filter(col("df") > dfCap)
-            .select("fp")
-          fps.join(broadcast(overflow), Seq("fp"), "left_anti")
-        }
+        val capped = winnowCapped(s, d)
         val newFps = capped.filter(col("doc_id") % 10 === 7)
           .select(col("doc_id").as("new_id"), col("fp"))
         val oldFps = capped.filter(col("doc_id") % 10 =!= 7)
@@ -487,17 +478,7 @@ object DedupVariantQueries {
          |       coalesce(c.n_old_dups, 0) = 0 AS is_novel
          |FROM documents d LEFT JOIN c ON c.new_id = d.doc_id
          |WHERE d.doc_id % 10 = 7""".stripMargin) { (s, d) =>
-      val dfCap = 128
-      val capped = Tables.cached(s, s"$d/winnow-capped/k=3/w=4/cap=$dfCap") {
-        val fps = TextOps.winnowFingerprints(
-          Tables.cachedTable(s, d, "documents").select("doc_id", "text"),
-          k = 3, w = 4)
-        val overflow = fps.groupBy("fp")
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") > dfCap)
-          .select("fp")
-        fps.join(broadcast(overflow), Seq("fp"), "left_anti")
-      }
+      val capped = winnowCapped(s, d)
       val oldFps = capped.filter(col("doc_id") % 10 =!= 7)
         .select(col("doc_id").as("old_id"), col("fp"))
       // the broadcast bitmap: one bloom over every historical fingerprint
@@ -576,11 +557,9 @@ object DedupVariantQueries {
       val np = KMeansSql.nProbeDedup(emb.count())
       val a = KMeansSql.assignments(s, d).filter(col("rn") <= np)
         .select(col("vec_id"), col("cell"), col("rn"))
-      val pd = a.alias("x")
-        .join(a.alias("y"),
-          col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-        .groupBy(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-        .agg(min(greatest(col("x.rn"), col("y.rn"))).as("depth"))
+      val pd = TextOps.bucketSelfJoin(a, Seq("cell"), "vec_id")
+        .groupBy(col("a_vec_id").as("vec_a"), col("b_vec_id").as("vec_b"))
+        .agg(min(greatest(col("a_rn"), col("b_rn"))).as("depth"))
       val e = emb.select(col("vec_id"), col("embedding"))
       val vf = pd
         .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("va")), "vec_a")

@@ -8,8 +8,9 @@ import graft.{Q, Tables}
   * quality gate and the whole chain.
   *
   * Deliberately COMPOSED, not re-implemented: the Spark side calls the four
-  * declared gate queries (whose frames ride their shared caches — tf agg,
-  * bigram-occ), and the DuckDB oracle embeds the sibling keys' own oracle
+  * declared gate queries (whose frames ride their shared caches —
+  * [[TextAnalysisQueries.tfidfTf]], [[TextAnalysisQueries.bigramOcc]]), and
+  * the DuckDB oracle embeds the sibling keys' own oracle
   * SQL as subqueries, so the funnel can never drift from the gates it
   * reports on — if a gate's definition changes, the funnel follows in BOTH
   * engines by construction.

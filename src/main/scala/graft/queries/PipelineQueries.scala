@@ -240,6 +240,23 @@ object PipelineQueries {
         .distinct()
     }
 
+  /** Sign-bit binary codes (vec_id, w_lo, w_hi): bit i of the 64-bit code
+    * is set iff embedding component i is > 0, packed into two 32-bit
+    * BIGINT words. Cached per dir — one build shared by sim_search_hamming
+    * and sim_search_hamming_rerank.
+    */
+  private[graft] def signbitCodes(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.cached(s, s"$d/signbit-codes") {
+      Tables.cachedTable(s, d, "embeddings")
+        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("p", "x")))
+        .groupBy("vec_id")
+        .agg(
+          sum(when(col("p") < 32 && col("x") > 0,
+            expr("shiftleft(1L, CAST(p AS INT))")).otherwise(0L)).as("w_lo"),
+          sum(when(col("p") >= 32 && col("x") > 0,
+            expr("shiftleft(1L, CAST(p - 32 AS INT))")).otherwise(0L)).as("w_hi"))
+    }
+
   /** The 8-probe exact-cosine top-10 eval frame (probe_id, plabel, vec_id,
     * lbl, rank): the retrieval-eval family (rank_ndcg, rank_mrr, rank_map)
     * grades the SAME ranked lists. Deliberately NOT Tables.cached — an
@@ -1178,18 +1195,8 @@ object PipelineQueries {
             val w = (4 + id % 5).toInt
             val h = (3 + id % 4).toInt
             val g = ((id * 37) % 256).toInt
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val rgb = (g << 16) | (g << 8) | g
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) { img.setRGB(x, y, rgb); x += 1 }
-              y += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", bos)
-            MediaRecord(id, "image/png", bos.toByteArray)
+            MediaRecord(id, "image/png",
+              MultimodalOps.pngBytes(w, h)((_, _) => (g << 16) | (g << 8) | g))
           }
         MultimodalOps.extractImageFeatures(media, grid = 1)
           .map(f => (f.id, f.width, f.height, math.round(f.feature(0) * 255f)))
@@ -1339,18 +1346,8 @@ object PipelineQueries {
           val w = (4 + id % 5).toInt
           val h = (3 + id % 4).toInt
           val g = ((id * 37) % 256).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val rgb = (g << 16) | (g << 8) | g
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) { img.setRGB(x, y, rgb); x += 1 }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          MediaRecord(id, "image/png", bos.toByteArray)
+          MediaRecord(id, "image/png",
+            MultimodalOps.pngBytes(w, h)((_, _) => (g << 16) | (g << 8) | g))
         }
       MultimodalOps.extractImageFeatures(
           MultimodalOps.thumbnail(media, maxSide = 4), grid = 1)
@@ -1412,20 +1409,8 @@ object PipelineQueries {
             ((id * 59) % 256).toInt << 8 | ((id * 83) % 256).toInt
           val rgbB = ((id * 101) % 256).toInt << 16 |
             ((id * 113) % 256).toInt << 8 | ((id * 127) % 256).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              img.setRGB(x, y, if (x < k) rgbA else rgbB)
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          MediaRecord(id, "image/png", bos.toByteArray)
+          MediaRecord(id, "image/png",
+            MultimodalOps.pngBytes(w, h)((x, _) => if (x < k) rgbA else rgbB))
         }
       media.mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false)
@@ -1478,21 +1463,10 @@ object PipelineQueries {
           .map { id =>
             val a = (1 + id % 16).toInt
             val b = ((id % 7) * 3).toInt
-            val img = new java.awt.image.BufferedImage(
-              9, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 9) {
-                val v = (a * x + b * y) % 256
-                img.setRGB(x, y, (v << 16) | (v << 8) | v)
-                x += 1
-              }
-              y += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", bos)
-            MediaRecord(id, "image/png", bos.toByteArray)
+            MediaRecord(id, "image/png", MultimodalOps.pngBytes(9, 8) { (x, y) =>
+              val v = (a * x + b * y) % 256
+              (v << 16) | (v << 8) | v
+            })
           }
         val bits = MultimodalOps.imageDHash(media)
           .map(ih => (ih.id,
@@ -1567,23 +1541,12 @@ object PipelineQueries {
             // one hash per (a, b) class and buckets are corpus/112-sized.
             val a = (1 + (id / 2) % 16).toInt
             val b = (((id / 2) % 7) * 3).toInt
-            val img = new java.awt.image.BufferedImage(
-              9, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 9) {
-                val v =
-                  if (x == 0 && y == 0 && id % 2 == 1) 128
-                  else (a * x * 37 + b * y * 29) % 256
-                img.setRGB(x, y, (v << 16) | (v << 8) | v)
-                x += 1
-              }
-              y += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", bos)
-            MediaRecord(id, "image/png", bos.toByteArray)
+            MediaRecord(id, "image/png", MultimodalOps.pngBytes(9, 8) { (x, y) =>
+              val v =
+                if (x == 0 && y == 0 && id % 2 == 1) 128
+                else (a * x * 37 + b * y * 29) % 256
+              (v << 16) | (v << 8) | v
+            })
           }
         val hashed = Tables.cached(s, s"$d/phash-hashes") {
           MultimodalOps.imageDHash(media).toDF().select("id", "hash")
@@ -2729,16 +2692,7 @@ object PipelineQueries {
         |            AS BIGINT) AS hamming
         |FROM w, p WHERE w.vec_id <> 0
         |ORDER BY hamming, w.vec_id LIMIT 10""".stripMargin) { (s, d) =>
-      val codes = Tables.cached(s, s"$d/signbit-codes") {
-        Tables.cachedTable(s, d, "embeddings")
-          .select(col("vec_id"), posexplode(col("embedding")).as(Seq("p", "x")))
-          .groupBy("vec_id")
-          .agg(
-            sum(when(col("p") < 32 && col("x") > 0,
-              expr("shiftleft(1L, CAST(p AS INT))")).otherwise(0L)).as("w_lo"),
-            sum(when(col("p") >= 32 && col("x") > 0,
-              expr("shiftleft(1L, CAST(p - 32 AS INT))")).otherwise(0L)).as("w_hi"))
-      }
+      val codes = signbitCodes(s, d)
       val probe = codes.filter(col("vec_id") === 0)
         .select(col("w_lo").as("p_lo"), col("w_hi").as("p_hi"))
       codes.filter(col("vec_id") =!= 0)
@@ -2892,19 +2846,10 @@ object PipelineQueries {
           val w = 8
           val h = (4 + id % 5).toInt
           val darkRows = (1 + id % 3).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
+          MediaRecord(id, "image/png", MultimodalOps.pngBytes(w, h) { (_, y) =>
             val g = if (y < darkRows) 40 else 200
-            val rgb = (g << 16) | (g << 8) | g
-            var x = 0
-            while (x < w) { img.setRGB(x, y, rgb); x += 1 }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          MediaRecord(id, "image/png", bos.toByteArray)
+            (g << 16) | (g << 8) | g
+          })
         }
         .map { m =>
           // the DECODER's census, not the fixture's: re-parse the PNG and
@@ -3027,16 +2972,7 @@ object PipelineQueries {
         |FROM short s JOIN e ON e.vec_id = s.vec_id
         |CROSS JOIN (SELECT v AS pv FROM e WHERE vec_id = 0) p2
         |ORDER BY cos_sim DESC, s.vec_id LIMIT 10""".stripMargin) { (s, d) =>
-      val codes = Tables.cached(s, s"$d/signbit-codes") {
-        Tables.cachedTable(s, d, "embeddings")
-          .select(col("vec_id"), posexplode(col("embedding")).as(Seq("p", "x")))
-          .groupBy("vec_id")
-          .agg(
-            sum(when(col("p") < 32 && col("x") > 0,
-              expr("shiftleft(1L, CAST(p AS INT))")).otherwise(0L)).as("w_lo"),
-            sum(when(col("p") >= 32 && col("x") > 0,
-              expr("shiftleft(1L, CAST(p - 32 AS INT))")).otherwise(0L)).as("w_hi"))
-      }
+      val codes = signbitCodes(s, d)
       val probe = codes.filter(col("vec_id") === 0)
         .select(col("w_lo").as("p_lo"), col("w_hi").as("p_hi"))
       val short = codes.filter(col("vec_id") =!= 0)

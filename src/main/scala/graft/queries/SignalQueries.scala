@@ -4,14 +4,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
 
-/** Corpus/behavior signal extraction (r7): token-distribution entropy,
-  * collocation mining (PMI), and event-type transition matrices — the
-  * profiling signals a training-data pipeline computes alongside its quality
-  * gates. All three ride the shared cached intermediates (tfidf-tf,
-  * bigram-occ, events+ts_us) so their marginal cost is group-sized aggs.
-  *
-  * Reference mount empty this round (SURVEY §0) — spec-driven; capability
-  * surface per SURVEY.md §2.C.
+/** Corpus/behavior signal extraction: token-distribution entropy,
+  * collocation mining (PMI), rank-frequency fits, feature hashing, event
+  * transition matrices and time-series windows — the profiling signals a
+  * training-data pipeline computes alongside its quality gates. The text
+  * keys read the shared cached token counts and bigram occurrences
+  * ([[TextAnalysisQueries.tfidfTf]], [[TextAnalysisQueries.bigramOcc]]),
+  * the event keys [[graft.Tables.events]], so each key's marginal cost is
+  * group-sized aggs. Capability surface per SURVEY.md §2.C.
   */
 object SignalQueries {
 
@@ -43,15 +43,11 @@ object SignalQueries {
         |                 THEN 1 ELSE 0 END AS BIGINT) AS keep
         |FROM h JOIN n USING (doc_id)
         |GROUP BY 1, 2, 3""".stripMargin) { (s, d) =>
-      // 100 TB shape: the (doc_id, tok) frame IS the shared tfidf-tf cache
+      // 100 TB shape: the (doc_id, tok) frame IS the shared tfidfTf cache
       // (one corpus explode + partial agg, shared with text_idf/text_bm25);
       // everything after is doc-keyed — one doc-sized agg + one join, no
       // second corpus pass.
-      val docs = Tables.cachedTable(s, d, "documents")
-      val tf = Tables.cached(s, s"$d/tfidf-tf") {
-        docs.select(col("doc_id"), explode(graft.operators.TextOps.tokens(col("text"))).as("tok"))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      }
+      val tf = TextAnalysisQueries.tfidfTf(s, d)
       val n = tf.groupBy("doc_id").agg(
         sum("tf").cast("long").as("n_tokens"),
         count(lit(1)).cast("long").as("n_distinct"))
@@ -97,26 +93,17 @@ object SignalQueries {
         |CROSS JOIN nt CROSS JOIN nb
         |WHERE n_ab >= 5
         |ORDER BY pmi DESC, bg LIMIT 100""".stripMargin) { (s, d) =>
-      // 100 TB shape: unigram counts derive from the SAME cached tfidf-tf
+      // 100 TB shape: unigram counts derive from the SAME cached tfidfTf
       // partial agg (map-side combinable, vocab-sized result); bigram
-      // counts from the SAME cached bigram-occ explode shared with
+      // counts from the SAME cached bigramOcc explode shared with
       // text_ngram_lm/quality_perplexity — no new corpus pass. The two
       // scalar totals broadcast; the two unigram fetch joins are
       // vocab-sized (broadcast at scale); top-k is TakeOrderedAndProject
       // (per-partition top-k + merge), never a global sort.
-      val docs = Tables.cachedTable(s, d, "documents")
-      val t = docs.select(col("doc_id"),
-        graft.operators.TextOps.tokens(col("text")).as("toks"))
-      val tf = Tables.cached(s, s"$d/tfidf-tf") {
-        docs.select(col("doc_id"), explode(graft.operators.TextOps.tokens(col("text"))).as("tok"))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      }
+      val tf = TextAnalysisQueries.tfidfTf(s, d)
       val uc = tf.groupBy("tok").agg(sum("tf").as("n_w"))
       val nt = tf.agg(sum("tf").as("n_tok"))
-      val occ = Tables.cached(s, s"$d/bigram-occ") {
-        t.select(col("doc_id"), explode(graft.operators.TextOps.bigrams(col("toks"))).as("bg"))
-          .withColumn("w1", substring_index(col("bg"), " ", 1))
-      }
+      val occ = TextAnalysisQueries.bigramOcc(s, d)
       val bc = occ.groupBy("bg").agg(count(lit(1)).as("n_ab"))
       val nb = occ.agg(count(lit(1)).as("n_big"))
       bc.filter(col("n_ab") >= 5)
@@ -229,14 +216,10 @@ object SignalQueries {
         |SELECT pair, CAST(sum(n_w) AS BIGINT) AS n_pair
         |FROM pr GROUP BY 1
         |ORDER BY n_pair DESC, pair LIMIT 50""".stripMargin) { (s, d) =>
-      // Word counts derive from the SAME cached tfidf-tf partial agg —
+      // Word counts derive from the SAME cached tfidfTf partial agg —
       // no new corpus pass; the pair explode inflates vocab×(len−1) rows
       // into one map-side-combinable agg; top-50 is TakeOrderedAndProject.
-      val docs = Tables.cachedTable(s, d, "documents")
-      val tf = Tables.cached(s, s"$d/tfidf-tf") {
-        docs.select(col("doc_id"), explode(graft.operators.TextOps.tokens(col("text"))).as("tok"))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      }
+      val tf = TextAnalysisQueries.tfidfTf(s, d)
       tf.groupBy("tok").agg(sum("tf").as("n_w"))
         .filter(length(col("tok")) >= 2)
         .select(explode(expr(
@@ -267,16 +250,12 @@ object SignalQueries {
         |SELECT doc_id, hv % 16 AS bucket,
         |       CAST(sum((1 - 2 * ((hv // 16) % 2)) * tf) AS BIGINT) AS fval
         |FROM h GROUP BY 1, 2""".stripMargin) { (s, d) =>
-      // 100 TB shape: rides the SAME cached tfidf-tf partial agg (no new
+      // 100 TB shape: rides the SAME cached tfidfTf partial agg (no new
       // corpus pass); one hash + one (doc, bucket)-keyed map-side-
       // combinable agg — output is 16 rows per doc regardless of corpus
       // size. At cluster scale the hash runs on the vocab-sized DISTINCT
       // (doc, tok) frame, never the raw token stream.
-      val docs = Tables.cachedTable(s, d, "documents")
-      val tf = Tables.cached(s, s"$d/tfidf-tf") {
-        docs.select(col("doc_id"), explode(graft.operators.TextOps.tokens(col("text"))).as("tok"))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      }
+      val tf = TextAnalysisQueries.tfidfTf(s, d)
       tf.withColumn("hv",
           expr("CAST(conv(substr(sha2(tok, 256), 1, 8), 16, 10) AS BIGINT)"))
         .withColumn("bucket", col("hv") % 16)
@@ -313,11 +292,7 @@ object SignalQueries {
       // combinable agg, which is why the fastText filter runs over
       // CommonCrawl at all. Real learned weights would arrive as a
       // 16-row broadcast instead of a closed form; nothing else changes.
-      val docs = Tables.cachedTable(s, d, "documents")
-      val tf = Tables.cached(s, s"$d/tfidf-tf") {
-        docs.select(col("doc_id"), explode(graft.operators.TextOps.tokens(col("text"))).as("tok"))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      }
+      val tf = TextAnalysisQueries.tfidfTf(s, d)
       tf.withColumn("hv",
           expr("CAST(conv(substr(sha2(tok, 256), 1, 8), 16, 10) AS BIGINT)"))
         .withColumn("bucket", col("hv") % 16)
@@ -394,16 +369,13 @@ object SignalQueries {
         |       round(((n * sxy - sx * sy) * (n * sxy - sx * sy))
         |             / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 5) AS r2
         |FROM m""".stripMargin) { (s, d) =>
-      // 100 TB shape: rank-frequency derives from the SAME cached tfidf-tf
+      // 100 TB shape: rank-frequency derives from the SAME cached tfidfTf
       // partial agg summed up to (lang, tok) — no new corpus pass; the
       // per-lang ranking runs the two-phase topKPerGroup (a lang-only
       // window would sort each language's whole vocabulary in one task);
       // the OLS is a lang-sized agg over ≤100 rows per language.
       val docs = Tables.cachedTable(s, d, "documents")
-      val tf = Tables.cached(s, s"$d/tfidf-tf") {
-        docs.select(col("doc_id"), explode(graft.operators.TextOps.tokens(col("text"))).as("tok"))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      }
+      val tf = TextAnalysisQueries.tfidfTf(s, d)
       val uc = tf.join(docs.select("doc_id", "lang"), "doc_id")
         .groupBy("lang", "tok").agg(sum("tf").as("c"))
       val ranked = graft.operators.TextOps.topKPerGroup(
@@ -828,11 +800,7 @@ object SignalQueries {
         |             / (m.n * m.sxx - m.sx * m.sx), 5) AS heaps_beta
         |FROM x, m""".stripMargin) { (s, d) =>
       val docs = Tables.cachedTable(s, d, "documents")
-      val tf = Tables.cached(s, s"$d/tfidf-tf") {
-        docs.select(col("doc_id"),
-            explode(graft.operators.TextOps.tokens(col("text"))).as("tok"))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      }
+      val tf = TextAnalysisQueries.tfidfTf(s, d)
       val f = tf.groupBy("tok").agg((min("doc_id") + 1).as("fr"))
       val nd = docs.agg(count(lit(1)).as("nd"))
       val cp = s.range(1, 11).toDF("k").crossJoin(broadcast(nd))

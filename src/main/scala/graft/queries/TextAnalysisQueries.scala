@@ -31,9 +31,35 @@ object TextAnalysisQueries {
   private val ScrubPattern = "\\b(customer|spark|vector)\\b"
   private val ScrubMask = "[SCRUBBED]"
 
+  /** The per-doc token counts (doc_id, tok, tf): one corpus explode and
+    * one (doc, token) partial agg, cached per (session, dir). The tf-based
+    * keys of this file and of SignalQueries (idf, BM25, Gopher, OOV,
+    * entropy, PMI, Zipf, Heaps, feature hashing, fastText) all read it, so
+    * the corpus is tokenized once for all of them.
+    */
+  private[graft] def tfidfTf(s: SparkSession, d: String): DataFrame =
+    Tables.cached(s, s"$d/tfidf-tf") {
+      Tables.cachedTable(s, d, "documents")
+        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
+        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+    }
+
+  /** The bigram occurrences (doc_id, bg, w1): one row per adjacent token
+    * pair, `w1` its first word, cached per (session, dir). The bigram LM
+    * family (text_ngram_lm, quality_perplexity, dsir_importance), PMI,
+    * novelty and the coverage curve count over it.
+    */
+  private[graft] def bigramOcc(s: SparkSession, d: String): DataFrame =
+    Tables.cached(s, s"$d/bigram-occ") {
+      Tables.cachedTable(s, d, "documents")
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
+        .select(col("doc_id"), explode(TextOps.bigrams(col("toks"))).as("bg"))
+        .withColumn("w1", substring_index(col("bg"), " ", 1))
+    }
+
   /** Per-doc add-1-smoothed bigram LM score (sc_doc_id, n_bigrams,
     * avg_logp) under the corpus's own LM — built ONCE per (session, dir)
-    * over the shared cached bigram-occurrence frame and consumed by both
+    * over the shared [[bigramOcc]] frame and consumed by both
     * quality_perplexity (the keep/drop gate) and domain_ppl_buckets (the
     * CCNet head/middle/tail split). Per-row DECIMAL(18,6) ln quantization
     * keeps the cross-row sum order-free and engine-exact.
@@ -42,10 +68,7 @@ object TextAnalysisQueries {
     Tables.cached(s, s"$d/doc-avg-logp") {
       val docs = Tables.cachedTable(s, d, "documents")
       val t = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      val occ = Tables.cached(s, s"$d/bigram-occ") {
-        t.select(col("doc_id"), explode(TextOps.bigrams(col("toks"))).as("bg"))
-          .withColumn("w1", substring_index(col("bg"), " ", 1))
-      }
+      val occ = bigramOcc(s, d)
       val c2 = occ.groupBy("bg").agg(count(lit(1)).as("n2"))
       val c1 = occ.groupBy("w1").agg(count(lit(1)).as("n1"))
       val v = t.select(explode(col("toks")).as("tok"))
@@ -387,10 +410,7 @@ object TextAnalysisQueries {
         // and shared by the three consumers (per-plan-hash cache).
         val t = Tables.cachedTable(s, d, "documents")
           .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-        val occ = Tables.cached(s, s"$d/bigram-occ") {
-          t.select(col("doc_id"), explode(TextOps.bigrams(col("toks"))).as("bg"))
-            .withColumn("w1", substring_index(col("bg"), " ", 1))
-        }
+        val occ = bigramOcc(s, d)
         val c2 = occ.groupBy("bg").agg(count(lit(1)).as("n2"))
         val c1 = occ.groupBy("w1").agg(count(lit(1)).as("n1"))
         val v = t.select(explode(col("toks")).as("tok"))
@@ -419,7 +439,7 @@ object TextAnalysisQueries {
         // The CCNet/Wenzek perplexity gate, self-trained: score every doc
         // by its avg bigram log-probability under the corpus LM (the SAME
         // per-row-quantized decimal-sum discipline as text_ngram_lm,
-        // sharing its cached bigram-occurrence frame) and keep docs above
+        // sharing its cached [[bigramOcc]] frame) and keep docs above
         // a fixed threshold (-3.425 ≈ the fixture's 10th percentile; a
         // production run recalibrates per corpus). Docs too short to have
         // bigrams can't be scored and are dropped with their own reason.
@@ -518,12 +538,9 @@ object TextAnalysisQueries {
         // second corpus pass); ranking windows are per-doc (bounded
         // partitions) — the n_docs scalar broadcasts.
         val docs = Tables.cachedTable(s, d, "documents")
-        // tf feeds BOTH the score join and the df derivation — cache it so
-        // the corpus explode+agg runs once, not once per consumer branch.
-        val tf = Tables.cached(s, s"$d/tfidf-tf") {
-          docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-            .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        }
+        // tf feeds BOTH the score join and the df derivation; it is the
+        // cached [[tfidfTf]], so the corpus explode+agg runs once.
+        val tf = tfidfTf(s, d)
         val dfq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
         val nd = docs.agg(count(lit(1)).as("n_docs"))
         val byDoc = Window.partitionBy("doc_id")
@@ -569,10 +586,7 @@ object TextAnalysisQueries {
         // top-count is a doc-keyed max over it, and the row-local counts
         // ride the corpus scan; one doc_id join, everything partial-aggs.
         val docs = Tables.cachedTable(s, d, "documents")
-        val tf = Tables.cached(s, s"$d/tfidf-tf") {
-          docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-            .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        }
+        val tf = tfidfTf(s, d)
         val tp = tf.groupBy("doc_id").agg(max("tf").as("topn"))
         val stopArr = array(Stopwords.map(lit): _*)
         val m = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
@@ -832,15 +846,11 @@ object TextAnalysisQueries {
         // joins.
         // The merged rank-list frame is this key's retrieval "index"
         // (two top-20 legs per query, ≤120 rows): built once per dir and
-        // cached like the other shared intermediates (tfidf-tf,
+        // cached like the other shared intermediates (tfidfTf,
         // bm25-scores, knn3), so the steady-state cost is the bounded
         // fused top-k alone — the shape a serving layer would hit.
         val u = Tables.cached(s, s"$d/fusion-ranks") {
-          val tf = Tables.cached(s, s"$d/tfidf-tf") {
-            Tables.cachedTable(s, d, "documents")
-              .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-              .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-          }
+          val tf = tfidfTf(s, d)
           val qt = queryTerms(s)
           val bt = TextOps.topKPerGroup(bm25Scores(s, d), Seq("query_id"),
               Seq(col("score").desc, col("doc_id")), k = 20, bucketOn = col("doc_id"))
@@ -920,10 +930,7 @@ object TextAnalysisQueries {
         // scalar vocab pair broadcasts.
         val docs = Tables.cachedTable(s, d, "documents")
         val t = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-        val occ = Tables.cached(s, s"$d/bigram-occ") {
-          t.select(col("doc_id"), explode(TextOps.bigrams(col("toks"))).as("bg"))
-            .withColumn("w1", substring_index(col("bg"), " ", 1))
-        }
+        val occ = bigramOcc(s, d)
         val target = docs.filter(col("lang") === "en").select("doc_id")
         val tocc = occ.join(target, "doc_id")
         val c2r = occ.groupBy("bg").agg(count(lit(1)).as("n2r"))
@@ -1010,7 +1017,7 @@ object TextAnalysisQueries {
     // ~0 ⇒ the source is mined out ⇒ stop crawling it); reported per
     // source so the decision is actionable. First-occurrence attribution
     // is a bigram-keyed min(doc_id) — one vocab-sized agg on the SAME
-    // cached bigram-occurrence frame the LM family shares; novelty is an
+    // cached [[bigramOcc]] frame the LM family shares; novelty is an
     // integer ppm ratio.
     Q("text_ngram_novelty",
       """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
@@ -1033,11 +1040,7 @@ object TextAnalysisQueries {
         |FROM nv JOIN documents d USING (doc_id)
         |GROUP BY 1""".stripMargin) { (s, d) =>
       val docs = Tables.cachedTable(s, d, "documents")
-      val t = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      val occ = Tables.cached(s, s"$d/bigram-occ") {
-        t.select(col("doc_id"), explode(TextOps.bigrams(col("toks"))).as("bg"))
-          .withColumn("w1", substring_index(col("bg"), " ", 1))
-      }
+      val occ = bigramOcc(s, d)
       val db = occ.select("doc_id", "bg").distinct()
       val fo = db.groupBy("bg").agg(min("doc_id").as("first_doc"))
       val nv = db.join(fo, "bg")
@@ -1081,11 +1084,7 @@ object TextAnalysisQueries {
         |            // sum(tf) AS BIGINT) AS oov_ppm
         |FROM x GROUP BY 1""".stripMargin) { (s, d) =>
       val docs = Tables.cachedTable(s, d, "documents")
-      val tf = Tables.cached(s, s"$d/tfidf-tf") {
-        docs.select(col("doc_id"),
-          explode(TextOps.tokens(col("text"))).as("tok"))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      }
+      val tf = tfidfTf(s, d)
       val voc = tf.groupBy("tok").agg(sum("tf").as("n"))
         .orderBy(col("n").desc, col("tok")).limit(20)
         .select(col("tok"), lit(1).as("in_voc"))
@@ -1437,12 +1436,7 @@ object TextAnalysisQueries {
         |FROM th, r, tot
         |WHERE cum * 100 >= thr * tot.total
         |GROUP BY thr, tot.total""".stripMargin) { (s, d) =>
-      val docs = Tables.cachedTable(s, d, "documents")
-      val t = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      val occ = Tables.cached(s, s"$d/bigram-occ") {
-        t.select(col("doc_id"), explode(TextOps.bigrams(col("toks"))).as("bg"))
-          .withColumn("w1", substring_index(col("bg"), " ", 1))
-      }
+      val occ = bigramOcc(s, d)
       val f = occ.groupBy("bg").agg(count(lit(1)).as("c"))
       // Distinct-frequency grid: one row per count value, with how many
       // bigrams carry it (n) and the mass they contribute (c·n). negc
@@ -1488,11 +1482,7 @@ object TextAnalysisQueries {
     */
   private def bm25Scores(s: SparkSession, d: String): DataFrame =
     Tables.cached(s, s"$d/bm25-scores") {
-      val docs = Tables.cachedTable(s, d, "documents")
-      val tf = Tables.cached(s, s"$d/tfidf-tf") {
-        docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      }
+      val tf = tfidfTf(s, d)
       val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
       val dfq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
       val sc = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total"))

@@ -187,7 +187,9 @@ class PipelinePropSpec extends SparkTestBase {
     // both sides, so the boundary is deterministic).
     def tfMap(t: String): Map[String, Long] =
       t.toLowerCase.split(" ").groupBy(identity).view.mapValues(_.length.toLong).toMap
-    for ((corpus, i) <- samples(corpusGen, 8, 57L).zipWithIndex;
+    // every corpus carries planted copies of its first two docs
+    for ((base, i) <- samples(corpusGen, 8, 57L).zipWithIndex;
+         corpus = base ++ base.take(2).map { case (id, l, t) => (id + base.size, l, t) };
          (num, den) <- Seq((1, 2), (9, 10))) {
       val docs = corpus.toDF("doc_id", "lang", "text").select("doc_id", "text")
       val brute = (for {
@@ -226,6 +228,55 @@ class PipelinePropSpec extends SparkTestBase {
         .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
       assert(got == brute,
         s"trigram case $i: missing=${brute -- got} extra=${got -- brute}")
+    }
+  }
+
+  test("cosine joins == all-pairs filter on random vectors (duplicates, exact-threshold ties)") {
+    import org.apache.spark.sql.functions.{col, explode}
+    import graft.operators.VectorOps
+    // Components from {-1, 0, 1, 2} in 4 dims: duplicate vectors and pairs
+    // whose cosine is exactly a threshold are common, and one duplicate of
+    // vector 0 (same block, same cells) is planted. A zero vector has no
+    // cosine, and both operators currently raise DIVIDE_BY_ZERO on one
+    // (ANSI division by a zero norm), so the generator draws none and this
+    // round checks the defined domain only. The brute force repeats
+    // the operators' IEEE sequence (sequential double dot of widened floats,
+    // dot / (sqrt(‖a‖²) · sqrt(‖b‖²))), so a tie at tau compares equal.
+    val vec: Gen[Seq[Float]] = Gen.listOfN(4, Gen.oneOf(-1f, 0f, 1f, 2f))
+      .map(v => if (v.forall(_ == 0f)) Seq(1f, 0f, 0f, 0f) else v)
+    val embGen = for {
+      n <- Gen.chooseNum(4, 14)
+      vs <- Gen.listOfN(n, vec)
+      blocks <- Gen.listOfN(n, Gen.chooseNum(0, 1))
+      cells <- Gen.listOfN(n, Gen.listOfN(2, Gen.chooseNum(0, 2)))
+    } yield (vs.indices :+ n).map(i => (i.toLong, vs(i % n), blocks(i % n), cells(i % n)))
+    def dot(a: Seq[Float], b: Seq[Float]): Double =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x.toDouble * y.toDouble }
+    def cos(a: Seq[Float], b: Seq[Float]): Double =
+      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+    def round5(x: Double): Double =
+      BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
+    for ((rows, i) <- samples(embGen, 8, 91L).zipWithIndex;
+         tau <- Seq(0.5, 0.9, cos(rows(0)._2, rows(1)._2))) {
+      val emb = rows.map(r => (r._1, r._2, r._3)).toDF("vec_id", "embedding", "label")
+      val pairs = for {
+        a <- rows; b <- rows if a._1 < b._1 && cos(a._2, b._2) >= tau
+      } yield (a, b)
+      val blocked = pairs.collect { case (a, b) if a._3 == b._3 =>
+        (a._1, b._1, a._3, round5(cos(a._2, b._2))) }.toSet
+      val gotBlocked = VectorOps.cosineJoinThreshold(emb, tau)
+        .select("vec_a", "vec_b", "label", "cos_sim").as[(Long, Long, Int, Double)]
+        .collect().toSet
+      assert(gotBlocked == blocked, s"case $i tau=$tau cosineJoinThreshold: " +
+        s"missing=${blocked -- gotBlocked} extra=${gotBlocked -- blocked}")
+      val assign = rows.map(r => (r._1, r._4)).toDF("vec_id", "cells")
+        .select(col("vec_id"), explode(col("cells")).as("cell"))
+      val celled = pairs.collect { case (a, b) if a._4.intersect(b._4).nonEmpty =>
+        (a._1, b._1, round5(cos(a._2, b._2))) }.toSet
+      val gotCelled = VectorOps.pairsByAssignment(emb, assign, tau)
+        .select("vec_a", "vec_b", "cos_sim").as[(Long, Long, Double)].collect().toSet
+      assert(gotCelled == celled, s"case $i tau=$tau pairsByAssignment: " +
+        s"missing=${celled -- gotCelled} extra=${gotCelled -- celled}")
     }
   }
 

@@ -270,7 +270,7 @@ class PlanSpec extends SparkTestBase {
     val plan = strip(df.queryExecution.executedPlan)
     // the verify kernel (dot of the two candidate vectors) appears at all
     val verifyNodes = plan.collect {
-      case p if p.expressions.exists(_.toString.contains("float_vec_dot(va")) => p
+      case p if p.expressions.exists(_.toString.contains("float_vec_dot(a_v")) => p
     }
     assert(verifyNodes.nonEmpty, s"verify dot not found:\n${plan.toString.take(2000)}")
     // ...and at least one such node sits directly on top of the cell join:
@@ -1684,5 +1684,83 @@ class PlanSpec extends SparkTestBase {
       s"snapshot/window sides must broadcast:\n${plan.take(2000)}")
     assert(plan.contains("partial_count"),
       s"census aggregate lost its map-side combine:\n${plan.take(2000)}")
+  }
+
+  // -- shared cached artifacts: the plan each one's build executes ---------
+  // elideCacheBuild hides these subtrees from every consumer's pins, so each
+  // artifact's own build is pinned here, once, at its one builder.
+
+  /** Every operator of the plan that builds a `Tables.cached` artifact,
+    * cached inputs (documents, embeddings, the fingerprint set) as leaves.
+    * Adaptive plans are read in their initial form, exchanges planned and
+    * no stage run: the final form drops operators at run time (an empty
+    * overflow set removes winnowCapped's anti join), so it would pin the
+    * data rather than the build.
+    */
+  private def cacheBuild(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def initial(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    initial(df.queryExecution.executedPlan)
+      .collectFirst { case s: InMemoryTableScanExec => initial(s.relation.cachedPlan).collect { case p => p } }
+      .getOrElse(fail(s"not a cached artifact:\n${df.queryExecution.executedPlan}"))
+  }
+
+  /** Column names of each shuffle's hash keys in a [[cacheBuild]]. */
+  private def hashShuffles(build: Seq[org.apache.spark.sql.execution.SparkPlan])
+      : Seq[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    build.collect { case e: ShuffleExchangeExec => e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+      case other => fail(s"non-hash shuffle in a cache build: $other")
+    } }
+  }
+
+  private def readsOnlyCachedInputs(build: Seq[org.apache.spark.sql.execution.SparkPlan]): Boolean =
+    build.exists(_.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]) &&
+      !build.exists(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
+
+  test("tfidfTf builds in one (doc_id, tok) shuffle over the cached documents, no join") {
+    val build = cacheBuild(graft.queries.TextAnalysisQueries.tfidfTf(spark, sf))
+    assert(hashShuffles(build) == Seq(Seq("doc_id", "tok")), build.head.toString)
+    assert(!build.exists(_.nodeName.contains("Join")), build.head.toString)
+    assert(readsOnlyCachedInputs(build), build.head.toString)
+  }
+
+  test("bigramOcc is map-only over the cached documents: no exchange, no join") {
+    val build = cacheBuild(graft.queries.TextAnalysisQueries.bigramOcc(spark, sf))
+    assert(!build.exists(_.nodeName.contains("Exchange")), build.head.toString)
+    assert(!build.exists(_.nodeName.contains("Join")), build.head.toString)
+    assert(build.exists(_.nodeName == "Generate"), build.head.toString)
+    assert(readsOnlyCachedInputs(build), build.head.toString)
+  }
+
+  test("winnowCapped: one fp-keyed census shuffle, overflow set broadcast into one anti join") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val build = cacheBuild(graft.queries.DedupVariantQueries.winnowCapped(spark, sf))
+    assert(hashShuffles(build) == Seq(Seq("fp")), build.head.toString)
+    val joins = build.collect { case j if j.nodeName.contains("Join") => j }
+    assert(joins.size == 1 && (joins.head match {
+      case j: BroadcastHashJoinExec => j.joinType == LeftAnti
+      case _ => false
+    }), build.head.toString)
+    assert(build.count(_.isInstanceOf[BroadcastExchangeExec]) == 1, build.head.toString)
+    assert(readsOnlyCachedInputs(build), build.head.toString)
+  }
+
+  test("signbitCodes builds in one vec_id shuffle over the cached embeddings, no join") {
+    val build = cacheBuild(graft.queries.PipelineQueries.signbitCodes(spark, sf))
+    assert(hashShuffles(build) == Seq(Seq("vec_id")), build.head.toString)
+    assert(!build.exists(_.nodeName.contains("Join")), build.head.toString)
+    assert(readsOnlyCachedInputs(build), build.head.toString)
   }
 }

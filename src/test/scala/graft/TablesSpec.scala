@@ -76,4 +76,31 @@ class TablesSpec extends SparkTestBase {
     assert(rebuilt.head().getInt(0) == 4, "stale registry entry returned after unpersistAll")
     Tables.unpersistAll(spark)
   }
+
+  test("every Tables.cached key literal has exactly one call site in src/main") {
+    // The registry ignores a builder whose key is already cached, so a key
+    // declared at two sites builds whichever ran first in the session: a
+    // copy that drifted would make results depend on key order. Shared
+    // artifacts get one named builder that every consumer calls. Keys are
+    // compared with their leading directory variable normalized
+    // (s"$d/x" and s"$dir/x" are the same key).
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val call = """\bcached\(\s*[\w.]+\s*,\s*(s?"[^"]*")""".r
+    val dirVar = """^(s?")\$\{?\w+\}?/""".r
+    val sites = java.nio.file.Files.walk(root).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala")).flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8)
+        call.findAllMatchIn(text).map { m =>
+          val key = dirVar.replaceFirstIn(m.group(1), "$1\\$dir/")
+          key -> s"${root.relativize(p)}:${text.take(m.start).count(_ == '\n') + 1}"
+        }
+      }
+    assert(sites.size > 10, s"scan found only ${sites.size} Tables.cached call sites")
+    val shared = sites.groupBy(_._1).collect {
+      case (key, at) if at.size > 1 => s"$key at ${at.map(_._2).sorted.mkString(", ")}"
+    }
+    assert(shared.isEmpty, s"cache keys declared at several call sites:\n${shared.mkString("\n")}")
+  }
 }
