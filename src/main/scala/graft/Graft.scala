@@ -660,21 +660,24 @@ object Graft {
                  numFiles: Int): Long =
     graft.sources.TxnLog.compact(spark, table, numFiles)
 
-  /** Global permutation rank (`row_number` over (value, tie)) without a
-    * single-task sort — the banded two-phase decomposition (see
-    * [[operators.CurateOps.bandedRank]]).
+  /** Permutation rank (`row_number` over (value, tie)), global or per
+    * group of `groupCols`, without a single-task sort — the banded
+    * two-phase decomposition (see [[operators.CurateOps.bandedRank]]).
     */
   def bandedRank(df: DataFrame, valueCol: String, tieCol: String,
-                 band: Column, out: String): DataFrame =
-    operators.CurateOps.bandedRank(df, valueCol, tieCol, band, out)
+                 band: Column, out: String,
+                 groupCols: Seq[String] = Nil): DataFrame =
+    operators.CurateOps.bandedRank(df, valueCol, tieCol, band, out, groupCols)
 
-  /** Global inclusive running sums over a unique order without a
-    * single-task sort (several weights in one pass) — the banded two-phase
-    * decomposition (see [[operators.CurateOps.bandedCumsum]]).
+  /** Inclusive running sums over a unique order, global or per group of
+    * `groupCols`, without a single-task sort (several weights in one
+    * pass) — the banded two-phase decomposition (see
+    * [[operators.CurateOps.bandedCumsum]]).
     */
-  def bandedCumsum(df: DataFrame, orderCol: String, band: Column,
-                   weights: Seq[(String, String)]): DataFrame =
-    operators.CurateOps.bandedCumsum(df, orderCol, band, weights)
+  def bandedCumsum(df: DataFrame, order: Seq[Column], band: Column,
+                   weights: Seq[(String, String)],
+                   groupCols: Seq[String] = Nil): DataFrame =
+    operators.CurateOps.bandedCumsum(df, order, band, weights, groupCols)
 
   /** Per-doc DEFLATE compressibility ratio (spam/boilerplate signal). */
   def compressibility(docs: DataFrame): DataFrame =

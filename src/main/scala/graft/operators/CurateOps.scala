@@ -169,100 +169,92 @@ object CurateOps {
         aggregate(col("qs"), lit(0L), (acc, e) => acc + e * e).as("sum_q2"),
         size(filter(col("qs"), q => abs(q) === 127)).cast("long").as("n_clip")): _*)
 
-  /** Token-budget selection: keep the highest-`scoreCol` rows per
-    * `groupCol` until `budget` of `weightCol` is spent, via the two-phase
-    * banded prefix sum (band subtotals -> broadcast band offsets ->
-    * within-band running sum). Algebraically identical to a single
-    * per-group cumsum, but no window ever sees a whole group; `bandWidth`
-    * is the partition-size dial. `scoreCol` must be integer-valued and
-    * `tieCol` unique for a deterministic total order.
+  /** The offset step of every banded prefix: for a band-grid row (one per
+    * group and band), the sum of `total` over the group's LOWER bands, 0
+    * for its first band. The window spans the grid, never the rows, so an
+    * unpartitioned one (no group) stays band-count-sized at any scale.
     */
-  /** Banded two-phase PERMUTATION rank: the global
-    * `row_number() OVER (ORDER BY value, tie)` without ever sorting the
-    * whole table in one task — phase 1 counts rows per band (a band-grid-
-    * sized frame whose exclusive prefix sums broadcast), phase 2
-    * row_numbers WITHIN each band; global rank = band offset + local rank.
-    * Lossless for ANY band expression that is monotone in `value` (rows in
-    * a lower band always rank below rows in a higher band; within a band
-    * the local window applies the same (value, tie) order) — pinned against
-    * the naive global window in CuratePropSpec and, cross-engine, by the
-    * quality_spearman hash gate. The same decomposition as budgetSelect's
-    * cumulative and quality_ks_test's ECDF.
+  private def bandOffset(total: String, band: String, groupCols: Seq[String]): Column =
+    coalesce(sum(total).over(Window.partitionBy(groupCols.map(col): _*)
+      .orderBy(band).rowsBetween(Long.MinValue, -1)), lit(0L))
+
+  /** Banded two-phase PERMUTATION rank: per group of `groupCols` (the
+    * whole table when empty), `row_number() OVER (ORDER BY value, tie)`
+    * without ever sorting a whole group in one task — phase 1 counts rows
+    * per (group, band) and broadcasts the grid's exclusive prefix sums,
+    * phase 2 row_numbers WITHIN each (group, band); rank = band offset +
+    * local rank. Lossless for ANY band expression that is monotone in
+    * `value` (rows in a lower band always rank below rows in a higher
+    * band; within a band the local window applies the same (value, tie)
+    * order) — pinned against the naive window in CuratePropSpec and,
+    * cross-engine, by the quality_spearman and sample_balanced hash gates.
+    * Rows whose band or group is NULL are dropped (the offset join is an
+    * equi-join); group columns lead the output.
     */
   def bandedRank(df: DataFrame, valueCol: String, tieCol: String,
-      band: Column, out: String): DataFrame = {
-    val w = Window
+      band: Column, out: String, groupCols: Seq[String] = Nil): DataFrame = {
+    val keys = (groupCols :+ "__graft_band").map(col)
     val b = df.withColumn("__graft_band", band)
-    val off = b.groupBy("__graft_band").agg(count(lit(1)).as("__graft_bc"))
-      .select(col("__graft_band"),
-        coalesce(sum("__graft_bc").over(
-          w.orderBy("__graft_band").rowsBetween(Long.MinValue, -1)), lit(0L))
-          .as("__graft_off"))
+    val off = b.groupBy(keys: _*).agg(count(lit(1)).as("__graft_bc"))
+      .select(keys :+
+        bandOffset("__graft_bc", "__graft_band", groupCols).as("__graft_off"): _*)
     b.withColumn("__graft_rn",
         row_number().over(
-          w.partitionBy("__graft_band").orderBy(col(valueCol), col(tieCol))))
-      .join(broadcast(off), "__graft_band")
+          Window.partitionBy(keys: _*).orderBy(col(valueCol), col(tieCol))))
+      .join(broadcast(off), groupCols :+ "__graft_band")
       .withColumn(out, col("__graft_off") + col("__graft_rn"))
       .drop("__graft_band", "__graft_off", "__graft_rn")
   }
 
-  /** Banded two-phase inclusive CUMULATIVE SUMS over a global order — the
-    * [[bandedRank]] decomposition applied to running totals: phase 1 sums
-    * each weight per band (a band-grid-sized frame whose exclusive prefix
-    * sums broadcast), phase 2 runs the within-band running sums; the global
-    * running sum = band offset + local running sum. Lossless for any `band`
-    * monotone in `orderCol`; `orderCol` must be globally unique (a
-    * permutation order), so RANGE and ROWS frames coincide. Several weights
-    * cumulate in ONE pass — they share the band exchange and the local
-    * sort. NULL weights follow SQL running-sum semantics exactly (r13
-    * review fix): a NULL contributes nothing, and a row whose entire
-    * global prefix is NULL reads NULL, not 0 — tracked by a parallel
+  /** Banded two-phase inclusive CUMULATIVE SUMS — the [[bandedRank]]
+    * decomposition applied to running totals: per group of `groupCols`
+    * (the whole table when empty), phase 1 sums each weight per (group,
+    * band) and broadcasts the grid's exclusive prefix sums, phase 2 runs
+    * the within-band running sums; running sum = band offset + local
+    * running sum. Lossless for any `band` monotone in `order`; `order`
+    * must be unique within a group (a permutation order), so RANGE and
+    * ROWS frames coincide. A descending order is a `.desc` order column
+    * with a negated band. Several weights cumulate in ONE pass — they
+    * share the band exchange and the local sort. NULL weights follow SQL
+    * running-sum semantics exactly: a NULL contributes nothing, and a row
+    * whose entire prefix is NULL reads NULL, not 0 — tracked by a parallel
     * non-NULL running COUNT per weight (same windows, no extra pass).
-    * Output names must be fresh (not among the inputs): a weight's output
-    * overwriting a later weight's input would silently corrupt phase 2.
-    * Pinned against the naive global window (NULLs in the generator
-    * domain) in CuratePropSpec.
+    * Rows whose band or group is NULL are dropped (the offset join is an
+    * equi-join); group columns lead the output. Output names must be fresh
+    * (no input column): the weights fold one `withColumn` at a time, and
+    * an output overwriting a weight or order input would silently corrupt
+    * the later running sums. Pinned against the naive window (NULLs in the
+    * generator domain) in CuratePropSpec.
     */
-  def bandedCumsum(df: DataFrame, orderCol: String, band: Column,
-      weights: Seq[(String, String)]): DataFrame = {
+  def bandedCumsum(df: DataFrame, order: Seq[Column], band: Column,
+      weights: Seq[(String, String)], groupCols: Seq[String] = Nil): DataFrame = {
     require(weights.nonEmpty, "bandedCumsum: need at least one weight column")
-    val ins = weights.map(_._1)
     val outs = weights.map(_._2)
     require(outs.distinct == outs,
       s"bandedCumsum: duplicate output names [${outs.mkString(", ")}]")
-    // outputs must be fresh vs weight inputs AND the order column AND the
-    // internal working names (r13 review second pass: an output named
-    // after orderCol overwrites the within-band sort key between folds —
-    // the same silent corruption as a weight-input collision)
-    val reserved = ins.toSet + orderCol + "__graft_band"
-    val nameClash = outs.toSet.intersect(reserved) ++
-      outs.filter(_.startsWith("__graft_"))
+    val nameClash = outs.filter(o => df.columns.contains(o) || o.startsWith("__graft_"))
     require(nameClash.isEmpty,
-      s"bandedCumsum: output name(s) [${nameClash.toSeq.sorted.mkString(", ")}] " +
-        "collide with the weight inputs, the order column, or internal " +
-        "__graft_* names — a collision would overwrite a column mid-fold " +
-        "and silently corrupt later running sums; pick fresh output names")
+      s"bandedCumsum: output name(s) [${nameClash.sorted.mkString(", ")}] " +
+        "collide with input columns or internal __graft_* names — a " +
+        "collision would overwrite a column mid-fold and silently corrupt " +
+        "later running sums; pick fresh output names")
+    val keys = (groupCols :+ "__graft_band").map(col)
     val b = df.withColumn("__graft_band", band)
     val subAggs = weights.flatMap { case (in, _) => Seq(
       sum(col(in)).as(s"__graft_s_$in"),
       count(col(in)).as(s"__graft_c_$in")) }
-    val subs = b.groupBy("__graft_band").agg(subAggs.head, subAggs.tail: _*)
-    val wOff = Window.orderBy("__graft_band").rowsBetween(Long.MinValue, -1)
     // band subtotals sum(in) are NULL for an all-NULL band: the offset
     // prefix skips them exactly like the naive window skips the NULLs
-    // themselves, so no coalesce is needed on the sum leg — only the
-    // all-NULL-prefix case must stay distinguishable, which the count leg
-    // carries. A NULL offset with cnt>0 cannot occur (cnt>0 ⇒ some
-    // non-NULL weight ⇒ its band subtotal is non-NULL ⇒ the prefix sum of
-    // subtotals is non-NULL); coalesce(…, 0) keeps the arithmetic total
-    // anyway for the first bands.
-    val off = subs.select(col("__graft_band") +: weights.flatMap { case (in, _) => Seq(
-      coalesce(sum(s"__graft_s_$in").over(wOff), lit(0L)).as(s"__graft_o_$in"),
-      coalesce(sum(s"__graft_c_$in").over(wOff), lit(0L)).as(s"__graft_oc_$in"))
-    }: _*)
-    val wl = Window.partitionBy("__graft_band").orderBy(col(orderCol))
+    // themselves; only the all-NULL-prefix case must stay
+    // distinguishable, which the count leg carries
+    val off = b.groupBy(keys: _*).agg(subAggs.head, subAggs.tail: _*)
+      .select(keys ++ weights.flatMap { case (in, _) => Seq(
+        bandOffset(s"__graft_s_$in", "__graft_band", groupCols).as(s"__graft_o_$in"),
+        bandOffset(s"__graft_c_$in", "__graft_band", groupCols).as(s"__graft_oc_$in"))
+      }: _*)
+    val wl = Window.partitionBy(keys: _*).orderBy(order: _*)
       .rowsBetween(Long.MinValue, 0)
-    weights.foldLeft(b.join(broadcast(off), "__graft_band")) {
+    weights.foldLeft(b.join(broadcast(off), groupCols :+ "__graft_band")) {
       case (acc, (in, out)) =>
         // non-NULL count over the same frame decides NULL-vs-0: the naive
         // window's sum is NULL exactly when no non-NULL weight precedes
@@ -297,10 +289,8 @@ object CurateOps {
     val g = groupCols.map(col)
     val b = df.filter(col(valueCol).isNotNull).withColumn("__g_band", band)
     val grid = b.groupBy(g :+ col("__g_band"): _*).agg(count(lit(1)).as("__g_bc"))
-    val offW = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy("__g_band").rowsBetween(Long.MinValue, -1)
     val offs = grid.select(g ++ Seq(col("__g_band"),
-      coalesce(sum("__g_bc").over(offW), lit(0L)).as("__g_off")): _*)
+      bandOffset("__g_bc", "__g_band", groupCols).as("__g_off")): _*)
     val totals = grid.groupBy(g: _*).agg(sum("__g_bc").as("__g_n"))
     // one target row per (group, quantile): position arithmetic in double,
     // matching Percentile.getPercentile's tree
@@ -360,26 +350,20 @@ object CurateOps {
     perQ.groupBy(g: _*).agg(pivots.head, pivots.tail: _*)
   }
 
+  /** Token-budget selection: keep the highest-`scoreCol` rows per
+    * `groupCol` until `budget` of `weightCol` is spent — a [[bandedCumsum]]
+    * per group in (score DESC, tie) order, banded on the negated
+    * `scoreCol DIV bandWidth`, so no window ever sees a whole group;
+    * `bandWidth` is the partition-size dial. `scoreCol` must be
+    * integer-valued and `tieCol` unique for a deterministic total order.
+    */
   def budgetSelect(rows: DataFrame, budget: Long, bandWidth: Long,
       groupCol: String = "lang", scoreCol: String = "score",
-      weightCol: String = "n_tokens", tieCol: String = "doc_id"): DataFrame = {
-    val banded = rows.withColumn("band", expr(s"$scoreCol DIV $bandWidth"))
-    val fineW = Window.partitionBy(groupCol, "band")
-      .orderBy(col(scoreCol).desc, col(tieCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bandW = Window.partitionBy(groupCol).orderBy(col("band").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = banded.groupBy(groupCol, "band")
-      .agg(sum(weightCol).as("band_tokens"))
-      .withColumn("band_offset",
-        coalesce(sum("band_tokens").over(bandW), lit(0L)))
-      .select(groupCol, "band", "band_offset")
-    banded.join(broadcast(offs), Seq(groupCol, "band"))
-      .withColumn("cum_tokens",
-        col("band_offset") + sum(weightCol).over(fineW))
+      weightCol: String = "n_tokens", tieCol: String = "doc_id"): DataFrame =
+    bandedCumsum(rows, Seq(col(scoreCol).desc, col(tieCol)),
+        -expr(s"$scoreCol DIV $bandWidth"), Seq(weightCol -> "cum_tokens"),
+        Seq(groupCol))
       .filter(col("cum_tokens") <= budget)
-      .drop("band", "band_offset")
-  }
 
   /** Gopher-rules document gate over precomputed per-doc counts
     * (`n` tokens, `topn` top-token count, `nstop` stopwords): first
@@ -444,9 +428,8 @@ object CurateOps {
     // [bmin, bmax] span drives the adaptive refinement below.
     val grid = pairs.groupBy(g, col("bnd"))
       .agg(count(lit(1)).as("bc"), min("slope").as("bmin"), max("slope").as("bmax"))
-    val offW = Window.partitionBy(g).orderBy("bnd").rowsBetween(Long.MinValue, -1)
     val hot = grid
-      .withColumn("off", coalesce(sum("bc").over(offW), lit(0L)))
+      .withColumn("off", bandOffset("bc", "bnd", Seq(groupCol)))
       .withColumn("m", sum("bc").over(Window.partitionBy(g)))
       .filter(rankExpr > col("off") && rankExpr <= col("off") + col("bc"))
     // Level-1 escape: single-valued hot band — every pair in it carries
@@ -471,10 +454,8 @@ object CurateOps {
     val fgrid = fpairs.groupBy(g, col("bnd"), col("fbnd"))
       .agg(count(lit(1)).as("fbc"), min("slope").as("fmin"), max("slope").as("fmax"),
         max("off").as("off"), max("m").as("m"))
-    val foffW = Window.partitionBy(g, col("bnd")).orderBy("fbnd")
-      .rowsBetween(Long.MinValue, -1)
     val fhot = fgrid
-      .withColumn("foff", col("off") + coalesce(sum("fbc").over(foffW), lit(0L)))
+      .withColumn("foff", col("off") + bandOffset("fbc", "fbnd", Seq(groupCol, "bnd")))
       .filter(rankExpr > col("foff") && rankExpr <= col("foff") + col("fbc"))
     // Level-2 escape: single-valued fine cell (the constant-cluster case).
     val fineDirect = fhot.filter(col("fmin") === col("fmax"))

@@ -508,6 +508,36 @@ object TextOps {
       .select((Seq(col(idCol), col("n")) ++ blockCols.map(col) ++
         Seq(col("bk.band").as("band"), col("bk.mh").as("mh"))): _*)
 
+  /** Same-block pairs of a 64-bit hash column within `maxHamming` bits,
+    * as (doc_a, doc_b, hamming BIGINT) with doc_a < doc_b, each pair once.
+    * The hash is cut into `chunks` disjoint chunks of `width` bits,
+    * exploded into (ck, cv) bucket keys and paired by one
+    * [[bucketSelfJoin]] on (block, ck, cv) with the exact xor+bit_count
+    * filter inside the join, before the distinct. Lossless by pigeonhole
+    * when the chunks cover every bit the hashes can differ in:
+    * maxHamming < chunks differing bits leave at least one chunk equal.
+    */
+  private[graft] def hammingBandPairs(kv: DataFrame, idCol: String, hashCol: String,
+                                      blockCols: Seq[String], chunks: Int, width: Int,
+                                      maxHamming: Int): DataFrame = {
+    require(maxHamming < chunks,
+      s"banded scan is lossless only for maxHamming < $chunks (got $maxHamming)")
+    require(width > 0 && chunks * width <= 64,
+      s"$chunks chunks of $width bits do not fit a 64-bit hash")
+    val hamming = expr(s"CAST(bit_count(a_$hashCol ^ b_$hashCol) AS BIGINT)")
+    val banded = kv
+      .select((col(idCol) +: blockCols.map(col) :+ col(hashCol)) :+
+        explode(array((0 until chunks).map(k =>
+          struct(lit(k).as("ck"), shiftright(col(hashCol), width * k)
+            .bitwiseAND(lit(-1L >>> (64 - width))).as("cv"))): _*)).as("c"): _*)
+      .select((col(idCol) +: blockCols.map(col)) ++
+        Seq(col(hashCol), col("c.ck").as("ck"), col("c.cv").as("cv")): _*)
+    bucketSelfJoin(banded, blockCols ++ Seq("ck", "cv"), idCol, Seq(hamming <= maxHamming))
+      .select(col(s"a_$idCol").as("doc_a"), col(s"b_$idCol").as("doc_b"),
+        hamming.as("hamming"))
+      .distinct()
+  }
+
   /** MinHash-LSH near-dup pairs — the tunable-recall scale path:
     * [[minHashSignature]] with `bands` components, persisted, then
     * [[minHashSignaturePairs]]. `tokenizer` picks the shingle granularity
@@ -612,38 +642,18 @@ object TextOps {
   }
 
   /** SimHash near-dup pairs: same-block pairs whose 48-bit fingerprints
-    * are within `maxHamming`.
-    *
-    * The fingerprint is cut into 6 chunks of 8 bits, exploded into
-    * (chunk_idx, chunk_value) bucket keys and paired by one
-    * [[bucketSelfJoin]] on (block, chunk_idx, chunk_value), with the exact
-    * xor+bit_count filter inside the join before the distinct. Threshold
-    * bound: maxHamming < 6 differing bits touch at most 5 of the 6 chunks,
-    * so the banding is lossless for the supported thresholds (4×12 bits,
-    * the obvious split, is not lossless at maxHamming=4: 1+1+1+1 defeats
-    * it). The DuckDB oracle keeps the all-pairs formulation: same result
-    * set, independently derived.
+    * are within `maxHamming`, through [[hammingBandPairs]] with 6 chunks
+    * of 8 bits: maxHamming < 6 differing bits touch at most 5 of the 6
+    * chunks, so the banding is lossless for the supported thresholds
+    * (4×12 bits, the obvious split, is not lossless at maxHamming=4:
+    * 1+1+1+1 defeats it). The DuckDB oracle keeps the all-pairs
+    * formulation: same result set, independently derived.
     */
   def simHashPairs(docs: DataFrame, maxHamming: Int,
                    idCol: String = "doc_id", textCol: String = "text",
-                   blockCols: Seq[String] = Seq("lang")): DataFrame = {
-    val chunks = 6
-    require(maxHamming < chunks,
-      s"banded scan is lossless only for maxHamming < $chunks (got $maxHamming)")
-    val kv = reuse(simHash(docs, idCol, textCol, blockCols))
-      .select((col(idCol) +: blockCols.map(col) :+ col("simhash")) :+
-        explode(array((0 until chunks).map(k =>
-          struct(lit(k).as("ck"),
-            shiftright(col("simhash"), 8 * k).bitwiseAND(lit(255L)).as("cv"))): _*))
-          .as("c"): _*)
-      .select((col(idCol) +: blockCols.map(col)) ++
-        Seq(col("simhash"), col("c.ck").as("ck"), col("c.cv").as("cv")): _*)
-    bucketSelfJoin(kv, blockCols ++ Seq("ck", "cv"), idCol,
-        Seq(expr("bit_count(a_simhash ^ b_simhash)") <= maxHamming))
-      .select(col(s"a_$idCol").as("doc_a"), col(s"b_$idCol").as("doc_b"),
-        expr("CAST(bit_count(a_simhash ^ b_simhash) AS BIGINT)").as("hamming"))
-      .distinct()
-  }
+                   blockCols: Seq[String] = Seq("lang")): DataFrame =
+    hammingBandPairs(reuse(simHash(docs, idCol, textCol, blockCols)), idCol,
+      "simhash", blockCols, chunks = 6, width = 8, maxHamming)
 
   /** Line-level corpus dedup — the C4 "discard every repeated
     * three-sentence span but its first occurrence" rule (Raffel et al.

@@ -149,10 +149,14 @@ object VectorOps {
   }
 
   /** Cosine of a [[TextOps.bucketSelfJoin]] row over vectors `v` with
-    * precomputed norms `nrm`.
+    * precomputed norms `nrm`; NULL when a norm is 0 (a zero vector has no
+    * direction, and ANSI division by 0 raises), so the pair fails every
+    * `>= tau` filter.
     */
-  private def pairCosine: Column =
-    dotF(col("a_v"), col("b_v")) / (col("a_nrm") * col("b_nrm"))
+  private def pairCosine: Column = {
+    val den = col("a_nrm") * col("b_nrm")
+    when(den =!= 0.0, dotF(col("a_v"), col("b_v")) / den)
+  }
 
   /** The parity-sensitive quantizer scaffolding shared VERBATIM by
     * [[kmeansCodebook]] and [[pqCodebook]] (one Scala site — the two

@@ -28,6 +28,23 @@ object AggWindowQueries {
       .map { case (p, i) => s"WHEN ${i + 1} THEN $p" }
       .mkString("CASE digit ", " ", " ELSE 0 END")
 
+  /** The two-sample frame of quality_ks_test and quality_mannwhitney:
+    * order prices split by key parity into side 0 and side 1. Returns the
+    * per-distinct-price counts (v, c1p, c2p) and the 1-row sample sizes
+    * (n1, n2).
+    */
+  private def sideCounts(s: org.apache.spark.sql.SparkSession,
+      d: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val t = Tables.cachedTable(s, d, "orders")
+      .select(col("o_totalprice").as("v"), (col("o_orderkey") % 2).as("side"))
+    val c1 = sum(when(col("side") === 0, 1L).otherwise(0L))
+    val c2 = sum(when(col("side") === 1, 1L).otherwise(0L))
+    (t.groupBy("v").agg(c1.as("c1p"), c2.as("c2p")), t.agg(c1.as("n1"), c2.as("n2")))
+  }
+
+  /** Price band of [[sideCounts]]' running sums: monotone in v. */
+  private def priceBand = expr("CAST(floor(v / 10000.0) AS BIGINT)")
+
   def all: Seq[Q] = Seq(
     Q("agg_groupby",
       s"""SELECT l_returnflag, l_linestatus,
@@ -1256,9 +1273,9 @@ object AggWindowQueries {
     // per-distinct-value count frame: 2U = Σ_v c1(v)·(2·cum2<(v) + c2(v))
     // (greater-than pairs doubled + ties once) — all BIGINT, and
     // U/(n1·n2) IS the AUC / common-language effect size, reported as
-    // exact ppm. Same banded two-phase cumulative as the KS key (no
-    // global sort); the naive-window oracle again proves the
-    // decomposition lossless.
+    // exact ppm. Same banded two-phase cumulative as the KS key
+    // (CurateOps.bandedCumsum, no global sort); the naive-window oracle
+    // again proves the decomposition lossless.
     Q("quality_mannwhitney",
       """WITH t AS (SELECT o_totalprice AS v, o_orderkey % 2 AS side FROM orders),
         |n AS (SELECT sum(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS n1,
@@ -1274,25 +1291,10 @@ object AggWindowQueries {
         |       CAST(sum(c1p * (2 * cum2b + c2p)) * 1000000 // (2 * n.n1 * n.n2)
         |            AS BIGINT) AS auc_ppm
         |FROM c, n GROUP BY n.n1, n.n2""".stripMargin) { (s, d) =>
-      val w = org.apache.spark.sql.expressions.Window
-      val t = Tables.cachedTable(s, d, "orders")
-        .select(col("o_totalprice").as("v"), (col("o_orderkey") % 2).as("side"))
-      val n = t.agg(
-        sum(when(col("side") === 0, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("side") === 1, 1L).otherwise(0L)).as("n2"))
-      val pv = t.groupBy("v").agg(
-          sum(when(col("side") === 0, 1L).otherwise(0L)).as("c1p"),
-          sum(when(col("side") === 1, 1L).otherwise(0L)).as("c2p"))
-        .withColumn("band", expr("CAST(floor(v / 10000.0) AS BIGINT)"))
-      val offsets = pv.groupBy("band").agg(sum("c2p").as("b2"))
-        .select(col("band"),
-          coalesce(sum(col("b2")).over(
-            w.orderBy("band").rowsBetween(Long.MinValue, -1)), lit(0L)).as("off2"))
-      val wb = w.partitionBy("band").orderBy("v").rowsBetween(Long.MinValue, 0)
-      pv.withColumn("w2", sum(col("c2p")).over(wb))
-        .join(broadcast(offsets), "band")
-        .select(col("c1p"),
-          (col("off2") + col("w2") - col("c2p")).as("cum2b"), col("c2p"))
+      val (pv, n) = sideCounts(s, d)
+      graft.operators.CurateOps.bandedCumsum(pv, Seq(col("v")), priceBand,
+          Seq("c2p" -> "cum2"))
+        .select(col("c1p"), (col("cum2") - col("c2p")).as("cum2b"), col("c2p"))
         .crossJoin(broadcast(n))
         .groupBy("n1", "n2")
         .agg(sum(col("c1p") * (lit(2) * col("cum2b") + col("c2p"))).as("u2x"))
@@ -1469,10 +1471,9 @@ object AggWindowQueries {
     // plus its ppm ratio — no float ever enters, so the sup over 100k+
     // candidate points cannot drift between engines. The oracle computes
     // the ECDFs with one naive global cumulative window; the Spark side
-    // runs the banded TWO-PHASE cumulative (per-band partial sums +
-    // band-offset broadcast, budget_select's discipline) so no task ever
-    // sorts the whole value set — the decomposition's losslessness is
-    // what the hash gate proves.
+    // runs the banded TWO-PHASE cumulative (CurateOps.bandedCumsum) so no
+    // task ever sorts the whole value set — the decomposition's
+    // losslessness is what the hash gate proves.
     Q("quality_ks_test",
       """WITH t AS (SELECT o_totalprice AS v, o_orderkey % 2 AS side FROM orders),
         |n AS (SELECT sum(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS n1,
@@ -1489,36 +1490,14 @@ object AggWindowQueries {
         |       CAST(max(abs(c1 * n.n2 - c2 * n.n1)) * 1000000 // (n.n1 * n.n2)
         |            AS BIGINT) AS ks_ppm
         |FROM c, n GROUP BY n.n1, n.n2""".stripMargin) { (s, d) =>
-      val w = org.apache.spark.sql.expressions.Window
-      val t = Tables.cachedTable(s, d, "orders")
-        .select(col("o_totalprice").as("v"), (col("o_orderkey") % 2).as("side"))
-      val n = t.agg(
-        sum(when(col("side") === 0, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("side") === 1, 1L).otherwise(0L)).as("n2"))
-      val pv = t.groupBy("v").agg(
-          sum(when(col("side") === 0, 1L).otherwise(0L)).as("c1p"),
-          sum(when(col("side") === 1, 1L).otherwise(0L)).as("c2p"))
-        .withColumn("band", expr("CAST(floor(v / 10000.0) AS BIGINT)"))
-      // phase 1: band totals → exclusive offsets (a window over the
-      // ~60-row band frame — dimension-sized at any corpus scale)
-      val offsets = pv.groupBy("band")
-        .agg(sum("c1p").as("b1"), sum("c2p").as("b2"))
-        .select(col("band"),
-          coalesce(sum(col("b1")).over(
-            w.orderBy("band").rowsBetween(Long.MinValue, -1)), lit(0L)).as("off1"),
-          coalesce(sum(col("b2")).over(
-            w.orderBy("band").rowsBetween(Long.MinValue, -1)), lit(0L)).as("off2"))
-      // phase 2: within-band running sums + broadcast offsets = the
-      // global cumulative, with only band-local sorts
-      val wb = w.partitionBy("band").orderBy("v")
-        .rowsBetween(Long.MinValue, 0)
-      pv.withColumn("w1", sum(col("c1p")).over(wb))
-        .withColumn("w2", sum(col("c2p")).over(wb))
-        .join(broadcast(offsets), "band")
+      // the band grid is ~60 rows (one per 10,000 of price), so the
+      // offset prefix is dimension-sized at any corpus scale
+      val (pv, n) = sideCounts(s, d)
+      graft.operators.CurateOps.bandedCumsum(pv, Seq(col("v")), priceBand,
+          Seq("c1p" -> "c1", "c2p" -> "c2"))
         .crossJoin(broadcast(n))
         .select(col("n1"), col("n2"),
-          abs((col("off1") + col("w1")) * col("n2") -
-            (col("off2") + col("w2")) * col("n1")).as("dd"))
+          abs(col("c1") * col("n2") - col("c2") * col("n1")).as("dd"))
         .groupBy("n1", "n2")
         .agg(max("dd").as("d_num"))
         .select(col("n1"), col("n2"), col("d_num"),

@@ -245,8 +245,8 @@ object CurationQueries {
     // data-dependent, so the plan computes it as a 1-row broadcast (never
     // a driver collect) and selection is the deterministic sha256 hash
     // rank (stable across re-runs/backfills — never rand()). Ranks run
-    // the banded two-phase discipline with band = the hash's OWN first
-    // hex byte (monotone in the rank order by construction): per-(lang,
+    // CurateOps.bandedRank per language with band = the hash's OWN first
+    // hex digit (monotone in the rank order by construction): per-(lang,
     // band) local row_numbers + broadcast per-lang band offsets — no task
     // ever sorts a whole language.
     Q("sample_balanced",
@@ -263,19 +263,10 @@ object CurationQueries {
       val h = Tables.cachedTable(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           substring(sha2(col("doc_id").cast("string"), 256), 1, 16).as("hr"))
-        .withColumn("band", substring(col("hr"), 1, 1))
-      val grid = h.groupBy("lang", "band").agg(count(lit(1)).as("bc"))
-      val offW = org.apache.spark.sql.expressions.Window
-        .partitionBy("lang").orderBy("band").rowsBetween(Long.MinValue, -1)
-      val offs = grid.select(col("lang"), col("band"),
-        coalesce(sum("bc").over(offW), lit(0L)).as("off"))
-      val cap = grid.groupBy("lang").agg(sum("bc").as("n"))
+      val cap = h.groupBy("lang").agg(count(lit(1)).as("n"))
         .agg(min("n").cast("long").as("cap"))
-      val rnW = org.apache.spark.sql.expressions.Window
-        .partitionBy("lang", "band").orderBy(col("hr"), col("doc_id"))
-      h.withColumn("rn", row_number().over(rnW))
-        .join(broadcast(offs), Seq("lang", "band"))
-        .withColumn("rnk", (col("off") + col("rn")).cast("long"))
+      graft.operators.CurateOps.bandedRank(h, "hr", "doc_id",
+          substring(col("hr"), 1, 1), "rnk", Seq("lang"))
         .crossJoin(broadcast(cap))
         .filter(col("rnk") <= col("cap"))
         .select(col("doc_id"), col("lang"), col("rnk"))

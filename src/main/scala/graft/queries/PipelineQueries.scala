@@ -1551,29 +1551,13 @@ object PipelineQueries {
         val hashed = Tables.cached(s, s"$d/phash-hashes") {
           MultimodalOps.imageDHash(media).toDF().select("id", "hash")
         }
-        // explode into 4 disjoint 16-bit bands; candidates = one bucket
-        // self-join on (band, value) — never an all-pairs product
-        val banded = hashed.select(col("id"), col("hash"),
-          explode(expr("transform(sequence(0, 3), " +
-            "t -> named_struct('band', t, " +
-            "'bv', (hash >> (t * 16)) & 65535))")).as("bk"))
-          .select(col("id"), col("hash"),
-            col("bk.band").as("band"), col("bk.bv").as("bv"))
-        TextOps.bucketSelfJoin(banded, Seq("band", "bv"), "id")
-          .select(col("a_id").as("a"), col("b_id").as("b"),
-            expr("bit_count(a_hash ^ b_hash)").as("hd"))
-          // hamming gate BEFORE the dedup exchange: the filter is one
-          // codegen'd xor+popcount per candidate and collapses map-side,
-          // so the distinct shuffles only the <=3 survivors — the
-          // gradient fixture's structured bands collide heavily (a pair
-          // may share several bands AND many far-apart hashes share a
-          // band), and deduping the raw candidate stream first moved
-          // millions of rows through the exchange (measured 4.7 s -> this
-          // order is sub-second; same rows out, distinct∘filter ≡
-          // filter∘distinct for a row-level predicate).
-          .filter(col("hd") <= 3)
-          .distinct()  // a pair may collide in several bands
-          .groupBy(col("hd").cast("long").as("hamming"))
+        // 4 disjoint 16-bit bands; candidates = one bucket self-join on
+        // (band, value) with the hamming gate inside the join, so the pair
+        // distinct shuffles only the <= 3 survivors — never an all-pairs
+        // product
+        TextOps.hammingBandPairs(hashed, "id", "hash", Nil, chunks = 4, width = 16,
+            maxHamming = 3)
+          .groupBy("hamming")
           .agg(count(lit(1)).as("n_pairs"))
     },
 

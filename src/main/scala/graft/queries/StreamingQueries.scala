@@ -1514,21 +1514,11 @@ object StreamingQueries {
           .unionByName(ev.select(col("event_type"),
                                  (col("ts_us") + 1800000000L).as("t"),
                                  lit(-1L).as("delta"), col("event_id")))
-          .withColumn("band", expr(s"t div $dayUs"))
-        val wOff = org.apache.spark.sql.expressions.Window
-          .partitionBy("event_type").orderBy("band")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        val offsets = deltas.groupBy("event_type", "band")
-          .agg(sum("delta").as("bsum"))
-          .withColumn("off", coalesce(sum("bsum").over(wOff), lit(0L)))
-          .select("event_type", "band", "off")
-        val wIn = org.apache.spark.sql.expressions.Window
-          .partitionBy("event_type", "band")
-          .orderBy(col("t"), col("delta"), col("event_id"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-        deltas
-          .join(broadcast(offsets), Seq("event_type", "band"))
-          .withColumn("conc", sum("delta").over(wIn) + col("off"))
+        // running concurrency per type, banded by day (t >= 0, so div is
+        // monotone in t); (t, delta, event_id) is unique per type
+        graft.operators.CurateOps.bandedCumsum(deltas,
+            Seq(col("t"), col("delta"), col("event_id")), expr(s"t div $dayUs"),
+            Seq("delta" -> "conc"), Seq("event_type"))
           .groupBy("event_type")
           .agg(sum(when(col("delta") === 1L, 1L).otherwise(0L)).cast("long").as("n_events"),
                max("conc").cast("long").as("peak_concurrency"))

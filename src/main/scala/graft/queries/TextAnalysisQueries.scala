@@ -1445,7 +1445,7 @@ object TextAnalysisQueries {
       val grid = f.groupBy("c").agg(count(lit(1)).as("n"))
         .withColumn("negc", -col("c"))
         .withColumn("mass", col("c") * col("n"))
-      val cum = graft.operators.CurateOps.bandedCumsum(grid, "negc",
+      val cum = graft.operators.CurateOps.bandedCumsum(grid, Seq(col("negc")),
         expr("CAST(floor(negc / 64.0) AS BIGINT)"),
         Seq("n" -> "cum_n", "mass" -> "cum_m"))
       val tot = f.agg(sum("c").as("total"))

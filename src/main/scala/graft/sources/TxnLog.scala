@@ -407,10 +407,17 @@ object TxnLog {
     // dv-deleted rows it copies — require materialization first
     require(liveDeleteVectors(table).isEmpty,
       s"TxnLog.merge: $table has live deletion vectors — compact first")
-    val distinctKeys = updates.select(col(keyCol).cast("long")).distinct().collect()
+    // the distinct keys in their own type, as a local relation: the
+    // anti-join below reads it instead of evaluating the batch again, and
+    // the generated code does not depend on the key values
+    val keySide = updates.select(col(keyCol))
+    val distinctKeys = keySide.distinct().collect()
     require(distinctKeys.nonEmpty, "TxnLog.merge: empty update batch")
-    // NULL keys match nothing, so they prune nothing
-    val upKeys = distinctKeys.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted
+    val keys = spark.createDataFrame(distinctKeys.toSeq.asJava, keySide.schema)
+    // NULL keys match nothing, so they prune nothing; the cast runs on the
+    // driver over the local relation (no job)
+    val upKeys = keys.select(col(keyCol).cast("long")).collect()
+      .filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted
     def overlaps(lo: Long, hi: Long): Boolean = {
       // any update key in [lo, hi]? — binary search for the first >= lo
       val i = java.util.Arrays.binarySearch(upKeys, lo)
@@ -424,7 +431,7 @@ object TxnLog {
     val survivors =
       if (touched.isEmpty) updates
       else scan(spark, table, touched.map(_.file))
-        .join(broadcast(updates.select(col(keyCol))), Seq(keyCol), "left_anti")
+        .join(broadcast(keys), Seq(keyCol), "left_anti")
         .unionByName(updates)
     val adds = writeDataFilesKeyed(survivors, table, keyCol)
     val v = commitKeyed(table, adds, touched.map(_.file), "merge")

@@ -311,6 +311,18 @@ class CuratePropSpec extends SparkTestBase {
     }
   }
 
+  test("budgetSelect: a NULL weight reads the running sum so far, whatever the band width") {
+    // doc 2's weight is NULL: like a single per-group cumsum it reads 10
+    // (doc 1's tokens), also when it sits alone in its band
+    val df = Seq((1L, "a", 90L, Option(10L)), (2L, "a", 50L, Option.empty[Long]),
+      (3L, "a", 40L, Option(5L))).toDF("doc_id", "lang", "score", "n_tokens")
+    for (bandWidth <- Seq(1L, 1000L)) {
+      val got = CurateOps.budgetSelect(df, 12L, bandWidth).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cum_tokens")).toMap
+      assert(got == Map(1L -> 10L, 2L -> 10L), s"band=$bandWidth: $got")
+    }
+  }
+
   // ---- bandedRank ------------------------------------------------------
 
   private val rankGen: Gen[Seq[(Long, Long)]] = for {
@@ -344,6 +356,33 @@ class CuratePropSpec extends SparkTestBase {
     }
   }
 
+  // Rows (k, g1, g2, v): three groups of g1 by two of g2 with tie-heavy
+  // values, plus a planted one-row group ("solo").
+  private val groupedRankGen: Gen[Seq[(Long, String, Int, Long)]] = for {
+    n <- Gen.chooseNum(1, 60)
+    rows <- Gen.listOfN(n, Gen.zip(Gen.oneOf("a", "b", "c"), Gen.chooseNum(0, 1),
+      Gen.chooseNum(-30L, 30L)))
+  } yield (rows :+ (("solo", 0, 5L))).zipWithIndex
+    .map { case ((g1, g2, v), i) => (i.toLong, g1, g2, v) }
+
+  test("bandedRank per group == row_number partitioned by the group (one and two group columns)") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, expr, row_number}
+    for ((rows, i) <- samples(groupedRankGen, 6, 17L).zipWithIndex;
+         groups <- Seq(Seq("g1"), Seq("g1", "g2"));
+         bandWidth <- Seq(1L, 7L, 1000L)) {
+      val df = rows.toDF("k", "g1", "g2", "v").repartition(5)
+      def ranks(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("r")).toMap
+      val got = ranks(CurateOps.bandedRank(df, "v", "k",
+        expr(s"CAST(floor(v / $bandWidth.0) AS BIGINT)"), "r", groups))
+      val want = ranks(df.withColumn("r", row_number().over(
+        Window.partitionBy(groups.map(col): _*).orderBy(col("v"), col("k")))
+        .cast("long")))
+      assert(got == want, s"case $i groups=$groups bw=$bandWidth")
+    }
+  }
+
   // ---- bandedCumsum ----------------------------------------------------
 
   // NULLs are IN the generator domain (r13 review fix: an all-NULL prefix
@@ -359,7 +398,7 @@ class CuratePropSpec extends SparkTestBase {
     for ((rows, i) <- samples(cumGen, 8, 29L).zipWithIndex;
          bandWidth <- Seq(1L, 7L, 50L, 1000L)) {
       val df = rows.toDF("o", "a", "b").repartition(5)
-      val got = CurateOps.bandedCumsum(df, "o",
+      val got = CurateOps.bandedCumsum(df, Seq(org.apache.spark.sql.functions.col("o")),
           org.apache.spark.sql.functions.expr(
             s"CAST(floor(o / $bandWidth.0) AS BIGINT)"),
           Seq("a" -> "ca", "b" -> "cb"))
@@ -381,24 +420,63 @@ class CuratePropSpec extends SparkTestBase {
     }
   }
 
+  // Rows (id, g1, g2, o, a, b): o is tie-heavy (0..5), so (o, id) is a
+  // two-column order; NULL weights stay in the domain; a planted
+  // one-row group ("solo").
+  private val groupedCumGen
+      : Gen[Seq[(Long, String, Int, Long, Option[Long], Option[Long])]] = for {
+    n <- Gen.chooseNum(1, 60)
+    rows <- Gen.listOfN(n, Gen.zip(Gen.oneOf("a", "b", "c"), Gen.chooseNum(0, 1),
+      Gen.chooseNum(0L, 5L), Gen.option(Gen.chooseNum(0L, 50L)),
+      Gen.option(Gen.chooseNum(-20L, 20L))))
+  } yield (rows :+ (("solo", 0, 3L, Option(7L), Option.empty[Long]))).zipWithIndex
+    .map { case ((g1, g2, o, a, b), i) => (i.toLong, g1, g2, o, a, b) }
+
+  test("bandedCumsum per group == the naive running sums partitioned by the group (two-column and descending orders)") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, expr, sum}
+    for ((rows, i) <- samples(groupedCumGen, 6, 23L).zipWithIndex;
+         groups <- Seq(Seq("g1"), Seq("g1", "g2"));
+         desc <- Seq(false, true);
+         bandWidth <- Seq(1L, 2L, 1000L)) {
+      val df = rows.toDF("id", "g1", "g2", "o", "a", "b").repartition(5)
+      // a descending order rides a negated band
+      val (order, band): (Seq[Column], Column) =
+        if (desc) (Seq(col("o").desc, col("id")), -expr(s"o DIV $bandWidth"))
+        else (Seq(col("o"), col("id")), expr(s"o DIV $bandWidth"))
+      def sums(d: org.apache.spark.sql.DataFrame) = d.collect()
+        .map(r => r.getAs[Long]("id") ->
+          (Option(r.getAs[java.lang.Long]("ca")).map(_.toLong),
+            Option(r.getAs[java.lang.Long]("cb")).map(_.toLong))).toMap
+      val got = sums(CurateOps.bandedCumsum(df, order, band,
+        Seq("a" -> "ca", "b" -> "cb"), groups))
+      val w = Window.partitionBy(groups.map(col): _*).orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val want = sums(df.withColumn("ca", sum("a").over(w))
+        .withColumn("cb", sum("b").over(w)))
+      assert(got == want, s"case $i groups=$groups desc=$desc bw=$bandWidth")
+    }
+  }
+
   test("bandedCumsum refuses output names that collide with weight inputs") {
     val df = Seq((1L, 2L, 3L)).toDF("o", "a", "b")
     val e = intercept[IllegalArgumentException](
-      CurateOps.bandedCumsum(df, "o",
+      CurateOps.bandedCumsum(df, Seq(org.apache.spark.sql.functions.col("o")),
         org.apache.spark.sql.functions.expr("o"), Seq("a" -> "b", "b" -> "cb")))
     assert(e.getMessage.contains("collide"))
     val e2 = intercept[IllegalArgumentException](
-      CurateOps.bandedCumsum(df, "o",
+      CurateOps.bandedCumsum(df, Seq(org.apache.spark.sql.functions.col("o")),
         org.apache.spark.sql.functions.expr("o"), Seq("a" -> "x", "b" -> "x")))
     assert(e2.getMessage.contains("duplicate output"))
     // an output named after the ORDER column would overwrite the sort key
     // between folds — same silent corruption, same refusal
     val e3 = intercept[IllegalArgumentException](
-      CurateOps.bandedCumsum(df, "o",
+      CurateOps.bandedCumsum(df, Seq(org.apache.spark.sql.functions.col("o")),
         org.apache.spark.sql.functions.expr("o"), Seq("a" -> "o", "b" -> "cb")))
     assert(e3.getMessage.contains("collide"))
     val e4 = intercept[IllegalArgumentException](
-      CurateOps.bandedCumsum(df, "o",
+      CurateOps.bandedCumsum(df, Seq(org.apache.spark.sql.functions.col("o")),
         org.apache.spark.sql.functions.expr("o"), Seq("a" -> "__graft_band")))
     assert(e4.getMessage.contains("collide"))
   }

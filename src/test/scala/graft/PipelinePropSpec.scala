@@ -236,20 +236,19 @@ class PipelinePropSpec extends SparkTestBase {
     import graft.operators.VectorOps
     // Components from {-1, 0, 1, 2} in 4 dims: duplicate vectors and pairs
     // whose cosine is exactly a threshold are common, and one duplicate of
-    // vector 0 (same block, same cells) is planted. A zero vector has no
-    // cosine, and both operators currently raise DIVIDE_BY_ZERO on one
-    // (ANSI division by a zero norm), so the generator draws none and this
-    // round checks the defined domain only. The brute force repeats
+    // vector 0 (same block, same cells) is planted. Zero vectors are drawn
+    // too, and one is planted beside vector 0: a zero vector has no
+    // cosine, so the brute force skips its pairs. The brute force repeats
     // the operators' IEEE sequence (sequential double dot of widened floats,
     // dot / (sqrt(‖a‖²) · sqrt(‖b‖²))), so a tie at tau compares equal.
     val vec: Gen[Seq[Float]] = Gen.listOfN(4, Gen.oneOf(-1f, 0f, 1f, 2f))
-      .map(v => if (v.forall(_ == 0f)) Seq(1f, 0f, 0f, 0f) else v)
     val embGen = for {
       n <- Gen.chooseNum(4, 14)
       vs <- Gen.listOfN(n, vec)
       blocks <- Gen.listOfN(n, Gen.chooseNum(0, 1))
       cells <- Gen.listOfN(n, Gen.listOfN(2, Gen.chooseNum(0, 2)))
-    } yield (vs.indices :+ n).map(i => (i.toLong, vs(i % n), blocks(i % n), cells(i % n)))
+    } yield (vs.indices :+ n).map(i => (i.toLong, vs(i % n), blocks(i % n), cells(i % n))) :+
+      (((n + 1).toLong, Seq(0f, 0f, 0f, 0f), blocks(0), cells(0)))
     def dot(a: Seq[Float], b: Seq[Float]): Double =
       a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x.toDouble * y.toDouble }
     def cos(a: Seq[Float], b: Seq[Float]): Double =
@@ -260,7 +259,9 @@ class PipelinePropSpec extends SparkTestBase {
          tau <- Seq(0.5, 0.9, cos(rows(0)._2, rows(1)._2))) {
       val emb = rows.map(r => (r._1, r._2, r._3)).toDF("vec_id", "embedding", "label")
       val pairs = for {
-        a <- rows; b <- rows if a._1 < b._1 && cos(a._2, b._2) >= tau
+        a <- rows; b <- rows
+        if a._1 < b._1 && dot(a._2, a._2) > 0 && dot(b._2, b._2) > 0 &&
+          cos(a._2, b._2) >= tau
       } yield (a, b)
       val blocked = pairs.collect { case (a, b) if a._3 == b._3 =>
         (a._1, b._1, a._3, round5(cos(a._2, b._2))) }.toSet

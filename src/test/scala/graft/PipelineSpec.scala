@@ -310,6 +310,20 @@ class PipelineSpec extends SparkTestBase {
     assert(got == Set((1L, 2L)))
   }
 
+  test("cosine joins skip a zero vector's pairs instead of dividing by its zero norm") {
+    // (0,0) shares the block and the cell with two (1,0)s: its cosine is
+    // undefined, so only the (1,0)-(1,0) pair may pass tau
+    val emb = Seq((1L, Seq(0.0f, 0.0f), 0), (2L, Seq(1.0f, 0.0f), 0),
+      (3L, Seq(1.0f, 0.0f), 0)).toDF("vec_id", "embedding", "label")
+    val blocked = VectorOps.cosineJoinThreshold(emb, tau = 0.5)
+      .select("vec_a", "vec_b", "cos_sim").as[(Long, Long, Double)].collect().toSeq
+    assert(blocked == Seq((2L, 3L, 1.0)))
+    val assign = Seq(1L, 2L, 3L).map(_ -> 0).toDF("vec_id", "cell")
+    val celled = VectorOps.pairsByAssignment(emb, assign, tau = 0.5)
+      .select("vec_a", "vec_b", "cos_sim").as[(Long, Long, Double)].collect().toSeq
+    assert(celled == Seq((2L, 3L, 1.0)))
+  }
+
   test("centroidHygiene: single-member label has dist 0; dim and norm correct") {
     val emb = Seq(
       (1L, Seq(3.0f, 4.0f), 7),

@@ -1097,6 +1097,24 @@ class PlanSpec extends SparkTestBase {
       "the banded running-sum windows must survive optimization")
   }
 
+  test("quality_mannwhitney / quality_ks_test: the only unpartitioned window is the band-offset prefix") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
+    for (name <- Seq("quality_mannwhitney", "quality_ks_test")) {
+      val df = queryNamed(graft.queries.AggWindowQueries.all, name)
+      val windows = df.queryExecution.optimizedPlan.collect { case w: LWindow => w }
+      val unpart = windows.filter(_.partitionSpec.isEmpty)
+      // a running sum over the price order in one window would sort every
+      // distinct price in one task; only the band grid may be unpartitioned
+      assert(unpart.nonEmpty && unpart.forall(w =>
+          w.orderSpec.forall(_.sql.toLowerCase.contains("band")) &&
+            w.child.collectFirst { case a: Aggregate => a }.nonEmpty),
+        s"$name: an unpartitioned window escaped the band-offset grid: " +
+          s"${unpart.map(_.orderSpec.map(_.sql)).mkString("; ")}")
+      assert(windows.exists(_.partitionSpec.nonEmpty),
+        s"$name: the banded running-sum windows must survive optimization")
+    }
+  }
+
   test("diff_catalog: one full-outer diff exchange per table pair, no cartesian") {
     val plan = physical(graft.queries.DiffQueries.all, "diff_catalog")
     assert(!plan.contains("CartesianProduct"), "spines/scalars must broadcast")

@@ -104,6 +104,21 @@ class TxnLogSpec extends SparkTestBase {
     assert(TxnLog.read(spark, t, Some(0)).filter(col("v").startsWith("old-")).count() == 400)
   }
 
+  test("merge evaluates the update batch twice: the key collect and the union") {
+    val t = freshTable()
+    TxnLog.initKeyed(spark.range(0, 40).toDF("id")
+      .withColumn("v", lit("old")).repartitionByRange(2, col("id")), t, "id")
+    val rows = spark.sparkContext.longAccumulator("merge-batch-rows")
+    val batch = Seq((5L, "new"), (100L, "ins")).toDF("id", "v")
+    val counted = spark.createDataFrame(
+      batch.rdd.map { r => rows.add(1); r }, batch.schema)
+    TxnLog.merge(spark, t, counted, "id")
+    assert(TxnLog.lastMergeSkipped.get() == 1, "one file must be rewritten")
+    assert(rows.value == 2 * 2, s"${rows.value} batch rows read: ${rows.value / 2} passes")
+    assert(rowsOf(TxnLog.read(spark, t).filter(col("id").isin(4L, 5L, 100L))) ==
+      Seq("100|ins", "4|old", "5|new"))
+  }
+
   test("readRange skips non-overlapping files from the log stats alone") {
     val t = freshTable()
     val base = spark.range(0, 400).toDF("id")
