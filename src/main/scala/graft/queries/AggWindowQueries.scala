@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
@@ -33,8 +34,7 @@ object AggWindowQueries {
     * per-distinct-price counts (v, c1p, c2p) and the 1-row sample sizes
     * (n1, n2).
     */
-  private def sideCounts(s: org.apache.spark.sql.SparkSession,
-      d: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def sideCounts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val t = Tables.cachedTable(s, d, "orders")
       .select(col("o_totalprice").as("v"), (col("o_orderkey") % 2).as("side"))
     val c1 = sum(when(col("side") === 0, 1L).otherwise(0L))
